@@ -57,36 +57,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from gmr_spark.graph import PropertyGraph
-from gmr_spark.plans.pregel import (
-    _drop_checkpoint_blocks,
-    checkpoint_eager,
-    run_pregel,
-)
-
-
-class _CCProgram:
-    def init(self, vertices: DataFrame) -> DataFrame:
-        return vertices.select(
-            "id", F.col("id").alias("value"), F.lit(True).alias("active")
-        )
-
-    def messages(self, frontier: DataFrame, edges: DataFrame) -> DataFrame:
-        f = frontier.select(F.col("id").alias("fid"), F.col("value").alias("flabel"))
-        return edges.join(f, F.col("src") == F.col("fid")).select(
-            F.col("dst").alias("id"), F.col("flabel").alias("msg")
-        )
-
-    def aggregate(self, msgs: DataFrame) -> DataFrame:
-        return msgs.groupBy("id").agg(F.min("msg").alias("agg"))
-
-    def update(self, vertices: DataFrame, agg: DataFrame) -> DataFrame:
-        improved = F.col("agg").isNotNull() & (F.col("agg") < F.col("value"))
-        return vertices.join(agg, "id", "left").select(
-            "id",
-            F.when(improved, F.col("agg")).otherwise(F.col("value")).alias("value"),
-            improved.alias("active"),
-        )
-
+from gmr_spark.plans.pregel import BIG_GRAPH_ROWS, LoopScope
 
 _JUMP_CAP = 64  # > log2 of any feasible |V|; trips only on a logic bug
 
@@ -106,12 +77,13 @@ def _scan_jumps(df: DataFrame, lookup: DataFrame,
     rather than a row drop, belt-and-braces. Monotonicity: the lookup
     table satisfies ``label[v] ≤ v``, so each jump can only decrease.
 
-    ``small`` broadcast-hints the lookup sides: under ``small_loop_conf``
-    AQE is off, so without the hint Catalyst plans every jump as a
-    SortMergeJoin over a checkpoint scan with unknowable stats — measured
-    on cc_cs (|V|=16k): 8 Exchanges + sorts per fused round vs 1 with the
-    hints (guide §3.1: pick the strategy deliberately). Callers set it
-    only when the vertex census proves the label table is broadcastable."""
+    ``small`` broadcast-hints the lookup sides: under the loop's small
+    conf (:meth:`LoopScope.rows`) AQE is off, so without the hint Catalyst
+    plans every jump as a SortMergeJoin over a checkpoint scan with
+    unknowable stats — measured on cc_cs (|V|=16k): 8 Exchanges + sorts
+    per fused round vs 1 with the hints (guide §3.1: pick the strategy
+    deliberately). Callers set it only when the vertex census proves the
+    label table is broadcastable."""
     _h = (lambda d: d.hint("broadcast")) if small else (lambda d: d)
     j1 = (
         df.join(_h(lookup.select(F.col("id").alias("label"),
@@ -131,7 +103,7 @@ def _cc_labels(g: PropertyGraph, max_iter: int,
     """Fused propagate + scan-jump loop over (id, label). Returns the
     converged label table and counters for the property test: ``rounds``
     (propagation steps) and ``jump_joins`` (jump joins — two per
-    checkpoint job since r15, each against the materialized table).
+    checkpoint job, each against the materialized table).
 
     ``small`` (set by :func:`connected_components` when BOTH censuses are
     known and under ``BIG_GRAPH_ROWS``) broadcast-hints every |V|-row side:
@@ -140,32 +112,18 @@ def _cc_labels(g: PropertyGraph, max_iter: int,
     which side builds the hash table.
 
     The edge set is checkpointed ONCE up front (concurrently with the
-    initial labels — two independent snapshots, guide §2.6): the caller
-    hands a LAZY plan (typically ``undirected()``'s union+distinct, 2
-    Exchanges over 2|E| rows) that the propagation join would otherwise
-    re-execute EVERY round (r14 and the first r15 cut both paid it; the
-    pregel loops already snapshot their edges — ``edges_checkpointed`` —
-    for exactly this reason). Blocks are released on every exit path: the
-    returned label fixpoint is itself a checkpoint with no lineage into
-    the edge snapshot."""
+    initial labels — two independent snapshots): the caller hands a LAZY
+    plan (typically ``undirected()``'s union+distinct, 2 Exchanges over
+    2|E| rows) that the propagation join would otherwise re-execute EVERY
+    round. The returned label fixpoint is itself a checkpoint with no
+    lineage into the edge snapshot."""
     _h = (lambda d: d.hint("broadcast")) if small else (lambda d: d)
-    from gmr_spark.plans.pregel import checkpoint_eager_pair
-
-    labels, edges = checkpoint_eager_pair(
-        g.vertices.select("id", F.col("id").alias("label")),
-        g.edges.select("src", "dst"),
-    )
-    # superseded label checkpoints are released as soon as their successor
-    # is materialized (round-10: this loop predated the release discipline
-    # run_pregel/_backward_members follow — at 100 TB a long run stranded
-    # O(rounds + jump_joins) |V|-row block sets on the async
-    # ContextCleaner). prev IS the live binding; on failure the helper
-    # releases the in-flight checkpoint and the except path the last good
-    # one — the returned fixpoint is never released here.
-    prev = labels
-
     stats = {"rounds": 0, "jump_joins": 0, "converged": False}
-    try:
+    with LoopScope(g.edges.sparkSession) as loop:
+        labels, edges = loop.checkpoint(
+            g.vertices.select("id", F.col("id").alias("label")),
+            g.edges.select("src", "dst"),
+        )
         for _ in range(max_iter):
             # (1) one min-neighbor propagation step + (2) two pointer jumps
             # through the PREVIOUS materialized label table, all in ONE
@@ -192,7 +150,7 @@ def _cc_labels(g: PropertyGraph, max_iter: int,
                 )
             )
             obs = Observation()
-            labels = checkpoint_eager(
+            prev, labels = labels, loop.checkpoint(
                 _scan_jumps(prop, labels, ["_pre"], small=small)
                 .observe(
                     obs,
@@ -203,8 +161,7 @@ def _cc_labels(g: PropertyGraph, max_iter: int,
                 )
                 .drop("_pre", "_j1")
             )
-            _drop_checkpoint_blocks(prev)
-            prev = labels
+            loop.release(prev)
             stats["rounds"] += 1
             stats["jump_joins"] += 2
             res = obs.get
@@ -219,27 +176,18 @@ def _cc_labels(g: PropertyGraph, max_iter: int,
                 if not jumping:
                     break
                 jump_obs = Observation()
-                jump_base = labels
-                labels = checkpoint_eager(
-                    _scan_jumps(jump_base.select("id", "label"), jump_base, [],
+                prev, labels = labels, loop.checkpoint(
+                    _scan_jumps(labels.select("id", "label"), labels, [],
                                 small=small)
                     .observe(jump_obs,
                              F.sum((F.col("label") < F.col("_j1"))
                                    .cast("long")).alias("n_jump2"))
                     .drop("_j1")
                 )
-                _drop_checkpoint_blocks(prev)
-                prev = labels
+                loop.release(prev)
                 stats["jump_joins"] += 2
                 jumping = (jump_obs.get["n_jump2"] or 0) > 0
-    except BaseException:
-        _drop_checkpoint_blocks(prev)
-        raise
-    finally:
-        # the edge snapshot is dead on every exit: the loop's consumers have
-        # run, and the returned labels are a checkpoint with no lineage
-        # into it (success path) / the raise discards everything (failure)
-        _drop_checkpoint_blocks(edges)
+        loop.keep(labels)
     return labels, stats
 
 
@@ -249,32 +197,27 @@ def connected_components(graph: PropertyGraph, *, max_iter: int = 120,
     (weak components) unless ``undirected=False`` (caller already symmetric).
 
     When the caller's graph carries a builder census (``n_edges`` — every
-    derived graph does since r14), the label loop runs under the same
-    |E|-scoped physical conf as every other iterative loop
-    (``small_loop_conf``: statically coalesced shuffles + per-stage
-    adaptive planning off below BIG_GRAPH_ROWS — this was the ONE loop
-    left on session defaults, where AQE turned each fused round into one
-    job per query stage). With AQE off, Catalyst has no runtime sizes for
-    the checkpoint-scan join sides and falls back to SortMergeJoin
-    everywhere — measured on cc_cs: 8 Exchanges + sorts per fused round,
-    a net sf0.1 REGRESSION vs r14 (~8.1 s vs ~6.5 s min-of-2 warm) — so
-    when BOTH censuses additionally prove the |V|-row sides broadcastable
-    (≤ BIG_GRAPH_ROWS), the loop broadcast-hints them: 1 Exchange per
-    round (the neighbor-min groupBy, the one fundamental shuffle).
-    Census-less graphs keep the old behavior rather than paying count
-    jobs for the conf."""
-    from gmr_spark.plans.pregel import BIG_GRAPH_ROWS, small_loop_conf
-
+    derived graph does), the label loop runs under the same |E|-scoped
+    physical conf as every other iterative loop (:meth:`LoopScope.rows`:
+    statically coalesced shuffles + per-stage adaptive planning off below
+    BIG_GRAPH_ROWS; on session defaults AQE turned each fused round into
+    one job per query stage). With AQE off, Catalyst has no runtime sizes
+    for the checkpoint-scan join sides and falls back to SortMergeJoin
+    everywhere — measured on cc_cs: 8 Exchanges + sorts per fused round —
+    so when BOTH censuses additionally prove the |V|-row sides
+    broadcastable (≤ BIG_GRAPH_ROWS), the loop broadcast-hints them: 1
+    Exchange per round (the neighbor-min groupBy, the one fundamental
+    shuffle). Census-less graphs run on the session conf rather than pay
+    count jobs for it."""
     g = graph.undirected() if undirected else graph
     n_edges = graph.n_edges
     if n_edges is not None and undirected:
         n_edges *= 2  # symmetric closure upper bound
-    if n_edges is not None:
-        small = (n_edges <= BIG_GRAPH_ROWS
-                 and graph.n_vertices is not None
-                 and graph.n_vertices <= BIG_GRAPH_ROWS)
-        with small_loop_conf(graph.edges.sparkSession, n_edges):
-            labels, _ = _cc_labels(g, max_iter, small=small)
-    else:
-        labels, _ = _cc_labels(g, max_iter)
+    small = (n_edges is not None and n_edges <= BIG_GRAPH_ROWS
+             and graph.n_vertices is not None
+             and graph.n_vertices <= BIG_GRAPH_ROWS)
+    with LoopScope(graph.edges.sparkSession) as loop:
+        loop.rows(n_edges)
+        labels, _ = _cc_labels(g, max_iter, small=small)
+        loop.keep(labels)
     return labels.select("id", F.col("label").alias("component"))

@@ -38,57 +38,38 @@ def k_core(graph: PropertyGraph, k: int, max_iter: int = 30) -> DataFrame:
     representable here."""
     if k < 1:
         raise ValueError(f"k_core requires k >= 1, got {k}")
-    from gmr_spark.plans.pregel import (
-        BIG_GRAPH_ROWS,
-        _drop_checkpoint_blocks,
-        checkpoint_eager,
-        disown,
-        reset_plan_stats,
-    )
+    from gmr_spark.plans.pregel import BIG_GRAPH_ROWS, LoopScope
 
     und = canonical_undirected(graph.edges)
-    # symmetric view so degree = out-degree in one groupBy
-    sym = und.unionAll(
-        und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint(eager=True)
+    with LoopScope(graph.edges.sparkSession) as loop:
+        # symmetric view so degree = out-degree in one groupBy
+        sym = loop.checkpoint(und.unionAll(
+            und.select(F.col("b").alias("a"), F.col("a").alias("b"))))
+        deg = sym.groupBy(F.col("a").alias("id")).agg(
+            F.count(F.lit(1)).alias("core_degree")
+        )
+        # the census rides the checkpoint's materializing job as an
+        # Observation: a separate count() was one extra job per round, pure
+        # driver/scheduler latency on small cores
+        alive, census = loop.checkpoint(
+            (deg.filter(F.col("core_degree") >= k), {"n": F.count(F.lit(1))}))
+        n_alive = census["n"]
 
-    deg = sym.groupBy(F.col("a").alias("id")).agg(
-        F.count(F.lit(1)).alias("core_degree")
-    )
-    # the census rides the checkpoint's materializing job as an Observation
-    # (run_pregel's O15 discipline, applied r14): a separate count() was one
-    # extra job per round, pure driver/scheduler latency on small cores
-    from pyspark.sql import Observation
+        # the alive set has one row per surviving VERTEX — |V|-scaling until
+        # the peel bites, and its runtime stats sit near the autoBroadcast
+        # threshold at G2 size (the Borůvka phase-1 lesson,
+        # algorithms/mst.py: AQE driver-built a ~5M-row broadcast under
+        # checkpoint storage pressure and OOM'd). The census is exact and
+        # free (n_alive is this round's count), so pin shuffle_hash only
+        # while the set is genuinely big and let AQE broadcast the late
+        # small peels. (n_alive is read at call time, so one helper serves
+        # every iteration.)
+        def _pin(df: DataFrame) -> DataFrame:
+            return df.hint("shuffle_hash") if n_alive > BIG_GRAPH_ROWS else df
 
-    obs0 = Observation()
-    alive = (deg.filter(F.col("core_degree") >= k)
-             .observe(obs0, F.count(F.lit(1)).alias("n"))
-             .localCheckpoint(eager=True))
-    n_alive = int(obs0.get["n"] or 0)
-
-    # every live peel checkpoint we own; entries leave the list either by
-    # being returned to the caller or by an explicit block drop, so ANY
-    # exit — fixpoint, max_iter exhaustion, or a mid-round executor
-    # exception — releases exactly the non-returned checkpoints
-    # (round-4 ADVICE: the exhausted/exception paths used to leak the
-    # current peel's blocks)
-    owned: list[DataFrame] = [alive]
-
-    # the alive set has one row per surviving VERTEX — |V|-scaling until the
-    # peel bites, and its runtime stats sit near the autoBroadcast threshold
-    # at G2 size (the Borůvka phase-1 lesson, algorithms/mst.py: AQE
-    # driver-built a ~5M-row broadcast under checkpoint storage pressure and
-    # OOM'd). The census is exact and free (n_alive is this round's count),
-    # so pin shuffle_hash only while the set is genuinely big and let AQE
-    # broadcast the late small peels. (n_alive is read at call time, so one
-    # helper serves every iteration.)
-    def _pin(df: DataFrame) -> DataFrame:
-        return df.hint("shuffle_hash") if n_alive > BIG_GRAPH_ROWS else df
-
-    try:
         for _ in range(max_iter):
             if n_alive == 0:
-                disown(owned, alive)
+                loop.keep(alive)
                 return alive
             induced = (
                 sym.join(_pin(alive.select(F.col("id").alias("a"))),
@@ -99,37 +80,23 @@ def k_core(graph: PropertyGraph, k: int, max_iter: int = 30) -> DataFrame:
             deg = induced.groupBy(F.col("a").alias("id")).agg(
                 F.count(F.lit(1)).alias("core_degree")
             )
-            obs = Observation()
-            nxt = checkpoint_eager(
-                deg.filter(F.col("core_degree") >= k)
-                .observe(obs, F.count(F.lit(1)).alias("n")))
-            n_nxt = int(obs.get["n"] or 0)
-            if n_alive > BIG_GRAPH_ROWS:
-                # each peel references the previous alive set TWICE, so the
-                # checkpoint-propagated size estimate doubles its digit
-                # count per round — a deep peel at scale would stall the
-                # driver in BigInteger stats math (the Borůvka fixpoint
-                # lesson, plans/pregel.reset_plan_stats). Zero-copy re-leaf
-                # while the set is big; small peels keep their stats.
-                nxt = reset_plan_stats(nxt)
-            owned.append(nxt)
-            # superseded peel state is dead weight — drop its blocks now
-            # instead of waiting for ContextCleaner (same hygiene as
-            # run_pregel's per-superstep truncation)
-            _drop_checkpoint_blocks(alive)
-            disown(owned, alive)
-            if n_nxt == n_alive:
+            # each peel references the previous alive set TWICE, so the
+            # checkpoint-propagated size estimate doubles its digit count
+            # per round — a deep peel at scale would stall the driver in
+            # BigInteger stats math (plans/pregel.reset_plan_stats).
+            # Zero-copy re-leaf while the set is big; small peels keep
+            # their stats.
+            nxt, census = loop.checkpoint(
+                (deg.filter(F.col("core_degree") >= k), {"n": F.count(F.lit(1))}),
+                releaf=n_alive > BIG_GRAPH_ROWS)
+            loop.release(alive)
+            if census["n"] == n_alive:
                 # fixpoint: induced degrees are all >= k -> this IS the core
-                disown(owned, nxt)
+                loop.keep(nxt)
                 return nxt
-            alive, n_alive = nxt, n_nxt
-    finally:
-        # the symmetric edge view is never reachable from the result
-        _drop_checkpoint_blocks(sym)
-        for df in owned:
-            _drop_checkpoint_blocks(df)
+            alive, n_alive = nxt, census["n"]
 
-    raise AssertionError(
-        f"k_core(k={k}) did not reach the peeling fixpoint within "
-        f"{max_iter} iterations — raise max_iter (and the oracle unroll K)"
-    )
+        raise AssertionError(
+            f"k_core(k={k}) did not reach the peeling fixpoint within "
+            f"{max_iter} iterations — raise max_iter (and the oracle unroll K)"
+        )

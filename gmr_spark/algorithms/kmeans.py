@@ -135,30 +135,27 @@ def kmeans(embeddings: DataFrame, *, k: int = 8, iters: int = 2,
     ``assign="expr"`` (default) is the Catalyst-expression path every
     oracle-declared query uses; ``assign="arrow"`` is the batched GEMM path
     for large k (see :func:`_assign_arrow`). Unknown strings are REJECTED
-    up front by :func:`_validate_assign` (round-11 ADVICE item 1, extended
-    to this surface round 13): a typo like "Arrow" must not silently take
-    the interpreter-bound expression path, which is a ~75× degradation at
-    production k with no signal."""
+    up front by :func:`_validate_assign`: a typo like "Arrow" must not
+    silently take the interpreter-bound expression path, which is a ~75×
+    degradation at production k with no signal."""
     _validate_assign(assign)  # before the eager checkpoint / seed collect
-    # |N| census rides the checkpoint job (run_pregel's O15 discipline,
-    # applied r14) — the separate count() was a second setup job
-    from pyspark.sql import Observation
+    from gmr_spark.plans.pregel import LoopScope
 
-    n_obs = Observation()
-    df = embeddings.select(
-        F.col(id_col).cast("bigint").alias("id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
-    ).observe(n_obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
     assign_fn = _assign_arrow if assign == "arrow" else _assign
-
-    from gmr_spark.plans.pregel import small_loop_conf
-
-    seeds = df.orderBy("id").limit(k).collect()
-    centroids = [(i, list(r.vec)) for i, r in enumerate(seeds)]
-    # |N|-scoped physical conf for the Lloyd loop (pregel's round-6 gate);
-    # the final re-assignment is a narrow map over the checkpoint — no
-    # shuffle — so it can run outside the scope.
-    with small_loop_conf(df.sparkSession, int(n_obs.get["n"] or 0)):
+    with LoopScope(embeddings.sparkSession) as loop:
+        # the |N| census rides the checkpoint job
+        df, census = loop.checkpoint((embeddings.select(
+            F.col(id_col).cast("bigint").alias("id"),
+            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
+        ), {"n": F.count(F.lit(1))}))
+        # the returned assignment is a lazy map over the checkpoint
+        loop.keep(df)
+        seeds = df.orderBy("id").limit(k).collect()
+        centroids = [(i, list(r.vec)) for i, r in enumerate(seeds)]
+        # |N|-scoped physical conf for the Lloyd loop; the final
+        # re-assignment is a narrow map over the checkpoint — no shuffle —
+        # and runs after the scope restores the conf.
+        loop.rows(census["n"])
         for _ in range(iters):
             assigned = assign_fn(df, centroids)
             centroids = _update(df, assigned)

@@ -20,16 +20,16 @@ map-side combine — the struct min is algebraic), and a component-graph label
 propagation whose input shrinks geometrically (≤ |components| rows, halving
 per phase). Label propagation folds in a pointer-jump (label := label of
 label) so long hook-chains collapse in O(log chain) rounds instead of
-O(chain). State is localCheckpoint-ed per step per the repo's iterative-loop
-rules (plans/pregel.py docstring).
+O(chain). State is localCheckpoint-ed per step and owned by a LoopScope
+(plans/pregel.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from gmr_spark.graph import PropertyGraph
-from gmr_spark.plans.pregel import checkpoint_eager, small_loop_conf
+from gmr_spark.plans.pregel import BIG_GRAPH_ROWS, LoopScope
 
 
 def _min_label_fixpoint(nodes: DataFrame, und_edges: DataFrame,
@@ -40,83 +40,74 @@ def _min_label_fixpoint(nodes: DataFrame, und_edges: DataFrame,
     Monotone min-propagation with a pointer-jump accelerator; stops at the
     propagation fixpoint, where labels are provably constant per component
     and equal to the component's minimum id. ``big`` pins shuffle_hash on
-    the |V|-scaling sides (see :func:`_boruvka_phases`) — phase-1 component
-    graphs are vertex-sized before the geometric shrink kicks in.
+    the |V|-scaling sides (see :func:`minimum_spanning_forest`) — phase-1
+    component graphs are vertex-sized before the geometric shrink kicks in.
+
+    ``big`` also re-leafs each checkpoint over its own blocks: the jump step
+    SELF-joins the previous checkpoint, so the propagated size estimate
+    SQUARES per iteration — past ~15 iterations the driver drowns in
+    million-digit BigInteger multiplies inside the next checkpoint's stats
+    rewrite (see reset_plan_stats; measured at the G2 phase-2 fixpoint, a
+    1.2M-node path needing ~21 jump rounds). Small graphs keep the stats —
+    their fixpoints converge in <10 rounds and the estimates feed
+    legitimate compile-time broadcasts.
     """
 
     def _pin(df: DataFrame) -> DataFrame:
         return df.hint("shuffle_hash") if big else df
 
-    from gmr_spark.plans.pregel import _drop_checkpoint_blocks, reset_plan_stats
+    with LoopScope(nodes.sparkSession) as loop:
+        lbl = loop.checkpoint(nodes.select("u", F.col("u").alias("lbl")),
+                              releaf=big)
+        for _ in range(max_iter):
+            nb = (
+                und_edges.join(_pin(lbl.withColumnRenamed("u", "v")), "v")
+                .groupBy("u").agg(F.min("lbl").alias("ml"))
+            )
+            # carry each node's pre-round label through the jumps so the
+            # convergence census can ride the checkpoint's materializing
+            # job as an Observation. Labels are monotone non-increasing, so
+            # "improved" ≡ any(new < old).
+            prop = (
+                lbl.join(nb, "u", "left")
+                .select("u", F.col("lbl").alias("old"),
+                        F.least("lbl", F.coalesce("ml", "lbl")).alias("lbl"))
+            )
+            # TWO pointer jumps per checkpoint job, each resolving through
+            # the PREVIOUS materialized label table: the join's build side
+            # is a scan of lbl's persisted blocks, applied sequentially — the
+            # propagation subtree is evaluated exactly ONCE per job.
+            # (Self-joining the lazy `prop` duplicates the edge-join subtree
+            # 2x, and composing the lazy jump output with itself 4x —
+            # measured 12 → 25 stages/job and an 8.2 → 73.4 s mst row.
+            # Scan-jumps keep one evaluation and still multiply resolution
+            # depth 3x per job.) Labels are node ids present in lbl.u with
+            # lbl[u] ≤ u, so each lookup matches and can only decrease;
+            # fixpoint unchanged — jumps only accelerate convergence to the
+            # same per-component min.
 
-    def _cut(df: DataFrame) -> DataFrame:
-        # the jump step SELF-joins the previous checkpoint, so the
-        # propagated size estimate SQUARES per iteration — past ~15
-        # iterations the driver drowns in million-digit BigInteger
-        # multiplies inside the next checkpoint's stats rewrite (see
-        # reset_plan_stats; measured at the G2 phase-2 fixpoint, a
-        # 1.2M-node path needing ~21 jump rounds). Big graphs re-leaf each
-        # checkpoint over its own blocks; small graphs keep the stats —
-        # their fixpoints converge in <10 rounds and the estimates feed
-        # legitimate compile-time broadcasts.
-        return reset_plan_stats(df) if big else df
+            def _lkp() -> DataFrame:  # fresh attribute ids per join instance
+                return _pin(lbl.select(F.col("u").alias("lbl"),
+                                       F.col("lbl").alias("lbl2")))
 
-    from pyspark.sql import Observation
-
-    lbl = _cut(checkpoint_eager(nodes.select("u", F.col("u").alias("lbl"))))
-    for _ in range(max_iter):
-        nb = (
-            und_edges.join(_pin(lbl.withColumnRenamed("u", "v")), "v")
-            .groupBy("u").agg(F.min("lbl").alias("ml"))
-        )
-        # carry each node's pre-round label through the jumps so the
-        # convergence census can ride the checkpoint's materializing job as
-        # an Observation (run_pregel's O15 discipline, applied r14) — the
-        # old jump⋈lbl "changed" probe was a second multi-stage job per
-        # pointer-jump round. Labels are monotone non-increasing, so
-        # "improved" ≡ any(new < old); identical fixpoint, identical labels.
-        prop = (
-            lbl.join(nb, "u", "left")
-            .select("u", F.col("lbl").alias("old"),
-                    F.least("lbl", F.coalesce("ml", "lbl")).alias("lbl"))
-        )
-        # TWO pointer jumps per checkpoint job, each resolving through the
-        # PREVIOUS materialized label table (r15 final): the join's build
-        # side is a scan of lbl's persisted blocks, applied sequentially —
-        # the propagation subtree is evaluated exactly ONCE per job. (The
-        # r14 shape self-joined the lazy `prop`, duplicating the edge-join
-        # subtree 2x; the first r15 draft composed the lazy jump output
-        # with itself, duplicating it 4x — measured 12 → 25 stages/job and
-        # an 8.2 → 73.4 s mst row in a clean A/B window. Scan-jumps keep
-        # one evaluation and still multiply resolution depth 3x per job.)
-        # Labels are node ids present in lbl.u with lbl[u] ≤ u, so each
-        # lookup matches and can only decrease; fixpoint unchanged — jumps
-        # only accelerate convergence to the same per-component min.
-        def _lkp() -> DataFrame:  # fresh attribute ids per join instance
-            return _pin(lbl.select(F.col("u").alias("lbl"),
-                                   F.col("lbl").alias("lbl2")))
-
-        jump1 = (
-            prop.join(_lkp(), "lbl", "left")
-            .select("u", F.coalesce("lbl2", "lbl").alias("lbl"), "old")
-        )
-        obs = Observation()
-        jump = _cut(checkpoint_eager(
-            jump1.join(_lkp(), "lbl", "left")
-            .select("u", F.coalesce("lbl2", "lbl").alias("lbl"),
-                    (F.coalesce("lbl2", "lbl") < F.col("old")).alias("_imp"))
-            .observe(obs, F.sum(F.col("_imp").cast("long")).alias("n_improved"))
-            .drop("_imp")
-        ))
-        improved = int(obs.get["n_improved"] or 0) > 0
-        # the superseded label table is dead the moment the new one landed —
-        # drop its blocks now (run_pregel's per-superstep hygiene; phase-1
-        # component graphs are vertex-sized, and ~20 pointer-jump rounds of
-        # retained V-row checkpoints is real memory)
-        _drop_checkpoint_blocks(lbl)
-        lbl = jump
-        if not improved:
-            break
+            jump1 = (
+                prop.join(_lkp(), "lbl", "left")
+                .select("u", F.coalesce("lbl2", "lbl").alias("lbl"), "old")
+            )
+            obs = Observation()
+            jump = loop.checkpoint(
+                jump1.join(_lkp(), "lbl", "left")
+                .select("u", F.coalesce("lbl2", "lbl").alias("lbl"),
+                        (F.coalesce("lbl2", "lbl") < F.col("old")).alias("_imp"))
+                .observe(obs, F.sum(F.col("_imp").cast("long")).alias("n_improved"))
+                .drop("_imp"),
+                releaf=big,
+            )
+            loop.release(lbl)
+            lbl = jump
+            if int(obs.get["n_improved"] or 0) == 0:
+                break
+        loop.keep(lbl)
     return lbl
 
 
@@ -127,118 +118,57 @@ def minimum_spanning_forest(graph: PropertyGraph, *,
 
     Direction is ignored (MST is an undirected notion); parallel edges keep
     their minimum weight.
-    """
-    from pyspark.sql import Observation
 
-    from gmr_spark.plans.pregel import checkpoint_eager_pair
+    The forest is returned as a lazy union of the per-phase picked-edge
+    checkpoints: nothing inside the loop ever READS the accumulated forest,
+    so each phase's ``sel`` checkpoint is kept as an output part and
+    unioned once at return.
 
-    spark = graph.edges.sparkSession
-    # |E| census rides the checkpoint job (run_pregel's O15 discipline,
-    # applied r14) — the separate count() was a second setup job — and the
-    # two independent setup snapshots materialize CONCURRENTLY (r15, §2.6)
-    canon_obs = Observation()
-    canon, comp = checkpoint_eager_pair(
-        graph.edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-            F.col("weight").alias("w"),
-        )
-        .groupBy("a", "b").agg(F.min("w").alias("w"))
-        .observe(canon_obs, F.count(F.lit(1)).alias("n")),
-        graph.vertices.select("id", F.col("id").alias("comp")),
-    )
-    empty = spark.createDataFrame([], "a bigint, b bigint, w double")
-
-    # |E|-scoped physical conf for the phase loop; no-op on graphs past the
-    # big-graph threshold, where AQE earns its keep
-    n_edges = int(canon_obs.get["n"] or 0)
-    from gmr_spark.plans.pregel import BIG_GRAPH_ROWS, _drop_checkpoint_blocks
-
-    mst = empty
-    try:
-        with small_loop_conf(spark, n_edges):
-            mst = _boruvka_phases(canon, comp, empty, max_phases,
-                                  big=n_edges > BIG_GRAPH_ROWS)
-    finally:
-        # the canonical edge table is never reachable from the returned
-        # forest (checkpoints cut lineage) — release it on every exit.
-        # _boruvka_phases releases every label-state checkpoint it creates;
-        # the initial comp drop here covers the zero-phase path (and is a
-        # harmless no-op double-drop otherwise).
-        _drop_checkpoint_blocks(canon)
-        _drop_checkpoint_blocks(comp)
-    return mst.select(
-        F.col("a").alias("src"), F.col("b").alias("dst"),
-        F.col("w").alias("weight"),
-    )
-
-
-def _boruvka_phases(canon: DataFrame, comp: DataFrame, empty: DataFrame,
-                    max_phases: int, *, big: bool = False) -> DataFrame:
-    """The Borůvka phase loop of :func:`minimum_spanning_forest`, split out
-    so ``small_loop_conf`` wraps it in one scope. Returns the forest
-    (a, b, w) as a lazy union of the per-phase picked-edge checkpoints —
-    the running forest-accumulator checkpoint (one whole materializing job
-    per phase, r14 and earlier) is gone: nothing inside the loop ever READS
-    the accumulated forest, so each phase's ``sel`` checkpoint is simply
-    kept as an output part (the SCC ``assigned_parts`` shape) and unioned
-    once at return (guide §1.2 step 1: don't compute things you throw
-    away — here, don't re-materialize V-rows already materialized).
-
-    ``big`` (edges above ``BIG_GRAPH_ROWS``) pins shuffle_hash on every
-    |V|-scaling join side — the same policy as run_pregel's state joins.
-    The component-label table has one row per VERTEX, so it scales with the
+    Above ``BIG_GRAPH_ROWS`` edges every |V|-scaling join side is pinned
+    shuffle_hash — the same policy as run_pregel's state joins. The
+    component-label table has one row per VERTEX, so it scales with the
     graph, and its runtime stats sit near the autoBroadcast threshold at
     G2 size: measured, AQE picked a ~5M-row driver-built broadcast for the
     phase-1 label join while executor storage held the checkpointed edge
     table, and the build OOM'd the shared local-mode heap. On a cluster the
-    same choice is a driver collect of a vertex-sized table — the r6
-    broadcast-policy trap shape — so above the gate the label side is
-    pinned shuffled, like pregel; below it AQE keeps the (correct)
-    broadcast choice."""
+    same choice is a driver collect of a vertex-sized table, so above the
+    gate the label side is pinned shuffled, like pregel; below it AQE keeps
+    the (correct) broadcast choice.
+    """
+    spark = graph.edges.sparkSession
+    with LoopScope(spark) as loop:
+        # the two independent set-up snapshots materialize CONCURRENTLY,
+        # and the |E| census rides the canonical edge table's job
+        (canon, canon_stats), comp = loop.checkpoint(
+            (graph.edges.filter(F.col("src") != F.col("dst"))
+             .select(
+                 F.least("src", "dst").alias("a"),
+                 F.greatest("src", "dst").alias("b"),
+                 F.col("weight").alias("w"),
+             )
+             .groupBy("a", "b").agg(F.min("w").alias("w")),
+             {"n": F.count(F.lit(1))}),
+            graph.vertices.select("id", F.col("id").alias("comp")),
+        )
+        n_edges = canon_stats["n"]
+        loop.rows(n_edges)
+        big = n_edges > BIG_GRAPH_ROWS
 
-    def _pin(df: DataFrame) -> DataFrame:
-        return df.hint("shuffle_hash") if big else df
+        def _pin(df: DataFrame) -> DataFrame:
+            return df.hint("shuffle_hash") if big else df
 
-    from gmr_spark.plans.pregel import _drop_checkpoint_blocks, disown
-
-    # every live checkpoint this loop owns (round-7 ADVICE: a mid-phase
-    # failure used to leak the current lab/sel/lbl/comp blocks until
-    # ContextCleaner caught up — k_core's owned-list exit hygiene, mirrored).
-    # Entries leave the list by being returned (the forest) or dropped; the
-    # finally releases whatever a phase left behind on ANY exit.
-    owned: list[DataFrame] = [comp]
-
-    def _drop(df: DataFrame) -> None:
-        _drop_checkpoint_blocks(df)
-        disown(owned, df)
-
-    from pyspark.sql import Observation
-
-    # per-phase picked-edge checkpoints — the OUTPUT. They stay in `owned`
-    # until the return actually happens (an exception mid-loop releases
-    # them like any other partial state); on success they are disowned and
-    # their blocks back the returned lazy union.
-    parts: list[DataFrame] = []
-    returning = False
-    try:
+        parts: list[DataFrame] = []
         for _ in range(max_phases):  # noqa: B007 (break-on-fixpoint loop)
-            # cross-edge census rides the checkpoint job (run_pregel's O15
-            # discipline, applied r14) — isEmpty() was a second job a phase
-            obs = Observation()
-            lab = checkpoint_eager(
+            # the cross-edge census rides the checkpoint job
+            lab, lab_stats = loop.checkpoint((
                 canon
                 .join(_pin(comp.select(F.col("id").alias("a"),
                                        F.col("comp").alias("ca"))), "a")
                 .join(_pin(comp.select(F.col("id").alias("b"),
                                        F.col("comp").alias("cb"))), "b")
-                .filter(F.col("ca") != F.col("cb"))
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-            )
-            owned.append(lab)
-            if int(obs.get["n"] or 0) == 0:
-                _drop(lab)
+                .filter(F.col("ca") != F.col("cb")),
+                {"n": F.count(F.lit(1))}))
+            if lab_stats["n"] == 0:
                 break
             # each component picks its min incident cross-edge by (w, a, b)
             incident = lab.select(
@@ -246,13 +176,12 @@ def _boruvka_phases(canon: DataFrame, comp: DataFrame, empty: DataFrame,
             ).unionByName(
                 lab.select(F.col("cb").alias("comp"), "w", "a", "b", "ca", "cb")
             )
-            sel = checkpoint_eager(
+            sel = loop.checkpoint(
                 incident.groupBy("comp")
                 .agg(F.min(F.struct("w", "a", "b", "ca", "cb")).alias("m"))
                 .select("m.w", "m.a", "m.b", "m.ca", "m.cb")
                 .distinct()
             )
-            owned.append(sel)
             parts.append(sel)
             # lab is ~|cross-edges| rows — the FULL edge table in early
             # phases (several GB checkpointed at G2 size); both consumers
@@ -260,10 +189,10 @@ def _boruvka_phases(canon: DataFrame, comp: DataFrame, empty: DataFrame,
             # before the next phase's lab lands. Retaining one lab per phase
             # was measured as a 50 GB heap and a GC-bound crawl at 110M
             # edges.
-            _drop(lab)
+            loop.release(lab)
             # merge components: min-label over the picked component edges.
             # Only components INCIDENT to a picked edge can merge this
-            # phase, so the fixpoint runs on cg's endpoints alone (r15) —
+            # phase, so the fixpoint runs on cg's endpoints alone —
             # untouched components keep their label via the left join +
             # coalesce below (identical result: an isolated node of cg
             # would have fixpoint label = itself).
@@ -272,31 +201,17 @@ def _boruvka_phases(canon: DataFrame, comp: DataFrame, empty: DataFrame,
             ).distinct()
             nodes = cg.select("u").distinct()
             lbl = _min_label_fixpoint(nodes, cg, big=big)
-            owned.append(lbl)
-            prev_comp = comp
-            comp = checkpoint_eager(
+            new_comp = loop.checkpoint(
                 comp.join(_pin(lbl), comp["comp"] == lbl["u"], "left")
                 .select("id", F.coalesce(F.col("lbl"), F.col("comp")).alias("comp"))
             )
-            owned.append(comp)
-            for dead in (prev_comp, lbl):
-                _drop(dead)
-        returning = True
-    finally:
-        # releases the final comp on clean exits (label state is internal —
-        # the returned forest's checkpoints have no lineage into it) AND the
-        # current phase's partial state on the exception path. The forest
-        # parts leave the owned list ONLY when they are actually returned:
-        # on an exception they are just partial checkpoints and must be
-        # released like the rest (round-8 ADVICE item 2 — the old
-        # unconditional disown leaked the accumulator on mid-phase
-        # failures).
-        if returning:
-            for part in parts:
-                disown(owned, part)
-        for df in owned:
-            _drop_checkpoint_blocks(df)
-    mst = empty
+            loop.release(comp, lbl)
+            comp = new_comp
+        loop.keep(*parts)
+    mst = spark.createDataFrame([], "a bigint, b bigint, w double")
     for part in parts:
         mst = mst.unionByName(part.select("a", "b", "w"))
-    return mst
+    return mst.select(
+        F.col("a").alias("src"), F.col("b").alias("dst"),
+        F.col("w").alias("weight"),
+    )

@@ -37,26 +37,19 @@ The superstep count of one coloring pass is bounded by the remaining graph's
 directed diameter — a condensation CHAIN of depth D forces ≥D supersteps in
 phase 1 regardless of scrambling (label propagation is latency-bound on
 deep condensations; that bound is intrinsic to the algorithm class, not this
-plan). Phase-local checkpoints are tracked in an owned list and released on
-every exit (the r7 2-phase runs never held more than a few; a many-SCC run
-holds O(phases) superseded remainders without this). Per-superstep
-localCheckpoint bounds lineage; big graphs re-leaf stats per superstep
-(plans/pregel.reset_plan_stats — the digit-doubling guard).
+plan). Every checkpoint is owned by a LoopScope (plans/pregel.py), which
+releases superseded remainders as the peel advances and everything but
+the output on any exit. Per-superstep localCheckpoint bounds lineage; big
+graphs re-leaf stats per superstep (plans/pregel.reset_plan_stats — the
+digit-doubling guard).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from gmr_spark.graph import PropertyGraph
-from gmr_spark.plans.pregel import (
-    BIG_GRAPH_ROWS,
-    _drop_checkpoint_blocks,
-    checkpoint_eager,
-    checkpoint_eager_pair,
-    disown,
-    reset_plan_stats,
-)
+from gmr_spark.plans.pregel import BIG_GRAPH_ROWS, LoopScope
 
 
 def _scramble(c: Column) -> Column:
@@ -115,32 +108,29 @@ def _min_forward_colors(vertices: DataFrame, edges: DataFrame, max_iter: int,
     """(id, color): the vertex id whose (mix, id) key is minimal among all
     vertices that reach id along ``edges`` (incl. itself) — i.e. the elected
     root of id's color region. Returns (colors view, the underlying
-    checkpoint for the caller to release, supersteps)."""
+    checkpoint for the caller to release, supersteps). ``edges`` must be
+    the caller's eager checkpoint, with its row count as ``n_edges``: the
+    pregel loop then neither copies an O(|E|) snapshot per phase nor pays a
+    count job for it."""
     from gmr_spark.plans.pregel import run_pregel
 
-    result = run_pregel(
-        PropertyGraph(vertices=vertices.select("id"), edges=edges),
-        _ColorProgram(scramble), max_iter=max_iter,
-        # the peel loop only ever passes its own eager localCheckpoints as
-        # edges — run_pregel must not land (and retain) a superseded O(|E|)
-        # edge snapshot per phase (round-8 ADVICE item 3); the edge census
-        # the peel already observed rides along so run_pregel skips its
-        # per-phase count job (r14)
-        edges_checkpointed=True,
-        n_edges=n_edges,
-    )
-    if not result.converged:
-        # a non-fixpoint coloring is not merely slow, it is WRONG: a vertex
-        # whose true min-reaching key has not arrived yet can elect itself
-        # root and peel a strict subset of its SCC — a silent split. Same
-        # loud-failure contract as k_core / pregel_census_bfs.
-        # the final state is a materialized checkpoint nobody will consume
-        # on this path — release it before raising (round-8 ADVICE item 1)
-        _drop_checkpoint_blocks(result.vertices)
-        raise RuntimeError(
-            f"SCC color propagation did not converge within max_iter="
-            f"{max_iter} supersteps — raise max_iter (deep condensations "
-            "need >= their directed diameter)")
+    with LoopScope(edges.sparkSession) as loop:
+        result = run_pregel(
+            PropertyGraph(vertices=vertices.select("id"), edges=edges),
+            _ColorProgram(scramble), max_iter=max_iter,
+            edges_checkpointed=True, n_edges=n_edges,
+        )
+        if not result.converged:
+            # a non-fixpoint coloring is not merely slow, it is WRONG: a
+            # vertex whose true min-reaching key has not arrived yet can
+            # elect itself root and peel a strict subset of its SCC — a
+            # silent split. Same loud-failure contract as k_core /
+            # pregel_census_bfs.
+            raise RuntimeError(
+                f"SCC color propagation did not converge within max_iter="
+                f"{max_iter} supersteps — raise max_iter (deep condensations "
+                "need >= their directed diameter)")
+        loop.keep(result.vertices)
     colors = result.vertices.select("id", F.col("value.rid").alias("color"))
     return colors, result.vertices, result.iterations
 
@@ -164,16 +154,12 @@ def _backward_members(colors: DataFrame, edges: DataFrame, max_iter: int,
     def _pin(df: DataFrame) -> DataFrame:
         return df.hint("shuffle_hash") if big else df
 
-    state = checkpoint_eager(colors.select(
-        "id", "color", (F.col("color") == F.col("id")).alias("member"),
-        (F.col("color") == F.col("id")).alias("active"),
-    ))
-    if big:
-        state = reset_plan_stats(state)
-    prev_state = state
-    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    converged = False
-    try:
+    with LoopScope(edges.sparkSession) as loop:
+        state = loop.checkpoint(colors.select(
+            "id", "color", (F.col("color") == F.col("id")).alias("member"),
+            (F.col("color") == F.col("id")).alias("active"),
+        ), releaf=big)
+        rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         for _ in range(max_iter):
             frontier = state.filter("active").select(
                 F.col("id").alias("fid"), F.col("color").alias("fcolor")
@@ -187,54 +173,40 @@ def _backward_members(colors: DataFrame, edges: DataFrame, max_iter: int,
                 & F.col("msg_colors").isNotNull()
                 & F.array_contains(F.coalesce(F.col("msg_colors"), F.array()), F.col("color"))
             )
-            obs = Observation()
-            state = checkpoint_eager(
+            new_state, census = loop.checkpoint((
                 _pin(state).join(agg, "id", "left")
                 .select(
                     "id", "color",
                     (F.col("member") | newly).alias("member"),
                     newly.alias("active"),
-                )
-                .observe(obs, F.sum(F.col("active").cast("long")).alias("n_active"))
-            )
-            if big:
-                state = reset_plan_stats(state)
-            _drop_checkpoint_blocks(prev_state)
-            prev_state = state
-            if (obs.get["n_active"] or 0) == 0:
-                converged = True
+                ),
+                {"n_active": F.sum(F.col("active").cast("long"))}), releaf=big)
+            loop.release(state)
+            state = new_state
+            if census["n_active"] == 0:
                 break
-    except BaseException:
-        # a mid-superstep Spark failure strands the current (and, in the
-        # window between a new checkpoint landing and the prev drop, the
-        # previous) state checkpoint — release both; unpersist on an
-        # already-released RDD is a no-op (round-8 ADVICE item 1)
-        _drop_checkpoint_blocks(state)
-        if prev_state is not state:
-            _drop_checkpoint_blocks(prev_state)
-        raise
-    if not converged:
-        # incomplete membership silently splits the root's SCC (the
-        # unreached members peel under their own colors next phase)
-        _drop_checkpoint_blocks(state)
-        raise RuntimeError(
-            f"SCC backward membership did not converge within max_iter="
-            f"{max_iter} supersteps — raise max_iter")
+        else:
+            # incomplete membership silently splits the root's SCC (the
+            # unreached members peel under their own colors next phase)
+            raise RuntimeError(
+                f"SCC backward membership did not converge within max_iter="
+                f"{max_iter} supersteps — raise max_iter")
+        loop.keep(state)
     return state.filter("member").select("id", "color"), state
 
 
 def _trim_pass(remaining_v: DataFrame, remaining_e: DataFrame,
                n_remaining: int, n_rem_e: int, max_trim_iter: int,
-               owned: list[DataFrame], *, big: bool = False):
+               loop: LoopScope, *, big: bool = False):
     """Peel vertices with zero in- or out-degree in the remaining graph —
     each is a singleton SCC labeled by itself. Returns
     (remaining_v, remaining_e, n_remaining, n_rem_e, trimmed_parts,
-    n_iters, n_trimmed); the new remainders are eager checkpoints registered in
-    ``owned``, the trimmed parts are eager checkpoints NOT registered (they
-    are returned output). The no-op pass — every phase of an all-cyclic
-    graph pays it — costs ONE job (the keep checkpoint; its count reads the
-    just-landed blocks and the dropped count is derived from the caller's
-    census, so the anti-join materializes only when something trimmed)."""
+    n_iters, n_trimmed); every checkpoint it lands, new remainders and
+    trimmed parts alike, is owned by the caller's ``loop``. The no-op
+    pass — every phase of an all-cyclic graph pays it — costs ONE job (the
+    keep checkpoint; its census rides that job and the dropped count is
+    derived from the caller's census, so the anti-join materializes only
+    when something trimmed)."""
 
     def _pin(df: DataFrame) -> DataFrame:
         return df.hint("shuffle_hash") if big else df
@@ -244,49 +216,37 @@ def _trim_pass(remaining_v: DataFrame, remaining_e: DataFrame,
     for it in range(max_trim_iter):
         has_out = remaining_e.select(F.col("src").alias("id")).distinct()
         has_in = remaining_e.select(F.col("dst").alias("id")).distinct()
-        # census rides the checkpoint job (run_pregel's O15 discipline,
-        # applied r14) — the separate count() was a second job per trim pass
-        obs = Observation()
-        keep = checkpoint_eager(
+        keep, keep_stats = loop.checkpoint((
             remaining_v
             .join(_pin(has_out), "id", "left_semi")
-            .join(_pin(has_in), "id", "left_semi")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-        )
-        owned.append(keep)
-        n_keep = int(obs.get["n"] or 0)
+            .join(_pin(has_in), "id", "left_semi"),
+            {"n": F.count(F.lit(1))}))
+        n_keep = keep_stats["n"]
         n_dropped = n_remaining - n_keep
         if n_dropped == 0:
-            _drop_checkpoint_blocks(keep)
-            disown(owned, keep)
+            loop.release(keep)
             return (remaining_v, remaining_e, n_remaining, n_rem_e,
                     trimmed_parts, it, n_trimmed)
         # `dropped` and the new edge remainder both read only the just-landed
         # `keep` checkpoint plus the previous remainders — independent, so
-        # their two materializing jobs run CONCURRENTLY (r15, guide §2.6);
-        # the edge census rides the new remainder's checkpoint job so the
-        # phase's pregel coloring can skip its own edge count (r14)
-        e_obs = Observation()
-        dropped, new_e = checkpoint_eager_pair(
+        # their two materializing jobs run CONCURRENTLY; the edge census
+        # rides the new remainder's checkpoint job so the phase's pregel
+        # coloring can skip its own edge count
+        dropped, (new_e, e_stats) = loop.checkpoint(
             remaining_v.join(keep, "id", "left_anti").select(
                 "id", F.col("id").alias("scc")),
-            remaining_e
-            .join(_pin(keep.select(F.col("id").alias("src"))), "src", "left_semi")
-            .join(_pin(keep.select(F.col("id").alias("dst"))), "dst", "left_semi")
-            .select("src", "dst")
-            .observe(e_obs, F.count(F.lit(1)).alias("n")),
+            (remaining_e
+             .join(_pin(keep.select(F.col("id").alias("src"))), "src", "left_semi")
+             .join(_pin(keep.select(F.col("id").alias("dst"))), "dst", "left_semi")
+             .select("src", "dst"),
+             {"n": F.count(F.lit(1))}),
         )
         trimmed_parts.append(dropped)
         n_trimmed += n_dropped
         n_remaining = n_keep
-        _drop_checkpoint_blocks(remaining_v)
-        disown(owned, remaining_v)
-        remaining_v = keep
-        owned.append(new_e)
-        _drop_checkpoint_blocks(remaining_e)
-        disown(owned, remaining_e)
-        remaining_e = new_e
-        n_rem_e = int(e_obs.get["n"] or 0)
+        loop.release(remaining_v, remaining_e)
+        remaining_v, remaining_e = keep, new_e
+        n_rem_e = e_stats["n"]
     return (remaining_v, remaining_e, n_remaining, n_rem_e, trimmed_parts,
             max_trim_iter, n_trimmed)
 
@@ -306,43 +266,32 @@ def strongly_connected_components(graph: PropertyGraph, *, max_iter: int = 120,
     after ``max_phases`` — raise the cap rather than return a silently
     partial labeling.
     """
-    # the opening censuses ride the checkpoint jobs (run_pregel's O15
-    # discipline, applied r14) — the separate count()s were extra jobs —
-    # and the two independent snapshots materialize CONCURRENTLY (r15,
-    # guide §2.6)
-    init_obs = Observation()
-    init_e_obs = Observation()
-    remaining_v, remaining_e = checkpoint_eager_pair(
-        graph.vertices.select("id")
-        .observe(init_obs, F.count(F.lit(1)).alias("n")),
-        graph.edges.select("src", "dst")
-        .observe(init_e_obs, F.count(F.lit(1)).alias("n")),
-    )
-    empty = remaining_v.sparkSession.createDataFrame([], "id bigint, scc bigint")
-    assigned_parts: list[DataFrame] = [empty]
-    stats = {"phases": 0, "color_supersteps": 0, "trim_iters_run": 0,
-             "trimmed": 0}
-    # |V|-scaling sides get the big-graph treatment (shuffle_hash pins +
-    # per-superstep stats re-leaf) while the remainder is genuinely big;
-    # re-counted per phase as the peel shrinks it
-    n_remaining = int(init_obs.get["n"] or 0)
-    n_rem_e = int(init_e_obs.get["n"] or 0)
-
-    owned: list[DataFrame] = [remaining_v, remaining_e]
-    done = False
-    try:
+    stats = {} if metrics_out is None else metrics_out
+    stats.update(phases=0, color_supersteps=0, trim_iters_run=0, trimmed=0)
+    spark = graph.edges.sparkSession
+    with LoopScope(spark) as loop:
+        # the opening censuses ride the checkpoint jobs, and the two
+        # independent snapshots materialize CONCURRENTLY
+        (remaining_v, v_stats), (remaining_e, e_stats) = loop.checkpoint(
+            (graph.vertices.select("id"), {"n": F.count(F.lit(1))}),
+            (graph.edges.select("src", "dst"), {"n": F.count(F.lit(1))}),
+        )
+        # |V|-scaling sides get the big-graph treatment (shuffle_hash pins +
+        # per-superstep stats re-leaf) while the remainder is genuinely big;
+        # re-counted per phase as the peel shrinks it
+        n_remaining, n_rem_e = v_stats["n"], e_stats["n"]
+        parts: list[DataFrame] = []
         for _ in range(max_phases):
             big = n_remaining > BIG_GRAPH_ROWS
             if trim_iters > 0 and n_remaining > 0:
                 (remaining_v, remaining_e, n_remaining, n_rem_e, trimmed,
                  t_it, t_n) = _trim_pass(remaining_v, remaining_e,
                                          n_remaining, n_rem_e,
-                                         trim_iters, owned, big=big)
-                assigned_parts.extend(trimmed)
+                                         trim_iters, loop, big=big)
+                parts.extend(trimmed)
                 stats["trim_iters_run"] += t_it
                 stats["trimmed"] += t_n
             if n_remaining == 0:
-                done = True
                 break
             colors, colors_ckpt, steps = _min_forward_colors(
                 remaining_v, remaining_e, max_iter, scramble=scramble,
@@ -353,64 +302,41 @@ def strongly_connected_components(graph: PropertyGraph, *, max_iter: int = 120,
             # relabel each membership group by its min vertex id — the
             # declared output contract, independent of the scramble
             scc_min = members.groupBy("color").agg(F.min("id").alias("scc"))
-            part = checkpoint_eager(
+            part = loop.checkpoint(
                 members.join(scc_min, "color").select("id", "scc"))
-            assigned_parts.append(part)
+            parts.append(part)
             stats["phases"] += 1
             member_ids = part.select("id")
-            # the next phase's censuses ride these checkpoint jobs
-            # (run_pregel's O15 discipline, applied r14) — and the two
-            # remainders both read only the just-landed `part` checkpoint
-            # plus the previous remainders, so their materializing jobs run
-            # CONCURRENTLY (r15, guide §2.6): one job of phase-tail wall
-            # instead of two
-            v_obs = Observation()
-            e_obs = Observation()
-            new_v, new_e = checkpoint_eager_pair(
-                remaining_v.join(member_ids, "id", "left_anti")
-                .observe(v_obs, F.count(F.lit(1)).alias("n")),
-                remaining_e.join(member_ids.withColumnRenamed("id", "src"),
-                                 "src", "left_anti")
-                .join(member_ids.withColumnRenamed("id", "dst"),
-                      "dst", "left_anti")
-                .select("src", "dst")
-                .observe(e_obs, F.count(F.lit(1)).alias("n")),
+            # the next phase's censuses ride these checkpoint jobs, and the
+            # two remainders both read only the just-landed `part`
+            # checkpoint plus the previous remainders, so their
+            # materializing jobs run CONCURRENTLY
+            (new_v, v_stats), (new_e, e_stats) = loop.checkpoint(
+                (remaining_v.join(member_ids, "id", "left_anti"),
+                 {"n": F.count(F.lit(1))}),
+                (remaining_e.join(member_ids.withColumnRenamed("id", "src"),
+                                  "src", "left_anti")
+                 .join(member_ids.withColumnRenamed("id", "dst"),
+                       "dst", "left_anti")
+                 .select("src", "dst"),
+                 {"n": F.count(F.lit(1))}),
             )
-            owned.append(new_v)
-            _drop_checkpoint_blocks(remaining_v)
-            disown(owned, remaining_v)
-            remaining_v = new_v
-            owned.append(new_e)
-            _drop_checkpoint_blocks(remaining_e)
-            disown(owned, remaining_e)
-            remaining_e = new_e
-            n_rem_e = int(e_obs.get["n"] or 0)
+            loop.release(remaining_v, remaining_e)
+            remaining_v, remaining_e = new_v, new_e
+            n_rem_e = e_stats["n"]
             # the coloring result and the membership state are dead once
-            # part landed (part is a fresh checkpoint) — release both now
-            _drop_checkpoint_blocks(colors_ckpt)
-            _drop_checkpoint_blocks(member_state)
-            n_remaining = int(v_obs.get["n"] or 0)
-        if not done and n_remaining > 0:
-            raise RuntimeError(
-                f"SCC did not assign every vertex within max_phases="
-                f"{max_phases}; raise the cap for extremely deep "
-                "condensations"
-            )
-    except BaseException:
-        # the already-materialized OUTPUT parts (trimmed singletons + peeled
-        # phases) are never returned on this path — release their blocks
-        # instead of leaving them to ContextCleaner (same hygiene as the
-        # owned list, which only tracks internal state)
-        for p in assigned_parts[1:]:
-            _drop_checkpoint_blocks(p)
-        raise
-    finally:
-        for df in owned:
-            _drop_checkpoint_blocks(df)
-        if metrics_out is not None:
-            metrics_out.update(stats)
-
-    out = assigned_parts[0]
-    for part in assigned_parts[1:]:
+            # part landed (part is a fresh checkpoint)
+            loop.release(colors_ckpt, member_state)
+            n_remaining = v_stats["n"]
+        else:
+            if n_remaining > 0:
+                raise RuntimeError(
+                    f"SCC did not assign every vertex within max_phases="
+                    f"{max_phases}; raise the cap for extremely deep "
+                    "condensations"
+                )
+        loop.keep(*parts)
+    out = spark.createDataFrame([], "id bigint, scc bigint")
+    for part in parts:
         out = out.unionByName(part)
     return out

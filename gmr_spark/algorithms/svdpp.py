@@ -97,102 +97,87 @@ def svdpp_train(spark: SparkSession, rating_edges_df: DataFrame, *,
     ``iter_times`` (optional) collects per-iteration wall seconds."""
     import time as _time
 
-    from gmr_spark.plans.pregel import (_drop_checkpoint_blocks,
-                                        checkpoint_eager,
-                                        checkpoint_eager_pair)
+    from gmr_spark.plans.pregel import LoopScope
 
     cap = _STATE_BROADCAST_CAP if state_broadcast_cap is None else state_broadcast_cap
     dims = range(rank)
-    # the setup censuses (n_edges, |users|, |items|) and mu all ride their
-    # checkpoints' materializing jobs as Observations (run_pregel's O15
-    # discipline, applied r14) — previously 4 extra driver actions before
-    # the loop. mu's sum-then-divide is arithmetically the agg's
-    # sum/count expression; the declared query's ratings are
-    # integer-valued doubles, whose sum is exact in any order, and for
-    # arbitrary float ratings the final ROUND(.,6) absorbs summation-order
-    # drift (the oracle-twin contract, as with the join strategies).
-    from pyspark.sql import Observation
+    with LoopScope(spark) as loop:
+        # the setup censuses (n_edges, |users|, |items|) and mu all ride
+        # their checkpoints' materializing jobs as Observations. mu's
+        # sum-then-divide is arithmetically the agg's sum/count expression;
+        # the declared query's ratings are integer-valued doubles, whose sum
+        # is exact in any order, and for arbitrary float ratings the final
+        # ROUND(.,6) absorbs summation-order drift (the oracle-twin
+        # contract, as with the join strategies).
+        edges, e_stats = loop.checkpoint(
+            (rating_edges_df, {"sr": F.sum("r"), "n": F.count(F.lit(1))}))
+        mu = float(e_stats["sr"]) / e_stats["n"]
+        n_edges = e_stats["n"]
 
-    e_obs = Observation()
-    edges = (rating_edges_df
-             .observe(e_obs, F.sum("r").alias("sr"),
-                      F.count(F.lit(1)).alias("n"))
-             .localCheckpoint(eager=True))
-    e_stats = e_obs.get
-    mu = float(e_stats["sr"]) / int(e_stats["n"])
-    n_edges = int(e_stats["n"])
-
-    # the two state tables read only the edge checkpoint and are mutually
-    # independent — their materializing jobs run CONCURRENTLY (r15, §2.6)
-    u_obs = Observation()
-    i_obs = Observation()
-    users, items = checkpoint_eager_pair(
-        edges.groupBy("u").agg(F.count(F.lit(1)).alias("nu")).select(
-            "u", "nu", F.lit(0.0).alias("bu"),
-            *[_init_expr("u", 31, 17, d).alias(f"p{d}") for d in dims],
-        ).observe(u_obs, F.count(F.lit(1)).alias("n")),
-        edges.select("i").distinct().select(
-            "i", F.lit(0.0).alias("bi"),
-            *[_init_expr("i", 37, 19, d).alias(f"q{d}") for d in dims],
-            *[_init_expr("i", 41, 23, d).alias(f"y{d}") for d in dims],
-        ).observe(i_obs, F.count(F.lit(1)).alias("n")),
-    )
-
-    # size-gated broadcast for every state-side join (see
-    # _STATE_BROADCAST_CAP): per-user and per-item tables — including the
-    # derived aggregates imp/uagg/g/iagg/yagg, whose row counts are bounded
-    # by the state tables' — ride map-side joins against the edge table when
-    # they fit; join strategy does not change the arithmetic (the float
-    # drift from summation order is absorbed by the final ROUND(.,6), the
-    # same contract the oracle twin already relies on).
-    small_state = max(int(u_obs.get["n"] or 0), int(i_obs.get["n"] or 0)) <= cap
-    if small_state:
-        def st(df: DataFrame) -> DataFrame:
-            return F.broadcast(df)
-    else:
-        def st(df: DataFrame) -> DataFrame:
-            return df
-
-    def _imp(u_state: DataFrame, i_state: DataFrame) -> DataFrame:
-        """(u, imp0..): the implicit-feedback term |N(u)|^-1/2 * sum y_j."""
-        return (
-            edges.join(st(i_state.select("i", *[f"y{d}" for d in dims])), "i")
-            .groupBy("u").agg(*[F.sum(f"y{d}").alias(f"sy{d}") for d in dims])
-            .join(st(u_state.select("u", "nu")), "u")
-            .select("u", *[
-                (F.col(f"sy{d}") / F.sqrt(F.col("nu"))).alias(f"imp{d}")
-                for d in dims
-            ])
+        # the two state tables read only the edge checkpoint and are
+        # mutually independent — their materializing jobs run CONCURRENTLY
+        (users, u_stats), (items, i_stats) = loop.checkpoint(
+            (edges.groupBy("u").agg(F.count(F.lit(1)).alias("nu")).select(
+                "u", "nu", F.lit(0.0).alias("bu"),
+                *[_init_expr("u", 31, 17, d).alias(f"p{d}") for d in dims],
+            ), {"n": F.count(F.lit(1))}),
+            (edges.select("i").distinct().select(
+                "i", F.lit(0.0).alias("bi"),
+                *[_init_expr("i", 37, 19, d).alias(f"q{d}") for d in dims],
+                *[_init_expr("i", 41, 23, d).alias(f"y{d}") for d in dims],
+            ), {"n": F.count(F.lit(1))}),
         )
 
-    def _errs(u_state: DataFrame, i_state: DataFrame, imp: DataFrame) -> DataFrame:
-        """(u, i, err, q*, pimp*): per-edge residual against current state."""
-        dot = None
-        for d in dims:
-            term = F.col(f"q{d}") * (F.col(f"p{d}") + F.col(f"imp{d}"))
-            dot = term if dot is None else dot + term
-        return (
-            edges.join(st(u_state), "u").join(st(i_state), "i").join(st(imp), "u")
-            .select(
-                "u", "i",
-                (F.col("r") - (F.lit(mu) + F.col("bu") + F.col("bi") + dot))
-                .alias("err"),
-                *[F.col(f"q{d}") for d in dims],
-                *[(F.col(f"p{d}") + F.col(f"imp{d}")).alias(f"pimp{d}")
-                  for d in dims],
+        # size-gated broadcast for every state-side join (see
+        # _STATE_BROADCAST_CAP): per-user and per-item tables — including the
+        # derived aggregates imp/uagg/g/iagg/yagg, whose row counts are bounded
+        # by the state tables' — ride map-side joins against the edge table when
+        # they fit; join strategy does not change the arithmetic (the float
+        # drift from summation order is absorbed by the final ROUND(.,6), the
+        # same contract the oracle twin already relies on).
+        small_state = max(u_stats["n"], i_stats["n"]) <= cap
+        if small_state:
+            def st(df: DataFrame) -> DataFrame:
+                return F.broadcast(df)
+        else:
+            def st(df: DataFrame) -> DataFrame:
+                return df
+
+        def _imp(u_state: DataFrame, i_state: DataFrame) -> DataFrame:
+            """(u, imp0..): the implicit-feedback term |N(u)|^-1/2 * sum y_j."""
+            return (
+                edges.join(st(i_state.select("i", *[f"y{d}" for d in dims])), "i")
+                .groupBy("u").agg(*[F.sum(f"y{d}").alias(f"sy{d}") for d in dims])
+                .join(st(u_state.select("u", "nu")), "u")
+                .select("u", *[
+                    (F.col(f"sy{d}") / F.sqrt(F.col("nu"))).alias(f"imp{d}")
+                    for d in dims
+                ])
             )
-        )
 
-    owned = [edges, users, items]
-    # |ratings|-scoped physical conf for the GD loop (pregel's round-6
-    # gate); no-op past the big-graph threshold (the 60M-edge SCALE.md runs
-    # are unaffected). The returned prediction join is lazy and evaluates
-    # after restore — only the loop's shuffles run under the small conf.
-    from gmr_spark.plans.pregel import apply_small_loop_conf, restore_conf
+        def _errs(u_state: DataFrame, i_state: DataFrame, imp: DataFrame) -> DataFrame:
+            """(u, i, err, q*, pimp*): per-edge residual against current state."""
+            dot = None
+            for d in dims:
+                term = F.col(f"q{d}") * (F.col(f"p{d}") + F.col(f"imp{d}"))
+                dot = term if dot is None else dot + term
+            return (
+                edges.join(st(u_state), "u").join(st(i_state), "i").join(st(imp), "u")
+                .select(
+                    "u", "i",
+                    (F.col("r") - (F.lit(mu) + F.col("bu") + F.col("bi") + dot))
+                    .alias("err"),
+                    *[F.col(f"q{d}") for d in dims],
+                    *[(F.col(f"p{d}") + F.col(f"imp{d}")).alias(f"pimp{d}")
+                      for d in dims],
+                )
+            )
 
-    spark = edges.sparkSession
-    saved_conf = apply_small_loop_conf(spark, n_edges)
-    try:
+        # |ratings|-scoped physical conf for the GD loop; a no-op past the
+        # big-graph threshold (the 60M-edge SCALE.md runs are unaffected).
+        # The returned prediction join is lazy and evaluates after the
+        # scope restores the conf — only the loop's shuffles run under it.
+        loop.rows(n_edges)
         for _ in range(iters):
             _t0 = _time.perf_counter()
             imp = _imp(users, items)
@@ -201,22 +186,19 @@ def svdpp_train(spark: SparkSession, rating_edges_df: DataFrame, *,
             # re-derivation (3 consumers re-running the edge join) costs
             # more than the two checkpoint jobs (14.5 s vs 11.9 s for the
             # full query at sf0.1)
-            errs = checkpoint_eager(_errs(users, items, imp))
-            owned.append(errs)
+            errs = loop.checkpoint(_errs(users, items, imp))
 
             # one aggregate serves both the p/b update and the y gradient
             # (g_u = sp_u / sqrt(nu)) — materialized so the two consumers
             # scan a tiny per-user table instead of re-deriving errs
-            uagg = checkpoint_eager(errs.groupBy("u").agg(
+            uagg = loop.checkpoint(errs.groupBy("u").agg(
                 F.sum("err").alias("se"),
                 *[F.sum(F.col("err") * F.col(f"q{d}")).alias(f"sp{d}")
                   for d in dims],
             ))
-            owned.append(uagg)
             # new_users and new_items below both read only already-landed
             # checkpoints (users/items/edges/errs/uagg) and are independent
             # of each other — their two checkpoint jobs run CONCURRENTLY
-            # via checkpoint_eager_pair (r15, guide §2.6)
             new_users = users.join(st(uagg), "u").select(
                 "u", "nu",
                 (F.col("bu") + gamma * (F.col("se") - lam * F.col("bu")))
@@ -264,17 +246,13 @@ def svdpp_train(spark: SparkSession, rating_edges_df: DataFrame, *,
                     for d in dims
                 ],
             )
-            new_users, new_items = checkpoint_eager_pair(new_users, new_items)
-            owned.append(new_users)
-            owned.append(new_items)
-
-            for df in (users, items, errs, uagg):
-                _drop_checkpoint_blocks(df)
-                owned.remove(df)
+            new_users, new_items = loop.checkpoint(new_users, new_items)
+            loop.release(users, items, errs, uagg)
             users, items = new_users, new_items
             if iter_times is not None:
                 iter_times.append(round(_time.perf_counter() - _t0, 1))
 
+        loop.keep(edges, users, items)
         imp = _imp(users, items)
         dot = None
         for d in dims:
@@ -288,9 +266,3 @@ def svdpp_train(spark: SparkSession, rating_edges_df: DataFrame, *,
                 .alias("pred"),
             )
         )
-    except Exception:
-        for df in owned:
-            _drop_checkpoint_blocks(df)
-        raise
-    finally:
-        restore_conf(spark, saved_conf)

@@ -306,51 +306,33 @@ def k_truss(graph: PropertyGraph, k: int, max_iter: int = 30) -> DataFrame:
     query convergence contract, same as k_core)."""
     if k < 2:
         raise ValueError(f"k_truss requires k >= 2, got {k}")
-    from gmr_spark.plans.pregel import _drop_checkpoint_blocks, disown
+    from gmr_spark.plans.pregel import LoopScope
 
     min_support = k - 2
-    # `ckpt` is the ONE eager checkpoint per round (round-4 ADVICE: a second
-    # per-round checkpoint of the (a,b) projection doubled checkpoint I/O
-    # for no semantic gain); `edges` is a lazy projection over it. The
-    # opening closure stats (count + id bounds) ride its materializing job
-    # as an Observation (run_pregel's O15 discipline, applied r14) — the
-    # separate _closure_stats agg was a second setup job.
-    from pyspark.sql import Observation
-
-    t_obs = Observation()
-    ckpt = (canonical_undirected(graph.edges)
-            .observe(t_obs, F.count(F.lit(1)).alias("n"),
-                     F.min("a").alias("lo"), F.max("b").alias("hi"))
-            .localCheckpoint(eager=True))
-    edges = ckpt
-    # id bounds computed once up front (peeling only removes edges, never
-    # widens the range) — each round then reuses them plus the count it
-    # already pays, so the adaptive closure probe costs no extra pass and
-    # flips to the broadcast path as the edge set shrinks. One exception
-    # (round-5 ADVICE): if the INITIAL span exceeds the injective-encoding
-    # limit, stale bounds would keep the probe locked out even after
-    # peeling shrinks the span — so the bounds are recomputed (one tiny agg
-    # on the already-small surviving set) the first round the edge count
-    # drops under the broadcast cap while the cached span still exceeds it.
-    _t_stats = t_obs.get
-    n_edges, id_lo, id_hi = (int(_t_stats["n"] or 0), int(_t_stats["lo"] or 0),
-                             int(_t_stats["hi"] or 0))
-
-    # live checkpoints we own — released on every non-return exit (fixpoint
-    # returns remove their result first), so a mid-round executor exception
-    # or max_iter exhaustion cannot leak the current round's blocks
-    owned: list[DataFrame] = [ckpt]
-    # |E|-scoped physical conf for the peel loop (pregel's round-6 gate);
-    # restored in the existing finally alongside the block releases
-    from gmr_spark.plans.pregel import apply_small_loop_conf, restore_conf
-
-    spark = ckpt.sparkSession
-    saved_conf = apply_small_loop_conf(spark, n_edges)
-    try:
+    with LoopScope(graph.edges.sparkSession) as loop:
+        # `ckpt` is the ONE eager checkpoint per round; `edges` is a lazy
+        # projection over it. The opening closure stats (count + id bounds)
+        # ride its materializing job as an Observation.
+        ckpt, t_stats = loop.checkpoint((
+            canonical_undirected(graph.edges),
+            {"n": F.count(F.lit(1)), "lo": F.min("a"), "hi": F.max("b")}))
+        edges = ckpt
+        # id bounds computed once up front (peeling only removes edges,
+        # never widens the range) — each round then reuses them plus the
+        # count it already pays, so the adaptive closure probe costs no
+        # extra pass and flips to the broadcast path as the edge set
+        # shrinks. One exception: if the INITIAL span exceeds the
+        # injective-encoding limit, stale bounds would keep the probe
+        # locked out even after peeling shrinks the span — so the bounds
+        # are recomputed (one tiny agg on the already-small surviving set)
+        # the first round the edge count drops under the broadcast cap
+        # while the cached span still exceeds it.
+        n_edges, id_lo, id_hi = t_stats["n"], t_stats["lo"], t_stats["hi"]
+        loop.rows(n_edges)
         for _ in range(max_iter):
             if n_edges == 0:
                 # the (empty) result still reads through the live checkpoint
-                disown(owned, ckpt)
+                loop.keep(ckpt)
                 return edges.select(
                     "a", "b", F.lit(0).cast("bigint").alias("support"))
             tri = closed_triangles(edges, stats=(n_edges, id_lo, id_hi))
@@ -362,39 +344,25 @@ def k_truss(graph: PropertyGraph, k: int, max_iter: int = 30) -> DataFrame:
             )
             support = sup_rows.groupBy("a", "b").agg(
                 F.count(F.lit(1)).alias("support"))
-            # census rides the checkpoint job (run_pregel's O15 discipline,
-            # applied r14) — the separate count() was one extra job a round
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            nxt = (
+            nxt, census = loop.checkpoint((
                 edges.join(support, ["a", "b"], "left")
                 .select("a", "b",
                         F.coalesce("support", F.lit(0)).cast("bigint").alias("support"))
-                .filter(F.col("support") >= min_support)
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint(eager=True)
-            )
-            owned.append(nxt)
-            n_nxt = int(obs.get["n"] or 0)
-            _drop_checkpoint_blocks(ckpt)
-            disown(owned, ckpt)
-            if n_nxt == n_edges:
+                .filter(F.col("support") >= min_support),
+                {"n": F.count(F.lit(1))}))
+            loop.release(ckpt)
+            if census["n"] == n_edges:
                 # no edge dropped -> supports are final in-truss values
-                disown(owned, nxt)
+                loop.keep(nxt)
                 return nxt
             ckpt = nxt
             edges = nxt.select("a", "b")  # lazy over the round's checkpoint
-            n_edges = n_nxt
+            n_edges = census["n"]
             if (0 < n_edges <= _CLOSURE_BROADCAST_MAX_EDGES
                     and id_hi - id_lo + 1 > _ENC_MAX_SPAN):
                 _, id_lo, id_hi = _closure_stats(edges)
-    finally:
-        restore_conf(spark, saved_conf)
-        for df in owned:
-            _drop_checkpoint_blocks(df)
 
-    raise AssertionError(
-        f"k_truss(k={k}) did not reach the peeling fixpoint within "
-        f"{max_iter} rounds — raise max_iter (and the oracle unroll K)"
-    )
+        raise AssertionError(
+            f"k_truss(k={k}) did not reach the peeling fixpoint within "
+            f"{max_iter} rounds — raise max_iter (and the oracle unroll K)"
+        )

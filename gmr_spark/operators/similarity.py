@@ -268,15 +268,15 @@ def train_ivf_cells(
     ``k_cells`` rows on the driver — fine at the 10⁴–10⁵ production
     range, by construction never corpus-scale."""
     from gmr_spark.algorithms.kmeans import _assign_arrow, _update
-    from gmr_spark.plans.pregel import _drop_checkpoint_blocks, checkpoint_eager
+    from gmr_spark.plans.pregel import LoopScope
 
     seed_rows = df.orderBy("id").limit(k_cells).collect()
     cents = [(i, list(r.v)) for i, r in enumerate(seed_rows)]
     sample = df if sample_mod <= 1 else df.filter(
         F.col("id") % sample_mod == 0)
-    # materialize the sample once: every Lloyd iteration re-reads it
-    sample = checkpoint_eager(sample.select("id", F.col("v").alias("vec")))
-    try:
+    with LoopScope(df.sparkSession) as loop:
+        # materialize the sample once: every Lloyd iteration re-reads it
+        sample = loop.checkpoint(sample.select("id", F.col("v").alias("vec")))
         for _ in range(iters):
             nxt = _update(sample, _assign_arrow(sample, cents))
             if not nxt:
@@ -285,8 +285,6 @@ def train_ivf_cells(
                 # of feeding an empty codebook back into the assign kernel
                 break
             cents = nxt
-    finally:
-        _drop_checkpoint_blocks(sample)
     return cents
 
 

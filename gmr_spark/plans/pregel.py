@@ -29,8 +29,7 @@ from __future__ import annotations
 
 import threading
 import time
-import weakref
-from contextlib import contextmanager
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Protocol
 
@@ -47,10 +46,10 @@ DEFAULT_THRESHOLD = 1e-4
 BIG_GRAPH_ROWS = 1_500_000
 # ... EXCEPT when the frontier is KNOWN (exact census, ci=1) to be small:
 # then a hint-forced broadcast of the frontier is safe and the message join
-# runs without any exchange — the frontier-size-adaptive strategy of
-# round-4 verdict item 4. Only exercised when the census is exact; at ci>1
-# the frontier can grow out-degree-fold between censuses and the hinted
-# broadcast would have no size fallback. The cap is in CELLS
+# runs without any exchange — the frontier-size-adaptive strategy. Only
+# exercised when the census is exact; at ci>1 the frontier can grow
+# out-degree-fold between censuses and the hinted broadcast would have no
+# size fallback. The cap is in CELLS
 # (rows × state columns), not rows: program state width is unbounded (e.g.
 # a multi-landmark program carries one column per landmark), and a
 # row-count-only cap would let a wide-state frontier balloon past the
@@ -62,16 +61,15 @@ ADAPTIVE_BROADCAST_CELLS = 4_000_000
 # and AQE query-stage scheduling, not by data: fixed-k PageRank on the two
 # heaviest sf0.1 bench graphs (1.2M edges, 600k vertices) measured
 # 11.7-13.9 s under the session defaults (AQE on, 32 shuffle partitions)
-# vs 6.1-9.6 s with AQE off + fewer shuffle partitions (round-6 probes,
-# min-of-2 per cell). So for small graphs the loop statically coalesces
-# its shuffles to ~|E|/75k partitions — never above the session setting,
-# which is cluster sizing the engine must respect — and turns per-stage
-# adaptive planning off for the loop's duration (restored on every exit
-# path). The 75k divisor is the best cell of a swept band on the two 1.2M-
-# edge graphs (|E|/150k → 12.5/9.6 s, /75k → 8.3/6.7, /40k → 8.1/8.3,
-# AQE-off-only → 9.0/10.0); everything in the 8-32-partition band sits
-# within host noise, so the constant is a centroid, not a cliff. Big
-# graphs are untouched: AQE's skew-join splitting and runtime coalescing
+# vs 6.1-9.6 s with AQE off + fewer shuffle partitions (min-of-2 per
+# cell). So for small graphs the loop statically coalesces its shuffles to
+# ~|E|/75k partitions — never above the session setting, which is cluster
+# sizing the engine must respect — and turns per-stage adaptive planning
+# off for the loop's duration (LoopScope.rows). The 75k divisor is the
+# best cell of a swept band on the two 1.2M-edge graphs (|E|/150k →
+# 12.5/9.6 s, /75k → 8.3/6.7, /40k → 8.1/8.3, AQE-off-only → 9.0/10.0);
+# everything in the 8-32-partition band sits within host noise, so the
+# constant is a centroid, not a cliff. Big graphs are untouched: AQE's skew-join splitting and runtime coalescing
 # earn their scheduling overhead when a superstep moves O(100M) messages,
 # and the G2 SCALE.md rows were measured with AQE on. This is the static
 # analog of AQE's coalescing: the engine knows |E| exactly (counted on
@@ -133,7 +131,7 @@ def _drop_checkpoint_blocks(df: DataFrame) -> None:
 
     ContextCleaner reclaims dead checkpoint RDDs asynchronously; across a
     many-superstep loop the backlog of dead blocks measurably slows later
-    jobs (3-5x observed in round 1), so the loop drops each superstep's
+    jobs (3-5x observed), so the loop drops each superstep's
     blocks the moment its successor is materialized. Callers must never
     drop a state still referenced: a localCheckpointed RDD has no lineage
     to rebuild from.
@@ -142,7 +140,7 @@ def _drop_checkpoint_blocks(df: DataFrame) -> None:
     PySpark upgrade that breaks the API the fallback is a no-op that
     silently reinstates the retention pathology this exists to fix (a
     50 GB heap at 110M edges, algorithms/mst.py), so it WARNS once per
-    process instead of passing silently (round-7 verdict item 3).
+    process instead of passing silently.
     """
     try:
         plan = df._jdf.queryExecution().analyzed()
@@ -154,152 +152,6 @@ def _drop_checkpoint_blocks(df: DataFrame) -> None:
         plan.rdd().unpersist(False)
     except Exception:
         _warn_internal_api_fallback("_drop_checkpoint_blocks")
-
-
-# non-blocking reentrancy guards for checkpoint_eager: held for the duration
-# of each call, so concurrent entry (a contract violation — see the
-# CONCURRENCY CONTRACT below) fails loudly instead of silently racing the
-# persistent-RDD-id snapshot. KEYED PER SparkContext (round-11 ADVICE
-# item 4): the snapshot race the guard protects is per-context — two
-# independent SparkContexts in one process cannot race each other's
-# getPersistentRDDs snapshot, so they get independent locks instead of a
-# spurious 'concurrent entry' error. Weak keys: a lock must not outlive
-# (or keep alive) its stopped context.
-_EAGER_GUARDS: "weakref.WeakKeyDictionary[object, threading.Lock]" = (
-    weakref.WeakKeyDictionary())
-_EAGER_GUARDS_LOCK = threading.Lock()
-
-
-def _eager_guard(sc) -> threading.Lock:
-    """The per-SparkContext reentrancy lock (created on first use)."""
-    with _EAGER_GUARDS_LOCK:
-        lock = _EAGER_GUARDS.get(sc)
-        if lock is None:
-            lock = threading.Lock()
-            _EAGER_GUARDS[sc] = lock
-        return lock
-
-
-def checkpoint_eager(df: DataFrame) -> DataFrame:
-    """``localCheckpoint(eager=True)`` that cannot strand blocks when the
-    materializing job ITSELF fails (round-9 verdict item 3: the loop except
-    paths release the states they hold *bindings* to, but a failure inside
-    the eager checkpoint call happens before the binding exists — the
-    partially-persisted RDD used to be left to the async ContextCleaner).
-    Snapshot the persistent-RDD id set before the call; on failure,
-    unpersist every id the call added, then re-raise. The snapshot is one
-    driver-side py4j map read per superstep — microseconds against the
-    superstep's Spark job. If the JVM API is unavailable the fallback is
-    plain ``localCheckpoint`` (WARN once, same contract as the other
-    internal-API helpers: the cost is retained blocks on an
-    already-failing query, never correctness).
-
-    CONCURRENCY CONTRACT: the failure-path diff attributes every id added
-    since the snapshot to THIS call, so no other driver thread may persist
-    RDDs concurrently with an engine loop — unpersisting a live
-    localCheckpoint is unrecoverable (no lineage). This is the same
-    driver-sequential assumption ``small_loop_conf`` already states for
-    its session-level conf mutation, and the engine's loops satisfy it
-    (bench's one concurrent stage — derive_graphs' 3 materializer threads
-    — neither uses this helper nor overlaps a loop). The helper-vs-helper
-    half of the contract is cheaply ENFORCED (round-10 verdict item 7):
-    concurrent entry raises RuntimeError up front via a non-blocking lock
-    instead of silently risking a live checkpoint's blocks. The
-    helper-vs-raw-persist half stays documentation (intercepting arbitrary
-    persists would mean patching Spark internals). The guard is keyed per
-    SparkContext (``_eager_guard``): only callers sharing a context can
-    race the same snapshot, so independent contexts never trip it."""
-    guard = _eager_guard(df.sparkSession.sparkContext)
-    if not guard.acquire(blocking=False):
-        raise RuntimeError(
-            "checkpoint_eager: concurrent entry from another driver thread "
-            "on the same SparkContext — the failure-path RDD-id diff "
-            "attributes every id persisted since the snapshot to THIS "
-            "call, so a concurrent caller's live localCheckpoint could be "
-            "unpersisted (unrecoverable: no lineage). Serialize engine "
-            "loops on one driver thread (see the CONCURRENCY CONTRACT in "
-            "the docstring).")
-    try:
-        return _checkpoint_eager_locked(df)
-    finally:
-        guard.release()
-
-
-def checkpoint_eager_pair(df_a: DataFrame,
-                          df_b: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Eagerly localCheckpoint two INDEPENDENT DataFrames with their two
-    materializing jobs submitted CONCURRENTLY from a 2-thread pool (guide
-    §2.6: actions are only sequential because the driver calls them
-    sequentially; each small job underutilizes the cores, so the second
-    job back-fills the first's tail). One guard acquisition + one
-    persistent-RDD-id snapshot covers both (the failure-path diff
-    attributes every id added since the snapshot to THIS call — correct,
-    because on any failure BOTH results are discarded by the raise, so
-    unpersisting both is exactly right). The inputs must not depend on
-    each other's checkpoint, and the usual CONCURRENCY CONTRACT applies
-    to OTHER driver threads (see :func:`checkpoint_eager`). Falls back to
-    two sequential plain localCheckpoints if the JVM API is unavailable
-    (same WARN-once contract)."""
-    if df_a.sparkSession.sparkContext is not df_b.sparkSession.sparkContext:
-        raise ValueError("checkpoint_eager_pair: inputs from different "
-                         "SparkContexts")
-    guard = _eager_guard(df_a.sparkSession.sparkContext)
-    if not guard.acquire(blocking=False):
-        raise RuntimeError(
-            "checkpoint_eager_pair: concurrent entry from another driver "
-            "thread on the same SparkContext — see checkpoint_eager's "
-            "CONCURRENCY CONTRACT.")
-    try:
-        try:
-            jmap = df_a.sparkSession.sparkContext._jsc.getPersistentRDDs()
-            before = {int(i) for i in jmap.keySet().toArray()}
-        except Exception:
-            _warn_internal_api_fallback("checkpoint_eager_pair")
-            return (df_a.localCheckpoint(eager=True),
-                    df_b.localCheckpoint(eager=True))
-        from concurrent.futures import ThreadPoolExecutor
-
-        try:
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fut_a = pool.submit(df_a.localCheckpoint, True)
-                fut_b = pool.submit(df_b.localCheckpoint, True)
-                # read BOTH futures before raising so a one-sided failure
-                # still waits out the surviving job (its ids land inside
-                # the snapshot window and get released below)
-                res_a = fut_a.result()
-                res_b = fut_b.result()
-            return res_a, res_b
-        except BaseException:
-            try:
-                jmap = df_a.sparkSession.sparkContext._jsc.getPersistentRDDs()
-                for entry in jmap.entrySet().toArray():
-                    if int(entry.getKey()) not in before:
-                        entry.getValue().unpersist(False)
-            except Exception:
-                _warn_internal_api_fallback("checkpoint_eager_pair")
-            raise
-    finally:
-        guard.release()
-
-
-def _checkpoint_eager_locked(df: DataFrame) -> DataFrame:
-    try:
-        jmap = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
-        before = {int(i) for i in jmap.keySet().toArray()}
-    except Exception:
-        _warn_internal_api_fallback("checkpoint_eager")
-        return df.localCheckpoint(eager=True)
-    try:
-        return df.localCheckpoint(eager=True)
-    except BaseException:
-        try:
-            jmap = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
-            for entry in jmap.entrySet().toArray():
-                if int(entry.getKey()) not in before:
-                    entry.getValue().unpersist(False)
-        except Exception:
-            _warn_internal_api_fallback("checkpoint_eager")
-        raise
 
 
 def reset_plan_stats(df: DataFrame) -> DataFrame:
@@ -326,8 +178,8 @@ def reset_plan_stats(df: DataFrame) -> DataFrame:
     ``spark.sql.defaultSizeInBytes``. Falls back to the input unchanged if
     the internal API is unavailable (cost: driver CPU, not correctness) —
     WARNING once per process, because a silent fallback would reinstate
-    the 20-minute BigInteger stall at the next G2-class run with no signal
-    (round-7 verdict item 3); ``tests/test_plans.py`` asserts the re-leafed
+    the 20-minute BigInteger stall at the next G2-class run with no signal;
+    ``tests/test_plans.py`` asserts the re-leafed
     plan actually IS a fresh LogicalRDD on this Spark version.
 
     CAVEAT (partitioning): ``localCheckpoint`` preserves the origin plan's
@@ -348,19 +200,6 @@ def reset_plan_stats(df: DataFrame) -> DataFrame:
     except Exception:
         _warn_internal_api_fallback("reset_plan_stats")
         return df
-
-
-def disown(owned: list[DataFrame], df: DataFrame) -> None:
-    """Remove ``df`` from an owned-checkpoint list by IDENTITY.
-    ``list.remove`` compares with ``==``, and ``DataFrame.__eq__`` returns a
-    Column whose bool coercion raises — safe only when the target happens to
-    be the first element scanned. Identity is also the correct semantic: two
-    distinct checkpoints can be semantically equal yet own different blocks.
-    """
-    for i, o in enumerate(owned):
-        if o is df:
-            del owned[i]
-            return
 
 
 # one warning per (process, helper): these fire inside per-superstep loops,
@@ -385,47 +224,188 @@ def _warn_internal_api_fallback(helper: str) -> None:
     )
 
 
-def apply_small_loop_conf(spark, n_rows: int) -> dict[str, str]:
-    """Imperative half of :func:`small_loop_conf` for loops that already
-    own a try/finally: applies the small-loop conf and returns the saved
-    values to pass to :func:`restore_conf` in the caller's ``finally``."""
-    saved: dict[str, str] = {}
-    if n_rows <= BIG_GRAPH_ROWS:
+# only one SparkContext can be live per process, so one lock covers every
+# caller; held for the duration of each eager checkpoint call
+_CHECKPOINT_LOCK = threading.Lock()
+# open LoopScopes, innermost last (the engine's loops are driver-sequential)
+_OPEN_SCOPES: list["LoopScope"] = []
+
+
+def _persistent_rdd_ids(sc) -> set[int]:
+    """Ids of every persisted RDD: one driver-side py4j map read,
+    microseconds against a checkpoint job. The JVM map is a strong copy of
+    the persisted-RDD table, so its proxies are detached at once: left to
+    Python's cyclic GC, the copy would pin every persisted RDD against the
+    ContextCleaner."""
+    jmap = sc._jsc.getPersistentRDDs()
+    keys = jmap.keySet()
+    try:
+        return {int(i) for i in keys.toArray()}
+    finally:
+        for proxy in (keys, jmap):
+            sc._gateway.detach(proxy)
+
+
+def _checkpoint_eager(frames: list[DataFrame]) -> list[DataFrame]:
+    """``localCheckpoint(eager=True)`` of every frame; two or more frames
+    have their materializing jobs submitted CONCURRENTLY (actions are only
+    sequential because the driver calls them sequentially, and each small
+    job leaves cores idle that the next one back-fills). The frames must
+    not depend on each other.
+
+    A failure inside a materializing job happens before any caller holds
+    the result, so the call snapshots the persistent-RDD ids first and, on
+    failure, unpersists every id added since — the jobs that succeeded
+    included — then re-raises. That diff attributes every id persisted
+    during the call to this call, so no other driver thread may persist
+    RDDs meanwhile (unpersisting a live localCheckpoint is unrecoverable:
+    it has no lineage). Concurrent entry from another thread raises
+    RuntimeError up front; a raw ``persist`` on another thread cannot be
+    detected. If the private JVM API is unavailable the checkpoints still
+    run, without the failure-path release (WARNED once per process)."""
+    if not _CHECKPOINT_LOCK.acquire(blocking=False):
+        raise RuntimeError(
+            "LoopScope.checkpoint: concurrent entry from another driver "
+            "thread — the failure-path RDD-id diff would attribute that "
+            "thread's checkpoints to this call. Run engine loops on one "
+            "driver thread.")
+    try:
+        sc = frames[0].sparkSession.sparkContext
+        try:
+            before = _persistent_rdd_ids(sc)
+        except Exception:
+            _warn_internal_api_fallback("LoopScope.checkpoint")
+            before = None
+        try:
+            if len(frames) == 1:
+                return [frames[0].localCheckpoint(eager=True)]
+            # leaving the pool waits out every job, so a one-sided failure
+            # still lets the surviving job land inside the snapshot window
+            with ThreadPoolExecutor(max_workers=len(frames)) as pool:
+                futures = [pool.submit(df.localCheckpoint, True)
+                           for df in frames]
+                return [f.result() for f in futures]
+        except BaseException:
+            if before is not None:
+                try:
+                    jmap = sc._jsc.getPersistentRDDs()
+                    for rdd_id in _persistent_rdd_ids(sc) - before:
+                        jmap.get(rdd_id).unpersist(False)
+                    sc._gateway.detach(jmap)
+                except Exception:
+                    _warn_internal_api_fallback("LoopScope.checkpoint")
+            raise
+    finally:
+        _CHECKPOINT_LOCK.release()
+
+
+class LoopScope:
+    """The lifecycle of one iterative loop: its checkpoints and its conf.
+
+    ``with LoopScope(spark) as loop:`` — the loop materializes state with
+    :meth:`checkpoint`, drops superseded state with :meth:`release`, marks
+    output with :meth:`keep`, and declares its size with :meth:`rows`.
+
+    OWNERSHIP RULE: every frame ``checkpoint`` materializes is owned by the
+    scope until the loop releases it or keeps it. On a clean exit the scope
+    releases every frame it still owns and hands the kept ones to the
+    enclosing scope, if one is open (a nested loop's output becomes the
+    outer loop's state); with no enclosing scope they become the caller's.
+    On an exception it releases everything it owns, kept frames included,
+    and restores the conf, so no exit path strands blocks on the async
+    ContextCleaner or leaves the session changed. A loop must never
+    release a frame it still reads: a localCheckpoint has no lineage.
+    """
+
+    def __init__(self, spark):
+        self.spark = spark
+        self._held: list[DataFrame] = []
+        self._outputs: list[DataFrame] = []
+        self._saved_conf: dict[str, str] = {}
+
+    def __enter__(self) -> "LoopScope":
+        _OPEN_SCOPES.append(self)
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        _OPEN_SCOPES.remove(self)
+        for df in self._held + self._outputs if exc_type else self._held:
+            _drop_checkpoint_blocks(df)
+        if exc_type is None and _OPEN_SCOPES:
+            _OPEN_SCOPES[-1]._held.extend(self._outputs)
+        for key, val in self._saved_conf.items():
+            self.spark.conf.set(key, val)
+
+    def rows(self, n_rows: int | None) -> None:
+        """Apply the small-loop conf for a loop over ``n_rows`` rows (|E|
+        for the graph loops) until the scope exits: below BIG_GRAPH_ROWS,
+        shuffle partitions are coalesced to ~n_rows/75k (never above the
+        session setting) and per-stage adaptive planning is off (see
+        LOOP_EDGES_PER_SHUFFLE_PARTITION for the measurements). A big or
+        unknown (None) size leaves the session conf alone. Called once the
+        size is known, usually from the census of the loop's first
+        checkpoint, so set-up jobs run under the session conf."""
+        if n_rows is None or n_rows > BIG_GRAPH_ROWS:
+            return
         target = max(4, -(-n_rows // LOOP_EDGES_PER_SHUFFLE_PARTITION))
         try:
-            configured = int(spark.conf.get("spark.sql.shuffle.partitions"))
+            configured = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         except Exception:
-            configured = spark.sparkContext.defaultParallelism
+            configured = self.spark.sparkContext.defaultParallelism
         if target < configured:
-            saved["spark.sql.shuffle.partitions"] = str(configured)
-            spark.conf.set("spark.sql.shuffle.partitions", str(target))
-        saved["spark.sql.adaptive.enabled"] = str(
-            spark.conf.get("spark.sql.adaptive.enabled", "true"))
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    return saved
+            self._set_conf("spark.sql.shuffle.partitions", str(target),
+                           str(configured))
+        self._set_conf("spark.sql.adaptive.enabled", "false",
+                       self.spark.conf.get("spark.sql.adaptive.enabled", "true"))
 
+    def _set_conf(self, key: str, value: str, saved: str) -> None:
+        self._saved_conf.setdefault(key, saved)
+        self.spark.conf.set(key, value)
 
-def restore_conf(spark, saved: dict[str, str]) -> None:
-    for key, val in saved.items():
-        spark.conf.set(key, val)
+    def checkpoint(self, *frames, releaf: bool = False):
+        """Eagerly checkpoint 1..n independent frames (concurrent jobs for
+        n > 1, see :func:`_checkpoint_eager`) and own the results. A frame
+        given as ``(df, {name: aggregate Column})`` gets its census ridden
+        on the checkpoint's job as an Observation, and comes back as
+        ``(checkpoint, {name: value})`` with null aggregates read as 0.
+        ``releaf`` re-leafs every result over its own blocks
+        (:func:`reset_plan_stats`). One frame returns its result alone,
+        several a tuple."""
+        plans, observations = [], []
+        for frame in frames:
+            df, census = frame if isinstance(frame, tuple) else (frame, None)
+            obs = None
+            if census:
+                obs = Observation()
+                df = df.observe(obs, *[c.alias(k) for k, c in census.items()])
+            plans.append(df)
+            observations.append(obs)
+        done = _checkpoint_eager(plans)
+        if releaf:
+            done = [reset_plan_stats(df) for df in done]
+        self._held.extend(done)
+        out = [
+            (df, {k: 0 if v is None else v
+                  for k, v in (obs.get.items() if obs else ())})
+            if isinstance(frame, tuple) else df
+            for frame, df, obs in zip(frames, done, observations)
+        ]
+        return out[0] if len(out) == 1 else tuple(out)
 
+    def release(self, *frames: DataFrame) -> None:
+        """Drop the blocks of superseded state now; every open scope stops
+        owning it."""
+        for df in frames:
+            _drop_checkpoint_blocks(df)
+            for scope in _OPEN_SCOPES:
+                scope._held = [o for o in scope._held if o is not df]
 
-@contextmanager
-def small_loop_conf(spark, n_rows: int):
-    """Loop-scoped physical conf for an iterative driver loop over a
-    known-small materialized relation (see LOOP_EDGES_PER_SHUFFLE_PARTITION
-    for the measurements): below BIG_GRAPH_ROWS, shuffle partitions are
-    statically coalesced to ~``n_rows``/75k (never above the session
-    setting) and per-stage adaptive planning is turned off for the scope's
-    duration; above the threshold this is a no-op. Restores the saved conf
-    on every exit path. Session-level conf mutation is safe here because
-    the engine's iterative loops are driver-sequential — no two loops
-    share a session concurrently."""
-    saved = apply_small_loop_conf(spark, n_rows)
-    try:
-        yield
-    finally:
-        restore_conf(spark, saved)
+    def keep(self, *frames: DataFrame) -> None:
+        """Mark owned frames as output: a clean exit leaves their blocks."""
+        for df in frames:
+            if any(o is df for o in self._held):
+                self._held = [o for o in self._held if o is not df]
+                self._outputs.append(df)
 
 
 def run_pregel(
@@ -446,9 +426,7 @@ def run_pregel(
     (metadata-cheap): ci=1 above ``BIG_GRAPH_ROWS`` — arming the exact-census
     adaptive frontier broadcast that wins at G2 class (SCALE.md cadence
     sweep) — else ci=2, where job-launch overhead dominates and halving the
-    job count wins. Callers with declared sizes need no extra scan
-    (round-6 ADVICE item 1: the old ``_auto_ci`` probe paid a full
-    unmaterialized-lineage count before run_pregel counted again).
+    job count wins. Callers with declared sizes need no extra scan.
 
     Scale notes (100 TB):
     - edges are hash-partitioned by ``src`` once and materialized once; the
@@ -460,9 +438,9 @@ def run_pregel(
     - ONE job per superstep: the convergence census (the reference's
       Allgather, igmr.cpp:139-152) rides the checkpoint's materializing job
       as an ``Observation`` metric instead of a second count() action.
-    - each superstep's checkpoint blocks are unpersisted as soon as the next
-      superstep is materialized (ContextCleaner is async; see
-      ``_drop_checkpoint_blocks``).
+    - each superstep's checkpoint blocks are released as soon as the next
+      superstep is materialized, and every block the call materialized
+      except the returned state is released on every exit (:class:`LoopScope`).
     - ``checkpoint_interval=k`` materializes every k-th superstep only:
       intermediate supersteps stay lazy, trading recompute inside the next
       checkpoint job for k-1 fewer job launches + block writes. Convergence
@@ -486,133 +464,89 @@ def run_pregel(
     # still co-locates with the message join) while giving every superstep an
     # O(1)-size plan — persist() instead would drag the whole derivation
     # subtree into each superstep's analysis (measured 10x slowdown on small
-    # graphs). ``edges_checkpointed=True`` is the phase-loop contract
-    # (SCC peel, round-8 ADVICE item 3): the caller guarantees
-    # ``graph.edges`` is ALREADY an eagerly-materialized localCheckpoint it
-    # owns and releases — this function then neither copies an O(|E|)
-    # snapshot per call (1000-phase peels used to land 1000 superseded edge
-    # snapshots for the async ContextCleaner, the measured 3-5x backlog
-    # shape) nor releases the caller's blocks on exit.
-    owns_edges = not edges_checkpointed
-    # setup censuses ride the two checkpoint-materializing jobs as
-    # Observations (the same O15 discipline the superstep loop already
-    # uses) — previously |E| count, |V| count and the initial frontier
-    # count were up to three extra driver actions per call, and the SCC
-    # peel calls this once per phase.
-    e_obs: Observation | None = None
-    if owns_edges:
-        e_obs = Observation()
-        edges = (graph.edges
-                 .observe(e_obs, F.count(F.lit(1)).alias("n"))
-                 .localCheckpoint(eager=True))
-    else:
-        edges = graph.edges
-    # per-superstep state: localCheckpoint — the state subtree feeds both the
-    # message path and the update join, so anything short of a full lineage
-    # cut makes the logical plan DOUBLE every superstep (exponential Catalyst
-    # analysis; measured hang by superstep ~8 on a 6k-vertex graph).
-    init_state = program.init(graph.vertices)
-    v_obs = Observation()
-    v_metrics = [F.count(F.lit(1)).alias("n")]
-    if "active" in init_state.columns:
-        v_metrics.append(
-            F.sum(F.col("active").cast("long")).alias("n_active"))
-    vertices = (init_state.observe(v_obs, *v_metrics)
-                .localCheckpoint(eager=True))
-    # Catalyst's size estimate for a checkpointed LogicalRDD is inherited
-    # from the ORIGIN plan, and a generator-derived origin (spark.range →
-    # explode) undercounts by |fanout|: at G2 scale (4.8M V / 110M E) the
-    # static planner estimated the edge table under the 64 MB broadcast
-    # threshold and tried to build a 5+ GB broadcast hash relation (driver
-    # OOM). The engine KNOWS edges/vertices are the O(E)/O(V) relations, so
-    # when their true (counted once, on materialized blocks — cheap)
-    # cardinality can't possibly fit a broadcast, pin the superstep joins to
-    # shuffled-hash via hints on the SMALL sides we control (frontier for
-    # the message join, agg for the update join). Below the threshold,
-    # plans are left untouched — Catalyst's measured-good fixture choices
-    # (broadcast tiny frontiers/aggs) stand. ~40 in-memory bytes/row →
-    # 64 MB ≈ 1.6M rows.
-    # (BIG_GRAPH_ROWS is module-level so tests can force this branch on
-    # fixture graphs; a caller that pre-checkpointed the edges passes the
-    # census it already paid for via ``n_edges`` — SCC's peel observes it
-    # on each phase checkpoint — and only a caller with neither pays a
-    # count job on its just-materialized blocks.)
-    if e_obs is not None:
-        n_edges = int(e_obs.get["n"] or 0)
-    elif n_edges is None:
-        n_edges = edges.count()
-    big_edges = n_edges > BIG_GRAPH_ROWS
-    if checkpoint_interval is None:
-        checkpoint_interval = 1 if big_edges else 2
-    v_stats = v_obs.get
-    big_vertices = int(v_stats["n"] or 0) > BIG_GRAPH_ROWS
-    prev_state = vertices  # last materialized state whose blocks we own
-    metrics: list[dict] = []
-    # exact frontier size for the adaptive join strategy: with ci=1 the
-    # checkpoint census counts the NEXT superstep's frontier exactly, so
-    # seed it once from the init checkpoint's Observation and keep it
-    # current from each census below. At ci>1 it goes stale (None) between
-    # checkpoints and the gate stays closed.
-    last_n_active: int | None = None
-    if (big_edges and early_stop and checkpoint_interval == 1
-            and "n_active" in v_stats):
-        last_n_active = int(v_stats["n_active"] or 0)
-    state_cols = max(1, len(vertices.columns))
-    max_broadcast_rows = ADAPTIVE_BROADCAST_CELLS // state_cols
+    # graphs). ``edges_checkpointed=True`` is the phase-loop contract (the
+    # SCC peel): ``graph.edges`` is ALREADY an eager localCheckpoint the
+    # caller owns, so no O(|E|) snapshot is copied per call and the caller's
+    # blocks are left alone. The set-up censuses ride the two checkpoint
+    # jobs as Observations; a caller that pre-checkpointed the edges passes
+    # the edge census it already paid for via ``n_edges``, and only a
+    # caller with neither pays a count job on its materialized blocks.
+    with LoopScope(graph.edges.sparkSession) as loop:
+        if edges_checkpointed:
+            edges = graph.edges
+        else:
+            edges, e_stats = loop.checkpoint(
+                (graph.edges, {"n": F.count(F.lit(1))}))
+            n_edges = e_stats["n"]
+        # per-superstep state: localCheckpoint — the state subtree feeds both
+        # the message path and the update join, so anything short of a full
+        # lineage cut makes the logical plan DOUBLE every superstep
+        # (exponential Catalyst analysis; measured hang by superstep ~8 on a
+        # 6k-vertex graph).
+        init_state = program.init(graph.vertices)
+        census = {"n": F.count(F.lit(1))}
+        if "active" in init_state.columns:
+            census["n_active"] = F.sum(F.col("active").cast("long"))
+        vertices, v_stats = loop.checkpoint((init_state, census))
+        if n_edges is None:
+            n_edges = edges.count()
+        # Catalyst's size estimate for a checkpointed LogicalRDD is inherited
+        # from the ORIGIN plan, and a generator-derived origin (spark.range →
+        # explode) undercounts by |fanout|: at G2 scale (4.8M V / 110M E) the
+        # static planner estimated the edge table under the 64 MB broadcast
+        # threshold and tried to build a 5+ GB broadcast hash relation (driver
+        # OOM). The engine KNOWS edges/vertices are the O(E)/O(V) relations,
+        # so when their counted cardinality can't possibly fit a broadcast,
+        # pin the superstep joins to shuffled-hash via hints on the SMALL
+        # sides we control (frontier for the message join, agg for the update
+        # join). Below the threshold, plans are left untouched — Catalyst's
+        # measured-good fixture choices (broadcast tiny frontiers/aggs)
+        # stand. (BIG_GRAPH_ROWS is module-level so tests can force this
+        # branch on fixture graphs.)
+        big_edges = n_edges > BIG_GRAPH_ROWS
+        if checkpoint_interval is None:
+            checkpoint_interval = 1 if big_edges else 2
+        big_vertices = v_stats["n"] > BIG_GRAPH_ROWS
+        # exact frontier size for the adaptive join strategy: with ci=1 the
+        # checkpoint census counts the NEXT superstep's frontier exactly, so
+        # seed it from the init census and keep it current from each census
+        # below. At ci>1 it goes stale (None) between checkpoints and the
+        # gate stays closed.
+        last_n_active: int | None = None
+        if (big_edges and early_stop and checkpoint_interval == 1
+                and "n_active" in v_stats):
+            last_n_active = v_stats["n_active"]
+        max_broadcast_rows = ADAPTIVE_BROADCAST_CELLS // max(1, len(vertices.columns))
+        loop.rows(n_edges)
 
-    try:
-        with small_loop_conf(edges.sparkSession, n_edges):
-            return _pregel_loop(
-                program, edges, vertices, max_iter=max_iter,
-                early_stop=early_stop, collect_metrics=collect_metrics,
-                checkpoint_interval=checkpoint_interval,
-                big_edges=big_edges, big_vertices=big_vertices,
-                last_n_active=last_n_active,
-                max_broadcast_rows=max_broadcast_rows,
-                prev_state=prev_state, metrics=metrics)
-    finally:
-        # the internal edge snapshot is dead the moment the loop exits —
-        # the loop only exits at a checkpointed superstep, so the returned
-        # state has no lineage into it. Release the blocks here instead of
-        # leaving one O(|E|) snapshot per call to the async ContextCleaner
-        # (round-8 ADVICE item 3: the SCC peel calls this per phase).
-        if owns_edges:
-            _drop_checkpoint_blocks(edges)
-
-
-def _pregel_loop(program, edges, vertices, *, max_iter, early_stop,
-                 collect_metrics, checkpoint_interval, big_edges,
-                 big_vertices, last_n_active, max_broadcast_rows,
-                 prev_state, metrics) -> PregelResult:
-    """The superstep loop body of :func:`run_pregel`, split out so the
-    loop-scoped conf override (``small_loop_conf``) wraps it in one scope."""
-    iterations = 0
-    converged = False
-    try:
+        state = vertices  # the last materialized state
+        metrics: list[dict] = []
+        iterations = 0
+        converged = False
         for i in range(max_iter):
             t0 = time.perf_counter()
             frontier = vertices.filter(F.col("active")) if early_stop else vertices
             if big_edges:
                 if last_n_active is not None and last_n_active <= max_broadcast_rows:
                     # small-frontier supersteps (the long head and tail of a
-                    # BFS/SSSP on a high-diameter graph): broadcast the frontier
-                    # — the O(E) edge side streams in place with NO exchange and
-                    # no per-partition hash build of the state side. Safe only
-                    # because the census is exact (ci=1): the hinted broadcast
-                    # has no size fallback.
+                    # BFS/SSSP on a high-diameter graph): broadcast the
+                    # frontier — the O(E) edge side streams in place with NO
+                    # exchange and no per-partition hash build of the state
+                    # side. Safe only because the census is exact (ci=1): the
+                    # hinted broadcast has no size fallback.
                     frontier = frontier.hint("broadcast")
                 else:
-                    # forbid broadcasting either side of the O(E) message join:
-                    # the hinted (frontier) side becomes the per-partition build
-                    # side of a ShuffledHashJoin — O(V)/n_partitions rows per
-                    # hash table — and the pre-partitioned edge side streams
-                    # without an exchange.
+                    # forbid broadcasting either side of the O(E) message
+                    # join: the hinted (frontier) side becomes the
+                    # per-partition build side of a ShuffledHashJoin —
+                    # O(V)/n_partitions rows per hash table — and the
+                    # pre-partitioned edge side streams without an exchange.
                     frontier = frontier.hint("shuffle_hash")
             msgs = program.messages(frontier, edges)
             agg = program.aggregate(msgs)
             if big_vertices:
-                # same for the O(V) update join: agg (≤ frontier-reachable ids)
-                # is the build side; the state side streams.
+                # same for the O(V) update join: agg (≤ frontier-reachable
+                # ids) is the build side; the state side streams.
                 agg = agg.hint("shuffle_hash")
             new_vertices = program.update(vertices, agg)
 
@@ -620,23 +554,18 @@ def _pregel_loop(program, edges, vertices, *, max_iter, early_stop,
             at_checkpoint = (iterations % checkpoint_interval == 0) or iterations == max_iter
             n_active: int | None = None
             if at_checkpoint:
-                obs: Observation | None = None
+                # the convergence census (the reference's Allgather payload,
+                # igmr.cpp:139-152) rides the checkpoint job
+                census = ({"n_active": F.sum(F.col("active").cast("long"))}
+                          if early_stop else {})
+                new_vertices, stats = loop.checkpoint((new_vertices, census))
+                loop.release(state)
+                state = new_vertices
                 if early_stop:
-                    obs = Observation()
-                    new_vertices = new_vertices.observe(
-                        obs, F.sum(F.col("active").cast("long")).alias("n_active")
-                    )
-                new_vertices = checkpoint_eager(new_vertices)
-                _drop_checkpoint_blocks(prev_state)
-                prev_state = new_vertices
-                if obs is not None:
-                    # deterministic census (the reference's Allgather payload,
-                    # igmr.cpp:139-152) — free: it rode the checkpoint job
-                    n_active = int(obs.get["n_active"] or 0)
+                    n_active = stats["n_active"]
                     if checkpoint_interval == 1:
                         last_n_active = n_active  # exact next-frontier size
-                    if n_active == 0:
-                        converged = True
+                    converged = n_active == 0
             vertices = new_vertices
             if collect_metrics:
                 metrics.append({"superstep": iterations,
@@ -644,19 +573,9 @@ def _pregel_loop(program, edges, vertices, *, max_iter, early_stop,
                                 "n_active": n_active})
             if converged:
                 break
-    except BaseException:
-        # a mid-superstep Spark failure leaves the last materialized state
-        # (a lineage-free localCheckpoint nobody will return) resident —
-        # release it rather than strand it on the async ContextCleaner
-        # (round-8 ADVICE item 1: the _backward_members contract, applied
-        # to the generic loop). prev_state is the live binding: the loop
-        # rebinds it at every checkpointed superstep. A failure landing
-        # INSIDE the eager checkpoint call is covered by checkpoint_eager
-        # itself (round-9 verdict item 3: it unpersists whatever the failed
-        # materialization persisted before the binding existed).
-        _drop_checkpoint_blocks(prev_state)
-        raise
-
+        # the loop only exits at a checkpointed superstep, so the result is
+        # the last materialized state
+        loop.keep(state)
     return PregelResult(vertices=vertices, iterations=iterations,
                         converged=converged, metrics=metrics)
 

@@ -80,6 +80,10 @@ def get_ui_session():
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "true")
+        # shuffle_since sums only the stages the UI still retains; keep
+        # every stage and job of a G2-size run (the defaults are 1000)
+        .config("spark.ui.retainedStages", "100000")
+        .config("spark.ui.retainedJobs", "100000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.maxResultSize", "8g")
         .config("spark.io.compression.codec", CODEC)
@@ -107,13 +111,18 @@ def jobs_since(spark, last_id: int) -> list[dict]:
 
 
 def shuffle_since(spark, stage_floor: int) -> dict:
-    tot_r = tot_w = 0
+    """Shuffle totals over the completed stages after ``stage_floor`` that
+    the UI still retains. ``stages_summed`` is recorded with them, so a sum
+    cut short by ``spark.ui.retainedStages`` shows in the row."""
+    tot_r = tot_w = n = 0
     for st in rest(spark, "stages?status=COMPLETE"):
         if st["stageId"] > stage_floor:
             tot_r += st.get("shuffleReadBytes", 0)
             tot_w += st.get("shuffleWriteBytes", 0)
+            n += 1
     return {"shuffle_read_mb": round(tot_r / 1e6, 1),
-            "shuffle_write_mb": round(tot_w / 1e6, 1)}
+            "shuffle_write_mb": round(tot_w / 1e6, 1),
+            "stages_summed": n}
 
 
 def max_stage(spark) -> int:
@@ -261,6 +270,32 @@ def run_prbloom(spark, out: dict) -> None:
     out["prbloom"] = {"vertices": N, "edges": n_edges, **legs}
 
 
+def hub_ring_edges(spark, hubs: int, leaves: int):
+    """Canonical (a < b) edges of the ktruss_skew graph: every hub joined to
+    every leaf, plus a path through the leaves. Hubs get the LOWEST ids
+    (0..hubs-1), so a hub edge (hub, leaf) has a=hub and e2.a = hub carries
+    deg(hub) rows into one hash partition of the wedge join."""
+    from pyspark.sql import functions as F
+
+    hub_edges = (
+        spark.range(leaves)
+        .select(F.explode(F.array(*[F.lit(h) for h in range(hubs)]))
+                .alias("a"), (F.col("id") + hubs).alias("b"))
+    )
+    ring_edges = (
+        spark.range(leaves - 1)
+        .select((F.col("id") + hubs).alias("a"), (F.col("id") + hubs + 1).alias("b"))
+    )
+    return hub_edges.unionByName(ring_edges)
+
+
+def hub_ring_triangles(hubs: int, leaves: int) -> int:
+    """Triangles of :func:`hub_ring_edges`: each path edge (leaf i, leaf
+    i+1) closes one with every hub. There are no hub–hub edges, so a hub
+    pair sharing a leaf is an open wedge, not a triangle."""
+    return hubs * (leaves - 1)
+
+
 def run_ktruss_skew(spark, out: dict) -> None:
     """Item 5: wedge-join task balance on a hub graph at scale. Hot key of
     the join (e1.b == e2.a) is each hub; reads per-task quantiles of the
@@ -271,21 +306,7 @@ def run_ktruss_skew(spark, out: dict) -> None:
 
     leaves, hubs = HUB_LEAVES, HUBS
     n_parts = spark.sparkContext.defaultParallelism * 2
-    # hubs get the LOWEST ids (0..hubs-1) so each hub appears as the wedge
-    # key on BOTH sides of e1.b == e2.a... a hub edge (hub, leaf) has
-    # a=hub only when hub < leaf — true here — so e2.a = hub carries
-    # deg(hub) rows into one hash partition. Leaf-leaf ring edges close
-    # triangles (leaf i, leaf i+1 share every hub).
-    hub_edges = (
-        spark.range(leaves)
-        .select(F.explode(F.array(*[F.lit(h) for h in range(hubs)]))
-                .alias("a"), (F.col("id") + hubs).alias("b"))
-    )
-    ring_edges = (
-        spark.range(leaves - 1)
-        .select((F.col("id") + hubs).alias("a"), (F.col("id") + hubs + 1).alias("b"))
-    )
-    und = (hub_edges.unionByName(ring_edges)
+    und = (hub_ring_edges(spark, hubs, leaves)
            .repartition(n_parts, "a").localCheckpoint(eager=True))
     n_und = und.count()
     s0 = max_stage(spark)
@@ -295,9 +316,7 @@ def run_ktruss_skew(spark, out: dict) -> None:
         .agg(F.count(F.lit(1)).alias("n")).first()
     wall = round(time.perf_counter() - t0, 1)
     spark.sparkContext.setJobDescription(None)
-    # triangles: (hub, leaf i, leaf i+1) per ring edge per hub
-    # + (h1, h2, leaf) pairs of hubs sharing every leaf
-    want = hubs * (leaves - 1) + (hubs * (hubs - 1) // 2) * leaves
+    want = hub_ring_triangles(hubs, leaves)
     # per-stage task skew: max/median task time + shuffle read of the
     # heaviest post-s0 stages
     stages = [s for s in rest(spark, "stages?status=COMPLETE")

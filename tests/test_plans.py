@@ -436,45 +436,58 @@ def test_pregel_adaptive_broadcast_end_to_end(spark, monkeypatch):
 
 
 def test_small_loop_conf_contract(spark):
-    """The round-6 loop-scoped physical conf (plans/pregel.py): below
-    BIG_GRAPH_ROWS the scope coalesces shuffle partitions to ~n/75k
+    """LoopScope.rows, the loop-scoped physical conf (plans/pregel.py):
+    below BIG_GRAPH_ROWS the scope coalesces shuffle partitions to ~n/75k
     (floored at 4, never above the session setting) and turns AQE off;
-    above it the scope is a strict no-op; the saved conf is restored on
-    clean exit, on exception, and correctly under nesting (inner scope
-    saves the outer's values, not the session's)."""
+    above it, or for an unknown size, it leaves the conf alone; the saved
+    conf is restored on clean exit, on exception, after repeated calls,
+    and correctly under nesting (inner scope saves the outer's values, not
+    the session's)."""
     from gmr_spark.plans.pregel import (
-        BIG_GRAPH_ROWS, LOOP_EDGES_PER_SHUFFLE_PARTITION, small_loop_conf)
+        BIG_GRAPH_ROWS, LOOP_EDGES_PER_SHUFFLE_PARTITION, LoopScope)
 
     part_key, aqe_key = "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled"
-    base = (spark.conf.get(part_key), spark.conf.get(aqe_key))
+
+    def conf() -> tuple:
+        return spark.conf.get(part_key), spark.conf.get(aqe_key)
+
+    base = conf()
     assert base[1] == "true"  # the session default the gate must restore
 
-    # small: coalesced + AQE off, restored on clean exit
-    with small_loop_conf(spark, 300_000):
+    # small: coalesced + AQE off, restored on clean exit — also after a
+    # second rows() call inside the same scope
+    with LoopScope(spark) as loop:
+        loop.rows(300_000)
         want = max(4, -(-300_000 // LOOP_EDGES_PER_SHUFFLE_PARTITION))
         assert int(spark.conf.get(part_key)) == min(want, int(base[0]))
         assert spark.conf.get(aqe_key) == "false"
-    assert (spark.conf.get(part_key), spark.conf.get(aqe_key)) == base
+        loop.rows(100_000)
+    assert conf() == base
 
-    # big: strict no-op (AQE's runtime re-planning earns its keep there)
-    with small_loop_conf(spark, BIG_GRAPH_ROWS + 1):
-        assert (spark.conf.get(part_key), spark.conf.get(aqe_key)) == base
+    # big or unknown: strict no-op (AQE's runtime re-planning earns its
+    # keep there)
+    with LoopScope(spark) as loop:
+        loop.rows(BIG_GRAPH_ROWS + 1)
+        assert conf() == base
+        loop.rows(None)
+        assert conf() == base
 
     # exception path restores
-    try:
-        with small_loop_conf(spark, 100_000):
+    with pytest.raises(RuntimeError, match="boom"):
+        with LoopScope(spark) as loop:
+            loop.rows(100_000)
             raise RuntimeError("boom")
-    except RuntimeError:
-        pass
-    assert (spark.conf.get(part_key), spark.conf.get(aqe_key)) == base
+    assert conf() == base
 
     # nesting: inner saves the OUTER scope's values and restores to them
-    with small_loop_conf(spark, 1_000_000):
-        outer = (spark.conf.get(part_key), spark.conf.get(aqe_key))
-        with small_loop_conf(spark, 100_000):
+    with LoopScope(spark) as outer:
+        outer.rows(1_000_000)
+        outer_conf = conf()
+        with LoopScope(spark) as inner:
+            inner.rows(100_000)
             assert spark.conf.get(aqe_key) == "false"
-        assert (spark.conf.get(part_key), spark.conf.get(aqe_key)) == outer
-    assert (spark.conf.get(part_key), spark.conf.get(aqe_key)) == base
+        assert conf() == outer_conf
+    assert conf() == base
 
 
 def test_multimodal_audio_is_narrow_and_prunes(spark):
@@ -645,16 +658,29 @@ def test_private_api_fallback_warns_loudly(spark, monkeypatch):
     assert not [w for w in quiet if issubclass(w.category, RuntimeWarning)]
 
 
-def test_run_pregel_edge_checkpoint_ownership(spark):
-    """Round-8 ADVICE item 3, pinned three ways.
+def _persistent_ids(spark) -> set:
+    # id SET, not size: the async ContextCleaner may reclaim OTHER tests'
+    # stale entries mid-test, so counts drift — new ids don't
+    return {int(i) for i in
+            spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
 
-    (a) default path: run_pregel's internal O(|E|) edge snapshot is
-        released before return — the only persistent RDD a clean call may
-        add is the returned state checkpoint;
+
+def _unpersist_ids(spark, ids: set) -> None:
+    for entry in spark.sparkContext._jsc.getPersistentRDDs().entrySet().toArray():
+        if int(entry.getKey()) in ids:
+            entry.getValue().unpersist(False)
+
+
+def test_run_pregel_edge_checkpoint_ownership(spark):
+    """run_pregel's edge snapshot, pinned two ways.
+
+    (a) default path: the internal O(|E|) edge snapshot is released before
+        return — the only persistent RDD a clean call may add is the
+        returned state checkpoint;
     (b) ``edges_checkpointed=True``: no second edge snapshot is landed AND
-        the caller's blocks survive the call (the peel-loop contract);
-    (c) a mid-loop driver failure releases the in-flight state too
-        (the _pregel_loop except path)."""
+        the caller's blocks survive the call (the peel-loop contract).
+    Failure paths are covered for every loop by
+    test_loop_checkpoint_failure_releases_blocks_and_restores_conf."""
     from gmr_spark.algorithms.sssp import _SSSPProgram
     from gmr_spark.graph import PropertyGraph
     from gmr_spark.plans.pregel import _drop_checkpoint_blocks, run_pregel
@@ -664,60 +690,34 @@ def test_run_pregel_edge_checkpoint_ownership(spark):
     vertices = spark.createDataFrame(
         [(i,) for i in range(65)], "id bigint")
 
-    def persistent_ids() -> set:
-        # id SET, not size: the async ContextCleaner may reclaim OTHER
-        # tests' stale entries mid-test, so counts drift — new ids don't
-        return {int(i) for i in
-                spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
-
     # (a) owned edges: exactly the returned state outlives the call
-    before = persistent_ids()
+    before = _persistent_ids(spark)
     res = run_pregel(PropertyGraph(vertices=vertices, edges=edges),
                      _SSSPProgram(0, weighted=False), max_iter=4)
-    assert len(persistent_ids() - before) == 1, \
+    assert len(_persistent_ids(spark) - before) == 1, \
         "clean run_pregel must only leave its returned state resident"
     _drop_checkpoint_blocks(res.vertices)
-    assert not (persistent_ids() - before)
+    assert not (_persistent_ids(spark) - before)
 
     # (b) caller-owned edges: not copied, not released
     edges_ckpt = edges.localCheckpoint(eager=True)
-    before = persistent_ids()
+    before = _persistent_ids(spark)
     res = run_pregel(PropertyGraph(vertices=vertices, edges=edges_ckpt),
                      _SSSPProgram(0, weighted=False), max_iter=4,
                      edges_checkpointed=True)
-    assert len(persistent_ids() - before) == 1, \
+    assert len(_persistent_ids(spark) - before) == 1, \
         "edges_checkpointed call must not land a second edge snapshot"
     assert edges_ckpt.count() == 64  # caller's blocks untouched
     _drop_checkpoint_blocks(res.vertices)
     _drop_checkpoint_blocks(edges_ckpt)
 
-    # (c) mid-loop failure: internal edges AND the last state both released
-    class _Boom(_SSSPProgram):
-        def __init__(self):
-            super().__init__(0, weighted=False)
-            self.calls = 0
-
-        def aggregate(self, msgs):
-            self.calls += 1
-            if self.calls >= 3:
-                raise ValueError("forced mid-loop failure")
-            return super().aggregate(msgs)
-
-    before = persistent_ids()
-    with pytest.raises(ValueError, match="forced mid-loop"):
-        run_pregel(PropertyGraph(vertices=vertices, edges=edges),
-                   _Boom(), max_iter=8, checkpoint_interval=1)
-    assert not (persistent_ids() - before), \
-        "failed run_pregel leaked checkpoint blocks"
-
 
 def test_cc_label_loop_releases_superseded_checkpoints(spark):
-    """Round-10: _cc_labels used to leave every superseded per-round label
-    checkpoint to the async ContextCleaner (the only loop that predated
-    the release discipline) — a long run stranded O(rounds + jump_joins)
-    |V|-row block sets. Now a clean run leaves exactly the returned label
-    table resident, and its per-round checkpoints go through
-    checkpoint_eager (failure-window coverage included)."""
+    """A clean connected_components run leaves exactly the returned label
+    table resident: every superseded per-round label checkpoint and the
+    edge snapshot are released as the loop goes (a long run would
+    otherwise strand O(rounds + jump_joins) |V|-row block sets on the
+    async ContextCleaner)."""
     from gmr_spark.algorithms.cc import connected_components
     from gmr_spark.graph import PropertyGraph
 
@@ -728,182 +728,259 @@ def test_cc_label_loop_releases_superseded_checkpoints(spark):
     vertices = spark.createDataFrame(
         [(i,) for i in range(201)], "id bigint")
 
-    def persistent_ids() -> set:
-        return {int(i) for i in
-                spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
-
-    before = persistent_ids()
+    before = _persistent_ids(spark)
     out = connected_components(
         PropertyGraph(vertices=vertices, edges=edges))
     assert out.groupBy("component").count().count() == 1  # one component
-    leaked = persistent_ids() - before
+    leaked = _persistent_ids(spark) - before
     assert len(leaked) == 1, \
         f"cc must leave only the returned labels resident, found {leaked}"
     # the returned frame is a PROJECTION of the label checkpoint, so
     # _drop_checkpoint_blocks (LogicalRDD-root only) would silently no-op
     # on it — release the known id directly so the block store stays
     # clean for later tests
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for entry in jmap.entrySet().toArray():
-        if int(entry.getKey()) in leaked:
-            entry.getValue().unpersist(False)
-    assert not (persistent_ids() - before)
+    _unpersist_ids(spark, leaked)
+    assert not (_persistent_ids(spark) - before)
 
 
-def test_run_pregel_failure_inside_checkpoint_releases_inflight(
-        spark, monkeypatch):
-    """Round-9 verdict item 3: the loop's except path releases the states
-    it holds BINDINGS to, but a failure landing inside the eager
-    localCheckpoint call itself happens before the binding exists — the
-    partially-persisted RDD used to be stranded on the async
-    ContextCleaner. checkpoint_eager must unpersist whatever the failed
-    materialization persisted: a run_pregel whose superstep checkpoint
-    persists blocks and THEN fails must leave zero new persistent RDDs."""
-    from gmr_spark.algorithms.sssp import _SSSPProgram
+def _complete_graph(spark, n: int = 40):
+    """Complete digraph on ``n`` vertices; edges touching vertex 0 weigh 1,
+    the rest 2. Every vertex reaches every other in one hop and the
+    spanning tree is the star at 0, so each loop runs its set-up, one or
+    two iterations and its exit in a handful of checkpoints. Built from
+    ``spark.range`` so that reading it starts no Python worker."""
+    from pyspark.sql import functions as F
+
     from gmr_spark.graph import PropertyGraph
+
+    edges = (
+        spark.range(n)
+        .select(F.col("id").alias("src"),
+                F.explode(F.sequence(F.lit(0), F.lit(n - 1))).alias("dst"))
+        .filter(F.col("src") != F.col("dst"))
+        .select("src", "dst",
+                F.when((F.col("src") == 0) | (F.col("dst") == 0), 1.0)
+                .otherwise(2.0).alias("weight"))
+    )
+    return PropertyGraph(vertices=spark.range(n), edges=edges,
+                         n_vertices=n, n_edges=n * (n - 1))
+
+
+def _run_loop(name: str, spark, g):
+    from pyspark.sql import functions as F
+
+    from gmr_spark import algorithms as A
+    from gmr_spark.algorithms.kmeans import kmeans
+    from gmr_spark.algorithms.sssp import _SSSPProgram
+    from gmr_spark.algorithms.svdpp import svdpp_train
+    from gmr_spark.algorithms.triangles import k_truss
     from gmr_spark.plans.pregel import run_pregel
 
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(64)], "src bigint, dst bigint")
-    vertices = spark.createDataFrame(
-        [(i,) for i in range(65)], "id bigint")
+    if name == "run_pregel":
+        return run_pregel(g, _SSSPProgram(0, weighted=False))
+    if name == "cc":
+        return A.connected_components(g)
+    if name == "mst":
+        return A.minimum_spanning_forest(g)
+    if name == "scc":
+        return A.strongly_connected_components(g)
+    if name == "k_core":
+        return A.k_core(g, k=2)
+    if name == "k_truss":
+        return k_truss(g, k=3)
+    if name == "svdpp":
+        return svdpp_train(spark, g.edges.select(
+            F.col("src").alias("u"), F.col("dst").alias("i"),
+            F.col("weight").alias("r")), rank=2, iters=1)
+    assert name == "kmeans"
+    return kmeans(g.vertices.select(
+        F.col("id").alias("vec_id"),
+        F.array(F.col("id").cast("double"),
+                (F.col("id") % 7).cast("double")).alias("embedding")),
+        k=3, iters=1)
+
+
+@pytest.mark.parametrize("name", ["run_pregel", "cc", "mst", "scc", "k_core",
+                                  "k_truss", "svdpp", "kmeans"])
+def test_loop_checkpoint_failure_releases_blocks_and_restores_conf(
+        spark, monkeypatch, name):
+    """Every iterative loop, failed at each of its localCheckpoint calls in
+    turn, leaves no new persistent RDD and the session's loop conf as it
+    found it. A clean run first counts the calls. The injected failure is
+    the worst shape: the checkpoint's job persisted its blocks and THEN
+    the call raised, so nothing but the loop scope's own bookkeeping can
+    release them."""
+    import threading
+
+    g = _complete_graph(spark)
     # patch the CONCRETE class (pyspark.sql.classic.dataframe.DataFrame on
     # Spark 4) — the pyspark.sql.DataFrame parent's method is overridden
-    DataFrame = type(edges)
-
-    def persistent_ids() -> set:
-        return {int(i) for i in
-                spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
-
+    DataFrame = type(g.edges)
     real = DataFrame.localCheckpoint
-    calls = {"n": 0}
+    lock = threading.Lock()
+    calls = {"n": 0, "fail_at": 0}
 
     def persist_then_fail(self, eager=True):
-        # the worst version of the window: the checkpoint's materializing
-        # job fully persisted its blocks, then the call raised — callers
-        # never receive the DataFrame, so only checkpoint_eager's id-set
-        # diff can release the blocks
         out = real(self, eager=eager)
-        calls["n"] += 1
-        if calls["n"] >= 3:  # 1=edges snapshot, 2=init state, 3=superstep 1
-            raise RuntimeError("injected failure inside localCheckpoint")
+        with lock:  # pair checkpoints call in from two pool threads
+            calls["n"] += 1
+            fail = calls["n"] == calls["fail_at"]
+        if fail:
+            raise RuntimeError("injected localCheckpoint failure")
         return out
 
     monkeypatch.setattr(DataFrame, "localCheckpoint", persist_then_fail)
-    before = persistent_ids()
-    with pytest.raises(RuntimeError, match="inside localCheckpoint"):
-        run_pregel(PropertyGraph(vertices=vertices, edges=edges),
-                   _SSSPProgram(0, weighted=False), max_iter=8,
-                   checkpoint_interval=1)
-    monkeypatch.setattr(DataFrame, "localCheckpoint", real)
-    leaked = persistent_ids() - before
-    assert not leaked, \
-        f"failure inside the eager checkpoint stranded RDDs {leaked}"
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    base_conf = [spark.conf.get(k) for k in keys]
+
+    before = _persistent_ids(spark)
+    _run_loop(name, spark, g)
+    n_calls = calls["n"]
+    assert n_calls >= 1
+    assert [spark.conf.get(k) for k in keys] == base_conf
+    _unpersist_ids(spark, _persistent_ids(spark) - before)  # the output
+
+    problems = []
+    for fail_at in range(1, n_calls + 1):
+        calls.update(n=0, fail_at=fail_at)
+        before = _persistent_ids(spark)
+        with pytest.raises(RuntimeError, match="injected localCheckpoint"):
+            _run_loop(name, spark, g)
+        leaked = _persistent_ids(spark) - before
+        if leaked:
+            problems.append(f"call {fail_at} stranded RDDs {sorted(leaked)}")
+        if [spark.conf.get(k) for k in keys] != base_conf:
+            problems.append(f"call {fail_at} left the loop conf applied")
+    assert not problems, f"{name}, {n_calls} calls: " + "; ".join(problems)
 
 
 def test_checkpoint_eager_rejects_concurrent_entry(spark):
-    """Round-10 verdict item 7: checkpoint_eager's single-driver-thread
-    contract is cheaply ENFORCED — a second driver thread entering while a
-    call is in flight (simulated by holding this context's guard) raises
+    """LoopScope.checkpoint's single-driver-thread contract is cheaply
+    ENFORCED — a second driver thread entering while a call is in flight
+    (simulated by holding the module's checkpoint lock) raises
     RuntimeError up front instead of silently racing the RDD-id snapshot
-    and risking a live checkpoint's blocks. The guard is released on every
+    and risking a live checkpoint's blocks. The lock is released on every
     exit path, so a clean call afterwards still works."""
     from gmr_spark.plans import pregel
 
     df = spark.range(3)
-    guard = pregel._eager_guard(spark.sparkContext)
-    assert guard.acquire(blocking=False)
-    try:
-        with pytest.raises(RuntimeError, match="concurrent entry"):
-            pregel.checkpoint_eager(df)
-    finally:
-        guard.release()
-    out = pregel.checkpoint_eager(df)
-    assert out.count() == 3
-    assert not guard.locked()  # released on the success path
-    pregel._drop_checkpoint_blocks(out)
+    with pregel.LoopScope(spark) as loop:
+        assert pregel._CHECKPOINT_LOCK.acquire(blocking=False)
+        try:
+            with pytest.raises(RuntimeError, match="concurrent entry"):
+                loop.checkpoint(df)
+        finally:
+            pregel._CHECKPOINT_LOCK.release()
+        out = loop.checkpoint(df)
+        assert out.count() == 3
+        assert not pregel._CHECKPOINT_LOCK.locked()  # released on success
 
 
-def test_checkpoint_eager_pair_concurrent_and_clean(spark):
-    """r15: checkpoint_eager_pair materializes two independent frames'
-    eager localCheckpoints under one guard acquisition (two concurrent
-    jobs). Pins: (a) both results are block-backed LogicalRDD leaves with
-    the right values; (b) the guard is released afterwards; (c) concurrent
-    entry is rejected like checkpoint_eager's; (d) a failure inside either
-    materialization releases EVERY id the call persisted."""
+def test_checkpoint_eager_pair_concurrent_and_clean(spark, monkeypatch):
+    """LoopScope.checkpoint with several frames materializes their eager
+    localCheckpoints as concurrent jobs under one lock acquisition. Pins:
+    (a) both jobs are in flight at once; (b) both results are
+    block-backed LogicalRDD leaves with the right values and their census
+    comes back; (c) the lock is released afterwards and concurrent entry
+    is rejected; (d) a failure inside either materialization releases
+    EVERY id the call persisted; (e) the scope releases its frames on
+    exit."""
+    import threading
+
     from pyspark.sql import functions as F
 
     from gmr_spark.plans import pregel
 
     a = spark.range(5).select(F.col("id").alias("x"))
     b = spark.range(7).select((F.col("id") * 2).alias("y"))
-    ra, rb = pregel.checkpoint_eager_pair(a, b)
-    for r in (ra, rb):
-        assert (r._jdf.queryExecution().analyzed().getClass().getSimpleName()
-                == "LogicalRDD")
-    assert ra.count() == 5 and rb.count() == 7
-    guard = pregel._eager_guard(spark.sparkContext)
-    assert not guard.locked()  # released on the success path
-    assert guard.acquire(blocking=False)
-    try:
-        with pytest.raises(RuntimeError, match="concurrent entry"):
-            pregel.checkpoint_eager_pair(a, b)
-    finally:
-        guard.release()
-    pregel._drop_checkpoint_blocks(ra)
-    pregel._drop_checkpoint_blocks(rb)
+    DataFrame = type(a)
+    real = DataFrame.localCheckpoint
+    # each call waits for the other at a barrier: run one after the other,
+    # the first would time out and break it
+    barrier = threading.Barrier(2, timeout=30)
+
+    def rendezvous(self, eager=True):
+        barrier.wait()
+        return real(self, eager=eager)
+
+    before = _persistent_ids(spark)
+    monkeypatch.setattr(DataFrame, "localCheckpoint", rendezvous)
+    with pregel.LoopScope(spark) as loop:
+        ra, (rb, census) = loop.checkpoint(a, (b, {"n": F.count(F.lit(1))}))
+        monkeypatch.setattr(DataFrame, "localCheckpoint", real)
+        for r in (ra, rb):
+            assert (r._jdf.queryExecution().analyzed().getClass().getSimpleName()
+                    == "LogicalRDD")
+        assert ra.count() == 5 and rb.count() == 7 and census == {"n": 7}
+        assert not pregel._CHECKPOINT_LOCK.locked()  # released on success
+        assert pregel._CHECKPOINT_LOCK.acquire(blocking=False)
+        try:
+            with pytest.raises(RuntimeError, match="concurrent entry"):
+                loop.checkpoint(a, b)
+        finally:
+            pregel._CHECKPOINT_LOCK.release()
+    assert not (_persistent_ids(spark) - before), "scope exit leaked"
 
     # failure path: one side's materializing job fails -> nothing persisted
     # by the call survives (the snapshot-diff release covers BOTH sides)
-    def persistent_ids() -> set:
-        return {int(i) for i in
-                spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
-
     @F.udf("long")
     def _boom(v):
         raise ValueError("forced pair failure")
 
-    before = persistent_ids()
     bad = spark.range(4).select(_boom(F.col("id")).alias("z"))
-    with pytest.raises(Exception, match="forced pair failure"):
-        pregel.checkpoint_eager_pair(spark.range(3), bad)
-    assert not (persistent_ids() - before), \
-        "failed checkpoint_eager_pair leaked persisted RDDs"
-    assert not pregel._eager_guard(spark.sparkContext).locked()
+    for pair in ((spark.range(3), bad), (bad, spark.range(3))):
+        before = _persistent_ids(spark)
+        with pregel.LoopScope(spark) as loop:
+            with pytest.raises(Exception, match="forced pair failure"):
+                loop.checkpoint(*pair)
+            assert not (_persistent_ids(spark) - before), \
+                "failed pair checkpoint leaked persisted RDDs"
+        assert not pregel._CHECKPOINT_LOCK.locked()
 
 
-def test_eager_guard_keyed_per_context(spark):
-    """Round-11 ADVICE item 4: the reentrancy guard is keyed per
-    SparkContext — the RDD-id snapshot race it protects is per-context, so
-    two independent contexts must get independent locks (no spurious
-    'concurrent entry' across contexts), while repeat lookups on the SAME
-    context return the SAME lock. Spark forbids two live contexts in one
-    process, so the second key is a stand-in object — _eager_guard is
-    key-agnostic by construction. Weak keying: dropping the key frees its
-    entry (a lock must not keep a stopped context alive)."""
+def test_loop_checkpoint_fallback_without_persistent_rdd_api(
+        spark, monkeypatch):
+    """If the private ``getPersistentRDDs`` API is unavailable, the scope's
+    checkpoint still returns block-backed frames with the right values
+    (only the failure-path release is lost) and WARNS once per process,
+    not once per call."""
+    import warnings
+
+    from pyspark.sql import functions as F
+
     from gmr_spark.plans import pregel
 
-    class _FakeContext:
-        pass
+    class _NoPersistentRDDs:
+        def __init__(self, jsc):
+            self._jsc = jsc
+
+        def getPersistentRDDs(self):
+            raise RuntimeError("private API unavailable")
+
+        def __getattr__(self, name):
+            return getattr(self._jsc, name)
 
     sc = spark.sparkContext
-    assert pregel._eager_guard(sc) is pregel._eager_guard(sc)
-    other = _FakeContext()
-    assert pregel._eager_guard(other) is not pregel._eager_guard(sc)
-    # holding the OTHER context's guard must not block this context's call
-    assert pregel._eager_guard(other).acquire(blocking=False)
-    try:
-        out = pregel.checkpoint_eager(spark.range(2))
-        assert out.count() == 2
-        pregel._drop_checkpoint_blocks(out)
-    finally:
-        pregel._eager_guard(other).release()
-    before = len(pregel._EAGER_GUARDS)
-    del other
-    import gc
-
-    gc.collect()
-    assert len(pregel._EAGER_GUARDS) == before - 1
+    monkeypatch.setattr(pregel, "_WARNED_FALLBACKS", set())
+    monkeypatch.setattr(sc, "_jsc", _NoPersistentRDDs(sc._jsc))
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        with pregel.LoopScope(spark) as loop:
+            (a, census), b = loop.checkpoint(
+                (spark.range(5).select((F.col("id") * 3).alias("x")),
+                 {"n": F.count(F.lit(1))}),
+                spark.range(4))
+            c = loop.checkpoint(spark.range(2))
+            for r in (a, b, c):
+                assert (r._jdf.queryExecution().analyzed().getClass()
+                        .getSimpleName() == "LogicalRDD")
+            assert sorted(r.x for r in a.collect()) == [0, 3, 6, 9, 12]
+            assert census == {"n": 5}
+            assert b.count() == 4 and c.count() == 2
+    msgs = [str(w.message) for w in caught
+            if issubclass(w.category, RuntimeWarning)]
+    assert len(msgs) == 1, msgs
+    assert "LoopScope.checkpoint" in msgs[0] and "private Spark JVM API" in msgs[0]
 
 
 def test_python_worker_prewarm_runs_clean(spark):

@@ -536,3 +536,16 @@ def test_r13_shards_row_at_toy_size(spark, monkeypatch, tmp_path):
     got = extra["shards"]
     assert got["docs"] == 4000 and got["n_shards"] == 8
     assert got["epoch1_moved"] > 0
+
+
+def test_r15_ktruss_skew_expected_count(spark):
+    """The ktruss_skew row's expected triangle count, checked against the
+    engine at toy size before a G2-size run pays for it: the hub graph has
+    no hub–hub edges, so only the (hub, leaf i, leaf i+1) triangles close."""
+    from scale_r15 import hub_ring_edges, hub_ring_triangles
+
+    from gmr_spark.algorithms.triangles import closed_triangles
+
+    und = hub_ring_edges(spark, hubs=3, leaves=8)
+    assert hub_ring_triangles(hubs=3, leaves=8) == 3 * 7
+    assert closed_triangles(und).count() == hub_ring_triangles(hubs=3, leaves=8)
