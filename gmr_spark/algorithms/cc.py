@@ -5,51 +5,47 @@ The reference declares ``connectedComponents`` but ships an empty stub
 GraphX/Pregel ones its roadmap cites (algorithms.h:217-222): every vertex's
 label converges to the minimum vertex id in its (weakly) connected component.
 
-Algorithm (round-3 verdict item 4 — the 100 TB long-chain hardening): each
-ROUND alternates
+:func:`min_label_fixpoint` is the one label-propagation kernel: connected
+components, dedup clusters (through :func:`connected_components`) and
+Borůvka's per-phase component merge (``mst.py``) all run it. Each ROUND
+applies
   (1) one min-neighbor propagation step
       ``label' = min(label, min over in-neighbors' labels)``, then
-  (2) pointer doubling to fixpoint: ``label = label[label]`` repeated until
-      unchanged — each doubling join halves every label-chain's depth, so a
-      chain of length L collapses in ceil(log2 L) |V|-row joins.
-Plain propagation needs O(diameter) supersteps (a 10k-vertex path = 10k
-edge-join rounds); with jumping, rounds = O(log n) — pinned by a property
-test on exactly that path graph. MST's label collapse uses the same trick
-(mst.py:24-27). Invariants: labels only decrease, ``label[v] ≤ v``, and
-every label is the id of a vertex in v's component; the fixpoint where
+  (2) pointer jumps ``label = label[label]``, each of which halves every
+      label chain's depth,
+so rounds are O(log n) rather than O(diameter) — a 10k-vertex path
+converges in a handful of rounds, pinned by a property test on exactly
+that graph. Invariants: labels only decrease, ``label[v] ≤ v``, and every
+label is the id of a vertex in v's component; the fixpoint where
 propagation finds no improvement is exactly "every component shares its
-minimum id as label".
+minimum id as label". Labels are monotone, so "changed" ≡ "decreased", and
+a converged run equals the K-step bounded propagation the DuckDB oracle
+unrolls for any K past convergence.
 
-Driver-action shape (r15 final, guide §1.2 step 1 + §5): each ROUND is ONE
-checkpoint-materializing job fusing the propagation step with TWO pointer
-jumps, where every jump resolves through the MATERIALIZED previous label
-checkpoint (the join's lookup side is always a plain scan of the persisted
-blocks, applied sequentially: l1 = T[l0], l2 = T[l1]). That detail is
-load-bearing: the first r15 draft jumped through the *just-updated lazy*
-table, whose self-reference duplicated the whole propagation subtree into
-the plan 4x (measured: 12 → 25 stages per checkpoint job, mst row 8.2 →
-73.4 s in a clean A/B window) — sequential composition against the
-materialized scan gets the extra resolution depth at one cheap O(V) join
-each, no duplication. Extra jump JOBS (same two-scan-join shape, tripling
-resolution depth per job — T := T∘T∘T over the materialized table) run
-only while the last jump still improved something; the old r14 loop paid
-one job per propagation step plus one job per jump plus a final no-op
-confirm jump. Convergence censuses ride the checkpoints as Observations
-(two sums per job: any-decrease vs the pre-round labels for the outer
-fixpoint, any-decrease in the last jump for the inner one); labels are
-monotone non-increasing and ``label[v] ≤ v``, so "changed" ≡ "decreased"
-and the fixpoint (and therefore the declared result) is IDENTICAL to the
-one-step-per-job loop's.
+Loop shape: one concurrent set-up pair (the initial labels and the edge
+snapshot, each with its row census); then ONE checkpoint job per round that
+fuses the propagation step with TWO pointer jumps; then extra T∘T∘T jump
+jobs only while the last jump still improved something. Both convergence
+censuses ride the round's checkpoint as Observations. Every jump resolves
+through the MATERIALIZED previous label table — its build side is a plain
+scan of persisted blocks, applied sequentially (l1 = T[l0], l2 = T[l1]).
+That is load-bearing: jumping through the just-updated LAZY table
+self-references the propagation subtree and duplicates it into the plan
+(measured 4x: 12 → 25 stages per job, an mst row 8.2 → 73.4 s).
 
-Determinism: labels decrease monotonically, so a converged run equals the
-K-step bounded propagation for any K ≥ convergence step — the DuckDB oracle
-unrolls K steps of ``label = min(own, min(neighbor labels))`` (unchanged by
-the jumping rewrite, which only accelerates convergence to the same
-fixpoint).
-
-Scale: the propagation join reuses the edges' src partitioning; the jump
-join touches only the |V|-row label table; every round localCheckpoints to
-cut lineage (same cadence policy as run_pregel).
+Physical policy, decided once from the set-up census: the loop runs under
+:meth:`LoopScope.rows` of the edge count, and every |V|-row join side gets
+one hint — ``broadcast`` when both counts are ≤ ``BIG_GRAPH_ROWS`` (under
+the small-loop conf AQE is off, and without the hint Catalyst plans every
+checkpoint-scan join as a SortMergeJoin: 8 Exchanges per round on cc_cs
+against 1), otherwise ``shuffle_hash`` (AQE's own choice at G2, a ~5M-row
+driver-built broadcast, OOM'd the local heap). Every per-round label
+checkpoint is re-leafed (:func:`reset_plan_stats`): the jumps self-join the
+previous checkpoint, so the propagated size estimate would otherwise triple
+its digit count per checkpoint. The set-up pair keeps its plan: the
+propagation join reuses the edge snapshot's ``src`` partitioning. The
+set-up pair itself runs under the conf of the caller's scope, since no size
+is known before it.
 """
 
 from __future__ import annotations
@@ -63,95 +59,71 @@ _JUMP_CAP = 64  # > log2 of any feasible |V|; trips only on a logic bug
 
 
 def _scan_jumps(df: DataFrame, lookup: DataFrame,
-                keep: list[str], *, small: bool = False) -> DataFrame:
+                keep: list[str], hint: str) -> DataFrame:
     """Two sequential pointer jumps over ``df(id, label, *keep)``, each
-    resolving through ``lookup`` — a MATERIALIZED (checkpointed) label
-    table whose scan is the build side of both joins, so the plan never
-    duplicates an unmaterialized subtree (the r15-draft trap; see module
-    docstring). Returns (id, label, *keep, _j1) where ``_j1`` is the label
-    after the FIRST jump — the inner-loop census compares the final label
-    against it (the last jump changing nothing ≡ jump fixpoint reached
-    w.r.t. this table). Every label is a vertex id present in
-    ``lookup.id`` (the loop invariant), so the lookup inner-joins always
-    match; ``left`` + coalesce keeps the no-match case a value-identity
-    rather than a row drop, belt-and-braces. Monotonicity: the lookup
-    table satisfies ``label[v] ≤ v``, so each jump can only decrease.
-
-    ``small`` broadcast-hints the lookup sides: under the loop's small
-    conf (:meth:`LoopScope.rows`) AQE is off, so without the hint Catalyst
-    plans every jump as a SortMergeJoin over a checkpoint scan with
-    unknowable stats — measured on cc_cs (|V|=16k): 8 Exchanges + sorts
-    per fused round vs 1 with the hints (guide §3.1: pick the strategy
-    deliberately). Callers set it only when the vertex census proves the
-    label table is broadcastable."""
-    _h = (lambda d: d.hint("broadcast")) if small else (lambda d: d)
+    resolving through ``lookup`` — a MATERIALIZED label table whose scan
+    (hinted ``hint``) is the build side of both joins. Returns
+    (id, label, *keep, _j1) where ``_j1`` is the label after the FIRST
+    jump: the last jump changing nothing ≡ jump fixpoint w.r.t. this
+    table. Every label is a vertex id present in ``lookup.id``, so the
+    lookups always match; ``left`` + coalesce keeps a no-match a
+    value-identity rather than a row drop."""
     j1 = (
-        df.join(_h(lookup.select(F.col("id").alias("label"),
-                                 F.col("label").alias("_l1"))), "label", "left")
+        df.join(lookup.select(F.col("id").alias("label"),
+                              F.col("label").alias("_l1")).hint(hint),
+                "label", "left")
         .select("id", F.coalesce("_l1", F.col("label")).alias("label"), *keep)
     )
     return (
-        j1.join(_h(lookup.select(F.col("id").alias("label"),
-                                 F.col("label").alias("_l2"))), "label", "left")
+        j1.join(lookup.select(F.col("id").alias("label"),
+                              F.col("label").alias("_l2")).hint(hint),
+                "label", "left")
         .select("id", F.coalesce("_l2", F.col("label")).alias("label"),
                 *keep, F.col("label").alias("_j1"))
     )
 
 
-def _cc_labels(g: PropertyGraph, max_iter: int,
-               *, small: bool = False) -> tuple[DataFrame, dict]:
-    """Fused propagate + scan-jump loop over (id, label). Returns the
-    converged label table and counters for the property test: ``rounds``
-    (propagation steps) and ``jump_joins`` (jump joins — two per
-    checkpoint job, each against the materialized table).
-
-    ``small`` (set by :func:`connected_components` when BOTH censuses are
-    known and under ``BIG_GRAPH_ROWS``) broadcast-hints every |V|-row side:
-    the label lookup in the propagation/jump joins and the aggregated
-    neighbor-min table. Join strategy does not change the fixpoint — only
-    which side builds the hash table.
-
-    The edge set is checkpointed ONCE up front (concurrently with the
-    initial labels — two independent snapshots): the caller hands a LAZY
-    plan (typically ``undirected()``'s union+distinct, 2 Exchanges over
-    2|E| rows) that the propagation join would otherwise re-execute EVERY
-    round. The returned label fixpoint is itself a checkpoint with no
-    lineage into the edge snapshot."""
-    _h = (lambda d: d.hint("broadcast")) if small else (lambda d: d)
+def min_label_fixpoint(nodes: DataFrame, edges: DataFrame,
+                       max_iter: int) -> tuple[DataFrame, dict]:
+    """Min-id label per connected component of ``nodes (id)`` under the
+    symmetric ``edges (src, dst)``. Returns the kept ``(id, label)``
+    checkpoint — owned by the enclosing :class:`LoopScope`, if any — and
+    counters: ``rounds`` (propagation steps), ``jump_joins`` (two per
+    checkpoint job) and ``converged``. The edges are snapshotted once at
+    set-up: callers pass a lazy plan (e.g. ``undirected()``'s closure, two
+    Exchanges over 2|E| rows) that every round would otherwise re-run."""
     stats = {"rounds": 0, "jump_joins": 0, "converged": False}
-    with LoopScope(g.edges.sparkSession) as loop:
-        labels, edges = loop.checkpoint(
-            g.vertices.select("id", F.col("id").alias("label")),
-            g.edges.select("src", "dst"),
+    with LoopScope(nodes.sparkSession) as loop:
+        (labels, v_stats), (edges, e_stats) = loop.checkpoint(
+            (nodes.select("id", F.col("id").alias("label")),
+             {"n": F.count(F.lit(1))}),
+            (edges.select("src", "dst"), {"n": F.count(F.lit(1))}),
         )
+        loop.rows(e_stats["n"])
+        hint = ("broadcast" if max(v_stats["n"], e_stats["n"]) <= BIG_GRAPH_ROWS
+                else "shuffle_hash")
         for _ in range(max_iter):
-            # (1) one min-neighbor propagation step + (2) two pointer jumps
-            # through the PREVIOUS materialized label table, all in ONE
-            # checkpoint-materializing job (the propagation subtree is
-            # evaluated exactly once; the jump joins' build sides are scans
-            # of the persisted blocks). Both censuses ride it as
-            # Observations: n_improved (final < pre-round — the outer
-            # fixpoint test; rounds start at jump fixpoint, so 0 here means
-            # neither propagation nor jumps changed anything) and n_jump2
-            # (final < post-first-jump — whether more jump jobs are needed).
             nbr_min = (
-                edges.join(_h(labels.select(F.col("id").alias("src"),
-                                            F.col("label").alias("slabel"))),
-                           "src")
+                edges.join(labels.select(F.col("id").alias("src"),
+                                         F.col("label").alias("slabel"))
+                           .hint(hint), "src")
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.min("slabel").alias("nlabel"))
             )
             prop = (
-                labels.join(_h(nbr_min), "id", "left")
+                labels.join(nbr_min.hint(hint), "id", "left")
                 .select(
                     "id",
                     F.least("label", F.coalesce("nlabel", "label")).alias("label"),
                     F.col("label").alias("_pre"),
                 )
             )
+            # n_improved (vs the pre-round labels; rounds start at jump
+            # fixpoint, so 0 means nothing changed) is the outer fixpoint
+            # test, n_jump2 (vs the first jump) says whether to keep jumping
             obs = Observation()
             prev, labels = labels, loop.checkpoint(
-                _scan_jumps(prop, labels, ["_pre"], small=small)
+                _scan_jumps(prop, labels, ["_pre"], hint)
                 .observe(
                     obs,
                     F.sum((F.col("label") < F.col("_pre")).cast("long"))
@@ -159,7 +131,8 @@ def _cc_labels(g: PropertyGraph, max_iter: int,
                     F.sum((F.col("label") < F.col("_j1")).cast("long"))
                     .alias("n_jump2"),
                 )
-                .drop("_pre", "_j1")
+                .drop("_pre", "_j1"),
+                releaf=True,
             )
             loop.release(prev)
             stats["rounds"] += 1
@@ -169,20 +142,18 @@ def _cc_labels(g: PropertyGraph, max_iter: int,
                 stats["converged"] = True
                 break
 
-            # extra jump jobs (T := T∘T∘T over the just-materialized table)
-            # only while the LAST jump still improved something
             jumping = (res["n_jump2"] or 0) > 0
             for _ in range(_JUMP_CAP):
                 if not jumping:
                     break
                 jump_obs = Observation()
                 prev, labels = labels, loop.checkpoint(
-                    _scan_jumps(labels.select("id", "label"), labels, [],
-                                small=small)
+                    _scan_jumps(labels.select("id", "label"), labels, [], hint)
                     .observe(jump_obs,
                              F.sum((F.col("label") < F.col("_j1"))
                                    .cast("long")).alias("n_jump2"))
-                    .drop("_j1")
+                    .drop("_j1"),
+                    releaf=True,
                 )
                 loop.release(prev)
                 stats["jump_joins"] += 2
@@ -194,30 +165,18 @@ def _cc_labels(g: PropertyGraph, max_iter: int,
 def connected_components(graph: PropertyGraph, *, max_iter: int = 120,
                          undirected: bool = True) -> DataFrame:
     """-> (id BIGINT, component BIGINT). Treats the graph as undirected
-    (weak components) unless ``undirected=False`` (caller already symmetric).
+    (weak components) unless ``undirected=False`` (caller already
+    symmetric).
 
-    When the caller's graph carries a builder census (``n_edges`` — every
-    derived graph does), the label loop runs under the same |E|-scoped
-    physical conf as every other iterative loop (:meth:`LoopScope.rows`:
-    statically coalesced shuffles + per-stage adaptive planning off below
-    BIG_GRAPH_ROWS; on session defaults AQE turned each fused round into
-    one job per query stage). With AQE off, Catalyst has no runtime sizes
-    for the checkpoint-scan join sides and falls back to SortMergeJoin
-    everywhere — measured on cc_cs: 8 Exchanges + sorts per fused round —
-    so when BOTH censuses additionally prove the |V|-row sides
-    broadcastable (≤ BIG_GRAPH_ROWS), the loop broadcast-hints them: 1
-    Exchange per round (the neighbor-min groupBy, the one fundamental
-    shuffle). Census-less graphs run on the session conf rather than pay
-    count jobs for it."""
+    A builder census (``n_edges``, carried by every derived graph) sizes
+    the kernel's set-up pair as well, like MST's enclosing scope does: on
+    the session conf AQE splits the set-up's closure shuffles into jobs of
+    their own (measured on cc_cs: +2 jobs, +0.3-0.5 s per call)."""
     g = graph.undirected() if undirected else graph
-    n_edges = graph.n_edges
-    if n_edges is not None and undirected:
-        n_edges *= 2  # symmetric closure upper bound
-    small = (n_edges is not None and n_edges <= BIG_GRAPH_ROWS
-             and graph.n_vertices is not None
-             and graph.n_vertices <= BIG_GRAPH_ROWS)
     with LoopScope(graph.edges.sparkSession) as loop:
-        loop.rows(n_edges)
-        labels, _ = _cc_labels(g, max_iter, small=small)
+        # the symmetric closure at most doubles |E|
+        loop.rows(None if graph.n_edges is None
+                  else graph.n_edges * (2 if undirected else 1))
+        labels, _ = min_label_fixpoint(g.vertices, g.edges, max_iter)
         loop.keep(labels)
     return labels.select("id", F.col("label").alias("component"))

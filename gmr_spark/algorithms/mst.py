@@ -18,97 +18,19 @@ Scale notes (100 TB): the per-phase work is one edges⋈labels join (edges
 hash-partitioned by endpoint), one min-by-component aggregation (partial
 map-side combine — the struct min is algebraic), and a component-graph label
 propagation whose input shrinks geometrically (≤ |components| rows, halving
-per phase). Label propagation folds in a pointer-jump (label := label of
-label) so long hook-chains collapse in O(log chain) rounds instead of
-O(chain). State is localCheckpoint-ed per step and owned by a LoopScope
-(plans/pregel.py).
+per phase). That propagation is the shared pointer-jumping kernel
+(cc.min_label_fixpoint), so long hook-chains collapse in O(log chain)
+rounds instead of O(chain). State is localCheckpoint-ed per step and owned
+by a LoopScope (plans/pregel.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, functions as F
 
+from gmr_spark.algorithms.cc import min_label_fixpoint
 from gmr_spark.graph import PropertyGraph
 from gmr_spark.plans.pregel import BIG_GRAPH_ROWS, LoopScope
-
-
-def _min_label_fixpoint(nodes: DataFrame, und_edges: DataFrame,
-                        max_iter: int = 64, *, big: bool = False) -> DataFrame:
-    """Exact min-id labels per connected component of a (small) graph.
-
-    nodes: (u BIGINT); und_edges: (u, v) symmetric. Returns (u, lbl).
-    Monotone min-propagation with a pointer-jump accelerator; stops at the
-    propagation fixpoint, where labels are provably constant per component
-    and equal to the component's minimum id. ``big`` pins shuffle_hash on
-    the |V|-scaling sides (see :func:`minimum_spanning_forest`) — phase-1
-    component graphs are vertex-sized before the geometric shrink kicks in.
-
-    ``big`` also re-leafs each checkpoint over its own blocks: the jump step
-    SELF-joins the previous checkpoint, so the propagated size estimate
-    SQUARES per iteration — past ~15 iterations the driver drowns in
-    million-digit BigInteger multiplies inside the next checkpoint's stats
-    rewrite (see reset_plan_stats; measured at the G2 phase-2 fixpoint, a
-    1.2M-node path needing ~21 jump rounds). Small graphs keep the stats —
-    their fixpoints converge in <10 rounds and the estimates feed
-    legitimate compile-time broadcasts.
-    """
-
-    def _pin(df: DataFrame) -> DataFrame:
-        return df.hint("shuffle_hash") if big else df
-
-    with LoopScope(nodes.sparkSession) as loop:
-        lbl = loop.checkpoint(nodes.select("u", F.col("u").alias("lbl")),
-                              releaf=big)
-        for _ in range(max_iter):
-            nb = (
-                und_edges.join(_pin(lbl.withColumnRenamed("u", "v")), "v")
-                .groupBy("u").agg(F.min("lbl").alias("ml"))
-            )
-            # carry each node's pre-round label through the jumps so the
-            # convergence census can ride the checkpoint's materializing
-            # job as an Observation. Labels are monotone non-increasing, so
-            # "improved" ≡ any(new < old).
-            prop = (
-                lbl.join(nb, "u", "left")
-                .select("u", F.col("lbl").alias("old"),
-                        F.least("lbl", F.coalesce("ml", "lbl")).alias("lbl"))
-            )
-            # TWO pointer jumps per checkpoint job, each resolving through
-            # the PREVIOUS materialized label table: the join's build side
-            # is a scan of lbl's persisted blocks, applied sequentially — the
-            # propagation subtree is evaluated exactly ONCE per job.
-            # (Self-joining the lazy `prop` duplicates the edge-join subtree
-            # 2x, and composing the lazy jump output with itself 4x —
-            # measured 12 → 25 stages/job and an 8.2 → 73.4 s mst row.
-            # Scan-jumps keep one evaluation and still multiply resolution
-            # depth 3x per job.) Labels are node ids present in lbl.u with
-            # lbl[u] ≤ u, so each lookup matches and can only decrease;
-            # fixpoint unchanged — jumps only accelerate convergence to the
-            # same per-component min.
-
-            def _lkp() -> DataFrame:  # fresh attribute ids per join instance
-                return _pin(lbl.select(F.col("u").alias("lbl"),
-                                       F.col("lbl").alias("lbl2")))
-
-            jump1 = (
-                prop.join(_lkp(), "lbl", "left")
-                .select("u", F.coalesce("lbl2", "lbl").alias("lbl"), "old")
-            )
-            obs = Observation()
-            jump = loop.checkpoint(
-                jump1.join(_lkp(), "lbl", "left")
-                .select("u", F.coalesce("lbl2", "lbl").alias("lbl"),
-                        (F.coalesce("lbl2", "lbl") < F.col("old")).alias("_imp"))
-                .observe(obs, F.sum(F.col("_imp").cast("long")).alias("n_improved"))
-                .drop("_imp"),
-                releaf=big,
-            )
-            loop.release(lbl)
-            lbl = jump
-            if int(obs.get["n_improved"] or 0) == 0:
-                break
-        loop.keep(lbl)
-    return lbl
 
 
 def minimum_spanning_forest(graph: PropertyGraph, *,
@@ -196,13 +118,15 @@ def minimum_spanning_forest(graph: PropertyGraph, *,
             # untouched components keep their label via the left join +
             # coalesce below (identical result: an isolated node of cg
             # would have fixpoint label = itself).
-            cg = sel.select(F.col("ca").alias("u"), F.col("cb").alias("v")).unionByName(
-                sel.select(F.col("cb").alias("u"), F.col("ca").alias("v"))
+            cg = sel.select(F.col("ca").alias("src"), F.col("cb").alias("dst")).unionByName(
+                sel.select(F.col("cb").alias("src"), F.col("ca").alias("dst"))
             ).distinct()
-            nodes = cg.select("u").distinct()
-            lbl = _min_label_fixpoint(nodes, cg, big=big)
+            lbl, _ = min_label_fixpoint(
+                cg.select(F.col("src").alias("id")).distinct(), cg, max_iter=64)
             new_comp = loop.checkpoint(
-                comp.join(_pin(lbl), comp["comp"] == lbl["u"], "left")
+                comp.join(_pin(lbl.select(F.col("id").alias("comp"),
+                                          F.col("label").alias("lbl"))),
+                          "comp", "left")
                 .select("id", F.coalesce(F.col("lbl"), F.col("comp")).alias("comp"))
             )
             loop.release(comp, lbl)

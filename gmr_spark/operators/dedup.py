@@ -514,13 +514,14 @@ def dup_clusters(spark: SparkSession, sf_dir: str, *, min_jaccard: float = 0.1) 
     pipeline (keep one doc per CLUSTER, not per pair: A~B, B~C must retire
     two of {A,B,C} even when A~C is below threshold). Composes the engine's
     own primitives: MinHash-LSH verified pairs (``dedup_minhash``) become an
-    undirected graph; Pregel min-label propagation (``connected_components``)
-    labels each cluster by its smallest doc_id — that label IS the
-    keep-decision (survivor = doc_id == cluster_id).
+    undirected graph; min-label propagation with pointer jumps
+    (``connected_components``) labels each cluster by its smallest doc_id —
+    that label IS the keep-decision (survivor = doc_id == cluster_id).
 
     Scale: the pair graph is |verified pairs| — orders of magnitude smaller
-    than the corpus — and CC's superstep count is the cluster diameter
-    (near-dup clusters are dense, typically 2-3 hops). The DuckDB twin is a
+    than the corpus — and CC's rounds grow with the log of the cluster
+    diameter, not the diameter itself; the kernel sizes its conf and join
+    hints from its own census of the pair graph. The DuckDB twin is a
     recursive-CTE transitive closure over the same pairs."""
     from gmr_spark.algorithms.cc import connected_components
     from gmr_spark.graph import PropertyGraph
@@ -535,11 +536,10 @@ def dup_clusters(spark: SparkSession, sf_dir: str, *, min_jaccard: float = 0.1) 
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"),
         F.lit(1.0).alias("weight"),
     )
-    # default max_iter (120): CC early-stops on frontier collapse, so the
-    # higher bound is free for typical 2-3-hop dup clusters while staying
-    # correct on a pathological >20-link near-dup CHAIN (where a low cap
-    # would silently leave labels unconverged and diverge from the oracle's
-    # true transitive closure)
+    # default max_iter (120): CC stops at the first round that improves no
+    # label, so the high bound costs nothing on typical dup clusters and
+    # keeps a pathological near-dup CHAIN correct (a low cap would silently
+    # leave labels unconverged and diverge from the oracle's closure)
     comp = connected_components(PropertyGraph(vertices=vertices, edges=edges))
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
     return comp.join(sizes, "component").select(

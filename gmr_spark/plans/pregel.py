@@ -168,8 +168,10 @@ def reset_plan_stats(df: DataFrame) -> DataFrame:
     million-digit ``BigInteger.multiply`` calls inside the next
     checkpoint's stats rewrite (measured: the Borůvka pointer-jump
     fixpoint at G2 size pinned one driver thread for 20+ minutes in
-    Toom-Cook multiplication while zero tasks ran). Small fixtures never
-    see it — their fixpoints converge in <10 iterations.
+    Toom-Cook multiplication while zero tasks ran). Small graphs are not
+    exempt: the growth follows the iteration count, not the row count —
+    without re-leafing, the 25-vertex nation_mesh MST's estimates passed
+    6,000 digits by its 12th checkpoint and 3 million by its 22nd.
 
     The reset is zero-copy and JVM-only: the analyzed plan of a
     checkpointed frame IS a ``LogicalRDD`` whose ``rdd`` field holds the
@@ -186,9 +188,9 @@ def reset_plan_stats(df: DataFrame) -> DataFrame:
     ``outputPartitioning``/``ordering``; the re-leafed ``LogicalRDD`` built
     here does NOT — a join downstream of a re-leafed frame re-shuffles a
     side the checkpoint had co-located. Keep this helper off any path that
-    relies on checkpoint-preserved partitioning (the current callers —
-    big-graph iterative fixpoints — pin shuffle_hash on those joins anyway,
-    so both sides shuffle by key regardless).
+    relies on checkpoint-preserved partitioning (the current callers'
+    re-leafed frames are the |V|-row side of hinted joins — broadcast, or
+    shuffle_hash, which shuffles both sides by key regardless).
     """
     try:
         jdf = df._jdf

@@ -279,19 +279,30 @@ def test_q3_top10_is_take_ordered(spark):
     assert not re.search(r"\(\d+\) Window", p)
 
 
-def test_pregel_big_graph_gating_end_to_end(spark, monkeypatch):
-    """Executes run_pregel's gated shuffle_hash branch (not just the hint
-    semantics the test above pins): with BIG_GRAPH_ROWS forced to 0 every
-    graph takes the big-graph path, and results must be identical to the
-    ungated run — the hints may only change physical join strategy."""
+@pytest.mark.parametrize("algo", ["bfs", "connected_components",
+                                  "minimum_spanning_forest"])
+def test_pregel_big_graph_gating_end_to_end(spark, monkeypatch, algo):
+    """Executes each loop's gated shuffle_hash branch (not just the hint
+    semantics the test above pins): with BIG_GRAPH_ROWS forced to 0 in
+    every module that reads it, every graph takes the big-graph path —
+    run_pregel's for bfs, the label kernel's for connected components and
+    the MST phase merge — and results must be identical to the ungated
+    run: the hints may only change physical join strategy."""
+    from gmr_spark.algorithms import cc, mst
     from gmr_spark.algorithms.sssp import bfs
     from gmr_spark.sources.derive import derive_graph
     import gmr_spark.plans.pregel as P
 
     g = derive_graph(spark, SF, "geo", materialize=True)
-    want = {(r.id, r.level) for r in bfs(g, source=0, max_iter=8).collect()}
-    monkeypatch.setattr(P, "BIG_GRAPH_ROWS", 0)
-    got = {(r.id, r.level) for r in bfs(g, source=0, max_iter=8).collect()}
+    run = {
+        "bfs": lambda: bfs(g, source=0, max_iter=8),
+        "connected_components": lambda: cc.connected_components(g),
+        "minimum_spanning_forest": lambda: mst.minimum_spanning_forest(g),
+    }[algo]
+    want = {tuple(r) for r in run().collect()}
+    for module in (P, cc, mst):
+        monkeypatch.setattr(module, "BIG_GRAPH_ROWS", 0)
+    got = {tuple(r) for r in run().collect()}
     assert got == want and len(want) > 0
 
 
@@ -712,21 +723,41 @@ def test_run_pregel_edge_checkpoint_ownership(spark):
     _drop_checkpoint_blocks(edges_ckpt)
 
 
-def test_cc_label_loop_releases_superseded_checkpoints(spark):
+def test_cc_label_loop_releases_superseded_checkpoints(spark, monkeypatch):
     """A clean connected_components run leaves exactly the returned label
     table resident: every superseded per-round label checkpoint and the
     edge snapshot are released as the loop goes (a long run would
     otherwise strand O(rounds + jump_joins) |V|-row block sets on the
-    async ContextCleaner)."""
+    async ContextCleaner). Every checkpoint the loop lands keeps a plan
+    size estimate that fits a signed 64-bit value: the jumps self-join
+    the previous checkpoint, so without a re-leaf the propagated estimate
+    grows by orders of magnitude per round."""
+    import sys
+
+    from pyspark.sql import functions as F
+
     from gmr_spark.algorithms.cc import connected_components
     from gmr_spark.graph import PropertyGraph
+    from gmr_spark.plans.pregel import LoopScope
 
-    # a path graph forces several propagate+jump rounds
-    edges = spark.createDataFrame(
-        [(i, i + 1, 1.0) for i in range(200)],
-        "src bigint, dst bigint, weight double")
-    vertices = spark.createDataFrame(
-        [(i,) for i in range(201)], "id bigint")
+    landed = []
+    real = LoopScope.checkpoint
+
+    def recording(self, *frames, **kwargs):
+        out = real(self, *frames, **kwargs)
+        for res in (out if len(frames) > 1 else (out,)):
+            landed.append(res[0] if isinstance(res, tuple) else res)
+        return out
+
+    monkeypatch.setattr(LoopScope, "checkpoint", recording)
+
+    # a path graph forces several propagate+jump rounds; built from
+    # spark.range so its leaves carry real size estimates (a Python-list
+    # frame is an RDD leaf estimated at Long.MaxValue before any loop runs)
+    edges = spark.range(200).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst"),
+        F.lit(1.0).alias("weight"))
+    vertices = spark.range(201)
 
     before = _persistent_ids(spark)
     out = connected_components(
@@ -741,6 +772,18 @@ def test_cc_label_loop_releases_superseded_checkpoints(spark):
     # clean for later tests
     _unpersist_ids(spark, leaked)
     assert not (_persistent_ids(spark) - before)
+    # py4j hands the Scala BigInt over as decimal text, which Python will
+    # not parse past 4,300 digits by default
+    digit_limit = sys.get_int_max_str_digits()
+    sys.set_int_max_str_digits(0)
+    try:
+        sizes = [int(df._jdf.queryExecution().optimizedPlan().stats()
+                     .sizeInBytes()) for df in landed]
+    finally:
+        sys.set_int_max_str_digits(digit_limit)
+    assert len(sizes) > 3, sizes
+    assert all(size < 2 ** 63 for size in sizes), \
+        f"estimate bit lengths: {[size.bit_length() for size in sizes]}"
 
 
 def _complete_graph(spark, n: int = 40):

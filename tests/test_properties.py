@@ -298,7 +298,7 @@ def test_cc_path_graph_converges_in_log_rounds():
     propagation needs ~9,999 supersteps; with per-round pointer doubling the
     loop must close in a handful of propagation rounds plus ~log2(n) jump
     joins."""
-    from gmr_spark.algorithms.cc import _cc_labels
+    from gmr_spark.algorithms.cc import min_label_fixpoint
 
     spark = _get_spark()
     n = 10_000
@@ -308,7 +308,7 @@ def test_cc_path_graph_converges_in_log_rounds():
     vertices = spark.range(n).select("id")
     g = PropertyGraph(vertices=vertices, edges=edges).undirected()
 
-    labels, stats = _cc_labels(g, max_iter=40)
+    labels, stats = min_label_fixpoint(g.vertices, g.edges, max_iter=40)
     assert stats["converged"], stats
     assert labels.filter(F.col("label") != 0).count() == 0
     # ceil(log2(10000)) = 14; allow slack but stay firmly sub-linear
