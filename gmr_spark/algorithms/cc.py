@@ -34,15 +34,13 @@ self-references the propagation subtree and duplicates it into the plan
 (measured 4x: 12 → 25 stages per job, an mst row 8.2 → 73.4 s).
 
 Physical policy, decided once from the set-up census: the loop runs under
-:meth:`LoopScope.rows` of the edge count, and every |V|-row join side gets
-one hint — ``broadcast`` when both counts are ≤ ``BIG_GRAPH_ROWS`` (under
-the small-loop conf AQE is off, and without the hint Catalyst plans every
-checkpoint-scan join as a SortMergeJoin: 8 Exchanges per round on cc_cs
-against 1), otherwise ``shuffle_hash`` (AQE's own choice at G2, a ~5M-row
-driver-built broadcast, OOM'd the local heap). Every per-round label
-checkpoint is re-leafed (:func:`reset_plan_stats`): the jumps self-join the
-previous checkpoint, so the propagated size estimate would otherwise triple
-its digit count per checkpoint. The set-up pair keeps its plan: the
+:meth:`LoopScope.rows` of the edge count, and every |V|-row join side goes
+through the loop runtime's gate, :func:`~gmr_spark.plans.loop.pin`, on the
+larger of the two counts, as a re-leafed side — ``broadcast`` below the
+gate, ``shuffle_hash`` above it. This is the one loop that re-leafs its
+round checkpoints (:func:`reset_plan_stats`): the jumps self-join the
+previous checkpoint, so the propagated size estimate would otherwise grow
+about 3x in bit length per checkpoint. The set-up pair keeps its plan: the
 propagation join reuses the edge snapshot's ``src`` partitioning. The
 set-up pair itself runs under the conf of the caller's scope, since no size
 is known before it.
@@ -53,30 +51,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from gmr_spark.graph import PropertyGraph
-from gmr_spark.plans.pregel import BIG_GRAPH_ROWS, LoopScope
+from gmr_spark.plans.loop import LoopScope, pin
 
 _JUMP_CAP = 64  # > log2 of any feasible |V|; trips only on a logic bug
 
 
 def _scan_jumps(df: DataFrame, lookup: DataFrame,
-                keep: list[str], hint: str) -> DataFrame:
+                keep: list[str], n_rows: int) -> DataFrame:
     """Two sequential pointer jumps over ``df(id, label, *keep)``, each
     resolving through ``lookup`` — a MATERIALIZED label table whose scan
-    (hinted ``hint``) is the build side of both joins. Returns
-    (id, label, *keep, _j1) where ``_j1`` is the label after the FIRST
+    (pinned on the loop's ``n_rows``) is the build side of both joins.
+    Returns (id, label, *keep, _j1) where ``_j1`` is the label after the FIRST
     jump: the last jump changing nothing ≡ jump fixpoint w.r.t. this
     table. Every label is a vertex id present in ``lookup.id``, so the
     lookups always match; ``left`` + coalesce keeps a no-match a
     value-identity rather than a row drop."""
     j1 = (
-        df.join(lookup.select(F.col("id").alias("label"),
-                              F.col("label").alias("_l1")).hint(hint),
+        df.join(pin(lookup.select(F.col("id").alias("label"),
+                                  F.col("label").alias("_l1")),
+                    n_rows, releafed=True),
                 "label", "left")
         .select("id", F.coalesce("_l1", F.col("label")).alias("label"), *keep)
     )
     return (
-        j1.join(lookup.select(F.col("id").alias("label"),
-                              F.col("label").alias("_l2")).hint(hint),
+        j1.join(pin(lookup.select(F.col("id").alias("label"),
+                                  F.col("label").alias("_l2")),
+                    n_rows, releafed=True),
                 "label", "left")
         .select("id", F.coalesce("_l2", F.col("label")).alias("label"),
                 *keep, F.col("label").alias("_j1"))
@@ -100,18 +100,17 @@ def min_label_fixpoint(nodes: DataFrame, edges: DataFrame,
             (edges.select("src", "dst"), {"n": F.count(F.lit(1))}),
         )
         loop.rows(e_stats["n"])
-        hint = ("broadcast" if max(v_stats["n"], e_stats["n"]) <= BIG_GRAPH_ROWS
-                else "shuffle_hash")
+        n_rows = max(v_stats["n"], e_stats["n"])
         for _ in range(max_iter):
             nbr_min = (
-                edges.join(labels.select(F.col("id").alias("src"),
-                                         F.col("label").alias("slabel"))
-                           .hint(hint), "src")
+                edges.join(pin(labels.select(F.col("id").alias("src"),
+                                             F.col("label").alias("slabel")),
+                               n_rows, releafed=True), "src")
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.min("slabel").alias("nlabel"))
             )
             prop = (
-                labels.join(nbr_min.hint(hint), "id", "left")
+                labels.join(pin(nbr_min, n_rows, releafed=True), "id", "left")
                 .select(
                     "id",
                     F.least("label", F.coalesce("nlabel", "label")).alias("label"),
@@ -123,7 +122,7 @@ def min_label_fixpoint(nodes: DataFrame, edges: DataFrame,
             # test, n_jump2 (vs the first jump) says whether to keep jumping
             obs = Observation()
             prev, labels = labels, loop.checkpoint(
-                _scan_jumps(prop, labels, ["_pre"], hint)
+                _scan_jumps(prop, labels, ["_pre"], n_rows)
                 .observe(
                     obs,
                     F.sum((F.col("label") < F.col("_pre")).cast("long"))
@@ -148,7 +147,7 @@ def min_label_fixpoint(nodes: DataFrame, edges: DataFrame,
                     break
                 jump_obs = Observation()
                 prev, labels = labels, loop.checkpoint(
-                    _scan_jumps(labels.select("id", "label"), labels, [], hint)
+                    _scan_jumps(labels.select("id", "label"), labels, [], n_rows)
                     .observe(jump_obs,
                              F.sum((F.col("label") < F.col("_j1"))
                                    .cast("long")).alias("n_jump2"))

@@ -14,8 +14,11 @@ alive set on both endpoints) + one groupBy — partial+final aggregated, no
 driver data beyond the per-iteration count. Iteration count is bounded by
 the peel depth (the graph's degeneracy ordering height), which is tiny for
 real corpora relative to |V|; lineage is cut with a localCheckpoint per
-peel exactly like plans/pregel.py does per superstep, so the 100 TB risk is
-peel passes over the edge table, not plan growth.
+peel, owned by a LoopScope (plans/loop.py), so the 100 TB risk is peel
+passes over the edge table, not plan growth. The peel's semi-joins keep the
+edge side's size estimate, so the alive checkpoints keep their stats (no
+re-leaf): on a 24-vertex path at k=2 all 13 checkpoints read the
+same 10-bit estimate.
 
 Declared-query convergence contract: raises if the fixpoint is not reached
 within ``max_iter`` so a graph/k change fails loudly instead of as a silent
@@ -38,7 +41,7 @@ def k_core(graph: PropertyGraph, k: int, max_iter: int = 30) -> DataFrame:
     representable here."""
     if k < 1:
         raise ValueError(f"k_core requires k >= 1, got {k}")
-    from gmr_spark.plans.pregel import BIG_GRAPH_ROWS, LoopScope
+    from gmr_spark.plans.loop import LoopScope, pin
 
     und = canonical_undirected(graph.edges)
     with LoopScope(graph.edges.sparkSession) as loop:
@@ -56,39 +59,24 @@ def k_core(graph: PropertyGraph, k: int, max_iter: int = 30) -> DataFrame:
         n_alive = census["n"]
 
         # the alive set has one row per surviving VERTEX — |V|-scaling until
-        # the peel bites, and its runtime stats sit near the autoBroadcast
-        # threshold at G2 size (the Borůvka phase-1 lesson,
-        # algorithms/mst.py: AQE driver-built a ~5M-row broadcast under
-        # checkpoint storage pressure and OOM'd). The census is exact and
-        # free (n_alive is this round's count), so pin shuffle_hash only
-        # while the set is genuinely big and let AQE broadcast the late
-        # small peels. (n_alive is read at call time, so one helper serves
-        # every iteration.)
-        def _pin(df: DataFrame) -> DataFrame:
-            return df.hint("shuffle_hash") if n_alive > BIG_GRAPH_ROWS else df
-
+        # the peel bites. Its census is exact and free (n_alive is this
+        # round's count), so the gate pins it only while it is genuinely
+        # big and lets AQE broadcast the late small peels.
         for _ in range(max_iter):
             if n_alive == 0:
                 loop.keep(alive)
                 return alive
             induced = (
-                sym.join(_pin(alive.select(F.col("id").alias("a"))),
+                sym.join(pin(alive.select(F.col("id").alias("a")), n_alive),
                          "a", "left_semi")
-                .join(_pin(alive.select(F.col("id").alias("b"))),
+                .join(pin(alive.select(F.col("id").alias("b")), n_alive),
                       "b", "left_semi")
             )
             deg = induced.groupBy(F.col("a").alias("id")).agg(
                 F.count(F.lit(1)).alias("core_degree")
             )
-            # each peel references the previous alive set TWICE, so the
-            # checkpoint-propagated size estimate doubles its digit count
-            # per round — a deep peel at scale would stall the driver in
-            # BigInteger stats math (plans/pregel.reset_plan_stats).
-            # Zero-copy re-leaf while the set is big; small peels keep
-            # their stats.
             nxt, census = loop.checkpoint(
-                (deg.filter(F.col("core_degree") >= k), {"n": F.count(F.lit(1))}),
-                releaf=n_alive > BIG_GRAPH_ROWS)
+                (deg.filter(F.col("core_degree") >= k), {"n": F.count(F.lit(1))}))
             loop.release(alive)
             if census["n"] == n_alive:
                 # fixpoint: induced degrees are all >= k -> this IS the core

@@ -139,7 +139,7 @@ def kmeans(embeddings: DataFrame, *, k: int = 8, iters: int = 2,
     silently take the interpreter-bound expression path, which is a ~75×
     degradation at production k with no signal."""
     _validate_assign(assign)  # before the eager checkpoint / seed collect
-    from gmr_spark.plans.pregel import LoopScope
+    from gmr_spark.plans.loop import LoopScope
 
     assign_fn = _assign_arrow if assign == "arrow" else _assign
     with LoopScope(embeddings.sparkSession) as loop:

@@ -21,7 +21,7 @@ propagation whose input shrinks geometrically (≤ |components| rows, halving
 per phase). That propagation is the shared pointer-jumping kernel
 (cc.min_label_fixpoint), so long hook-chains collapse in O(log chain)
 rounds instead of O(chain). State is localCheckpoint-ed per step and owned
-by a LoopScope (plans/pregel.py).
+by a LoopScope (plans/loop.py).
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from gmr_spark.algorithms.cc import min_label_fixpoint
 from gmr_spark.graph import PropertyGraph
-from gmr_spark.plans.pregel import BIG_GRAPH_ROWS, LoopScope
+from gmr_spark.plans.loop import LoopScope, pin
 
 
 def minimum_spanning_forest(graph: PropertyGraph, *,
@@ -46,16 +46,18 @@ def minimum_spanning_forest(graph: PropertyGraph, *,
     so each phase's ``sel`` checkpoint is kept as an output part and
     unioned once at return.
 
-    Above ``BIG_GRAPH_ROWS`` edges every |V|-scaling join side is pinned
-    shuffle_hash — the same policy as run_pregel's state joins. The
-    component-label table has one row per VERTEX, so it scales with the
-    graph, and its runtime stats sit near the autoBroadcast threshold at
-    G2 size: measured, AQE picked a ~5M-row driver-built broadcast for the
-    phase-1 label join while executor storage held the checkpointed edge
-    table, and the build OOM'd the shared local-mode heap. On a cluster the
-    same choice is a driver collect of a vertex-sized table, so above the
-    gate the label side is pinned shuffled, like pregel; below it AQE keeps
-    the (correct) broadcast choice.
+    Every join against the component-label table goes through the loop
+    runtime's gate (:func:`~gmr_spark.plans.loop.pin`) on the canonical
+    edge count. That table has one row per VERTEX, and its runtime stats
+    sit near the autoBroadcast threshold at G2 size: measured, AQE picked a
+    ~5M-row driver-built broadcast for the phase-1 label join while
+    executor storage held the checkpointed edge table, and the build OOM'd
+    the shared local-mode heap. So above the gate the label side is pinned
+    shuffle_hash; below it AQE keeps its broadcast choice.
+    The phase checkpoints (``lab``, ``sel``, ``comp``) keep their stats:
+    their estimates grow additively, not by compounding (on
+    mst_nation_mesh ``lab`` gains about 62 bits per phase, and the largest
+    estimate over three phases is 437 bits).
     """
     spark = graph.edges.sparkSession
     with LoopScope(spark) as loop:
@@ -74,20 +76,16 @@ def minimum_spanning_forest(graph: PropertyGraph, *,
         )
         n_edges = canon_stats["n"]
         loop.rows(n_edges)
-        big = n_edges > BIG_GRAPH_ROWS
-
-        def _pin(df: DataFrame) -> DataFrame:
-            return df.hint("shuffle_hash") if big else df
 
         parts: list[DataFrame] = []
         for _ in range(max_phases):  # noqa: B007 (break-on-fixpoint loop)
             # the cross-edge census rides the checkpoint job
             lab, lab_stats = loop.checkpoint((
                 canon
-                .join(_pin(comp.select(F.col("id").alias("a"),
-                                       F.col("comp").alias("ca"))), "a")
-                .join(_pin(comp.select(F.col("id").alias("b"),
-                                       F.col("comp").alias("cb"))), "b")
+                .join(pin(comp.select(F.col("id").alias("a"),
+                                      F.col("comp").alias("ca")), n_edges), "a")
+                .join(pin(comp.select(F.col("id").alias("b"),
+                                      F.col("comp").alias("cb")), n_edges), "b")
                 .filter(F.col("ca") != F.col("cb")),
                 {"n": F.count(F.lit(1))}))
             if lab_stats["n"] == 0:
@@ -124,8 +122,8 @@ def minimum_spanning_forest(graph: PropertyGraph, *,
             lbl, _ = min_label_fixpoint(
                 cg.select(F.col("src").alias("id")).distinct(), cg, max_iter=64)
             new_comp = loop.checkpoint(
-                comp.join(_pin(lbl.select(F.col("id").alias("comp"),
-                                          F.col("label").alias("lbl"))),
+                comp.join(pin(lbl.select(F.col("id").alias("comp"),
+                                         F.col("label").alias("lbl")), n_edges),
                           "comp", "left")
                 .select("id", F.coalesce(F.col("lbl"), F.col("comp")).alias("comp"))
             )

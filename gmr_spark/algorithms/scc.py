@@ -37,11 +37,13 @@ The superstep count of one coloring pass is bounded by the remaining graph's
 directed diameter — a condensation CHAIN of depth D forces ≥D supersteps in
 phase 1 regardless of scrambling (label propagation is latency-bound on
 deep condensations; that bound is intrinsic to the algorithm class, not this
-plan). Every checkpoint is owned by a LoopScope (plans/pregel.py), which
+plan). Every checkpoint is owned by a LoopScope (plans/loop.py), which
 releases superseded remainders as the peel advances and everything but
-the output on any exit. Per-superstep localCheckpoint bounds lineage; big
-graphs re-leaf stats per superstep (plans/pregel.reset_plan_stats — the
-digit-doubling guard).
+the output on any exit. Per-superstep localCheckpoint bounds lineage. The
+checkpoints keep their stats: the membership state's size estimate grows
+additively (9 → 219 bits over 31 supersteps on a 30-ring), so no step
+re-leafs. The |V|-scaling join sides go through the loop runtime's gate
+(plans/loop.pin) on the phase's remaining vertex count.
 """
 
 from __future__ import annotations
@@ -49,7 +51,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from gmr_spark.graph import PropertyGraph
-from gmr_spark.plans.pregel import BIG_GRAPH_ROWS, LoopScope
+from gmr_spark.plans.loop import LoopScope, pin
 
 
 def _scramble(c: Column) -> Column:
@@ -136,7 +138,7 @@ def _min_forward_colors(vertices: DataFrame, edges: DataFrame, max_iter: int,
 
 
 def _backward_members(colors: DataFrame, edges: DataFrame, max_iter: int,
-                      *, big: bool = False) -> tuple[DataFrame, DataFrame]:
+                      n_remaining: int) -> tuple[DataFrame, DataFrame]:
     """(members view, final state checkpoint — caller releases the latter
     once the members are materialized elsewhere): vertices that reach their
     color's root backward through same-colored vertices — i.e. the members
@@ -145,26 +147,20 @@ def _backward_members(colors: DataFrame, edges: DataFrame, max_iter: int,
     ONE job per superstep: the convergence census rides the eager
     localCheckpoint's materializing job as an ``Observation`` metric (same
     pattern as ``run_pregel``) instead of a second ``limit(1).count()``
-    action — halves driver round-trips in the peel loop. ``big`` re-leafs
-    the per-superstep checkpoint's stats (each superstep joins state with an
-    aggregate derived FROM state, so the propagated size estimate doubles
-    its digit count per round — the Borůvka digit-doubling shape) and pins
-    shuffle_hash on the |V|-scaling state sides (the AQE broadcast trap)."""
-
-    def _pin(df: DataFrame) -> DataFrame:
-        return df.hint("shuffle_hash") if big else df
-
+    action — halves driver round-trips in the peel loop. The |V|-scaling
+    state sides are pinned on ``n_remaining``, the phase's vertex count."""
     with LoopScope(edges.sparkSession) as loop:
         state = loop.checkpoint(colors.select(
             "id", "color", (F.col("color") == F.col("id")).alias("member"),
             (F.col("color") == F.col("id")).alias("active"),
-        ), releaf=big)
+        ))
         rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         for _ in range(max_iter):
             frontier = state.filter("active").select(
                 F.col("id").alias("fid"), F.col("color").alias("fcolor")
             )
-            msgs = rev.join(_pin(frontier), F.col("src") == F.col("fid")).select(
+            msgs = rev.join(pin(frontier, n_remaining),
+                            F.col("src") == F.col("fid")).select(
                 F.col("dst").alias("id"), F.col("fcolor").alias("msg")
             )
             agg = msgs.groupBy("id").agg(F.collect_set("msg").alias("msg_colors"))
@@ -174,13 +170,13 @@ def _backward_members(colors: DataFrame, edges: DataFrame, max_iter: int,
                 & F.array_contains(F.coalesce(F.col("msg_colors"), F.array()), F.col("color"))
             )
             new_state, census = loop.checkpoint((
-                _pin(state).join(agg, "id", "left")
+                pin(state, n_remaining).join(agg, "id", "left")
                 .select(
                     "id", "color",
                     (F.col("member") | newly).alias("member"),
                     newly.alias("active"),
                 ),
-                {"n_active": F.sum(F.col("active").cast("long"))}), releaf=big)
+                {"n_active": F.sum(F.col("active").cast("long"))}))
             loop.release(state)
             state = new_state
             if census["n_active"] == 0:
@@ -197,7 +193,7 @@ def _backward_members(colors: DataFrame, edges: DataFrame, max_iter: int,
 
 def _trim_pass(remaining_v: DataFrame, remaining_e: DataFrame,
                n_remaining: int, n_rem_e: int, max_trim_iter: int,
-               loop: LoopScope, *, big: bool = False):
+               loop: LoopScope):
     """Peel vertices with zero in- or out-degree in the remaining graph —
     each is a singleton SCC labeled by itself. Returns
     (remaining_v, remaining_e, n_remaining, n_rem_e, trimmed_parts,
@@ -206,11 +202,8 @@ def _trim_pass(remaining_v: DataFrame, remaining_e: DataFrame,
     pass — every phase of an all-cyclic graph pays it — costs ONE job (the
     keep checkpoint; its census rides that job and the dropped count is
     derived from the caller's census, so the anti-join materializes only
-    when something trimmed)."""
-
-    def _pin(df: DataFrame) -> DataFrame:
-        return df.hint("shuffle_hash") if big else df
-
+    when something trimmed). Its join sides are pinned on the remaining
+    vertex count."""
     trimmed_parts: list[DataFrame] = []
     n_trimmed = 0
     for it in range(max_trim_iter):
@@ -218,8 +211,8 @@ def _trim_pass(remaining_v: DataFrame, remaining_e: DataFrame,
         has_in = remaining_e.select(F.col("dst").alias("id")).distinct()
         keep, keep_stats = loop.checkpoint((
             remaining_v
-            .join(_pin(has_out), "id", "left_semi")
-            .join(_pin(has_in), "id", "left_semi"),
+            .join(pin(has_out, n_remaining), "id", "left_semi")
+            .join(pin(has_in, n_remaining), "id", "left_semi"),
             {"n": F.count(F.lit(1))}))
         n_keep = keep_stats["n"]
         n_dropped = n_remaining - n_keep
@@ -236,8 +229,10 @@ def _trim_pass(remaining_v: DataFrame, remaining_e: DataFrame,
             remaining_v.join(keep, "id", "left_anti").select(
                 "id", F.col("id").alias("scc")),
             (remaining_e
-             .join(_pin(keep.select(F.col("id").alias("src"))), "src", "left_semi")
-             .join(_pin(keep.select(F.col("id").alias("dst"))), "dst", "left_semi")
+             .join(pin(keep.select(F.col("id").alias("src")), n_remaining),
+                   "src", "left_semi")
+             .join(pin(keep.select(F.col("id").alias("dst")), n_remaining),
+                   "dst", "left_semi")
              .select("src", "dst"),
              {"n": F.count(F.lit(1))}),
         )
@@ -276,18 +271,16 @@ def strongly_connected_components(graph: PropertyGraph, *, max_iter: int = 120,
             (graph.vertices.select("id"), {"n": F.count(F.lit(1))}),
             (graph.edges.select("src", "dst"), {"n": F.count(F.lit(1))}),
         )
-        # |V|-scaling sides get the big-graph treatment (shuffle_hash pins +
-        # per-superstep stats re-leaf) while the remainder is genuinely big;
-        # re-counted per phase as the peel shrinks it
+        # the |V|-scaling sides are pinned while the remainder is genuinely
+        # big; re-counted per phase as the peel shrinks it
         n_remaining, n_rem_e = v_stats["n"], e_stats["n"]
         parts: list[DataFrame] = []
         for _ in range(max_phases):
-            big = n_remaining > BIG_GRAPH_ROWS
             if trim_iters > 0 and n_remaining > 0:
                 (remaining_v, remaining_e, n_remaining, n_rem_e, trimmed,
                  t_it, t_n) = _trim_pass(remaining_v, remaining_e,
                                          n_remaining, n_rem_e,
-                                         trim_iters, loop, big=big)
+                                         trim_iters, loop)
                 parts.extend(trimmed)
                 stats["trim_iters_run"] += t_it
                 stats["trimmed"] += t_n
@@ -298,7 +291,7 @@ def strongly_connected_components(graph: PropertyGraph, *, max_iter: int = 120,
                 n_edges=n_rem_e)
             stats["color_supersteps"] += steps
             members, member_state = _backward_members(
-                colors, remaining_e, max_iter, big=big)
+                colors, remaining_e, max_iter, n_remaining)
             # relabel each membership group by its min vertex id — the
             # declared output contract, independent of the scramble
             scc_min = members.groupBy("color").agg(F.min("id").alias("scc"))

@@ -21,8 +21,8 @@ edge-state joins on the same keys; state tables are O(|users| + |items|)
 and, when they fit an executor (_STATE_BROADCAST_CAP), every state-side
 join is hint-broadcast so the rating-edge table never shuffles for them —
 above the cap the joins fall back to partial+final aggregated shuffles.
-Lineage is cut per iteration with localCheckpoint exactly like
-plans/pregel.py supersteps.
+Lineage is cut per iteration with a localCheckpoint owned by a LoopScope
+(plans/loop.py), as in every engine loop.
 
 The rating bipartite graph is derived from TPC-H: u = o_custkey,
 i = l_partkey over orders |><| lineitem (distinct pairs), synthetic
@@ -97,7 +97,7 @@ def svdpp_train(spark: SparkSession, rating_edges_df: DataFrame, *,
     ``iter_times`` (optional) collects per-iteration wall seconds."""
     import time as _time
 
-    from gmr_spark.plans.pregel import LoopScope
+    from gmr_spark.plans.loop import LoopScope
 
     cap = _STATE_BROADCAST_CAP if state_broadcast_cap is None else state_broadcast_cap
     dims = range(rank)

@@ -102,7 +102,7 @@ def closed_triangles(
     - fallback: shuffle_hash-hinted equi-join on (va, vc). The explicit hint
       matters: und sits behind distinct-over-checkpoint plans whose sizes
       Catalyst cannot see, and the un-hinted broadcast mis-plan aborts at G2
-      scale (round-4 estimate trap, same pin as plans/pregel.py:166-183).
+      scale (the checkpoint estimate trap that plans/loop.pin guards).
       Shuffle-hash is also the right fallback shape: no sort of the
       multi-billion-row wedge stream (SMJ would sort it).
 
@@ -306,7 +306,7 @@ def k_truss(graph: PropertyGraph, k: int, max_iter: int = 30) -> DataFrame:
     query convergence contract, same as k_core)."""
     if k < 2:
         raise ValueError(f"k_truss requires k >= 2, got {k}")
-    from gmr_spark.plans.pregel import LoopScope
+    from gmr_spark.plans.loop import LoopScope
 
     min_support = k - 2
     with LoopScope(graph.edges.sparkSession) as loop:

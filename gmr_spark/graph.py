@@ -121,13 +121,6 @@ class PropertyGraph:
             v = v.withColumn(name, expr)
         return PropertyGraph(vertices=v, edges=self.edges)
 
-    def map_edges(self, **cols: F.Column) -> "PropertyGraph":
-        """GraphX ``mapEdges`` as column expressions."""
-        e = self.edges
-        for name, expr in cols.items():
-            e = e.withColumn(name, expr)
-        return PropertyGraph(vertices=self.vertices, edges=e)
-
     def subgraph(self, *, vpred: F.Column | None = None,
                  epred: F.Column | None = None) -> "PropertyGraph":
         """GraphX ``subgraph``: keep vertices satisfying ``vpred`` and edges

@@ -268,7 +268,7 @@ def train_ivf_cells(
     ``k_cells`` rows on the driver — fine at the 10⁴–10⁵ production
     range, by construction never corpus-scale."""
     from gmr_spark.algorithms.kmeans import _assign_arrow, _update
-    from gmr_spark.plans.pregel import LoopScope
+    from gmr_spark.plans.loop import LoopScope
 
     seed_rows = df.orderBy("id").limit(k_cells).collect()
     cents = [(i, list(r.v)) for i, r in enumerate(seed_rows)]

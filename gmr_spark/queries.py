@@ -146,19 +146,19 @@ def _q_pagerank_big(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_pagerank_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-hardening witness (round-1 review item 7): PageRank on the
-    ``hub`` power-law fixture, where hub 0 receives ~50% of every
-    superstep's messages. The plan stays flat under that skew because
+    """Skew-hardening witness: PageRank on the ``hub`` power-law fixture,
+    where hub 0 receives ~50% of every superstep's messages. The plan stays
+    flat under that skew because
     (a) the message aggregation ``groupBy(id).sum`` is partial+final — each
     map task pre-combines to ≤1 row per id, so the hot hub key crosses the
     exchange as at most #partitions rows, never as |in-degree| rows; and
     (b) the hub's large *out*-fan in the edges⋈frontier join is covered by
-    AQE skew-join splitting on big graphs; below BIG_GRAPH_ROWS the pregel
-    loop runs AQE-off (round-6 conf gate) and the out-fan — ≤|E| rows
-    total — is already bounded by the |E|-proportional shuffle sizing the
-    gate picks. Declared green +
-    benched: superstep time on this graph tracks pagerank_big's per-edge
-    cost rather than exploding with the hot key."""
+    AQE skew-join splitting on big graphs; below the loop runtime's size
+    gate the pregel loop runs with AQE off and its shuffles coalesced to
+    ~|E|/75k partitions (``LoopScope.rows``), and the out-fan — ≤|E| rows
+    total — is already bounded by that |E|-proportional sizing. Declared
+    green + benched: superstep time on this graph tracks pagerank_big's
+    per-edge cost rather than exploding with the hot key."""
     g = derive_graph(spark, sf_dir, "hub", materialize=True)
     pr = pagerank(g, k=K_PAGERANK, damping=0.5)
     return pr.select("id", F.round("rank", 6).alias("pr"))

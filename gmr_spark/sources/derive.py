@@ -197,17 +197,6 @@ GRAPH_SQL: dict[str, str] = {
     """,
 }
 
-VERTICES_SQL_TEMPLATE = """
-    SELECT DISTINCT src AS id FROM ({edges}) e0
-    UNION
-    SELECT DISTINCT dst AS id FROM ({edges}) e1
-"""
-
-
-def vertices_sql(name: str) -> str:
-    return VERTICES_SQL_TEMPLATE.format(edges=GRAPH_SQL[name])
-
-
 # (rid, n) ranked-lineitem frames memoized per application + registered
 # dataset (round-14 optimization): three derived graphs (linked_lineitems,
 # hub, hub_tri) each consumed their own range-shuffle + checkpoint of the
@@ -255,7 +244,7 @@ def _lineitem_base(spark: SparkSession):
                  if k[0] == app and k != memo_key]
         doomed = [_LINEITEM_BASE_MEMO.pop(k) for k in stale]
         winner = _LINEITEM_BASE_MEMO.setdefault(memo_key, (frame, local))
-    from gmr_spark.plans.pregel import _drop_checkpoint_blocks
+    from gmr_spark.plans.loop import _drop_checkpoint_blocks
 
     for _, old_local in doomed:
         _drop_checkpoint_blocks(old_local)
@@ -402,7 +391,7 @@ def clear_graph_memo() -> None:
     holding a PropertyGraph handed out before the clear/evict gets
     unrecoverable block-missing failures. Call only at pipeline boundaries
     where no prior graph handle is live."""
-    from gmr_spark.plans.pregel import _drop_checkpoint_blocks
+    from gmr_spark.plans.loop import _drop_checkpoint_blocks
 
     with _GRAPH_MEMO_LOCK:
         doomed = list(_GRAPH_MEMO.values())
@@ -450,7 +439,7 @@ def derive_graph(spark: SparkSession, sf_dir: str, name: str,
     holding one across ``clear_graph_memo()``."""
     memo_key = None
     if materialize and num_partitions is None:
-        from gmr_spark.plans.pregel import _drop_checkpoint_blocks
+        from gmr_spark.plans.loop import _drop_checkpoint_blocks
 
         memo_key = (spark.sparkContext.applicationId, sf_dir, name,
                     _sf_token(sf_dir))
@@ -495,7 +484,7 @@ def derive_graph(spark: SparkSession, sf_dir: str, name: str,
             target = max(4, min(2 * spark.sparkContext.defaultParallelism,
                                 -(-n_edges // _EDGES_PER_PARTITION)))
             if target < num_partitions // 2:
-                from gmr_spark.plans.pregel import _drop_checkpoint_blocks
+                from gmr_spark.plans.loop import _drop_checkpoint_blocks
 
                 old = edges
                 edges = edges.repartition(target, "src").localCheckpoint(eager=True)
@@ -520,7 +509,7 @@ def derive_graph(spark: SparkSession, sf_dir: str, name: str,
         with _GRAPH_MEMO_LOCK:
             winner = _GRAPH_MEMO.setdefault(memo_key, g)
         if winner is not g and materialize:
-            from gmr_spark.plans.pregel import _drop_checkpoint_blocks
+            from gmr_spark.plans.loop import _drop_checkpoint_blocks
 
             _drop_checkpoint_blocks(g.edges)
             _drop_checkpoint_blocks(g.vertices)

@@ -164,7 +164,7 @@ def main() -> None:
         ~F.col("keep") & ((F.col("doc_id") / 2).cast("long") % 25 == 0)
     ).count()
     timings["dedup_substring"] = round(time.perf_counter() - t0, 1)
-    from gmr_spark.plans.pregel import _drop_checkpoint_blocks
+    from gmr_spark.plans.loop import _drop_checkpoint_blocks
     _drop_checkpoint_blocks(sub)
     sub_recall = sub_flagged_planted / (2 * expected_pairs)
     print(f"dedup_substring: {sub_flagged_total} docs flagged total, "

@@ -109,7 +109,7 @@ def main() -> None:
             retired_planted = sem.filter(
                 ~F.col("keep") & (F.col("vec_id") % 2 == 1)
                 & ((F.col("vec_id") / 2).cast("long") % 25 == 0)).count()
-            from gmr_spark.plans.pregel import _drop_checkpoint_blocks
+            from gmr_spark.plans.loop import _drop_checkpoint_blocks
             _drop_checkpoint_blocks(sem)
             recall = retired_planted / expected_pairs
             print(f"semdedup k={k}: {n} rows, {retired_total} retired, "

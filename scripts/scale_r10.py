@@ -186,7 +186,7 @@ def _pq_leg(spark, base, enc, queries, codebook, nprobe, centroids,
                  .select("query_id").distinct().count())
     shortlist_hits = short.filter(
         F.col("neighbor_id") == F.col("query_id") - 1).count()
-    from gmr_spark.plans.pregel import _drop_checkpoint_blocks
+    from gmr_spark.plans.loop import _drop_checkpoint_blocks
 
     _drop_checkpoint_blocks(short)
     _drop_checkpoint_blocks(topk)
@@ -206,7 +206,7 @@ def run_pqtrain(spark, timings: dict, extra: dict) -> None:
     from gmr_spark.operators.similarity import (
         PQ_DSUB, PQ_KS, PQ_M, _vec, make_pq_codes_udf, pq_mse,
         train_pq_codebook)
-    from gmr_spark.plans.pregel import _drop_checkpoint_blocks
+    from gmr_spark.plans.loop import _drop_checkpoint_blocks
     from scale_llm import build_corpus
 
     scratch = os.environ.get("R10_PQ_SCRATCH", "/tmp/r10_pqtrain_scale")
@@ -243,7 +243,7 @@ def run_pqtrain(spark, timings: dict, extra: dict) -> None:
             centroids = _update(cell_sample,
                                 _assign_arrow(cell_sample, centroids))
         timings["train_cells"] = round(time.perf_counter() - t0, 1)
-        from gmr_spark.plans.pregel import _drop_checkpoint_blocks as _dcb
+        from gmr_spark.plans.loop import _drop_checkpoint_blocks as _dcb
 
         _dcb(cell_sample)
 
@@ -416,11 +416,11 @@ def run_celltrain(spark, timings: dict, extra: dict) -> None:
             "max_cell": int(bal.max_cell),
             "max_over_mean": round(bal.max_cell / bal.mean_cell, 2),
         }
-        from gmr_spark.plans.pregel import _drop_checkpoint_blocks
+        from gmr_spark.plans.loop import _drop_checkpoint_blocks
 
         _drop_checkpoint_blocks(cells)
         print(f"cells {label}: {legs[label]}", file=sys.stderr)
-    from gmr_spark.plans.pregel import _drop_checkpoint_blocks
+    from gmr_spark.plans.loop import _drop_checkpoint_blocks
 
     _drop_checkpoint_blocks(sample)
     extra["celltrain"] = {
@@ -473,7 +473,7 @@ def run_exact(spark, timings: dict, extra: dict) -> None:
     top1 = top.filter(F.col("rnk") == 1)
     n_top1 = top1.count()
     hits = top1.filter(F.col("neighbor_id") == F.col("query_id") - 1).count()
-    from gmr_spark.plans.pregel import _drop_checkpoint_blocks
+    from gmr_spark.plans.loop import _drop_checkpoint_blocks
 
     _drop_checkpoint_blocks(top)
     assert n_rows == 10 * len(q_rows), (n_rows, len(q_rows))

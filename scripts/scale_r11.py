@@ -54,7 +54,7 @@ def run_chunked_exact(spark, timings: dict, extra: dict) -> None:
 
     from gmr_spark.operators.similarity import (
         GEMM_CHUNK_BYTES, _vec, make_topk_gemm_fn)
-    from gmr_spark.plans.pregel import _drop_checkpoint_blocks
+    from gmr_spark.plans.loop import _drop_checkpoint_blocks
     from scale_llm import build_corpus
 
     n_vecs = int(os.environ.get("R11_VECS", 2_000_000))
@@ -167,7 +167,7 @@ def run_big_query_batch(spark, timings: dict, extra: dict) -> None:
     from pyspark.sql import functions as F
 
     from gmr_spark.operators.similarity import _vec, make_topk_gemm_fn
-    from gmr_spark.plans.pregel import _drop_checkpoint_blocks
+    from gmr_spark.plans.loop import _drop_checkpoint_blocks
     from scale_llm import build_corpus
 
     n_vecs = int(os.environ.get("R11_BIGQ_VECS", 200_000))
@@ -249,7 +249,7 @@ def run_api_celltrain(spark, timings: dict, extra: dict) -> None:
 
     from gmr_spark.operators.similarity import (
         _ivf_index_probes, _vec, train_ivf_cells)
-    from gmr_spark.plans.pregel import _drop_checkpoint_blocks
+    from gmr_spark.plans.loop import _drop_checkpoint_blocks
     from scale_llm import build_corpus
 
     n_vecs = int(os.environ.get("R11_API_VECS", 2_000_000))

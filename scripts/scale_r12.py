@@ -103,7 +103,7 @@ def run_cells4k(spark, timings: dict, extra: dict) -> None:
     from gmr_spark.algorithms.kmeans import _assign_arrow, _update
     from gmr_spark.operators.similarity import (
         _ivf_index_probes, _vec, train_ivf_cells)
-    from gmr_spark.plans.pregel import _drop_checkpoint_blocks
+    from gmr_spark.plans.loop import _drop_checkpoint_blocks
     from scale_llm import build_corpus
 
     scratch = os.environ.get("R12_SCRATCH", "/tmp/r12_cells_scale")
@@ -524,7 +524,7 @@ def run_pipeline(spark, timings: dict, extra: dict) -> None:
         "rows": int(n_composed), "diff_rows": int(d1 + d2),
         "wall_sec": timings["composed_operator"],
     }
-    from gmr_spark.plans.pregel import _drop_checkpoint_blocks
+    from gmr_spark.plans.loop import _drop_checkpoint_blocks
 
     _drop_checkpoint_blocks(composed)
     _drop_checkpoint_blocks(packed)
@@ -627,7 +627,7 @@ def run_split(spark, timings: dict, extra: dict) -> None:
     print(f"split: {n_rows} docs, exact straddle {ex_straddle}/{n_ex}, "
           f"near-dup straddle {nd_straddle}/{n_nd}, val {frac:.4f} "
           f"({timings['split_operator']}s)", file=sys.stderr)
-    from gmr_spark.plans.pregel import _drop_checkpoint_blocks
+    from gmr_spark.plans.loop import _drop_checkpoint_blocks
 
     for df in (split, ex, nd):
         _drop_checkpoint_blocks(df)
@@ -698,7 +698,7 @@ def run_shards(spark, timings: dict, extra: dict) -> None:
           f"[{stats.mn}, {stats.mx}] vs mean {mean:.0f}±{sigma:.0f}, "
           f"epoch1 moved {moved} ({timings['shards_operator']}s)",
           file=sys.stderr)
-    from gmr_spark.plans.pregel import _drop_checkpoint_blocks
+    from gmr_spark.plans.loop import _drop_checkpoint_blocks
 
     _drop_checkpoint_blocks(sizes)
     shutil.rmtree(root, ignore_errors=True)

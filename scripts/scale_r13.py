@@ -60,7 +60,7 @@ def run_decade(spark, timings: dict) -> dict:
     from gmr_spark.algorithms.kmeans import _assign_arrow, _update
     from gmr_spark.operators.similarity import (
         _ivf_index_probes, _vec, train_ivf_cells)
-    from gmr_spark.plans.pregel import _drop_checkpoint_blocks
+    from gmr_spark.plans.loop import _drop_checkpoint_blocks
     from scale_llm import build_corpus
 
     scratch = os.environ.get("R13_SCRATCH", "/tmp/r13_cells_scale")

@@ -256,7 +256,7 @@ def run_pq(spark, timings: dict, extra: dict) -> None:
           f"top-1 partner recall {recall}", file=sys.stderr)
     # release the pinned index checkpoint + scratch corpus
     try:
-        from gmr_spark.plans.pregel import _drop_checkpoint_blocks
+        from gmr_spark.plans.loop import _drop_checkpoint_blocks
 
         _drop_checkpoint_blocks(enc)
     except Exception:

@@ -43,7 +43,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from gmr_spark.algorithms.svdpp import _STATE_BROADCAST_CAP, svdpp_train
-    from gmr_spark.plans.pregel import _drop_checkpoint_blocks
+    from gmr_spark.plans.loop import _drop_checkpoint_blocks
     from gmr_spark.session import calibration_probe, get_session
 
     spark = get_session("svdpp_scale", cpus=CPUS)

@@ -172,7 +172,8 @@ def test_scc_backward_one_job_per_superstep(spark):
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         sc.setJobGroup("scc_census_test", "scc backward job-count pin")
-        members, _state = _backward_members(colors, edges, max_iter=10)
+        members, _state = _backward_members(colors, edges, max_iter=10,
+                                            n_remaining=3)
         sc.setJobGroup(None, None)
         n_jobs = len(sc.statusTracker().getJobIdsForGroup("scc_census_test"))
         assert n_jobs <= 4, f"expected <=4 jobs (init + 3 supersteps), got {n_jobs}"
@@ -280,29 +281,32 @@ def test_q3_top10_is_take_ordered(spark):
 
 
 @pytest.mark.parametrize("algo", ["bfs", "connected_components",
-                                  "minimum_spanning_forest"])
+                                  "minimum_spanning_forest", "k_core", "scc"])
 def test_pregel_big_graph_gating_end_to_end(spark, monkeypatch, algo):
-    """Executes each loop's gated shuffle_hash branch (not just the hint
-    semantics the test above pins): with BIG_GRAPH_ROWS forced to 0 in
-    every module that reads it, every graph takes the big-graph path —
-    run_pregel's for bfs, the label kernel's for connected components and
-    the MST phase merge — and results must be identical to the ungated
-    run: the hints may only change physical join strategy."""
-    from gmr_spark.algorithms import cc, mst
+    """Executes each gated loop's shuffle_hash branch (not just the hint
+    semantics the test above pins): with BIG_GRAPH_ROWS forced to 0 in the
+    loop runtime, the one module that owns it, every graph takes the
+    big-graph path — run_pregel's for bfs, the label kernel's for
+    connected components, the MST phase joins, the k-core peel and SCC's
+    trim and membership joins — and results must be identical to the
+    ungated run: the hints may only change physical join strategy."""
+    from gmr_spark import algorithms as A
     from gmr_spark.algorithms.sssp import bfs
+    from gmr_spark.plans import loop as runtime
     from gmr_spark.sources.derive import derive_graph
-    import gmr_spark.plans.pregel as P
 
-    g = derive_graph(spark, SF, "geo", materialize=True)
-    run = {
-        "bfs": lambda: bfs(g, source=0, max_iter=8),
-        "connected_components": lambda: cc.connected_components(g),
-        "minimum_spanning_forest": lambda: mst.minimum_spanning_forest(g),
+    graph_name, run = {
+        "bfs": ("geo", lambda g: bfs(g, source=0, max_iter=8)),
+        "connected_components": ("geo", A.connected_components),
+        "minimum_spanning_forest": ("geo", A.minimum_spanning_forest),
+        "k_core": ("cs", lambda g: A.k_core(g, k=3)),
+        # SCC on geo runs for ~14 s; the nation ring has a non-trivial SCC
+        "scc": ("nation_ring", A.strongly_connected_components),
     }[algo]
-    want = {tuple(r) for r in run().collect()}
-    for module in (P, cc, mst):
-        monkeypatch.setattr(module, "BIG_GRAPH_ROWS", 0)
-    got = {tuple(r) for r in run().collect()}
+    g = derive_graph(spark, SF, graph_name, materialize=True)
+    want = {tuple(r) for r in run(g).collect()}
+    monkeypatch.setattr(runtime, "BIG_GRAPH_ROWS", 0)
+    got = {tuple(r) for r in run(g).collect()}
     assert got == want and len(want) > 0
 
 
@@ -431,13 +435,13 @@ def test_pregel_adaptive_broadcast_end_to_end(spark, monkeypatch):
     path, and at ci=2 the gate must stay closed (census goes stale between
     checkpoints, so a hinted non-fallback broadcast would be unsafe)."""
     from gmr_spark.algorithms.sssp import _SSSPProgram, bfs
+    from gmr_spark.plans import loop as runtime
     from gmr_spark.plans.pregel import run_pregel
     from gmr_spark.sources.derive import derive_graph
-    import gmr_spark.plans.pregel as P
 
     g = derive_graph(spark, SF, "geo", materialize=True)
     want = {(r.id, r.level) for r in bfs(g, source=0, max_iter=8).collect()}
-    monkeypatch.setattr(P, "BIG_GRAPH_ROWS", 0)
+    monkeypatch.setattr(runtime, "BIG_GRAPH_ROWS", 0)
     res = run_pregel(g, _SSSPProgram(0, weighted=False), max_iter=8,
                      checkpoint_interval=1)
     got = {(r.id, r.level)
@@ -447,14 +451,14 @@ def test_pregel_adaptive_broadcast_end_to_end(spark, monkeypatch):
 
 
 def test_small_loop_conf_contract(spark):
-    """LoopScope.rows, the loop-scoped physical conf (plans/pregel.py):
+    """LoopScope.rows, the loop-scoped physical conf (plans/loop.py):
     below BIG_GRAPH_ROWS the scope coalesces shuffle partitions to ~n/75k
     (floored at 4, never above the session setting) and turns AQE off;
     above it, or for an unknown size, it leaves the conf alone; the saved
     conf is restored on clean exit, on exception, after repeated calls,
     and correctly under nesting (inner scope saves the outer's values, not
     the session's)."""
-    from gmr_spark.plans.pregel import (
+    from gmr_spark.plans.loop import (
         BIG_GRAPH_ROWS, LOOP_EDGES_PER_SHUFFLE_PARTITION, LoopScope)
 
     part_key, aqe_key = "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled"
@@ -590,7 +594,7 @@ def test_reset_plan_stats_releafs_checkpoints_zero_copy(spark):
 
     from pyspark.sql import functions as F
 
-    from gmr_spark.plans.pregel import _drop_checkpoint_blocks, reset_plan_stats
+    from gmr_spark.plans.loop import _drop_checkpoint_blocks, reset_plan_stats
 
     def size_of(df) -> int:
         return int(str(
@@ -640,7 +644,7 @@ def test_private_api_fallback_warns_loudly(spark, monkeypatch):
     plan has no ``rdd()`` — the same failure shape as a broken API."""
     import warnings
 
-    import gmr_spark.plans.pregel as P
+    import gmr_spark.plans.loop as P
 
     monkeypatch.setattr(P, "_WARNED_FALLBACKS", set())
     plain = spark.range(10)  # Range leaf, not LogicalRDD: rdd() raises
@@ -694,7 +698,8 @@ def test_run_pregel_edge_checkpoint_ownership(spark):
     test_loop_checkpoint_failure_releases_blocks_and_restores_conf."""
     from gmr_spark.algorithms.sssp import _SSSPProgram
     from gmr_spark.graph import PropertyGraph
-    from gmr_spark.plans.pregel import _drop_checkpoint_blocks, run_pregel
+    from gmr_spark.plans.loop import _drop_checkpoint_blocks
+    from gmr_spark.plans.pregel import run_pregel
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(64)], "src bigint, dst bigint")
@@ -723,22 +728,10 @@ def test_run_pregel_edge_checkpoint_ownership(spark):
     _drop_checkpoint_blocks(edges_ckpt)
 
 
-def test_cc_label_loop_releases_superseded_checkpoints(spark, monkeypatch):
-    """A clean connected_components run leaves exactly the returned label
-    table resident: every superseded per-round label checkpoint and the
-    edge snapshot are released as the loop goes (a long run would
-    otherwise strand O(rounds + jump_joins) |V|-row block sets on the
-    async ContextCleaner). Every checkpoint the loop lands keeps a plan
-    size estimate that fits a signed 64-bit value: the jumps self-join
-    the previous checkpoint, so without a re-leaf the propagated estimate
-    grows by orders of magnitude per round."""
-    import sys
-
-    from pyspark.sql import functions as F
-
-    from gmr_spark.algorithms.cc import connected_components
-    from gmr_spark.graph import PropertyGraph
-    from gmr_spark.plans.pregel import LoopScope
+def _record_checkpoints(monkeypatch) -> list:
+    """Patch ``LoopScope.checkpoint`` to append every frame it lands, in
+    order, to the returned list."""
+    from gmr_spark.plans.loop import LoopScope
 
     landed = []
     real = LoopScope.checkpoint
@@ -750,6 +743,39 @@ def test_cc_label_loop_releases_superseded_checkpoints(spark, monkeypatch):
         return out
 
     monkeypatch.setattr(LoopScope, "checkpoint", recording)
+    return landed
+
+
+def _estimate_bits(frames) -> list[int]:
+    """Bit length of each frame's plan size estimate (``sizeInBytes``)."""
+    import sys
+
+    # py4j hands the Scala BigInt over as decimal text, which Python will
+    # not parse past 4,300 digits by default
+    digit_limit = sys.get_int_max_str_digits()
+    sys.set_int_max_str_digits(0)
+    try:
+        return [int(df._jdf.queryExecution().optimizedPlan().stats()
+                    .sizeInBytes()).bit_length() for df in frames]
+    finally:
+        sys.set_int_max_str_digits(digit_limit)
+
+
+def test_cc_label_loop_releases_superseded_checkpoints(spark, monkeypatch):
+    """A clean connected_components run leaves exactly the returned label
+    table resident: every superseded per-round label checkpoint and the
+    edge snapshot are released as the loop goes (a long run would
+    otherwise strand O(rounds + jump_joins) |V|-row block sets on the
+    async ContextCleaner). Every checkpoint the loop lands keeps a plan
+    size estimate that fits a signed 64-bit value: the jumps self-join
+    the previous checkpoint, so without a re-leaf the propagated estimate
+    grows by orders of magnitude per round."""
+    from pyspark.sql import functions as F
+
+    from gmr_spark.algorithms.cc import connected_components
+    from gmr_spark.graph import PropertyGraph
+
+    landed = _record_checkpoints(monkeypatch)
 
     # a path graph forces several propagate+jump rounds; built from
     # spark.range so its leaves carry real size estimates (a Python-list
@@ -772,18 +798,54 @@ def test_cc_label_loop_releases_superseded_checkpoints(spark, monkeypatch):
     # clean for later tests
     _unpersist_ids(spark, leaked)
     assert not (_persistent_ids(spark) - before)
-    # py4j hands the Scala BigInt over as decimal text, which Python will
-    # not parse past 4,300 digits by default
-    digit_limit = sys.get_int_max_str_digits()
-    sys.set_int_max_str_digits(0)
-    try:
-        sizes = [int(df._jdf.queryExecution().optimizedPlan().stats()
-                     .sizeInBytes()) for df in landed]
-    finally:
-        sys.set_int_max_str_digits(digit_limit)
-    assert len(sizes) > 3, sizes
-    assert all(size < 2 ** 63 for size in sizes), \
-        f"estimate bit lengths: {[size.bit_length() for size in sizes]}"
+    bits = _estimate_bits(landed)
+    assert len(bits) > 3, bits
+    # every estimate < 2^63
+    assert all(b <= 63 for b in bits), f"estimate bit lengths: {bits}"
+
+
+@pytest.mark.parametrize("name", ["k_core", "scc_backward"])
+def test_loop_estimates_without_releaf_grow_additively(
+        spark, monkeypatch, name):
+    """The loops that keep their checkpoints' stats (no re-leaf) are safe
+    only because their size estimates grow at most additively: the bit
+    length of checkpoint i stays within 16·i of the first. k_core's peel
+    semi-joins keep the edge side's estimate; SCC's backward membership
+    joins the previous state once per superstep. A step that self-joins
+    the previous checkpoint (the label kernel's pointer jumps) multiplies
+    its estimate instead and breaks this bound by its fourth
+    checkpoint."""
+    from pyspark.sql import functions as F
+
+    from gmr_spark.algorithms.kcore import k_core
+    from gmr_spark.algorithms.scc import _backward_members
+    from gmr_spark.graph import PropertyGraph
+    from gmr_spark.plans.loop import _drop_checkpoint_blocks
+
+    # both graphs are built from spark.range, so their leaves carry real
+    # size estimates
+    landed = _record_checkpoints(monkeypatch)
+    if name == "k_core":
+        # 24-vertex path at k=2: each peel drops the two end vertices
+        edges = spark.range(23).select(
+            F.col("id").alias("src"), (F.col("id") + 1).alias("dst"),
+            F.lit(1.0).alias("weight"))
+        out = k_core(PropertyGraph(vertices=spark.range(24), edges=edges), k=2)
+        assert out.count() == 0
+    else:
+        # 30-ring, one color rooted at 0: the backward walk adds one
+        # member per superstep
+        n = 30
+        edges = spark.range(n).select(F.col("id").alias("src"),
+                                      ((F.col("id") + 1) % n).alias("dst"))
+        colors = spark.range(n).select("id", F.lit(0).cast("long").alias("color"))
+        members, out = _backward_members(colors, edges, max_iter=n + 2,
+                                         n_remaining=n)
+        assert members.count() == n
+    bits = _estimate_bits(landed)
+    _drop_checkpoint_blocks(out)
+    assert len(bits) > 10, bits
+    assert all(b <= bits[0] + 16 * i for i, b in enumerate(bits)), bits
 
 
 def _complete_graph(spark, n: int = 40):
@@ -904,19 +966,19 @@ def test_checkpoint_eager_rejects_concurrent_entry(spark):
     RuntimeError up front instead of silently racing the RDD-id snapshot
     and risking a live checkpoint's blocks. The lock is released on every
     exit path, so a clean call afterwards still works."""
-    from gmr_spark.plans import pregel
+    from gmr_spark.plans import loop as runtime
 
     df = spark.range(3)
-    with pregel.LoopScope(spark) as loop:
-        assert pregel._CHECKPOINT_LOCK.acquire(blocking=False)
+    with runtime.LoopScope(spark) as loop:
+        assert runtime._CHECKPOINT_LOCK.acquire(blocking=False)
         try:
             with pytest.raises(RuntimeError, match="concurrent entry"):
                 loop.checkpoint(df)
         finally:
-            pregel._CHECKPOINT_LOCK.release()
+            runtime._CHECKPOINT_LOCK.release()
         out = loop.checkpoint(df)
         assert out.count() == 3
-        assert not pregel._CHECKPOINT_LOCK.locked()  # released on success
+        assert not runtime._CHECKPOINT_LOCK.locked()  # released on success
 
 
 def test_checkpoint_eager_pair_concurrent_and_clean(spark, monkeypatch):
@@ -932,7 +994,7 @@ def test_checkpoint_eager_pair_concurrent_and_clean(spark, monkeypatch):
 
     from pyspark.sql import functions as F
 
-    from gmr_spark.plans import pregel
+    from gmr_spark.plans import loop as runtime
 
     a = spark.range(5).select(F.col("id").alias("x"))
     b = spark.range(7).select((F.col("id") * 2).alias("y"))
@@ -948,20 +1010,20 @@ def test_checkpoint_eager_pair_concurrent_and_clean(spark, monkeypatch):
 
     before = _persistent_ids(spark)
     monkeypatch.setattr(DataFrame, "localCheckpoint", rendezvous)
-    with pregel.LoopScope(spark) as loop:
+    with runtime.LoopScope(spark) as loop:
         ra, (rb, census) = loop.checkpoint(a, (b, {"n": F.count(F.lit(1))}))
         monkeypatch.setattr(DataFrame, "localCheckpoint", real)
         for r in (ra, rb):
             assert (r._jdf.queryExecution().analyzed().getClass().getSimpleName()
                     == "LogicalRDD")
         assert ra.count() == 5 and rb.count() == 7 and census == {"n": 7}
-        assert not pregel._CHECKPOINT_LOCK.locked()  # released on success
-        assert pregel._CHECKPOINT_LOCK.acquire(blocking=False)
+        assert not runtime._CHECKPOINT_LOCK.locked()  # released on success
+        assert runtime._CHECKPOINT_LOCK.acquire(blocking=False)
         try:
             with pytest.raises(RuntimeError, match="concurrent entry"):
                 loop.checkpoint(a, b)
         finally:
-            pregel._CHECKPOINT_LOCK.release()
+            runtime._CHECKPOINT_LOCK.release()
     assert not (_persistent_ids(spark) - before), "scope exit leaked"
 
     # failure path: one side's materializing job fails -> nothing persisted
@@ -973,12 +1035,12 @@ def test_checkpoint_eager_pair_concurrent_and_clean(spark, monkeypatch):
     bad = spark.range(4).select(_boom(F.col("id")).alias("z"))
     for pair in ((spark.range(3), bad), (bad, spark.range(3))):
         before = _persistent_ids(spark)
-        with pregel.LoopScope(spark) as loop:
+        with runtime.LoopScope(spark) as loop:
             with pytest.raises(Exception, match="forced pair failure"):
                 loop.checkpoint(*pair)
             assert not (_persistent_ids(spark) - before), \
                 "failed pair checkpoint leaked persisted RDDs"
-        assert not pregel._CHECKPOINT_LOCK.locked()
+        assert not runtime._CHECKPOINT_LOCK.locked()
 
 
 def test_loop_checkpoint_fallback_without_persistent_rdd_api(
@@ -991,7 +1053,7 @@ def test_loop_checkpoint_fallback_without_persistent_rdd_api(
 
     from pyspark.sql import functions as F
 
-    from gmr_spark.plans import pregel
+    from gmr_spark.plans import loop as runtime
 
     class _NoPersistentRDDs:
         def __init__(self, jsc):
@@ -1004,11 +1066,11 @@ def test_loop_checkpoint_fallback_without_persistent_rdd_api(
             return getattr(self._jsc, name)
 
     sc = spark.sparkContext
-    monkeypatch.setattr(pregel, "_WARNED_FALLBACKS", set())
+    monkeypatch.setattr(runtime, "_WARNED_FALLBACKS", set())
     monkeypatch.setattr(sc, "_jsc", _NoPersistentRDDs(sc._jsc))
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        with pregel.LoopScope(spark) as loop:
+        with runtime.LoopScope(spark) as loop:
             (a, census), b = loop.checkpoint(
                 (spark.range(5).select((F.col("id") * 3).alias("x")),
                  {"n": F.count(F.lit(1))}),
