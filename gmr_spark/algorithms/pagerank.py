@@ -66,7 +66,7 @@ def pagerank(graph: PropertyGraph, *, k: int = 10, damping: float = 0.5,
     """Fixed-k PageRank. -> (id BIGINT, rank DOUBLE).
 
     ``checkpoint_interval`` is exposed for cadence measurements
-    (scripts/scale_g2.py's sweep); the k=2 default is the measured optimum
+    (SCALE.md's G2 cadence sweep); the k=2 default is the measured optimum
     (see run_pregel's scale notes). Re-probed round 6 at sf0.1 with the
     exact-census adaptive frontier gate live (the round-5 SSSP winner):
     ci=1 LOSES on every bench pagerank graph — linked_lineitems 19.1 vs

@@ -31,8 +31,6 @@ deterministic rating r = (u*7 + i*13) % 5 + 1.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from gmr_spark.sources.tables import load_tables
@@ -48,8 +46,7 @@ SVDPP_ITERS = 2      # batch GD iterations; oracle unrolls per iteration
 # side is hint-broadcast instead (~2M rows * ~60 B ≈ 120 MB relation —
 # executor-safe); above it (web-scale user counts) the joins keep the
 # shuffled plan, which is the only shape that works there.
-_STATE_BROADCAST_CAP = int(os.environ.get("GMR_SVDPP_BROADCAST_ROWS",
-                                          2_000_000))
+_STATE_BROADCAST_CAP = 2_000_000
 
 
 def _init_expr(idcol: str, mult: int, dmult: int, d: int) -> F.Column:
@@ -88,7 +85,8 @@ def svdpp_train(spark: SparkSession, rating_edges_df: DataFrame, *,
                 state_broadcast_cap: int | None = None,
                 iter_times: list[float] | None = None) -> DataFrame:
     """Train on an arbitrary ``(u, i, r)`` rating-edge DataFrame — the
-    dataset-independent core ``svdpp`` wraps (scripts/scale_svdpp.py feeds
+    dataset-independent core ``svdpp`` wraps (the ``svdpp`` family of
+    scripts/scale.py feeds
     a 60M-edge synthetic graph through it to prove both join strategies at
     G2-class size). ``state_broadcast_cap`` overrides _STATE_BROADCAST_CAP
     so the above-cap shuffle fallback can be forced in-process for A/B

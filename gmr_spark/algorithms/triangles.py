@@ -16,8 +16,6 @@ reference's final ``Σ vertex values`` answer (algorithms.h:189-194).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
 
 from gmr_spark.graph import PropertyGraph
@@ -40,8 +38,7 @@ from gmr_spark.graph import PropertyGraph
 # the only shape that works at true 100 TB edge scale (the gate must never
 # hint-force a broadcast Catalyst would have to die on — the round-4 G2
 # estimate trap; a 110M-entry relation aborts on the 8 GiB broadcast cap).
-_CLOSURE_BROADCAST_MAX_EDGES = int(
-    os.environ.get("GMR_TC_BROADCAST_EDGES", 500_000))
+_CLOSURE_BROADCAST_MAX_EDGES = 500_000
 # (hi-lo+1) beyond which (a-lo)*W+(b-lo) would overflow int64: W² < 2^63
 _ENC_MAX_SPAN = 3_037_000_498
 

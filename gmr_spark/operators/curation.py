@@ -2,7 +2,8 @@
 removal → quality filter (Gopher + CCNet-style LM) → sequence packing —
 the chain a training-data job actually runs, as one callable over the
 sf_dir contract. Proven at 2M documents with planted truth at every
-stage in scripts/scale_r12.py / SCALE.md r12 (exactly the planted exact
+stage by the ``pipeline`` family of scripts/scale.py / SCALE.md r12
+(exactly the planted exact
 copies, ≥99.9% of the planted near-dup pairs, and exactly the planted
 junk + LM-outlier docs retired, packing cross-checked per language).
 
@@ -14,7 +15,7 @@ Composition contract (round-11 verdict item 5):
   other dedup operator in the session, so this pipeline adds no second
   chain build). NOTE the composition order: this pipeline intersects
   survivors computed on the ORIGINAL corpus with the exact-dedup keepers,
-  while the staged 2M-doc proof (scripts/scale_r12.py) runs near-dup
+  while the staged 2M-doc proof (the ``pipeline`` scale family) runs near-dup
   removal on the exact-deduped corpus. The two are value-identical by a
   keep-min-id/identical-signature argument (round-12 ADVICE item 3):
   (a) exact copies have identical shingle sets, hence identical MinHash
@@ -44,7 +45,7 @@ pattern — never a global window over per-doc rows, which would
 single-partition an SF-linear frame at 100 TB). The LM-stats subtree is
 evaluated once per consumer (average + filter); a 100 TB run
 materializes stage boundaries to storage instead — exactly what the
-2M-doc proof does (scripts/scale_r12.py writes each stage's survivor
+2M-doc proof does (the ``pipeline`` scale family writes each stage's survivor
 corpus as parquet; see SCALE.md r12 for the measured stage walls).
 
 DECLARED since round 13: the composed DuckDB twin (oracle/llm_sql.py

@@ -39,7 +39,7 @@ _BROADCAST_IDS_CAP = 5_000_000
 # ContextCleaner catches up (round-3 ADVICE). Keyed by applicationId so a
 # restarted SparkContext cannot be served another context's DataFrames, and
 # by the documents.parquet mtime/size fingerprint so a corpus REWRITTEN at
-# the same path within one session (scale_llm.build_corpus does rmtree +
+# the same path within one session (scale_data.build_corpus does rmtree +
 # rewrite) invalidates the cache instead of being served stale results.
 _CKPT_MEMO: dict[tuple, DataFrame] = {}
 # scalar side-car: counts of memoized frames (same keys as _CKPT_MEMO).
@@ -65,8 +65,9 @@ def clear_dedup_memo() -> None:
     executor storage at corpus scale (92M rows in the 2M-doc proof) and the
     memo intentionally pins it for cross-operator sharing; a pipeline that
     is DONE with the dedup stage calls this so ContextCleaner can reclaim
-    the blocks before later stages pay the memory pressure (scale_llm.py
-    does). Blocks are unpersisted explicitly — waiting on ContextCleaner to
+    the blocks before later stages pay the memory pressure (the ``llm``
+    scale family does). Blocks are unpersisted explicitly — waiting on
+    ContextCleaner to
     notice the dropped Python references leaves the backlog resident for
     the next several jobs (the r3→r4 bench drift, VERDICT r4 item 1)."""
     from gmr_spark.plans.loop import _drop_checkpoint_blocks

@@ -227,7 +227,7 @@ def asof_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def global_rank(df: DataFrame, n_parts: int, *order_cols: str) -> DataFrame:
     """Distributed total-order rank — the sample-sort core shared by
     ``global_sort_rank`` (sf-dir query) and the G2-class scale probe
-    (scripts/scale_r9.py). Range-shuffle on ``order_cols``
+    (the ``sort`` family of scripts/scale.py). Range-shuffle on ``order_cols``
     (RangePartitioning = the sample-sort splitter exchange), tag each row
     with its range-partition id, rank within each partition in parallel,
     then add per-partition cumulative offsets. The offset table is one row

@@ -70,7 +70,8 @@ def packing_frame(docs: DataFrame) -> DataFrame:
     pipeline can pack the post-dedup, post-filter SURVIVOR set: packing is
     order-dependent (pack boundaries are running sums), so packing the full
     corpus and filtering afterwards would yield holes in packs, not the
-    packs a training job would actually build (scripts/scale_r12.py chains
+    packs a training job would actually build (the ``pipeline`` family of
+    scripts/scale.py chains
     dedup -> quality filter -> this)."""
     from pyspark.sql import Window as W
 
@@ -123,7 +124,7 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str, *,
     exact-copy groups) corpus renumbering. Exact copies share one
     signature, hence one cluster, hence structurally one side; near-dup
     straddle is bounded by LSH banding recall alone (measured 3/40,000
-    pairs missed at 2M docs — scripts/scale_r12.py).
+    pairs missed at 2M docs — the ``split`` family of scripts/scale.py).
 
     Scale: one corpus scan + cluster-sized joins. The rep-text fetch joins
     only CLUSTER MEMBERS (|dup docs|, far below corpus scale) against the

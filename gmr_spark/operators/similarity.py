@@ -102,7 +102,7 @@ def cosine_topk(spark: SparkSession, sf_dir: str, *, n_queries: int = 5,
 #   sims between V @ Q.T and V @ Q[lo:hi].T may differ in the last ulp —
 #   the same pre-round caveat as make_cell_rank_fn. Equality is pinned
 #   empirically (tie-bearing corpus in tests/test_llm_ops.py; 2M-vector
-#   exceptAll both ways = 0 in scripts/scale_r11.py), not structural.
+#   exceptAll both ways = 0, SCALE.md r11), not structural.
 GEMM_CHUNK_BYTES = 8 << 20
 
 
@@ -202,7 +202,7 @@ def cosine_topk_arrow(spark: SparkSession, sf_dir: str, *, n_queries: int = 5,
     ONE numpy GEMM and each task emits only its per-batch top-k — |Q|·k
     rows per task instead of |Q|·|batch| pair rows. Measured at the
     2M-vector class: 1,000 queries in 11.8 s under the chunked kernel
-    (scripts/scale_r11.py; 21.7–40.3 s unchunked in the r10 probe, which
+    (SCALE.md r11; 21.7–40.3 s unchunked in the r10 probe, which
     reuses this kernel).
     Fold-order float drift vs the oracle's SQL SUM is absorbed by the
     ROUND(·,6) contract (the make_pair_dot_udf precedent)."""
@@ -229,7 +229,7 @@ def train_ivf_cells(
         sample_mod: int = 1) -> list[tuple[int, list[float]]]:
     """Lloyd-train the IVF coarse centroids — the production quantizer the
     seeded default stands in for (round-10 verdict item 3: the trained-cells
-    config was proven end-to-end in scripts/scale_r10.py:run_celltrain but
+    config was proven end-to-end by the ``celltrain`` scale family but
     unreachable through the library API). Exactly the scale probe's wiring:
     seeds = the ``k_cells`` lowest-id vectors, then ``iters`` rounds of the
     ``kmeans.py`` Arrow kernels (``_assign_arrow`` GEMM assign +
@@ -259,7 +259,8 @@ def train_ivf_cells(
     assign still exactly linear (ratio 4.09 for a 4.0× k jump) and
     ``_update`` ~7× under the assign wall (SCALE.md r13). The
     DECADE-AWARE CONTRACT this trainer is held to
-    (scripts/scale_r12.py, round-12 verdict item 3 — not env-tunable): at
+    (the ``cells4k`` family of scripts/scale.py, round-12 verdict item 3 —
+    not tunable): at
     the measured 1,024–16,384 decade, trained max/mean ≤ seeded/10 AND
     ≤ 2.0 absolute; the absolute number is training-sample-DENSITY-
     limited (≈1.42–1.46 at ~49 samples/cell, 2.26 at ~20/cell; more
@@ -609,7 +610,8 @@ def pq_adc_expr(lut: F.Column, codes: F.Column) -> F.Column:
     """ADC score as a pure JVM expression: PQ_M array lookups per candidate
     (element_at is 1-based; codes are 0-based row-major offsets into the
     flattened PQ_M × PQ_KS LUT), summed and ROUND(·,6). Shared by
-    ``ann_ivf_pq`` and the 2M-vector scale probe (scripts/scale_r9.py)."""
+    ``ann_ivf_pq`` and the 2M-vector scale probe (the ``pq`` family of
+    scripts/scale.py)."""
     return F.round(
         F.aggregate(
             F.transform(
@@ -627,7 +629,7 @@ def pq_adc_cogrouped(cand: DataFrame, luts: DataFrame) -> DataFrame:
     large-fanout transport shape. The JVM ``pq_adc_expr`` path joins the
     per-query LUT to the candidate set, which materializes the ~1 KB LUT
     array into EVERY joined pair row (measured: the dominant cost of the
-    2M-vector probe at ~7.8k candidates/query — scripts/scale_r9.py);
+    2M-vector probe at ~7.8k candidates/query — SCALE.md r9);
     cogrouping ships each query's LUT once per group and scores the whole
     candidate block with one numpy gather. Inputs: ``cand``
     (query_id, neighbor_id, codes) and ``luts`` (query_id, lut). Rounding
@@ -690,7 +692,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str, *, k_cells: int = 8,
     codebook was not the recall limiter (SCALE.md r9: all misses were
     coarse-cell misses). The production path is ``train_iters>0`` (round-9
     verdict item 2), proven at the noise level where seeding degrades in
-    scripts/scale_r10.py.
+    the ``pqtrain`` family of scripts/scale.py.
 
     Coarse cells: seeded by default (the ``k_cells`` lowest-id vectors —
     oracle-derivable), Lloyd-trained when ``cell_train_iters>0`` via

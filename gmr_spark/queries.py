@@ -198,8 +198,7 @@ def _q_shortest_paths_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GraphX-library shortestPaths (multi-landmark BFS distances):
     (id, dist_l0, dist_l1, dist_l2), NULL = unreachable. ONE Pregel pass
     with per-landmark state columns (``_LandmarkBFSProgram``) — supersteps =
-    the landmarks' max eccentricity, not L sequential BFS traversals
-    (round-4 verdict item 3)."""
+    the landmarks' max eccentricity, not L sequential BFS traversals."""
     from gmr_spark.algorithms import shortest_paths
 
     g = derive_graph(spark, sf_dir, "geo", materialize=True)
@@ -368,8 +367,8 @@ def _q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_svdpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SVD++ collaborative filtering over the derived customer->part rating
     graph — the last GraphX-library algorithm from the reference's cited
-    roadmap (algorithms.h:219-221) without a counterpart here (round-4
-    verdict item 6). Deterministic batch GD; DuckDB twin unrolls the same
+    roadmap (algorithms.h:219-221). Deterministic batch GD; DuckDB twin
+    unrolls the same
     arithmetic per iteration (oracle.svdpp_sql)."""
     from gmr_spark.algorithms.svdpp import svdpp
 
@@ -542,7 +541,7 @@ RELATIONAL_QUERIES: dict[str, QueryFn] = {
 # stays exercised through bench.py and tests.
 BENCH_ONLY_QUERIES: dict[str, QueryFn] = {
     "approx_sketch_stats": R.approx_sketch_stats,
-    # trained-codebook IVF-PQ (round-10): the production path of the
+    # trained-codebook IVF-PQ: the production path of the
     # declared ann_ivf_pq. Bench-only because the trained codebook is the
     # fixpoint of a distributed per-subspace Lloyd — no compact DuckDB
     # derivation exists (the declared query keeps the seeded codebook the
@@ -551,7 +550,7 @@ BENCH_ONLY_QUERIES: dict[str, QueryFn] = {
     # 2M-vector seeded-vs-trained row lives in SCALE.md.
     "ann_ivf_pq_trained": lambda spark, sf_dir: S.ann_ivf_pq(
         spark, sf_dir, train_iters=2),
-    # the FULL production config (round-11): trained codebook AND
+    # the FULL production config: trained codebook AND
     # Lloyd-trained coarse cells (train_ivf_cells on a 1-in-10 sample —
     # the scale probe's sampling contract). Bench-only for the same
     # reason: both training fixpoints have no compact DuckDB derivation;
@@ -561,10 +560,10 @@ BENCH_ONLY_QUERIES: dict[str, QueryFn] = {
         spark, sf_dir, train_iters=2, cell_train_iters=2,
         cell_sample_mod=10, cell_assign="arrow"),
     # recall@3 of the production config above vs the cosine_topk_arrow
-    # exact truth (round-11 verdict "What's missing" item 2): the config
-    # bench.py times is now also recall-regression-guarded per round, not
-    # only in scale scripts. Bench-only for the training-fixpoint reason;
-    # tests pin recall >= the seeded ann_ivf_pq's on the bench corpus.
+    # exact truth, so the config bench.py times is recall-regression-
+    # guarded on every bench run, not only by the scale families.
+    # Bench-only for the training-fixpoint reason; tests pin recall >= the
+    # seeded ann_ivf_pq's on the bench corpus.
     "ann_recall_production": S.ann_recall_production,
 }
 
@@ -660,9 +659,9 @@ LLM_QUERIES: dict[str, QueryFn] = {
     "token_stats": TA.token_stats,
     "term_frequencies": TA.term_frequencies,
     "tfidf_top_terms": TA.tfidf_top_terms,
-    # round 6: CCNet-style corpus-LM filtering score (rational surprisal)
+    # CCNet-style corpus-LM filtering score (rational surprisal)
     "unigram_lm_score": TA.unigram_lm_score,
-    # round 13: per-doc OOV rate vs the corpus top-V vocabulary (the
+    # per-doc OOV rate vs the corpus top-V vocabulary (the
     # tokenizer-prep / fixed-vocab coverage signal)
     "oov_rate": TA.oov_rate,
     "doc_fingerprints": TA.doc_fingerprints,
@@ -671,15 +670,16 @@ LLM_QUERIES: dict[str, QueryFn] = {
     "multimodal_resize": M.multimodal_resize,
     "multimodal_frame_sample": M.multimodal_frame_sample,
     "multimodal_features": M.multimodal_features,
-    # round 6: audio member of the multimodal family — real RIFF/WAVE
+    # audio member of the multimodal family — real RIFF/WAVE
     # chunk-walking PCM-16 decode, mirroring the image PPM decoder
     "multimodal_audio": M.multimodal_audio,
-    # round 6: same decode entering through the binaryFile landing zone
+    # same decode entering through the binaryFile landing zone
     # (on-disk .wav scan), the audio sibling of multimodal_decode's .ppm scan
     "multimodal_audio_files": M.multimodal_audio_files,
-    # round 8: the declared PACK HOP (binaryFile dir -> parquet binary-column
-    # shards -> decode from packed) — the r7 small-files row's mitigation as
-    # a first-class operator (verdict item 5)
+    # the declared PACK HOP (binaryFile dir -> parquet binary-column
+    # shards -> decode from packed): per-object listing and open() bound a
+    # small-files corpus (SCALE.md), so packing once is a first-class
+    # operator
     "multimodal_pack": M.multimodal_pack,
     "dup_clusters": D.dup_clusters,
     "stratified_sample": SAMP.stratified_sample,
@@ -691,20 +691,19 @@ LLM_QUERIES: dict[str, QueryFn] = {
     "dedup_survivors": D.dedup_survivors,
     "sequence_packing": SAMP.sequence_packing,
     "temperature_mix_sample": SAMP.temperature_mix_sample,
-    # round 6: BM25 retrieval scoring + SemDeDup semantic near-dup removal
+    # BM25 retrieval scoring + SemDeDup semantic near-dup removal
     "bm25_topk": TA.bm25_topk,
     "semdedup_embeddings": D.semdedup_embeddings,
-    # round 6: exact-substring dedup (Lee et al. 2022 ExactSubstr pass)
+    # exact-substring dedup (Lee et al. 2022 ExactSubstr pass)
     "dedup_substring": D.dedup_substring,
-    # round 6: DSIR importance-based data selection (Xie et al. 2023)
+    # DSIR importance-based data selection (Xie et al. 2023)
     "dsir_select": TA.dsir_select,
-    # round 13: the composed curation pipeline (exact dedup -> near-dup
-    # survivors -> Gopher + LM-on-deduped filter -> packing) PROMOTED from
-    # bench-only — its composed DuckDB twin (LSQL.CURATION) chains the
-    # stage twins in the pipeline's own composition (round-12 verdict
-    # item 1). The short name keeps the driver-tail timing budget
-    # (test_bench_tail_keeps_timings); the 2M-doc planted-truth proof
-    # lives in SCALE.md r12.
+    # the composed curation pipeline (exact dedup -> near-dup survivors ->
+    # Gopher + LM-on-deduped filter -> packing) — declared because its
+    # composed DuckDB twin (LSQL.CURATION) chains the stage twins in the
+    # pipeline's own composition. The short name keeps the driver-tail
+    # timing budget (test_bench_tail_keeps_timings); the 2M-doc
+    # planted-truth proof is the pipeline row in SCALE.md.
     "curation": C.curation_pipeline,
 }
 
@@ -777,7 +776,7 @@ LLM_ORACLES: dict[str, str] = {
     "ngram_jaccard": LSQL.NGRAM_JACCARD,
     "cosine_topk": LSQL.COSINE_TOPK,
     # same declared contract as cosine_topk (exact brute-force top-k,
-    # ROUND 6, neighbor-id ties) — the Arrow/GEMM physical path must
+    # ROUND(sim, 6), neighbor-id ties) — the Arrow/GEMM physical path must
     # hash-match the identical oracle
     "cosine_topk_arrow": LSQL.COSINE_TOPK,
     "ann_sign_lsh": LSQL.ANN_SIGN_LSH,
@@ -803,7 +802,7 @@ LLM_ORACLES: dict[str, str] = {
     # same closed-form twin: the files variant must decode to identical rows
     "multimodal_audio_files": LSQL.MULTIMODAL_AUDIO,
     # same twin again: decoded fields of PACKED == decoded fields of
-    # file-backed == the synthesis closed forms (round-8 pack hop)
+    # file-backed == the synthesis closed forms
     "multimodal_pack": LSQL.MULTIMODAL_AUDIO,
     "dup_clusters": LSQL.DUP_CLUSTERS,
     "stratified_sample": LSQL.STRATIFIED_SAMPLE,
@@ -826,8 +825,8 @@ LLM_ORACLES: dict[str, str] = {
 # Queries whose implementation or oracle changed in round ``round``: their
 # prior driver rows are stale, so they sort ahead of everything else
 # regardless of row age (new queries have no row at all and front
-# automatically). ROUND-STAMPED (round-5 verdict item 2): the flag is
-# self-expiring — when ``round`` != the current driver round (max committed
+# automatically). ROUND-STAMPED, so the flag is self-expiring — when
+# ``round`` != the current driver round (max committed
 # CORRECTNESS_r* round + 1) the list is ignored, so a forgotten cleanup can
 # never displace genuinely-stale rows in a later round. DISCIPLINE: any
 # change that alters a query's implementation, its oracle, or an operator a
@@ -836,15 +835,15 @@ LLM_ORACLES: dict[str, str] = {
 _CHANGED_THIS_ROUND = {
     "round": 13,
     "names": (
-        # the composed curation pipeline PROMOTED to a declared query
-        # (round-12 verdict item 1): new oracle (LSQL.CURATION) and the
-        # LM cutoff hardened to a ROUND(·,6)-quantized comparison on both
-        # engines — new row, fronts automatically, listed for the record
+        # the composed curation pipeline became a declared query: new
+        # oracle (LSQL.CURATION) and the LM cutoff hardened to a
+        # ROUND(·,6)-quantized comparison on both engines — new row, fronts
+        # automatically, listed for the record
         "curation",
-        # ANN_TOPK shared constant (round-12 ADVICE item 2): the paths'
-        # topk/k defaults and ann_recall_at_k's guard bound now track one
-        # constant; _validate_assign messages name the caller-facing
-        # cell_assign parameter (ADVICE item 4). Values unchanged (the
+        # ANN_TOPK shared constant, so the paths' topk/k defaults and
+        # ann_recall_at_k's guard bound cannot drift apart;
+        # _validate_assign messages name the caller-facing cell_assign
+        # parameter. Values unchanged (the
         # constant equals the old literal 3); fronted per discipline.
         "ann_ivf",
         "ann_ivf_pq",
@@ -852,15 +851,15 @@ _CHANGED_THIS_ROUND = {
         "ann_rh_lsh",
         "ann_recall_at_k",
         # kmeans() now fail-fast-rejects unknown assign strings at entry
-        # (the round-12 self-review carry-over: similarity's
-        # _validate_assign applied to the kmeans surface too) — declared
+        # (similarity's _validate_assign applied to the kmeans surface,
+        # so a typo cannot silently pick a path) — declared
         # values unchanged (both queries run the default "expr"); every
         # declared query that executes kmeans() is fronted per discipline
         "kmeans_embeddings",
         "semdedup_embeddings",
         # gopher_quality's `passes` thresholds hoisted into module
-        # constants interpolated by BOTH DuckDB twins (round-13 review:
-        # a threshold change must not silently strand a twin) — values
+        # constants interpolated by BOTH DuckDB twins, so a threshold
+        # change cannot silently strand a twin — values
         # unchanged (10 / 0.2 / 0.6 render identically); fronted per
         # discipline
         "gopher_quality",
@@ -869,8 +868,8 @@ _CHANGED_THIS_ROUND = {
 
 # Gate/measuring queries: when an operator's query is flagged changed, the
 # queries that MEASURE it (recall/quality gates) are stale too even though
-# their own code did not change — the round-5 flag-propagation gap
-# (ann_recall_at_k rode an r4 row across the r5 ann_rh_lsh rewrite).
+# their own code did not change; without this a gate keeps an old green
+# row across a rewrite of the operator it measures.
 _MEASURED_BY: dict[str, tuple[str, ...]] = {
     "ann_rh_lsh": ("ann_recall_at_k",),
     "ann_sign_lsh": ("ann_recall_at_k",),
@@ -946,16 +945,16 @@ def _natural_registry() -> dict[str, QueryFn]:
 
 
 def _rotation_order(names: list[str] | dict[str, object]) -> list[str]:
-    """Mechanized driver-window rotation (round-3 verdict item 1): the
-    correctness driver snapshots only the first ``DRIVER_WINDOW`` (~50)
-    registry entries per round, so order by evidence priority — (1) queries
+    """Mechanized driver-window rotation: the correctness driver snapshots
+    only the first ``DRIVER_WINDOW`` (~50) registry entries per round, so
+    order by evidence priority — (1) queries
     changed this round (``_CHANGED_THIS_ROUND``: prior rows are stale), then
     (2) rounds since each query's last driver row, oldest/never first, with
     the natural registry order as the stable tiebreak.
 
-    Staleness bound (round-4 verdict item 2 — the old "within two rounds"
-    claim was written at ~93 queries and went false at 110): with N
-    registered queries, oldest-first ordering guarantees no query's row is
+    Staleness bound (a fixed "within two rounds" claim goes false as the
+    registry grows, so the bound is stated in N): with N registered
+    queries, oldest-first ordering guarantees no query's row is
     ever older than ``ceil(N / (DRIVER_WINDOW - steady_changed))`` rounds,
     where ``steady_changed`` is the per-round changed-name count the bound
     is stated against (``STEADY_CHANGED_MAX``, currently 5 — NOT

@@ -88,11 +88,7 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     cold workers at once — all pure worker cold-start billed to whichever
     ANN/multimodal query runs first. The warm-up pays the same cost once,
     at session creation, where every later caller amortizes it; on a real
-    cluster the same stage warms each executor's pool. Disable with
-    ``GMR_PREWARM_PYTHON_WORKERS=0`` (e.g. for sessions that never touch
-    a Python-boundary operator)."""
-    if os.environ.get("GMR_PREWARM_PYTHON_WORKERS", "1") != "1":
-        return
+    cluster the same stage warms each executor's pool."""
     app_id = spark.sparkContext.applicationId
     if app_id in _PREWARMED_APPS:
         return
@@ -128,7 +124,7 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
 
 def calibration_probe(spark: SparkSession) -> float:
     """Fixed synthetic workload (~0.16-0.25 s on an unloaded 32-core host):
-    the shared host-health probe bench.py and scripts/scale_g2.py record
+    the shared host-health probe bench.py and scripts/scale.py record
     before/after their runs. ONE definition on purpose — the SCALE.md
     host-noise methodology compares probe values across artifacts, so the
     workload must never drift between call sites. Callers run it once to

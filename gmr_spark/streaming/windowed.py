@@ -38,7 +38,8 @@ def read_events_stream(spark: SparkSession, sf_dir: str,
     Epoch arithmetic, not a cast: see sources/tables.py — a plain NTZ cast
     would shift instants by the session TZ offset on non-UTC sessions.
     ``options`` passes reader options through (e.g. maxFilesPerTrigger to
-    split a multi-file corpus into micro-batches — scripts/scale_stream.py)."""
+    split a multi-file corpus into micro-batches — the ``stream`` family of
+    scripts/scale.py)."""
     reader = (
         spark.readStream.schema(EVENTS_STREAM_SCHEMA)
         .option("pathGlobFilter", "events.parquet")

@@ -765,7 +765,7 @@ def _celltrain_toy_dir(spark, tmp_path) -> str:
     cell) while cluster-0 pairs split ~50/50 across the two seeds (partner
     misses). Lloyd recovers the true centers: same-cell rate -> 1.0,
     max/mean -> 1.0. Only embeddings.parquet is planted; the other tables
-    symlink sf0.001 (the scale_llm.build_corpus pattern)."""
+    symlink sf0.001 (the scale_data.build_corpus pattern)."""
     import os
 
     import numpy as np
@@ -817,7 +817,8 @@ def test_train_ivf_cells_improves_both_legs_through_api(spark, tmp_path):
     """Round-10 verdict item 3: trained coarse cells must be reachable
     through the library API (train_ivf_cells / _ivf_index_probes
     centroids= / ann_ivf_pq cell_train_iters=), reproducing both legs the
-    scale probe measured (scripts/scale_r10.py:run_celltrain, SCALE.md):
+    scale probe measured (the ``celltrain`` family of scripts/scale.py,
+    SCALE.md):
     planted-partner same-cell rate AND max/mean cell balance improve."""
     from gmr_spark.operators.similarity import (
         _ivf_index_probes, _vec, train_ivf_cells)
@@ -1469,7 +1470,7 @@ def test_ann_recall_production_at_least_seeded(spark):
 
 def test_curation_pipeline_stages_compose(spark, tmp_path):
     """Behavioral twin of the 2M-doc composed curation pipeline
-    (scripts/scale_r12.py run_pipeline, round-11 verdict item 5) on a
+    (the ``pipeline`` family of scripts/scale.py) on a
     planted toy corpus, so the stage semantics ride the per-round test
     gate, not only the scale script: exact dedup retires the verbatim
     copy (keeping the lower id), the MinHash chain retires the planted
@@ -1600,7 +1601,7 @@ def test_curation_pipeline_operator(spark):
     same public operators — with valid pack arithmetic. (The stage
     SEMANTICS are pinned on planted fixtures in
     test_curation_pipeline_stages_compose and at 2M docs in
-    scripts/scale_r12.py; this pins the composition.)"""
+    the ``pipeline`` scale family; this pins the composition.)"""
     from gmr_spark.operators.curation import curation_pipeline
     from gmr_spark.operators.dedup import (
         clear_dedup_memo, dedup_exact, dedup_survivors)

@@ -1,19 +1,23 @@
-"""Smoke tests for the scale-proof scripts (scripts/scale_*.py) at toy size:
-the committed SCALE.md artifacts rely on these code paths, so the corpus
-generator's planted-duplicate property and the operators' recall on it are
-pinned in the suite."""
+"""Toy-size tests of the scale harness (scripts/scale.py): its generators
+(scripts/scale_data.py) and families (scripts/scale_graph.py,
+scripts/scale_corpus.py). The committed SCALE.md rows rely on these code
+paths, so the generators' planted properties and each family's in-run
+asserts are pinned in the suite."""
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__))), "scripts"))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "scripts"))
+
+from scale import FAMILIES, SF_DIR  # noqa: E402
 
 
 def test_llm_scale_corpus_planted_recall(spark, tmp_path):
-    from scale_llm import build_corpus
+    from scale_data import build_corpus
 
     from gmr_spark.operators.dedup import dedup_exact, dedup_minhash
 
@@ -39,22 +43,16 @@ def test_g2_generator_diameter_property(spark):
     """The ring+power-chord construction must reach every vertex within
     ceil(log2 N) + slack supersteps (binary-decomposition bound) — the
     property the full-size SSSP run's assert relies on."""
-    import pytest
     from pyspark.sql import functions as F
+    from scale_data import ring_chords
 
     from gmr_spark.algorithms.sssp import bfs
     from gmr_spark.graph import PropertyGraph
 
     n = 4096
     chords = (n - 1).bit_length()
-    offsets = F.array(*[F.lit(2 ** j) for j in range(chords)])
-    edges = (
-        spark.range(n)
-        .select(F.col("id"), F.explode(offsets).alias("off"))
-        .select(F.col("id").alias("src"),
-                F.pmod(F.col("id") + F.col("off"), F.lit(n)).alias("dst"),
-                F.lit(1.0).alias("weight"))
-    )
+    edges = ring_chords(spark, n).select("src", "dst",
+                                         F.lit(1.0).alias("weight"))
     g = PropertyGraph(vertices=spark.range(n).select("id"), edges=edges)
     levels = bfs(g, source=0, max_iter=chords + 5)
     reached = levels.filter(F.col("level").isNotNull()).count()
@@ -66,7 +64,7 @@ def test_g2_generator_diameter_property(spark):
 def test_svdpp_shuffle_fallback_matches_broadcast(spark):
     """The above-cap join strategy (state_broadcast_cap exceeded -> plain
     shuffled joins) must produce the IDENTICAL ROUND(.,6) predictions as
-    the broadcast path — the invariant scripts/scale_svdpp.py proves at
+    the broadcast path — the invariant the svdpp scale family proves at
     60M edges, pinned here at sf0.001 so the fallback branch is exercised
     by the suite itself (round-5 verdict item 1: this branch had never
     run in any test)."""
@@ -84,7 +82,7 @@ def test_llm_scale_embedding_planted_recall(spark, tmp_path):
     text corpus; the 16-bit sign-LSH bucket join + cosine verify must find
     them with ~(1-0.005)^16 ≈ 92% expected recall and zero false positives
     at min_sim=0.9 (random same-bucket cosines sit ~7σ below)."""
-    from scale_llm import build_corpus
+    from scale_data import build_corpus
 
     from gmr_spark.operators.dedup import dedup_embedding
 
@@ -101,11 +99,11 @@ def test_llm_scale_embedding_planted_recall(spark, tmp_path):
 
 
 def test_llm_scale_semdedup_planted_recall(spark, tmp_path):
-    """SemDeDup (arrow engine, the scale path scale_llm.py runs at 2M) on
+    """SemDeDup (arrow engine, the scale path the llm family runs at 2M) on
     the planted corpus: every (2k, 2k+1) near-copy pair whose members share
     a cluster must retire the odd (higher-id) member; nothing else retires
     (random within-cluster cosines sit far below 0.9)."""
-    from scale_llm import build_corpus
+    from scale_data import build_corpus
 
     from gmr_spark.operators.dedup import semdedup_frame
     from gmr_spark.sources.tables import load_tables
@@ -133,7 +131,7 @@ def test_llm_scale_substring_planted_recall(spark, tmp_path):
     (2k, 2k+1) texts differ only in the final alpha/beta token, so every
     window clear of the tail is shared verbatim — both members must be
     flagged, and (8-gram collisions being ~997^-8) nothing else."""
-    from scale_llm import build_corpus
+    from scale_data import build_corpus
 
     from gmr_spark.operators.dedup import dedup_substring
 
@@ -156,35 +154,13 @@ def test_stream_scale_probes_drain_and_count(spark, tmp_path):
     end-to-end at toy size: the file source splits into >1 micro-batch
     (maxFilesPerTrigger), the windowed agg consumes every event exactly
     once, and the stream-stream join consumes both sides."""
-    from scale_stream import build_events, drain
-
-    from gmr_spark.streaming.joins import (
-        ATTRIB_WINDOW, _attribution_pairs, _split)
-    from gmr_spark.streaming.windowed import _windowed_agg, read_events_stream
+    from scale_corpus import stream
 
     n = 2000
-    sf = build_events(spark, n, str(tmp_path / "events"))
-    src = f"{sf}/events.parquet"
-    opts = {"pathGlobFilter": "*.parquet", "maxFilesPerTrigger": "8"}
-
-    events = read_events_stream(spark, src, options=opts) \
-        .withWatermark("ts", "1 hour")
-    q = (_windowed_agg(events).writeStream.format("noop")
-         .option("checkpointLocation", str(tmp_path / "ck1"))
-         .outputMode("update").start())
-    _, rows, batches = drain(q)
-    assert rows == n and batches == 8
-
-    p, _ = _split(read_events_stream(spark, src, options=opts))
-    _, v = _split(read_events_stream(spark, src, options=opts))
-    joined = _attribution_pairs(
-        p.withWatermark("p_ts", ATTRIB_WINDOW),
-        v.withWatermark("v_ts", ATTRIB_WINDOW))
-    q = (joined.writeStream.format("noop")
-         .option("checkpointLocation", str(tmp_path / "ck2"))
-         .outputMode("append").start())
-    _, rows, batches = drain(q)
-    assert rows == 2 * n and batches == 8
+    got = stream(spark, n, str(tmp_path / "events"))
+    agg, join = got["windowed_agg"], got["stream_stream_join"]
+    assert agg["rows"] == n and agg["batches"] == 8
+    assert join["rows"] == 2 * n and join["batches"] == 8
 
 
 def test_tpch_scale_corpus_matches_driver_contract(spark, tmp_path):
@@ -194,7 +170,7 @@ def test_tpch_scale_corpus_matches_driver_contract(spark, tmp_path):
     testdata's 1-7 lines-per-order fan-out, and nonzero result sets for the
     selective heavy shapes (q18's HAVING tail, q21's double correlation) —
     the properties the committed SCALE.md walls depend on."""
-    from scale_tpch import build_tpch
+    from scale_data import build_tpch
 
     from pyspark.sql import functions as F
 
@@ -227,20 +203,7 @@ def test_tpch_scale_corpus_matches_driver_contract(spark, tmp_path):
     assert R.q21_waiting_suppliers(spark, sf).count() > 0
 
 
-def _import_r8(monkeypatch, vertices: int):
-    """scale_r8 reads R8_VERTICES at import — load a fresh copy per size."""
-    import importlib.util
-
-    monkeypatch.setenv("R8_VERTICES", str(vertices))
-    path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "scripts", "scale_r8.py")
-    spec = importlib.util.spec_from_file_location(f"r8_{vertices}", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def test_r8_skew_construction_invariants(spark, monkeypatch):
+def test_r8_skew_construction_invariants(spark, tmp_path):
     """The heavy-tail generator's committed SCALE.md claims, pinned at toy
     size: (a) the D2 exclusion really forecloses every hub triangle — the
     Spark triangle count equals the background closed form V*T2 exactly on
@@ -248,39 +211,22 @@ def test_r8_skew_construction_invariants(spark, monkeypatch):
     oracle matches the engine's ranks; (c) hub in-degrees come out as
     designed."""
     import numpy as np
-    from pyspark.sql import functions as F
+    from scale_data import check_s, numpy_pagerank, skew_graph
 
     from gmr_spark.algorithms import pagerank
     from gmr_spark.algorithms.triangles import triangle_count
-    from gmr_spark.graph import PropertyGraph
 
-    r8 = _import_r8(monkeypatch, 150_000)  # > 3*max(S): wrap-triple guard
-    V = r8.V
-    t2 = r8._check_s()
+    V = 150_000  # > 3*max(S): wrap-triple guard
+    t2 = check_s(V)
     assert t2 >= 6  # the three planted sums make the check non-vacuous
-    hub_src, hub_dst = r8._build_hub_edges()
-
-    offsets = F.array(*[F.lit(int(s)) for s in r8.S_OFFSETS])
-    bg = (
-        spark.range(V)
-        .select(F.col("id"), F.explode(offsets).alias("off"))
-        .select(F.col("id").alias("src"),
-                F.pmod(F.col("id") + F.col("off"), F.lit(V)).alias("dst"),
-                F.lit(1.0).alias("weight"))
-    )
-    hub = spark.createDataFrame(
-        list(zip(hub_src.tolist(), hub_dst.tolist())),
-        "src long, dst long").select("src", "dst",
-                                     F.lit(2.0).alias("weight"))
-    edges = bg.unionByName(hub).localCheckpoint(eager=True)
-    g = PropertyGraph(vertices=spark.range(V).select("id"), edges=edges)
+    g, hub_src, hub_dst = skew_graph(spark, V, str(tmp_path / "skew"))
 
     # (a) triangle exactness with all hub edges present
     assert triangle_count(g).first().tri_cnt == V * t2
 
     # (b) engine ranks == independent numpy oracle
     got = pagerank(g, k=10, damping=0.5).toPandas().sort_values("id")
-    want = r8._numpy_pagerank(hub_src, hub_dst)
+    want = numpy_pagerank(V, hub_src, hub_dst)
     rel = np.abs(got["rank"].to_numpy() - want) / want
     assert float(rel.max()) < 1e-9, float(rel.max())
 
@@ -289,16 +235,13 @@ def test_r8_skew_construction_invariants(spark, monkeypatch):
     assert indeg[0] > indeg[10] > 0 and len(hub_src) == indeg.sum()
 
 
-def test_r8_manyscc_row_at_toy_size(spark, monkeypatch):
-    """run_manyscc end-to-end at toy size: its internal asserts (exact SCC
-    count/sizes/labels) plus the recorded metrics must reflect the DAG
-    design — phases == condensation depth, nothing trimmed."""
-    monkeypatch.setenv("R8_SCC_COUNT", "10")
-    monkeypatch.setenv("R8_SCC_LEVELS", "2")
-    r8 = _import_r8(monkeypatch, 48_000)
-    timings, extra = {}, {}
-    r8.run_manyscc(spark, timings, extra)
-    m = extra["manyscc"]
+def test_r8_manyscc_row_at_toy_size(spark, tmp_path):
+    """The manyscc family end-to-end at toy size: its internal asserts
+    (exact SCC count/sizes/labels) plus the recorded metrics must reflect
+    the DAG design — phases == condensation depth, nothing trimmed."""
+    from scale_graph import manyscc
+
+    m = manyscc(spark, 48_000, str(tmp_path), count=10, levels=2)
     assert m["sccs"] == 10 and m["phases"] == 2 and m["trimmed"] == 0
 
 
@@ -307,12 +250,17 @@ def test_ingest_scale_roundtrip_and_checksum(spark, tmp_path):
     write → read cycle preserves vertex/edge counts AND the order-invariant
     edge checksum, and the checksum actually discriminates (dropping one
     edge changes it)."""
-    from scale_ingest import build_graph, edge_checksum
+    from pyspark.sql import functions as F
+    from scale_data import edge_checksum, ring_chords
 
+    from gmr_spark.graph import PropertyGraph
     from gmr_spark.sources.graph_file import read_graph_file, write_graph_file
 
     n = 2000
-    g = build_graph(spark, n)
+    g = PropertyGraph(  # 1-based ids, the writer's contract
+        vertices=spark.range(1, n + 1),
+        edges=ring_chords(spark, n, first_id=1).select(
+            "src", "dst", F.lit(1.0).alias("weight")))
     ne = g.edges.count()
     cs = edge_checksum(g.edges)
 
@@ -324,37 +272,26 @@ def test_ingest_scale_roundtrip_and_checksum(spark, tmp_path):
     assert edge_checksum(g2.edges.limit(ne - 1)) != cs
 
 
-def test_r9_sort_and_pq_rows_at_toy_size(spark, monkeypatch, tmp_path):
-    """scale_r9 probes end-to-end at toy size. run_sort's internal asserts
+def test_r9_sort_and_pq_rows_at_toy_size(spark, tmp_path):
+    """The sort and pq families at toy size. sort's internal asserts
     hold (closed-form rank invariants checked over EVERY row: rank sum,
     min/max, zero rank != value+1 mismatches); the PQ probe finds nearly all
     planted partners through the full ADC → shortlist → exact-re-rank stack
     (the partner is the true top-1 by construction, cosine ≈ 0.9999)."""
-    import importlib.util
+    from scale_corpus import pq, sort
 
-    monkeypatch.setenv("R9_SORT_ROWS", "120000")
-    monkeypatch.setenv("R9_SORT_PARTS", "8")
-    monkeypatch.setenv("R9_PQ_VECS", "50000")
-    monkeypatch.setenv("R9_PQ_SCRATCH", str(tmp_path / "pq"))
-    path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "scripts", "scale_r9.py")
-    spec = importlib.util.spec_from_file_location("r9_toy", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    got = sort(spark, 120_000, str(tmp_path / "sort"), parts=8)
+    assert got["mismatches"] == 0
+    assert got["rank_sum_exact"] is True
 
-    timings, extra = {}, {}
-    mod.run_sort(spark, timings, extra)
-    assert extra["sort"]["mismatches"] == 0
-    assert extra["sort"]["rank_sum_exact"] is True
-
-    mod.run_pq(spark, timings, extra)
-    assert extra["pq"]["queries"] == 100
-    assert extra["pq"]["top1_partner_recall"] >= 0.9
+    got = pq(spark, 50_000, str(tmp_path / "pq"), sf_dir=SF_DIR)
+    assert got["queries"] == 100
+    assert got["top1_partner_recall"] >= 0.9
 
 
-def test_r10_pqtrain_row_at_toy_size(spark, monkeypatch, tmp_path):
-    """scale_r10's trained-codebook probe end-to-end at toy size (round-9
-    verdict item 2). Invariants the committed SCALE.md row relies on:
+def test_r10_pqtrain_row_at_toy_size(spark, tmp_path):
+    """The trained-codebook family end-to-end at toy size. Invariants the
+    committed SCALE.md row relies on:
     (a) both legs share the coarse quantizer exactly — identical cell_hits
         and identical gt_reachable (the reachable-recall comparison is
         well-defined only because the reachable set is shared);
@@ -364,21 +301,10 @@ def test_r10_pqtrain_row_at_toy_size(spark, monkeypatch, tmp_path):
         codebook improves — the planted-partner metric cannot move, the
         partner shares the query's codes);
     (d) exact ground truth has exactly gt_k rows per query."""
-    import importlib.util
+    from scale_corpus import pqtrain
 
-    monkeypatch.setenv("R10_PQ_VECS", "50000")
-    monkeypatch.setenv("R10_PQ_CELLS", "64")
-    monkeypatch.setenv("R10_PQ_NOISE_MILLI", "50")
-    monkeypatch.setenv("R10_PQ_SCRATCH", str(tmp_path / "pqtrain"))
-    path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "scripts", "scale_r10.py")
-    spec = importlib.util.spec_from_file_location("r10_toy", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    timings, extra = {}, {}
-    mod.run_pqtrain(spark, timings, extra)
-    p = extra["pqtrain"]
+    p = pqtrain(spark, 50_000, str(tmp_path / "pqtrain"), sf_dir=SF_DIR,
+                cells=64)
     seeded, trained = p["legs"]["seeded"], p["legs"]["trained"]
     assert seeded["cell_hits"] == trained["cell_hits"]          # (a)
     assert seeded["gt_reachable"] == trained["gt_reachable"]
@@ -390,27 +316,17 @@ def test_r10_pqtrain_row_at_toy_size(spark, monkeypatch, tmp_path):
         p["index_bytes"]["raw_vec_parquet"]
 
 
-def test_r10_celltrain_row_at_toy_size(spark, monkeypatch, tmp_path):
-    """scale_r10's coarse-quantizer probe at toy size: Lloyd-training the
+def test_r10_celltrain_row_at_toy_size(spark, tmp_path):
+    """The coarse-quantizer family at toy size: Lloyd-training the
     IVF cells with the kmeans Arrow kernels must (a) not lose planted
     pairs (every pair observed exactly twice -> grouped once), (b) raise
     the partner same-cell rate vs the seeded cells (the nprobe=1 coarse
     recall ceiling), and (c) improve cell balance (max/mean population —
     the candidate equi-join's hot-key bound)."""
-    import importlib.util
+    from scale_corpus import celltrain
 
-    monkeypatch.setenv("R10_PQ_VECS", "50000")
-    monkeypatch.setenv("R10_PQ_CELLS", "64")
-    monkeypatch.setenv("R10_CELL_SCRATCH", str(tmp_path / "cells"))
-    path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "scripts", "scale_r10.py")
-    spec = importlib.util.spec_from_file_location("r10_cell_toy", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    timings, extra = {}, {}
-    mod.run_celltrain(spark, timings, extra)
-    legs = extra["celltrain"]["legs"]
+    legs = celltrain(spark, 50_000, str(tmp_path / "cells"), sf_dir=SF_DIR,
+                     cells=64)["legs"]
     assert legs["seeded"]["pairs"] == legs["trained"]["pairs"] == 1000  # (a)
     assert (legs["trained"]["same_cell_rate"]
             >= legs["seeded"]["same_cell_rate"])                       # (b)
@@ -418,122 +334,73 @@ def test_r10_celltrain_row_at_toy_size(spark, monkeypatch, tmp_path):
             <= legs["seeded"]["max_over_mean"])                       # (c)
 
 
-def test_r10_exact_row_at_toy_size(spark, monkeypatch, tmp_path):
-    """scale_r10's exact-search probe at toy size: brute force is exact,
+def test_r10_exact_row_at_toy_size(spark, tmp_path):
+    """The exact-search family at toy size: brute force is exact,
     so partner recall must be 1.0 — the probe's internal asserts (exactly
     k rows per query, one rank-1 row per query) plus the construction
     invariant make the committed 10M row a verified result, not a wall
     clock."""
-    import importlib.util
+    from scale_corpus import exact
 
-    monkeypatch.setenv("R10_EXACT_VECS", "100000")
-    monkeypatch.setenv("R10_EXACT_SCRATCH", str(tmp_path / "exact"))
-    path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "scripts", "scale_r10.py")
-    spec = importlib.util.spec_from_file_location("r10_exact_toy", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    timings, extra = {}, {}
-    mod.run_exact(spark, timings, extra)
-    assert extra["exact"]["queries"] == 1000
-    assert extra["exact"]["top1_partner_recall"] == 1.0
+    got = exact(spark, 100_000, str(tmp_path / "exact"), sf_dir=SF_DIR)
+    assert got["queries"] == 1000
+    assert got["top1_partner_recall"] == 1.0
 
 
-def test_r9_recover_row_at_toy_size(spark, monkeypatch, tmp_path):
-    """run_recover end-to-end at toy size: its internal asserts must hold —
-    resume AT the crash epoch, exactly-once state vs the batch twin
-    (exceptAll both directions)."""
-    import importlib.util
+def test_r9_recover_row_at_toy_size(spark, tmp_path):
+    """The recover family end-to-end at toy size: its internal asserts
+    must hold — resume AT the crash epoch, exactly-once state vs the batch
+    twin (exceptAll both directions)."""
+    from scale_corpus import recover
 
-    monkeypatch.setenv("R9_RECOVER_EVENTS", "200000")
-    monkeypatch.setenv("R9_RECOVER_SCRATCH", str(tmp_path / "rec"))
-    path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "scripts", "scale_r9.py")
-    spec = importlib.util.spec_from_file_location("r9_rec_toy", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    timings, extra = {}, {}
-    mod.run_recover(spark, timings, extra)
-    r = extra["recover"]
+    r = recover(spark, 200_000, str(tmp_path / "rec"))
     assert r["resumed_at"] == r["crash_epoch"] == 4
     assert r["exactly_once"] is True and r["state_keys"] > 0
 
 
-def test_r13_decade_probe_at_toy_size(spark, monkeypatch, tmp_path):
-    """run_decade end-to-end at toy size: the probe's in-run asserts must
+def test_r13_decade_probe_at_toy_size(spark, tmp_path):
+    """The decade family end-to-end at toy size: its in-run asserts must
     hold (update wall <= assign wall, corpus assign within the linear
     tolerance, trained balance <= seeded) and the returned metrics must
     carry the trained-vs-seeded pair the SCALE.md r13 row is stated from.
-    Toy CELLS sits below scale_r12.CONTRACT_DECADE, i.e. this exercises
+    Toy cells sit below scale_corpus.CONTRACT_DECADE, i.e. this exercises
     the exploratory branch of the decade-aware contract by construction."""
-    import importlib.util
+    from scale_corpus import decade
 
-    monkeypatch.setenv("R13_VECS", "20000")
-    monkeypatch.setenv("R13_CELLS", "256")
-    monkeypatch.setenv("R13_CELLS_CONTROL", "64")
-    monkeypatch.setenv("R13_SCRATCH", str(tmp_path / "r13"))
-    path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "scripts", "scale_r13.py")
-    spec = importlib.util.spec_from_file_location("r13_toy", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    timings = {}
-    extra = mod.run_decade(spark, timings)
+    extra = decade(spark, 20_000, str(tmp_path / "r13"), sf_dir=SF_DIR,
+                   cells=256, control=64)
     assert extra["trained_cells"] <= 256
     assert (extra["trained_balance_max_over_mean"]
             <= extra["seeded_balance_max_over_mean"])
     assert extra["balance_improvement_vs_seeded"] >= 1.0
     assert len(extra["lloyd_stage_walls_sec"]["assign"]) == 2
-    assert "build_corpus" in timings
+    assert "build_corpus" in extra["timings_sec"]
 
 
-def test_r13_split_row_at_toy_size(spark, monkeypatch, tmp_path):
-    """scale_r12's run_split at toy size: the probe's in-run asserts —
+def test_r13_split_row_at_toy_size(spark, tmp_path):
+    """The split family at toy size: its in-run asserts —
     zero exact-pair straddle (structural), near-dup straddle bounded by
     banding misses, val fraction at VAL_BUCKETS/65536 — all ride the
     test gate, so the committed 2M row is a verified result, not a wall
     clock."""
-    import importlib.util
+    from scale_corpus import split
 
-    monkeypatch.setenv("R12_DOCS", "4000")
-    monkeypatch.setenv("R13_SPLIT_SCRATCH", str(tmp_path / "split"))
-    path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "scripts", "scale_r12.py")
-    spec = importlib.util.spec_from_file_location("r13_split_toy", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    timings, extra = {}, {}
-    mod.run_split(spark, timings, extra)
-    got = extra["split"]
+    got = split(spark, 4000, str(tmp_path / "split"), sf_dir=SF_DIR)
     assert got["docs"] == 4040
     assert got["exact_pairs"] == 40 and got["exact_straddle"] == 0
     assert got["neardup_pairs"] == 80 and got["neardup_straddle"] <= 1
     assert 0.05 <= got["val_fraction"] <= 0.15
 
 
-def test_r13_shards_row_at_toy_size(spark, monkeypatch, tmp_path):
-    """scale_r12's run_shards at toy size: the density-aware ±5σ balance
+def test_r13_shards_row_at_toy_size(spark, tmp_path):
+    """The shards family at toy size: the density-aware ±5σ balance
     gate, the gapless per-shard seq assert, and the epoch-1 re-deal all
     ride the test gate at 4k docs / 8 shards — the same contract the
     committed 2M × 1024 row asserts in-run."""
-    import importlib.util
+    from scale_corpus import shards
 
-    monkeypatch.setenv("R12_DOCS", "4000")
-    monkeypatch.setenv("R13_SHARDS", "8")
-    monkeypatch.setenv("R13_SHARDS_SCRATCH", str(tmp_path / "shards"))
-    path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "scripts", "scale_r12.py")
-    spec = importlib.util.spec_from_file_location("r13_shards_toy", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    timings, extra = {}, {}
-    mod.run_shards(spark, timings, extra)
-    got = extra["shards"]
+    got = shards(spark, 4000, str(tmp_path / "shards"), sf_dir=SF_DIR,
+                 n_shards=8)
     assert got["docs"] == 4000 and got["n_shards"] == 8
     assert got["epoch1_moved"] > 0
 
@@ -542,10 +409,32 @@ def test_r15_ktruss_skew_expected_count(spark):
     """The ktruss_skew row's expected triangle count, checked against the
     engine at toy size before a G2-size run pays for it: the hub graph has
     no hub–hub edges, so only the (hub, leaf i, leaf i+1) triangles close."""
-    from scale_r15 import hub_ring_edges, hub_ring_triangles
+    from scale_data import hub_ring_edges, hub_ring_triangles
 
     from gmr_spark.algorithms.triangles import closed_triangles
 
     und = hub_ring_edges(spark, hubs=3, leaves=8)
     assert hub_ring_triangles(hubs=3, leaves=8) == 3 * 7
     assert closed_triangles(und).count() == hub_ring_triangles(hubs=3, leaves=8)
+
+
+DOCS = ("README.md", "SCALE.md", ".claude/skills/verify/SKILL.md")
+# the form a doc uses to reproduce a script deleted from scripts/: a
+# worktree of the last commit that had it
+WORKTREE = "/tmp/gmr-4c3453f/"
+
+
+def test_documented_scale_commands_exist():
+    """Every ``scripts/scale.py <family>`` the docs name is a registered
+    family, and every ``scripts/*.py`` path they name exists, unless it is
+    run from the worktree of the commit that still had it."""
+    for doc in DOCS:
+        with open(os.path.join(REPO, doc)) as fh:
+            text = fh.read()
+        for names in re.findall(r"scripts/scale\.py\s+([a-z0-9_,]+)", text):
+            for name in names.split(","):
+                assert name in FAMILIES, f"{doc}: unknown family {name}"
+        for m in re.finditer(r"(\S*?)(scripts/[A-Za-z0-9_]+\.py)", text):
+            if not m.group(1).endswith(WORKTREE):
+                assert os.path.exists(os.path.join(REPO, m.group(2))), \
+                    f"{doc}: {m.group(2)} is not in the tree"

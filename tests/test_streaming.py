@@ -248,7 +248,8 @@ def _recovery_scenario(spark, tmp_path):
     )
 
     # 6-part NTZ corpus (multiple files -> multiple micro-batches),
-    # range-partitioned by ts; the scale_stream.py layout at test size
+    # range-partitioned by ts; the ``stream`` scale family's layout at
+    # test size
     src = str(tmp_path / "src")
     ev = load_tables(spark, SF)["events"].withColumn(
         "ts", F.expr("CAST(ts AS TIMESTAMP_NTZ)"))
