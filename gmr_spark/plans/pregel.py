@@ -1,7 +1,17 @@
-"""Pregel superstep driver — the Spark re-expression of the reference's
+"""Pregel superstep drivers — the Spark re-expression of the reference's
 iteration engine (igmr.cpp:116-247 + gmr.h:222-334).
 
-One superstep of the reference maps to DataFrame ops:
+Two drivers share the loop runtime (``plans/loop.py``: checkpoints, the
+loop conf, the size gate):
+
+- :func:`run_dense` runs fixed-k programs in which every vertex is active
+  in every superstep (PageRank, personalized PageRank, label propagation).
+  A superstep is the reference's map / group / reduce / cover-mode write
+  back as one join and one aggregation (two chained for LPA's mode): each
+  vertex's previous value rides the message stream on a self-edge, so the
+  state is read once.
+- :func:`run_pregel` runs frontier programs to convergence (SSSP, BFS,
+  landmarks, SCC colouring). One superstep maps to DataFrame ops:
 
   reference (MPI)                             this engine (Spark)
   ---------------------------------------     ----------------------------------
@@ -14,16 +24,15 @@ One superstep of the reference maps to DataFrame ops:
   group + user reduce (gmr.h:300-313, O13)    msgs.groupBy(id).agg(...)
   vertex update accu/cover + threshold        program.update(): join back +
     (gmr.h:170-219, O14)                       coalesce / + ; |Δ|>1e-4 → active
-  Allgather convergence test                  driver-side count of active rows
-    (igmr.cpp:139-152, O15)                    (the one action per superstep)
+  Allgather convergence test                  census of active rows riding the
+    (igmr.cpp:139-152, O15)                    checkpoint job (one action)
   MPI_Barrier + tick metrics (O16/O20)        localCheckpoint + perf_counter
 
 Iterative lineage control: the reference mutates arrays in place; Spark plans
-grow per iteration, so each superstep ends with ``localCheckpoint(eager=True)``
-to truncate lineage (on a real cluster, swap for ``checkpoint()`` against a
-reliable store via ``reliable_checkpoint_dir``). The checkpoints, the loop
-conf and the size gate belong to the loop runtime (``plans/loop.py``); this
-module adds the superstep itself and its exact-census frontier broadcast.
+grow per iteration, so the loops end every ``checkpoint_interval``-th
+superstep with ``localCheckpoint(eager=True)`` to truncate lineage (on a
+real cluster, swap for ``checkpoint()`` against a reliable store via
+``reliable_checkpoint_dir``).
 """
 
 from __future__ import annotations
@@ -32,7 +41,7 @@ import time
 from dataclasses import dataclass, field
 from typing import Protocol
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from gmr_spark.graph import PropertyGraph
 from gmr_spark.plans import loop as runtime
@@ -109,7 +118,6 @@ def run_pregel(
     program: PregelProgram,
     *,
     max_iter: int = MAX_ITERATION,
-    early_stop: bool = True,
     collect_metrics: bool = False,
     checkpoint_interval: int | None = 2,
     edges_checkpointed: bool = False,
@@ -126,10 +134,11 @@ def run_pregel(
     need no extra scan.
 
     Scale notes (100 TB):
-    - edges are hash-partitioned by ``src`` once and materialized once; the
-      checkpointed LogicalRDD keeps its physical partitioning, so the
-      per-superstep message join does not re-shuffle the edge side (small
-      edge tables go broadcast instead, AQE's pick).
+    - edges are materialized once. Their checkpoint runs under the
+      session's AQE, before the loop conf applies, and a checkpoint
+      materialized under AQE reports no partitioning: below the size gate
+      the message join broadcasts the edge table, above it the join
+      re-shuffles the edges every superstep.
     - per-superstep state is localCheckpointed (flat O(1) logical plan per
       superstep across the reference's 120-iteration cap, igmr.cpp:116).
     - ONE job per superstep: the convergence census (the reference's
@@ -144,23 +153,15 @@ def run_pregel(
       checkpoint job for k-1 fewer job launches + block writes. Convergence
       is then tested every k steps; extra post-convergence supersteps are
       no-ops (empty frontier -> no messages -> values unchanged), so results
-      are identical. Measured on the 600k-vertex PageRank fixture: k=2 is
-      ~1.8x faster than k=1 (exchange reuse dedupes the doubled state
-      subtree, so one job runs ~2 supersteps of real work at half the
-      launch+write overhead), but k=3 is ~5x SLOWER (the duplication nests
-      — 4 evaluations of the oldest deferred step — and reuse stops
-      covering it). Keep k=2.
-      G2-scale crossover (4.8M V / 110M E full run, SCALE.md): the k=2
-      advantage flattens and slightly inverts — k=1 171.8 s, k=2 183.9 s,
-      k=3 200.6 s for PageRank k=10. When per-superstep work is O(100M)
-      messages, saved job launches are noise and deferred lineage
-      truncation costs ~7-16%. At cluster scale, measure the cadence at the
-      target graph size rather than extrapolating from a small fixture.
+      are identical. This driver reads each state twice (the message join
+      and the update join), so a deferred superstep's subtree appears twice
+      in the next one: k=2 was ~1.8x faster than k=1 on a 600k-vertex
+      fixture (exchange reuse dedupes the doubled subtree), but k=3 was ~5x
+      SLOWER (the duplication nests — 4 evaluations of the oldest deferred
+      step — and reuse stops covering it). Keep k <= 2.
     """
-    # edges: materialized ONCE into a flat LogicalRDD. localCheckpoint keeps
-    # the physical outputPartitioning (so a pre-repartitioned edge table
-    # still co-locates with the message join) while giving every superstep an
-    # O(1)-size plan — persist() instead would drag the whole derivation
+    # edges: materialized ONCE into a flat LogicalRDD, giving every
+    # superstep an O(1)-size plan — persist() instead would drag the whole derivation
     # subtree into each superstep's analysis (measured 10x slowdown on small
     # graphs). ``edges_checkpointed=True`` is the phase-loop contract (the
     # SCC peel): ``graph.edges`` is ALREADY an eager localCheckpoint the
@@ -201,7 +202,7 @@ def run_pregel(
         # seed it from the init census and keep it current from each census
         # below. At ci>1 it would go stale between checkpoints, so the gate
         # stays closed (None).
-        exact_frontier = big_edges and early_stop and checkpoint_interval == 1
+        exact_frontier = big_edges and checkpoint_interval == 1
         last_n_active = v_stats.get("n_active") if exact_frontier else None
         max_broadcast_rows = ADAPTIVE_BROADCAST_CELLS // max(1, len(vertices.columns))
         loop.rows(n_edges)
@@ -212,7 +213,7 @@ def run_pregel(
         converged = False
         for i in range(max_iter):
             t0 = time.perf_counter()
-            frontier = vertices.filter(F.col("active")) if early_stop else vertices
+            frontier = vertices.filter(F.col("active"))
             if last_n_active is not None and last_n_active <= max_broadcast_rows:
                 # small-frontier supersteps (the long head and tail of a
                 # BFS/SSSP on a high-diameter graph): broadcast the
@@ -236,16 +237,14 @@ def run_pregel(
             if at_checkpoint:
                 # the convergence census (the reference's Allgather payload,
                 # igmr.cpp:139-152) rides the checkpoint job
-                census = ({"n_active": F.sum(F.col("active").cast("long"))}
-                          if early_stop else {})
-                new_vertices, stats = loop.checkpoint((new_vertices, census))
+                new_vertices, stats = loop.checkpoint(
+                    (new_vertices, {"n_active": F.sum(F.col("active").cast("long"))}))
                 loop.release(state)
                 state = new_vertices
-                if early_stop:
-                    n_active = stats["n_active"]
-                    if exact_frontier:
-                        last_n_active = n_active  # exact next-frontier size
-                    converged = n_active == 0
+                n_active = stats["n_active"]
+                if exact_frontier:
+                    last_n_active = n_active  # exact next-frontier size
+                converged = n_active == 0
             vertices = new_vertices
             if collect_metrics:
                 metrics.append({"superstep": iterations,
@@ -258,6 +257,86 @@ def run_pregel(
         loop.keep(state)
     return PregelResult(vertices=vertices, iterations=iterations,
                         converged=converged, metrics=metrics)
+
+
+class DenseProgram(Protocol):
+    """A fixed-k program in which every vertex sends along every out-edge in
+    every superstep. The previous value reaches the reducer as ``own`` on
+    the vertex's self-edge, so the write back is a column expression, with
+    no join (the reference's cover mode, gmr.h:170-219)."""
+
+    def init(self, vertices: DataFrame) -> DataFrame:
+        """-> (id, value)."""
+        ...
+
+    def message(self, value: Column, pay: Column) -> Column:
+        """The message a real edge with payload ``pay`` carries from a
+        source holding ``value``."""
+        ...
+
+    def fold(self, msgs: DataFrame) -> DataFrame:
+        """(id, msg, own) -> (id, agg, own). ``msg`` is null on the
+        self-edge row and ``own`` on every other row."""
+        ...
+
+    def update(self) -> Column:
+        """The new value, a column expression over (id, agg, own)."""
+        ...
+
+
+def dense_table(vertices: DataFrame, edges: DataFrame) -> DataFrame:
+    """(src, dst, pay) edges plus one self-edge per vertex, marked by a null
+    ``pay``, hash-partitioned by ``src`` at the session's shuffle partition
+    count — the count every superstep's aggregation also uses."""
+    selfs = vertices.select(F.col("id").alias("src"), F.col("id").alias("dst"),
+                            F.lit(None).alias("pay"))
+    return edges.select("src", "dst", "pay").unionByName(selfs).repartition("src")
+
+
+def dense_superstep(table: DataFrame, state: DataFrame,
+                    program: DenseProgram) -> DataFrame:
+    """One superstep: ``table`` ⋈ ``state`` on src, one aggregation by dst,
+    then the update. -> (id, value), hash-partitioned by id."""
+    # both sides are hash-partitioned on the key: no exchange, no broadcast
+    s = state.select(F.col("id").alias("sid"), "value").hint("shuffle_hash")
+    self_edge = F.col("pay").isNull()
+    msgs = table.join(s, F.col("src") == F.col("sid")).select(
+        F.col("dst").alias("id"),
+        F.when(~self_edge, program.message(F.col("value"), F.col("pay"))).alias("msg"),
+        F.when(self_edge, F.col("value")).alias("own"))
+    return program.fold(msgs).select("id", program.update().alias("value"))
+
+
+def run_dense(graph: PropertyGraph, program: DenseProgram, *, k: int,
+              checkpoint_interval: int = 2) -> DataFrame:
+    """Run ``program`` for ``k`` supersteps over ``graph.edges`` (src, dst,
+    pay: a non-null payload). -> (id, value).
+
+    The self-edge table and the initial state are materialized once per
+    call, hash-partitioned at the shuffle partition count the small-loop
+    conf picked, with AQE off at every size
+    (:meth:`~gmr_spark.plans.loop.LoopScope.keep_partitioning`), so no
+    superstep re-shuffles the table. Each superstep reads its state once,
+    so a deferred superstep (``checkpoint_interval`` > 1) is evaluated
+    once inside the next checkpoint's job, not duplicated. The caller
+    hints every join it adds to the graph's lineage (``pin``)."""
+    spark = graph.edges.sparkSession
+    n_edges = graph.n_edges if graph.n_edges is not None else graph.edges.count()
+    with runtime.LoopScope(spark) as loop:
+        loop.rows(n_edges)
+        loop.keep_partitioning()
+        table, state = loop.checkpoint(
+            dense_table(graph.vertices, graph.edges),
+            program.init(graph.vertices).repartition("id"))
+        vertices = state
+        for i in range(1, k + 1):
+            vertices = dense_superstep(table, vertices, program)
+            if i % checkpoint_interval == 0 or i == k:
+                vertices = loop.checkpoint(vertices)
+                loop.release(state)
+                state = vertices
+        loop.keep(state)
+    return state
 
 
 def apply_reduced(vertices: DataFrame, agg: DataFrame, *, accumulate: bool,

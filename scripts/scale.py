@@ -15,9 +15,13 @@ before and after the run (a drifting pair flags a throttled host, so read
 the row's walls as upper bounds), each family's wall time and Spark
 counters, and one JSON line on stdout. The counters come from perfbench's
 ``SparkProbe`` (jobs, stages, tasks, shuffle MB). They cover what Spark's
-status store still holds (1,000 jobs and 1,000 stages by default);
-``skipped_stages`` counts the stages it had already dropped or skipped, so
-a sum cut short shows in the row.
+status store still holds (``spark.ui.retainedJobs`` and
+``spark.ui.retainedStages``, 1,000 each by default): ``evicted_stages``
+counts the stages of the family's jobs that the store had already dropped,
+so a stage sum cut short shows there, apart from ``reused_stages``, the
+stages Spark skipped because their shuffle output was reused. A row whose
+job count reached the store's job limit carries ``jobs_truncated``: jobs
+evicted from the store are missing from every counter.
 
 ``--size`` replaces the family's primary size (vertices, leaves, documents,
 vectors, files, rows, events, orders or users); without it each family runs
@@ -44,17 +48,43 @@ import scale_graph  # noqa: E402
 # enter any family's result, so the repo's committed sf0.01 copy serves
 SF_DIR = os.path.join(ROOT, "perfbench", "data", "sf0.01")
 FAMILIES = {**scale_graph.FAMILIES, **scale_corpus.FAMILIES}
-COUNTERS = ("jobs", "stages", "skipped_stages", "tasks",
+COUNTERS = ("jobs", "stages", "evicted_stages", "reused_stages", "tasks",
             "shuffle_read_mb", "shuffle_write_mb")
+
+
+def _probe(spark):
+    """perfbench's ``SparkProbe``, with its skipped-stage count split into
+    stages the status store evicted and stages skipped for shuffle reuse."""
+    from py4j.protocol import Py4JJavaError
+
+    from perfbench.probes import SparkProbe
+
+    class Probe(SparkProbe):
+        def stage_totals(self, job_ids: list[int]) -> dict[str, float]:
+            t = super().stage_totals(job_ids)
+            tracker = self.sc.statusTracker()
+            infos = [tracker.getJobInfo(j) for j in job_ids]
+            t["evicted_stages"] = t["reused_stages"] = 0
+            for s in {s for i in infos if i is not None for s in i.stageIds}:
+                try:
+                    status = self.store.lastStageAttempt(s).status().toString()
+                except Py4JJavaError:
+                    t["evicted_stages"] += 1
+                    continue
+                t["reused_stages"] += status == "SKIPPED"
+            return t
+
+    return Probe(spark)
 
 
 def run(spark, names: list[str], size: int | None, scratch: str,
         sf_dir: str) -> dict:
     """Run ``names`` in order on ``spark``; -> the JSON row."""
     from gmr_spark.session import calibration_probe
-    from perfbench.probes import SparkProbe
 
-    probe = SparkProbe(spark)
+    probe = _probe(spark)
+    retained_jobs = int(spark.sparkContext.getConf().get(
+        "spark.ui.retainedJobs", "1000"))
     calibration_probe(spark)  # warm codegen, so the probe measures the host
     out: dict = {"cpus": spark.sparkContext.defaultParallelism,
                  "calibration_sec": calibration_probe(spark), "families": {}}
@@ -68,6 +98,10 @@ def run(spark, names: list[str], size: int | None, scratch: str,
         out["families"][name] = {
             "size": n, "wall_s": round(time.perf_counter() - t0, 1),
             "counters": {k: round(counters[k], 1) for k in COUNTERS}, **row}
+        # past retainedJobs the store drops its oldest tenth, so a family
+        # whose own jobs were dropped keeps 90-100% of retainedJobs
+        if counters["jobs"] >= retained_jobs - retained_jobs // 10:
+            out["families"][name]["jobs_truncated"] = True
         print(f"{name}: {json.dumps(out['families'][name])[:400]}",
               file=sys.stderr)
     out["calibration_post_sec"] = calibration_probe(spark)
@@ -75,8 +109,10 @@ def run(spark, names: list[str], size: int | None, scratch: str,
 
 
 def main(argv: list[str] | None = None) -> None:
-    listing = "\n".join(f"  {name:<12} {fn.__module__}: default size {size:,}"
-                        for name, (fn, size) in FAMILIES.items())
+    listing = "\n".join(
+        f"  {name:<12} {fn.__module__}: default size {size:,}"
+        + (f", min size {fn.min_size:,}" if hasattr(fn, "min_size") else "")
+        for name, (fn, size) in FAMILIES.items())
     p = argparse.ArgumentParser(
         description=__doc__.split("\n\n")[0],
         epilog="families:\n" + listing,

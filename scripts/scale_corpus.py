@@ -584,8 +584,20 @@ def cells4k(spark, size, scratch, *, sf_dir):
     to end; the Lloyd stages on the 1-in-10 sample against a 256-cell
     control (the update's result is k×64 rows, so its wall follows the
     sample explode, not k: 16x the cells must cost < 4x); the full-corpus
-    assign's linearity in k; and the trained-vs-seeded balance contract."""
+    assign's linearity in k; and the trained-vs-seeded balance contract.
+
+    Refuses sizes below ``cells4k.min_size`` before building the corpus:
+    Lloyd training beats seeding only with enough samples per cell
+    (size / sample_mod / 4,096). The sparsest passing run had 9.8 per cell
+    (400k vectors); 1.2 per cell (50k) failed the balance assert."""
     cells, control, sample_mod = 4_096, 256, 10
+    density = size / sample_mod / cells
+    floor = cells4k.min_size / sample_mod / cells
+    if density < floor:
+        raise ValueError(
+            f"cells4k: {size:,} vectors give {density:.1f} Lloyd samples per "
+            f"cell, below the {floor:.1f} at which training has beaten "
+            f"seeding; run with --size {cells4k.min_size:,} or more")
     t: dict = {}
     with timed(t, "build_corpus"):
         sf = build_corpus(spark, size, scratch, sf_dir)
@@ -626,6 +638,9 @@ def cells4k(spark, size, scratch, *, sf_dir):
             "balance_improvement_vs_seeded": round(seeded_bal / bal, 1),
             "populated_cells": n_pop, "density": round(density, 1),
             "hard_balance_contract": hard, "timings_sec": t}
+
+
+cells4k.min_size = 400_000
 
 
 def decade(spark, size, scratch, *, sf_dir, cells: int = 65_536,

@@ -107,6 +107,45 @@ def test_pagerank_small_symmetry(spark):
     assert sum(pr.values()) == pytest.approx(1 + 9 * 0.5**10, rel=1e-9)
 
 
+# a real self-loop (1), parallel edges (2 -> 3 twice), a dangling vertex (4),
+# vertices with no in-edges (0, 5) and an isolated vertex (6)
+ODD_EDGES = [(0, 1), (1, 1), (1, 2), (2, 3), (2, 3), (3, 1), (3, 4), (5, 2)]
+
+
+def _pagerank_reference(edges, vertices, k, d, source=None):
+    """The declared semantics as a plain loop: messages rank/out-degree per
+    directed edge, then ``d * Σ + (1-d)/N`` where a message arrived (else
+    the prior value), or for personalized PageRank ``d * Σ`` plus the
+    source's restart mass."""
+    out_deg = {v: sum(1 for s, _ in edges if s == v) for v in vertices}
+    rank = {v: 1.0 if source is None else float(v == source) for v in vertices}
+    for _ in range(k):
+        incoming: dict[int, float] = {}
+        for s, t in edges:
+            incoming[t] = incoming.get(t, 0.0) + rank[s] / out_deg[s]
+        if source is None:
+            rank = {v: d * incoming[v] + (1 - d) / len(vertices)
+                    if v in incoming else rank[v] for v in vertices}
+        else:
+            rank = {v: d * incoming.get(v, 0.0) + (1 - d) * (v == source)
+                    for v in vertices}
+    return rank
+
+
+@pytest.mark.parametrize("source", [None, 1])
+def test_dense_pagerank_matches_reference_on_odd_graph(spark, source):
+    from gmr_spark.algorithms import personalized_pagerank
+
+    g = _graph(spark, ODD_EDGES, extra_vertices=(6,))
+    if source is None:
+        got = pagerank(g, k=5)
+    else:
+        got = personalized_pagerank(g, source=source, k=5)
+    got = {r.id: r.rank for r in got.collect()}
+    want = _pagerank_reference(ODD_EDGES, range(7), k=5, d=0.5, source=source)
+    assert got == pytest.approx(want, rel=1e-12)
+
+
 def test_scc_cycle_and_dag(spark):
     # two 3-cycles joined by a one-way edge + a tail vertex
     edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (6, 4), (6, 7)]

@@ -127,30 +127,58 @@ def test_q10_top20_is_take_ordered(spark):
 
 def test_pagerank_hub_skew_agg_is_partial_final(spark):
     """The hub fixture's hot key (hub 0, in-degree ~|lineitem|/2) must never
-    cross a shuffle as raw messages: the superstep message aggregation has to
-    be a two-phase HashAggregate on id, so each map task pre-combines to one
-    row per destination and the hot key arrives as ≤ #partitions partial
-    rows. (The final result DF is a checkpointed LogicalRDD, so this pins the
-    in-loop aggregation plan instead.)"""
-    from pyspark.sql import functions as F
-
-    from gmr_spark.algorithms.pagerank import _PageRankProgram
+    cross a shuffle as raw messages: the dense superstep's aggregation has
+    to be a two-phase HashAggregate on id, so each map task pre-combines to
+    one row per destination and the hot key arrives as ≤ #partitions
+    partial rows. (The final result DF is a checkpointed LogicalRDD, so
+    this pins the in-loop superstep plan instead.)"""
+    from gmr_spark.algorithms.pagerank import _PageRankProgram, _degree_graph
+    from gmr_spark.plans.pregel import dense_superstep, dense_table
     from gmr_spark.sources.derive import derive_graph
 
-    g = derive_graph(spark, SF, "hub")
-    out_deg = g.edges.groupBy(F.col("src").alias("deg_id")).agg(
-        F.count("*").alias("deg")
-    )
-    edges = g.edges.join(out_deg, F.col("src") == F.col("deg_id")).select(
-        "src", "dst", "deg"
-    )
+    g = _degree_graph(derive_graph(spark, SF, "hub"))
     prog = _PageRankProgram(n_vertices=6, damping=0.5)
-    vertices = prog.init(g.vertices)
-    agg = prog.aggregate(prog.messages(vertices, edges))
+    step = dense_superstep(dense_table(g.vertices, g.edges),
+                           prog.init(g.vertices), prog)
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    p = agg._jdf.queryExecution().explainString(mode)
+    p = step._jdf.queryExecution().explainString(mode)
+    assert "partial_sum(msg" in p, p
     aggs = len(re.findall(r"\(\d+\) HashAggregate", p))
     assert aggs >= 2, f"expected partial+final aggregate on id, got {aggs}"
+
+
+@pytest.mark.parametrize("big", [False, True], ids=["below_gate", "above_gate"])
+def test_dense_superstep_pair_reads_state_once(spark, monkeypatch, big):
+    """The job that materializes a pair of PageRank supersteps scans the
+    previous state checkpoint once, shuffles only at the two aggregations
+    and broadcasts nothing: the join of the self-edge table with the state
+    is co-partitioned on src. Above the size gate too, where the session's
+    AQE would leave the checkpoints without a partitioning."""
+    from gmr_spark.algorithms import pagerank
+    from gmr_spark.plans import loop as runtime
+    from gmr_spark.sources.derive import derive_graph
+
+    g = derive_graph(spark, SF, "geo", materialize=True)
+    if big:
+        monkeypatch.setattr(runtime, "BIG_GRAPH_ROWS", 0)
+    DataFrame = type(g.edges)
+    real = DataFrame.localCheckpoint
+    plans = []
+
+    def record(self, eager=True):
+        out = real(self, eager=eager)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", record)
+    pagerank(g, k=2).collect()
+    assert len(plans) == 3, plans  # edge table + initial state, then the pair
+    pair = plans[-1]
+    assert len(re.findall(r"Scan ExistingRDD\[id#\d+L,value#\d+\]", pair)) == 1, pair
+    assert len(re.findall(r"Scan ExistingRDD\[src#", pair)) == 2, pair
+    assert pair.count("ShuffledHashJoin") == 2, pair
+    assert len(re.findall(r"Exchange hashpartitioning", pair)) == 2, pair
+    assert "BroadcastExchange" not in pair, pair
 
 
 def test_scc_backward_one_job_per_superstep(spark):
@@ -281,15 +309,22 @@ def test_q3_top10_is_take_ordered(spark):
 
 
 @pytest.mark.parametrize("algo", ["bfs", "connected_components",
-                                  "minimum_spanning_forest", "k_core", "scc"])
+                                  "minimum_spanning_forest", "k_core", "scc",
+                                  "pagerank", "label_propagation"])
 def test_pregel_big_graph_gating_end_to_end(spark, monkeypatch, algo):
     """Executes each gated loop's shuffle_hash branch (not just the hint
     semantics the test above pins): with BIG_GRAPH_ROWS forced to 0 in the
     loop runtime, the one module that owns it, every graph takes the
     big-graph path — run_pregel's for bfs, the label kernel's for
-    connected components, the MST phase joins, the k-core peel and SCC's
-    trim and membership joins — and results must be identical to the
-    ungated run: the hints may only change physical join strategy."""
+    connected components, the MST phase joins, the k-core peel, SCC's
+    trim and membership joins, and PageRank's pinned degree join and
+    session-sized partitions in run_dense (PageRank and LPA) — and results
+    must be identical to the ungated run: the hints may only change
+    physical join strategy. PageRank is compared at 9 decimals: the
+    partition count, and so the order of its partial sums, differs between
+    the two runs."""
+    from pyspark.sql import functions as F
+
     from gmr_spark import algorithms as A
     from gmr_spark.algorithms.sssp import bfs
     from gmr_spark.plans import loop as runtime
@@ -302,6 +337,9 @@ def test_pregel_big_graph_gating_end_to_end(spark, monkeypatch, algo):
         "k_core": ("cs", lambda g: A.k_core(g, k=3)),
         # SCC on geo runs for ~14 s; the nation ring has a non-trivial SCC
         "scc": ("nation_ring", A.strongly_connected_components),
+        "pagerank": ("geo", lambda g: A.pagerank(g, k=4).select(
+            "id", F.round("rank", 9))),
+        "label_propagation": ("geo", lambda g: A.label_propagation(g, k=4)),
     }[algo]
     g = derive_graph(spark, SF, graph_name, materialize=True)
     want = {tuple(r) for r in run(g).collect()}
@@ -883,6 +921,8 @@ def _run_loop(name: str, spark, g):
 
     if name == "run_pregel":
         return run_pregel(g, _SSSPProgram(0, weighted=False))
+    if name == "run_dense":
+        return A.pagerank(g, k=3)
     if name == "cc":
         return A.connected_components(g)
     if name == "mst":
@@ -905,8 +945,8 @@ def _run_loop(name: str, spark, g):
         k=3, iters=1)
 
 
-@pytest.mark.parametrize("name", ["run_pregel", "cc", "mst", "scc", "k_core",
-                                  "k_truss", "svdpp", "kmeans"])
+@pytest.mark.parametrize("name", ["run_pregel", "run_dense", "cc", "mst", "scc",
+                                  "k_core", "k_truss", "svdpp", "kmeans"])
 def test_loop_checkpoint_failure_releases_blocks_and_restores_conf(
         spark, monkeypatch, name):
     """Every iterative loop, failed at each of its localCheckpoint calls in
