@@ -68,21 +68,14 @@ def _degree_graph(graph: PropertyGraph) -> PropertyGraph:
                          n_edges=n_edges)
 
 
-def pagerank(graph: PropertyGraph, *, k: int = 10, damping: float = 0.5,
-             checkpoint_interval: int = 2) -> DataFrame:
-    """Fixed-k PageRank. -> (id BIGINT, rank DOUBLE).
-
-    ``checkpoint_interval`` is exposed for cadence measurements (SCALE.md's
-    G2 cadence sweep). At sf0.1 ci=1 lost to ci=2 on every bench PageRank
-    graph: the frontier is every vertex, so ci=1 buys no broadcast-join win
-    and costs one checkpoint job per superstep. At G2 size (4.8M V / 110M
-    E), where per-superstep work dominates, ci=1 measured slightly faster
-    (171.8 vs 183.9 s, SCALE.md)."""
+def pagerank(graph: PropertyGraph, *, k: int = 10,
+             damping: float = 0.5) -> DataFrame:
+    """Fixed-k PageRank. -> (id BIGINT, rank DOUBLE). The checkpoint
+    cadence is ``run_dense``'s (SCALE.md, "Checkpoint cadence")."""
     # reuse the builder's fused |V| census when present (derived graphs
     # carry it); a count job only for graphs built without one
     n = graph.n_vertices if graph.n_vertices is not None else graph.vertices.count()
-    ranks = run_dense(_degree_graph(graph), _PageRankProgram(n, damping),
-                      k=k, checkpoint_interval=checkpoint_interval)
+    ranks = run_dense(_degree_graph(graph), _PageRankProgram(n, damping), k=k)
     return ranks.select("id", F.col("value").alias("rank"))
 
 
@@ -108,11 +101,9 @@ class _PersonalizedPageRankProgram(_PageRankProgram):
 
 
 def personalized_pagerank(graph: PropertyGraph, source: int, *, k: int = 10,
-                          damping: float = 0.5,
-                          checkpoint_interval: int = 2) -> DataFrame:
+                          damping: float = 0.5) -> DataFrame:
     """Fixed-k personalized PageRank from ``source``.
     -> (id BIGINT, rank DOUBLE). Same plan shape as ``pagerank``."""
     ranks = run_dense(_degree_graph(graph),
-                      _PersonalizedPageRankProgram(source, damping),
-                      k=k, checkpoint_interval=checkpoint_interval)
+                      _PersonalizedPageRankProgram(source, damping), k=k)
     return ranks.select("id", F.col("value").alias("rank"))

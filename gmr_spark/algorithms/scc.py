@@ -22,28 +22,29 @@ repeat until every vertex is assigned:
      phases instead of K (pinned by tests/test_fixtures_graph.py). The id
      tiebreak keeps the order total, so a mix collision costs nothing.
   2. vertices whose color equals their own key are SCC roots;
-  3. *membership* phase — from each root, propagate backward along reversed
-     edges, but only across vertices of the same color; every vertex reached
-     is in the root's SCC (mutual reachability: forward via the color,
-     backward via the walk);
+  3. *membership* phase — from each root, propagate backward along edges
+     (dst to src), but only across vertices of the same color; every vertex
+     reached is in the root's SCC (mutual reachability: forward via the
+     color, backward via the walk);
   4. relabel each membership group by its minimum vertex id, assign, remove,
      repeat.
 
 Output label = min vertex id of the SCC (deterministic, independent of the
 scramble — only the PHASE STRUCTURE depends on it).
 
-Scale: each phase is two frontier Pregel loops plus the trim's semi-joins.
+Scale: each phase is two ``run_pregel`` loops (coloring, membership) over
+the remainder's edge checkpoint, read in place, plus the trim's semi-joins.
 The superstep count of one coloring pass is bounded by the remaining graph's
 directed diameter — a condensation CHAIN of depth D forces ≥D supersteps in
 phase 1 regardless of scrambling (label propagation is latency-bound on
 deep condensations; that bound is intrinsic to the algorithm class, not this
 plan). Every checkpoint is owned by a LoopScope (plans/loop.py), which
 releases superseded remainders as the peel advances and everything but
-the output on any exit. Per-superstep localCheckpoint bounds lineage. The
-checkpoints keep their stats: the membership state's size estimate grows
-additively (9 → 219 bits over 31 supersteps on a 30-ring), so no step
-re-leafs. The |V|-scaling join sides go through the loop runtime's gate
-(plans/loop.pin) on the phase's remaining vertex count.
+the output on any exit. The checkpoints keep their stats: the membership
+state's size estimate grows additively (tests/test_plans.py pins the
+bound), so no step re-leafs. The trim's |V|-scaling join sides go through
+the loop runtime's gate (plans/loop.pin) on the phase's remaining vertex
+count; ``run_pregel`` gates its own.
 """
 
 from __future__ import annotations
@@ -52,6 +53,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from gmr_spark.graph import PropertyGraph
 from gmr_spark.plans.loop import LoopScope, pin
+from gmr_spark.plans.pregel import PregelProgram, PregelResult, run_pregel
 
 
 def _scramble(c: Column) -> Column:
@@ -103,92 +105,49 @@ class _ColorProgram:
         )
 
 
-def _min_forward_colors(vertices: DataFrame, edges: DataFrame, max_iter: int,
-                        *, scramble: bool = True,
-                        n_edges: int | None = None
-                        ) -> tuple[DataFrame, DataFrame, int]:
-    """(id, color): the vertex id whose (mix, id) key is minimal among all
-    vertices that reach id along ``edges`` (incl. itself) — i.e. the elected
-    root of id's color region. Returns (colors view, the underlying
-    checkpoint for the caller to release, supersteps). ``edges`` must be
-    the caller's eager checkpoint, with its row count as ``n_edges``: the
-    pregel loop then neither copies an O(|E|) snapshot per phase nor pays a
-    count job for it."""
-    from gmr_spark.plans.pregel import run_pregel
+class _MemberProgram:
+    """Backward walk from each color root through same-colored vertices:
+    ``member`` marks the vertices that reach their color's root, i.e. the
+    members of the root's SCC. Messages travel edges backward (to ``src``
+    from a frontier ``dst``), so no reversed edge table is built."""
 
-    with LoopScope(edges.sparkSession) as loop:
-        result = run_pregel(
-            PropertyGraph(vertices=vertices.select("id"), edges=edges),
-            _ColorProgram(scramble), max_iter=max_iter,
-            edges_checkpointed=True, n_edges=n_edges,
-        )
-        if not result.converged:
-            # a non-fixpoint coloring is not merely slow, it is WRONG: a
-            # vertex whose true min-reaching key has not arrived yet can
-            # elect itself root and peel a strict subset of its SCC — a
-            # silent split. Same loud-failure contract as k_core /
-            # pregel_census_bfs.
-            raise RuntimeError(
-                f"SCC color propagation did not converge within max_iter="
-                f"{max_iter} supersteps — raise max_iter (deep condensations "
-                "need >= their directed diameter)")
-        loop.keep(result.vertices)
-    colors = result.vertices.select("id", F.col("value.rid").alias("color"))
-    return colors, result.vertices, result.iterations
+    def init(self, colors: DataFrame) -> DataFrame:
+        root = F.col("color") == F.col("id")
+        return colors.select("id", "color", root.alias("member"),
+                             root.alias("active"))
+
+    def messages(self, frontier: DataFrame, edges: DataFrame) -> DataFrame:
+        f = frontier.select(F.col("id").alias("fid"), F.col("color").alias("fcolor"))
+        return edges.join(f, F.col("dst") == F.col("fid")).select(
+            F.col("src").alias("id"), F.col("fcolor").alias("msg"))
+
+    def aggregate(self, msgs: DataFrame) -> DataFrame:
+        return msgs.groupBy("id").agg(F.collect_set("msg").alias("agg"))
+
+    def update(self, vertices: DataFrame, agg: DataFrame) -> DataFrame:
+        newly = ~F.col("member") & F.coalesce(
+            F.array_contains(F.col("agg"), F.col("color")), F.lit(False))
+        return vertices.join(agg, "id", "left").select(
+            "id", "color", (F.col("member") | newly).alias("member"),
+            newly.alias("active"))
 
 
-def _backward_members(colors: DataFrame, edges: DataFrame, max_iter: int,
-                      n_remaining: int) -> tuple[DataFrame, DataFrame]:
-    """(members view, final state checkpoint — caller releases the latter
-    once the members are materialized elsewhere): vertices that reach their
-    color's root backward through same-colored vertices — i.e. the members
-    of each root's SCC.
-
-    ONE job per superstep: the convergence census rides the eager
-    localCheckpoint's materializing job as an ``Observation`` metric (same
-    pattern as ``run_pregel``) instead of a second ``limit(1).count()``
-    action — halves driver round-trips in the peel loop. The |V|-scaling
-    state sides are pinned on ``n_remaining``, the phase's vertex count."""
-    with LoopScope(edges.sparkSession) as loop:
-        state = loop.checkpoint(colors.select(
-            "id", "color", (F.col("color") == F.col("id")).alias("member"),
-            (F.col("color") == F.col("id")).alias("active"),
-        ))
-        rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        for _ in range(max_iter):
-            frontier = state.filter("active").select(
-                F.col("id").alias("fid"), F.col("color").alias("fcolor")
-            )
-            msgs = rev.join(pin(frontier, n_remaining),
-                            F.col("src") == F.col("fid")).select(
-                F.col("dst").alias("id"), F.col("fcolor").alias("msg")
-            )
-            agg = msgs.groupBy("id").agg(F.collect_set("msg").alias("msg_colors"))
-            newly = (
-                ~F.col("member")
-                & F.col("msg_colors").isNotNull()
-                & F.array_contains(F.coalesce(F.col("msg_colors"), F.array()), F.col("color"))
-            )
-            new_state, census = loop.checkpoint((
-                pin(state, n_remaining).join(agg, "id", "left")
-                .select(
-                    "id", "color",
-                    (F.col("member") | newly).alias("member"),
-                    newly.alias("active"),
-                ),
-                {"n_active": F.sum(F.col("active").cast("long"))}))
-            loop.release(state)
-            state = new_state
-            if census["n_active"] == 0:
-                break
-        else:
-            # incomplete membership silently splits the root's SCC (the
-            # unreached members peel under their own colors next phase)
-            raise RuntimeError(
-                f"SCC backward membership did not converge within max_iter="
-                f"{max_iter} supersteps — raise max_iter")
-        loop.keep(state)
-    return state.filter("member").select("id", "color"), state
+def _fixpoint(vertices: DataFrame, edges: DataFrame, n_edges: int,
+              program: PregelProgram, max_iter: int,
+              phase: str) -> PregelResult:
+    """``run_pregel`` of ``program`` over the remainder (``edges`` is its
+    checkpoint, read in place), raising unless it converged: a coloring
+    short of its fixpoint can elect a false root, and a membership short of
+    it leaves members behind, and either silently splits an SCC."""
+    result = run_pregel(
+        PropertyGraph(vertices=vertices, edges=edges, n_edges=n_edges),
+        program, max_iter=max_iter)
+    if not result.converged:
+        raise RuntimeError(
+            f"SCC {phase} did not converge within max_iter={max_iter} "
+            "supersteps — raise max_iter (deep condensations need >= their "
+            "directed diameter)")
+    return result
 
 
 def _trim_pass(remaining_v: DataFrame, remaining_e: DataFrame,
@@ -286,12 +245,16 @@ def strongly_connected_components(graph: PropertyGraph, *, max_iter: int = 120,
                 stats["trimmed"] += t_n
             if n_remaining == 0:
                 break
-            colors, colors_ckpt, steps = _min_forward_colors(
-                remaining_v, remaining_e, max_iter, scramble=scramble,
-                n_edges=n_rem_e)
-            stats["color_supersteps"] += steps
-            members, member_state = _backward_members(
-                colors, remaining_e, max_iter, n_remaining)
+            colored = _fixpoint(remaining_v, remaining_e,
+                                n_rem_e, _ColorProgram(scramble), max_iter,
+                                "color propagation")
+            stats["color_supersteps"] += colored.iterations
+            colors = colored.vertices.select(
+                "id", F.col("value.rid").alias("color"))
+            membership = _fixpoint(colors, remaining_e, n_rem_e,
+                                   _MemberProgram(), max_iter,
+                                   "backward membership")
+            members = membership.vertices.filter("member").select("id", "color")
             # relabel each membership group by its min vertex id — the
             # declared output contract, independent of the scramble
             scc_min = members.groupBy("color").agg(F.min("id").alias("scc"))
@@ -319,7 +282,7 @@ def strongly_connected_components(graph: PropertyGraph, *, max_iter: int = 120,
             n_rem_e = e_stats["n"]
             # the coloring result and the membership state are dead once
             # part landed (part is a fresh checkpoint)
-            loop.release(colors_ckpt, member_state)
+            loop.release(colored.vertices, membership.vertices)
             n_remaining = v_stats["n"]
         else:
             if n_remaining > 0:

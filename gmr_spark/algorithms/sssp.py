@@ -58,30 +58,22 @@ class _SSSPProgram:
 
 
 def sssp(graph: PropertyGraph, source: int, *, weighted: bool = True,
-         max_iter: int = 120,
-         checkpoint_interval: int | None = None) -> DataFrame:
+         max_iter: int = 120) -> DataFrame:
     """-> (id BIGINT, dist DOUBLE); dist NULL = unreachable.
 
-    ``checkpoint_interval=1`` additionally arms run_pregel's exact-census
-    adaptive join strategy (broadcast small frontiers) — the measured right
-    cadence for G2-class graphs, where SSSP's frontier is tiny for most of
-    a high-diameter run (see SCALE.md). Default (None) lets run_pregel pick
-    the measured side of the crossover from the edge count it already takes
-    on checkpointed blocks — no extra scan of unmaterialized edge lineage
-    (round-6 ADVICE item 1)."""
-    result = run_pregel(graph, _SSSPProgram(source, weighted), max_iter=max_iter,
-                        checkpoint_interval=checkpoint_interval)
+    ``run_pregel`` picks the cadence from the edge count: on G2-class
+    graphs it checkpoints every superstep and broadcasts small frontiers,
+    the measured winner where SSSP's frontier is tiny for most of a
+    high-diameter run (SCALE.md)."""
+    result = run_pregel(graph, _SSSPProgram(source, weighted), max_iter=max_iter)
     return result.vertices.select("id", F.col("value").alias("dist"))
 
 
-def bfs(graph: PropertyGraph, source: int, *, max_iter: int = 120,
-        checkpoint_interval: int | None = None) -> DataFrame:
+def bfs(graph: PropertyGraph, source: int, *, max_iter: int = 120) -> DataFrame:
     """BFS levels = unit-weight SSSP (the reference's actual SSSP,
-    algorithms.h:17-18). -> (id, level DOUBLE). Cadence auto-picked by
-    graph size inside run_pregel like :func:`sssp`."""
+    algorithms.h:17-18). -> (id, level DOUBLE)."""
     result = run_pregel(graph, _SSSPProgram(source, weighted=False),
-                        max_iter=max_iter,
-                        checkpoint_interval=checkpoint_interval)
+                        max_iter=max_iter)
     return result.vertices.select("id", F.col("value").alias("level"))
 
 
@@ -91,7 +83,7 @@ class _LandmarkBFSProgram:
     column per landmark (d0..dL-1) instead of the reference's single float
     (partition.h:39) — run_pregel carries arbitrary DataFrame state, so L
     landmarks cost one graph traversal of max-eccentricity supersteps, not
-    L sequential traversals (round-4 verdict item 3).
+    L sequential traversals.
 
     Per-superstep shape is identical to _SSSPProgram's widened L-fold:
     frontier ⋈ edges produces one row per out-edge carrying all L candidate

@@ -83,14 +83,9 @@ class PropertyGraph:
         rev = self.edges.select(
             F.col("dst").alias("src"), F.col("src").alias("dst"), "weight"
         )
-        try:
-            is_rdd_backed = (
-                self.edges._jdf.queryExecution().logical().nodeName()
-                == "LogicalRDD"
-            )
-        except Exception:
-            is_rdd_backed = False
-        if is_rdd_backed:
+        from gmr_spark.plans.loop import is_checkpoint
+
+        if is_checkpoint(self.edges):
             n_parts = self.edges.rdd.getNumPartitions()
         else:
             spark = self.edges.sparkSession

@@ -71,6 +71,19 @@ def pin(df: DataFrame, n_rows: int, *, releafed: bool = False) -> DataFrame:
     return df.hint("broadcast") if releafed else df
 
 
+def is_checkpoint(df: DataFrame) -> bool:
+    """Whether ``df`` is a checkpoint leaf: its analyzed plan is a
+    ``LogicalRDD`` over persisted blocks (a ``localCheckpoint`` result,
+    not a projection or filter of one). False, with a warning, when the
+    private JVM API is unavailable, so callers take their non-leaf path."""
+    try:
+        return df._jdf.queryExecution().analyzed().getClass() \
+            .getSimpleName() == "LogicalRDD"
+    except Exception:
+        _warn_internal_api_fallback("is_checkpoint")
+        return False
+
+
 def _drop_checkpoint_blocks(df: DataFrame) -> None:
     """Unpersist the block store behind a localCheckpointed DataFrame.
 
@@ -88,13 +101,12 @@ def _drop_checkpoint_blocks(df: DataFrame) -> None:
     process instead of passing silently.
     """
     try:
-        plan = df._jdf.queryExecution().analyzed()
         # non-checkpointed frames (e.g. an initial empty LocalRelation
         # threaded through a loop's state variable) are a legitimate no-op,
         # not an API failure — only LogicalRDD leaves hold persisted blocks
-        if plan.getClass().getSimpleName() != "LogicalRDD":
+        if not is_checkpoint(df):
             return
-        plan.rdd().unpersist(False)
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
         _warn_internal_api_fallback("_drop_checkpoint_blocks")
 

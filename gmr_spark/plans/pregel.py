@@ -29,10 +29,15 @@ loop conf, the size gate):
   MPI_Barrier + tick metrics (O16/O20)        localCheckpoint + perf_counter
 
 Iterative lineage control: the reference mutates arrays in place; Spark plans
-grow per iteration, so the loops end every ``checkpoint_interval``-th
-superstep with ``localCheckpoint(eager=True)`` to truncate lineage (on a
-real cluster, swap for ``checkpoint()`` against a reliable store via
-``reliable_checkpoint_dir``).
+grow per iteration, so the loops materialize every ``ci``-th superstep with
+``localCheckpoint(eager=True)`` to truncate lineage (on a real cluster, swap
+for ``checkpoint()`` against a reliable store via
+``reliable_checkpoint_dir``). The drivers, not their callers, pick ``ci``:
+``run_dense`` always uses 2; ``run_pregel`` uses 1 above the loop runtime's
+``BIG_GRAPH_ROWS`` edges or when per-superstep metrics are collected, else 2
+(SCALE.md, "Checkpoint cadence"). ``run_pregel`` reads a graph's edges in
+place when they already are a checkpoint leaf, and snapshots them once
+otherwise.
 """
 
 from __future__ import annotations
@@ -70,15 +75,13 @@ class PregelProgram(Protocol):
     """The user-query surface — replaces the reference's ``GMR`` abstract class
     (initGraph/map/reduce/keyComp, gmr.h:92-123).
 
-    CONTRACT — empty-frontier idempotence: with ``checkpoint_interval=k > 1``
-    the driver tests convergence only every k-th superstep, so up to k-1
-    supersteps may run AFTER the frontier empties. A program must therefore
-    be a no-op on an empty frontier: ``messages(empty, edges)`` produces no
-    messages, and ``update(vertices, empty_agg)`` leaves every value
-    unchanged and every ``active`` flag false. All shipped programs satisfy
-    this (their update only changes values where a message arrived); a
-    program that violates it (e.g. unconditional decay applied in update)
-    must be run with ``checkpoint_interval=1``.
+    CONTRACT — empty-frontier idempotence: below the size gate the driver
+    tests convergence only every second superstep, so one superstep may run
+    AFTER the frontier empties. A program must therefore be a no-op on an
+    empty frontier: ``messages(empty, edges)`` produces no messages, and
+    ``update(vertices, empty_agg)`` leaves every value unchanged and every
+    ``active`` flag false. All shipped programs satisfy this: their update
+    only changes values where a message arrived.
     """
 
     def init(self, vertices: DataFrame) -> DataFrame:
@@ -101,11 +104,11 @@ class PregelProgram(Protocol):
 
 @dataclass
 class PregelResult:
-    """``iterations`` counts supersteps RUN, which with
-    ``checkpoint_interval=k`` can overshoot the convergence point by up to
-    k-1 no-op supersteps (convergence is only observed at checkpoints).
-    Values are exact either way — see the empty-frontier-idempotence
-    contract on :class:`PregelProgram`."""
+    """``iterations`` counts supersteps RUN, which at a checkpoint interval
+    of 2 can overshoot the convergence point by one no-op superstep
+    (convergence is only observed at checkpoints). Values are exact either
+    way — see the empty-frontier-idempotence contract on
+    :class:`PregelProgram`."""
 
     vertices: DataFrame
     iterations: int
@@ -119,60 +122,55 @@ def run_pregel(
     *,
     max_iter: int = MAX_ITERATION,
     collect_metrics: bool = False,
-    checkpoint_interval: int | None = 2,
-    edges_checkpointed: bool = False,
-    n_edges: int | None = None,
 ) -> PregelResult:
     """Run ``program`` to convergence (no active vertices) or ``max_iter``.
 
-    ``checkpoint_interval=None`` auto-picks the cadence from the edge count
-    this function already takes on just-materialized checkpoint blocks
-    (metadata-cheap): ci=1 above the loop runtime's ``BIG_GRAPH_ROWS`` —
-    arming the exact-census adaptive frontier broadcast that wins at G2
-    class (SCALE.md cadence sweep) — else ci=2, where job-launch overhead
-    dominates and halving the job count wins. Callers with declared sizes
-    need no extra scan.
+    Cadence rule: the state is checkpointed every superstep (ci=1) when
+    |E| exceeds the loop runtime's ``BIG_GRAPH_ROWS`` — which arms the
+    exact-census adaptive frontier broadcast that wins at G2 class — and
+    when ``collect_metrics`` asks for a census per superstep; otherwise
+    every second superstep (ci=2), where job launches dominate and halving
+    them wins (SCALE.md, "Checkpoint cadence").
+
+    Leaf rule: edges that already are a checkpoint leaf
+    (:func:`~gmr_spark.plans.loop.is_checkpoint`: derived
+    ``materialize=True`` graphs, SCC's remainders) are read in place and
+    left to their owner; other edges are snapshotted once per call and
+    released on return. |E| comes from the snapshot's census; for a leaf,
+    from ``graph.n_edges``, else from one count of the leaf.
 
     Scale notes (100 TB):
-    - edges are materialized once. Their checkpoint runs under the
-      session's AQE, before the loop conf applies, and a checkpoint
-      materialized under AQE reports no partitioning: below the size gate
-      the message join broadcasts the edge table, above it the join
-      re-shuffles the edges every superstep.
+    - an edge snapshot runs under the session's AQE, before the loop conf
+      applies, and a checkpoint materialized under AQE reports no
+      partitioning: below the size gate the message join broadcasts the
+      edge table, above it the join re-shuffles the edges every superstep.
     - per-superstep state is localCheckpointed (flat O(1) logical plan per
       superstep across the reference's 120-iteration cap, igmr.cpp:116).
-    - ONE job per superstep: the convergence census (the reference's
+    - ONE job per checkpoint: the convergence census (the reference's
       Allgather, igmr.cpp:139-152) rides the checkpoint's materializing job
       as an ``Observation`` metric instead of a second count() action.
-    - each superstep's checkpoint blocks are released as soon as the next
-      superstep is materialized, and every block the call materialized
-      except the returned state is released on every exit
+    - each checkpoint's blocks are released as soon as the next one is
+      materialized, and every block the call materialized except the
+      returned state is released on every exit
       (:class:`~gmr_spark.plans.loop.LoopScope`).
-    - ``checkpoint_interval=k`` materializes every k-th superstep only:
-      intermediate supersteps stay lazy, trading recompute inside the next
-      checkpoint job for k-1 fewer job launches + block writes. Convergence
-      is then tested every k steps; extra post-convergence supersteps are
-      no-ops (empty frontier -> no messages -> values unchanged), so results
-      are identical. This driver reads each state twice (the message join
-      and the update join), so a deferred superstep's subtree appears twice
-      in the next one: k=2 was ~1.8x faster than k=1 on a 600k-vertex
-      fixture (exchange reuse dedupes the doubled subtree), but k=3 was ~5x
-      SLOWER (the duplication nests — 4 evaluations of the oldest deferred
-      step — and reuse stops covering it). Keep k <= 2.
+    - at ci=2 the odd supersteps stay lazy, trading recompute inside the
+      next checkpoint job for one fewer job launch + block write;
+      convergence is then tested every second superstep, and a
+      post-convergence superstep is a no-op (empty frontier -> no messages
+      -> values unchanged), so results are identical. This driver reads
+      each state twice (the message join and the update join), so a
+      deferred superstep's subtree appears twice in the next one: ci=2 was
+      ~1.8x faster than ci=1 on a 600k-vertex fixture (exchange reuse
+      dedupes the doubled subtree), but ci=3 was ~5x SLOWER (the
+      duplication nests — 4 evaluations of the oldest deferred step — and
+      reuse stops covering it).
     """
-    # edges: materialized ONCE into a flat LogicalRDD, giving every
-    # superstep an O(1)-size plan — persist() instead would drag the whole derivation
-    # subtree into each superstep's analysis (measured 10x slowdown on small
-    # graphs). ``edges_checkpointed=True`` is the phase-loop contract (the
-    # SCC peel): ``graph.edges`` is ALREADY an eager localCheckpoint the
-    # caller owns, so no O(|E|) snapshot is copied per call and the caller's
-    # blocks are left alone. The set-up censuses ride the two checkpoint
-    # jobs as Observations; a caller that pre-checkpointed the edges passes
-    # the edge census it already paid for via ``n_edges``, and only a
-    # caller with neither pays a count job on its materialized blocks.
+    # edges: one flat LogicalRDD gives every superstep an O(1)-size plan —
+    # persist() instead would drag the whole derivation subtree into each
+    # superstep's analysis (measured 10x slowdown on small graphs)
     with runtime.LoopScope(graph.edges.sparkSession) as loop:
-        if edges_checkpointed:
-            edges = graph.edges
+        if runtime.is_checkpoint(graph.edges):
+            edges, n_edges = graph.edges, graph.n_edges
         else:
             edges, e_stats = loop.checkpoint(
                 (graph.edges, {"n": F.count(F.lit(1))}))
@@ -195,15 +193,12 @@ def run_pregel(
         # are left untouched — Catalyst's measured-good fixture choices
         # (broadcast tiny frontiers/aggs) stand.
         big_edges = n_edges > runtime.BIG_GRAPH_ROWS
-        if checkpoint_interval is None:
-            checkpoint_interval = 1 if big_edges else 2
+        interval = 1 if big_edges or collect_metrics else 2
         # exact frontier size for the adaptive join strategy: with ci=1 the
         # checkpoint census counts the NEXT superstep's frontier exactly, so
         # seed it from the init census and keep it current from each census
-        # below. At ci>1 it would go stale between checkpoints, so the gate
-        # stays closed (None).
-        exact_frontier = big_edges and checkpoint_interval == 1
-        last_n_active = v_stats.get("n_active") if exact_frontier else None
+        # below. Below the gate the strategy stays off (None).
+        last_n_active = v_stats.get("n_active") if big_edges else None
         max_broadcast_rows = ADAPTIVE_BROADCAST_CELLS // max(1, len(vertices.columns))
         loop.rows(n_edges)
 
@@ -232,7 +227,7 @@ def run_pregel(
             new_vertices = program.update(vertices, agg)
 
             iterations = i + 1
-            at_checkpoint = (iterations % checkpoint_interval == 0) or iterations == max_iter
+            at_checkpoint = iterations % interval == 0 or iterations == max_iter
             n_active: int | None = None
             if at_checkpoint:
                 # the convergence census (the reference's Allgather payload,
@@ -242,7 +237,7 @@ def run_pregel(
                 loop.release(state)
                 state = new_vertices
                 n_active = stats["n_active"]
-                if exact_frontier:
+                if big_edges:
                     last_n_active = n_active  # exact next-frontier size
                 converged = n_active == 0
             vertices = new_vertices
@@ -307,8 +302,8 @@ def dense_superstep(table: DataFrame, state: DataFrame,
     return program.fold(msgs).select("id", program.update().alias("value"))
 
 
-def run_dense(graph: PropertyGraph, program: DenseProgram, *, k: int,
-              checkpoint_interval: int = 2) -> DataFrame:
+def run_dense(graph: PropertyGraph, program: DenseProgram, *,
+              k: int) -> DataFrame:
     """Run ``program`` for ``k`` supersteps over ``graph.edges`` (src, dst,
     pay: a non-null payload). -> (id, value).
 
@@ -316,10 +311,13 @@ def run_dense(graph: PropertyGraph, program: DenseProgram, *, k: int,
     call, hash-partitioned at the shuffle partition count the small-loop
     conf picked, with AQE off at every size
     (:meth:`~gmr_spark.plans.loop.LoopScope.keep_partitioning`), so no
-    superstep re-shuffles the table. Each superstep reads its state once,
-    so a deferred superstep (``checkpoint_interval`` > 1) is evaluated
-    once inside the next checkpoint's job, not duplicated. The caller
-    hints every join it adds to the graph's lineage (``pin``)."""
+    superstep re-shuffles the table. The state is checkpointed every second
+    superstep (and after the last): each superstep reads its state once,
+    so the deferred one is evaluated once inside the next checkpoint's
+    job, not duplicated. A dense frontier arms no broadcast, so a
+    per-superstep checkpoint only adds jobs (SCALE.md, "Checkpoint
+    cadence"). The caller hints every join it adds to the graph's lineage
+    (``pin``)."""
     spark = graph.edges.sparkSession
     n_edges = graph.n_edges if graph.n_edges is not None else graph.edges.count()
     with runtime.LoopScope(spark) as loop:
@@ -331,7 +329,7 @@ def run_dense(graph: PropertyGraph, program: DenseProgram, *, k: int,
         vertices = state
         for i in range(1, k + 1):
             vertices = dense_superstep(table, vertices, program)
-            if i % checkpoint_interval == 0 or i == k:
+            if i % 2 == 0 or i == k:
                 vertices = loop.checkpoint(vertices)
                 loop.release(state)
                 state = vertices

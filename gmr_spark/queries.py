@@ -98,7 +98,7 @@ def _q_pregel_census_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     g = derive_graph(spark, sf_dir, "geo", materialize=True)
     res = run_pregel(g, _SSSPProgram(0, weighted=False), max_iter=K_BFS_GEO,
-                     checkpoint_interval=1, collect_metrics=True)
+                     collect_metrics=True)
     # the oracle unconditionally emits the trailing n_active=0 row, which
     # run_pregel only records when the frontier empties within max_iter —
     # fail loudly here (not as a silent one-row oracle mismatch) if a future

@@ -14,6 +14,36 @@ from pyspark.sql import SparkSession
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+# cgroup v2, then v1: the memory limit of the process's own cgroup
+_CGROUP_MEMORY_LIMITS = ("/sys/fs/cgroup/memory.max",
+                         "/sys/fs/cgroup/memory/memory.limit_in_bytes")
+
+
+def _memory_limit() -> int:
+    """The bytes this process may use: the host's physical memory, or its
+    cgroup's memory limit where that is smaller (v2 writes ``max`` and v1 a
+    huge number when there is none)."""
+    limit = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                limit = min(limit, int(f.read()))
+        except (OSError, ValueError):
+            pass
+    return limit
+
+
+def _driver_memory(limit_bytes: int) -> str:
+    """The default driver heap for a process that may use ``limit_bytes``
+    of memory: half of it in whole GiB, at least 1g and at most 16g. A heap
+    sized to the whole host starves everything else on it (a 16g default
+    grew the JVM to 13.5 GB RSS on a 15 GB host at quarter scale), and
+    above 16g G1 stalled for seconds at a time growing and shrinking the
+    heap (five 48g sessions each hit at least one 25-70 s spike on an
+    8-15 s Pregel query; 8-16g sessions ran 20+ times without one)."""
+    return f"{max(1, min(16, limit_bytes // 2 // 2**30))}g"
+
+
 def get_session(app_name: str = "gmr_spark", cpus: str | int | None = None) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
@@ -36,14 +66,10 @@ def get_session(app_name: str = "gmr_spark", cpus: str | int | None = None) -> S
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 16g, not "as much as the box has": on this host G1 with a 48g max
-        # heap stalled multi-second at unpredictable points (measured r14:
-        # five 48g sessions each hit >=1 spike of 25-70s on an 8-15s pregel
-        # query — GC log shows ms pauses, so the stalls are heap
-        # grow/uncommit churn, not collections; 8-16g sessions were stable
-        # across 20+ runs, 0 spikes). Size the heap to the workload (guide
-        # §5); scale probes that need more set SPARK_GRAFT_DRIVER_MEM.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # scale probes that need a different heap set SPARK_GRAFT_DRIVER_MEM
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or _driver_memory(_memory_limit()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # explicit-hint broadcasts (adaptive frontier, triangle closure

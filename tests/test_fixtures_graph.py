@@ -312,8 +312,8 @@ def test_shortest_paths_multi_landmark_single_pass(spark):
         assert {v: d[i] for v, d in got.items()} == want, f"landmark {lm}"
 
     # eccentricity of the small graph from these landmarks is 3; with the
-    # checkpoint_interval=2 census cadence convergence is observed at most
-    # one superstep late
+    # small-graph census every second superstep convergence is observed at
+    # most one superstep late
     res = run_pregel(g, _LandmarkBFSProgram(landmarks), max_iter=20)
     assert res.converged and res.iterations <= 3 + 2
 

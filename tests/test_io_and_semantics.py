@@ -250,3 +250,29 @@ def test_interleaved_sf_dirs_share_one_session(spark):
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01",
                    "/root/testdata/sf0.001"):
         check(sf_dir)
+
+
+def test_default_driver_memory_fits_the_host(tmp_path, monkeypatch):
+    """The default driver heap is half the process's memory limit in whole
+    GiB, between 1g and 16g: a 15.7 GB host gets 7g, a 64 GB host 16g. The
+    limit is the host's physical memory unless a cgroup limit is smaller."""
+    import gmr_spark.session as S
+
+    gib = 2**30
+    assert S._driver_memory(16_874_930_176) == "7g"
+    assert S._driver_memory(64 * gib) == "16g"
+    assert S._driver_memory(32 * gib) == "16g"
+    assert S._driver_memory(20 * gib) == "10g"
+    assert S._driver_memory(1 * gib) == "1g"
+
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    v2, v1 = tmp_path / "memory.max", tmp_path / "memory.limit_in_bytes"
+    monkeypatch.setattr(S, "_CGROUP_MEMORY_LIMITS", (str(v2), str(v1)))
+    assert S._memory_limit() == phys  # neither file: the host's memory
+    v2.write_text("max\n")
+    v1.write_text(f"{2**63 - 4096}\n")
+    assert S._memory_limit() == phys  # no limit set in either version
+    v1.write_text(f"{phys // 4}\n")
+    assert S._memory_limit() == phys // 4  # a smaller cgroup limit wins
+    v2.write_text(f"{phys // 8}\n")
+    assert S._memory_limit() == phys // 8

@@ -182,32 +182,42 @@ def test_dense_superstep_pair_reads_state_once(spark, monkeypatch, big):
 
 
 def test_scc_backward_one_job_per_superstep(spark):
-    """The backward-membership census must ride the eager localCheckpoint's
-    job as an Observation — not run a second limit(1).count() action — so a
-    k-superstep peel costs k+1 jobs (init checkpoint + one per superstep),
-    not 2k+1."""
-    from gmr_spark.algorithms.scc import _backward_members
+    """run_pregel's census must ride the eager localCheckpoint's job as an
+    Observation — not run a second limit(1).count() action — so a
+    k-superstep run costs k+1 jobs (init checkpoint + one per superstep),
+    not 2k+1, even with a census per superstep (``collect_metrics``).
+    Pinned on SCC's backward membership program, fed the way SCC feeds it:
+    leaf edges with a known |E|, so no edge snapshot or count job runs."""
+    from gmr_spark.algorithms.scc import _MemberProgram
+    from gmr_spark.graph import PropertyGraph
+    from gmr_spark.plans.loop import _drop_checkpoint_blocks
+    from gmr_spark.plans.pregel import run_pregel
 
     # directed 3-ring: root 1, backward walk reaches 3 then 2, then one
     # final no-progress superstep -> 3 supersteps + init = 4 jobs max.
     # AQE is disabled for the measurement: its per-query-stage
-    # materialization spawns bookkeeping jobs (22 observed for this same
-    # 4-action run) that would swamp the action count being pinned.
-    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src bigint, dst bigint")
+    # materialization spawns bookkeeping jobs (22 observed for a 4-action
+    # run) that would swamp the action count being pinned.
+    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src bigint, dst bigint") \
+        .localCheckpoint(eager=True)
     colors = spark.createDataFrame([(1, 1), (2, 1), (3, 1)], "id bigint, color bigint")
     sc = spark.sparkContext
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        sc.setJobGroup("scc_census_test", "scc backward job-count pin")
-        members, _state = _backward_members(colors, edges, max_iter=10,
-                                            n_remaining=3)
+        sc.setJobGroup("scc_census_test", "run_pregel job-count pin")
+        res = run_pregel(PropertyGraph(vertices=colors, edges=edges, n_edges=3),
+                         _MemberProgram(), max_iter=10, collect_metrics=True)
         sc.setJobGroup(None, None)
         n_jobs = len(sc.statusTracker().getJobIdsForGroup("scc_census_test"))
-        assert n_jobs <= 4, f"expected <=4 jobs (init + 3 supersteps), got {n_jobs}"
-        assert members.count() == 3
+        assert res.converged and res.iterations == 3, res
+        assert n_jobs <= res.iterations + 1, \
+            f"expected <= {res.iterations + 1} jobs (init + 1 per superstep), got {n_jobs}"
+        assert res.vertices.filter("member").count() == 3
+        _drop_checkpoint_blocks(res.vertices)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        _drop_checkpoint_blocks(edges)
 
 
 def test_asof_join_uses_partial_agg_not_window(spark):
@@ -467,11 +477,11 @@ def test_minhash_verify_semi_filters_shingles(spark):
 
 
 def test_pregel_adaptive_broadcast_end_to_end(spark, monkeypatch):
-    """The exact-census adaptive branch (round-4 verdict item 4): with
-    BIG_GRAPH_ROWS=0 and checkpoint_interval=1, small frontiers take the
-    hinted-broadcast message join; results must be identical to the default
-    path, and at ci=2 the gate must stay closed (census goes stale between
-    checkpoints, so a hinted non-fallback broadcast would be unsafe)."""
+    """The exact-census adaptive branch: with BIG_GRAPH_ROWS=0, run_pregel
+    picks ci=1 on its own, and small frontiers take the hinted-broadcast
+    message join — a checkpoint's executed plan broadcasts the frontier —
+    with results identical to the small-graph path (ci=2, where the census
+    goes stale between checkpoints and the branch stays closed)."""
     from gmr_spark.algorithms.sssp import _SSSPProgram, bfs
     from gmr_spark.plans import loop as runtime
     from gmr_spark.plans.pregel import run_pregel
@@ -480,12 +490,16 @@ def test_pregel_adaptive_broadcast_end_to_end(spark, monkeypatch):
     g = derive_graph(spark, SF, "geo", materialize=True)
     want = {(r.id, r.level) for r in bfs(g, source=0, max_iter=8).collect()}
     monkeypatch.setattr(runtime, "BIG_GRAPH_ROWS", 0)
-    res = run_pregel(g, _SSSPProgram(0, weighted=False), max_iter=8,
-                     checkpoint_interval=1)
+    plans: list = []
+    _record_checkpoints(monkeypatch, plans)
+    res = run_pregel(g, _SSSPProgram(0, weighted=False), max_iter=8)
     got = {(r.id, r.level)
            for r in res.vertices.select(
                "id", res.vertices.value.alias("level")).collect()}
     assert got == want and len(want) > 0
+    frontier_broadcast = re.compile(r"BroadcastExchange[^\n]*\n(?:[^\n]*\n)*?"
+                                    r"[^\n]*Filter[^\n]*active")
+    assert any(frontier_broadcast.search(p) for p in plans), plans
 
 
 def test_small_loop_conf_contract(spark):
@@ -710,6 +724,15 @@ def test_private_api_fallback_warns_loudly(spark, monkeypatch):
             spark.createDataFrame([], "id bigint"))
     assert not [w for w in quiet if issubclass(w.category, RuntimeWarning)]
 
+    # is_checkpoint without the API answers False (callers then snapshot
+    # or size from conf) and warns, instead of raising into every caller
+    import types
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert P.is_checkpoint(types.SimpleNamespace(_jdf=None)) is False
+    assert any("is_checkpoint" in str(w.message) for w in caught), caught
+
 
 def _persistent_ids(spark) -> set:
     # id SET, not size: the async ContextCleaner may reclaim OTHER tests'
@@ -730,8 +753,9 @@ def test_run_pregel_edge_checkpoint_ownership(spark):
     (a) default path: the internal O(|E|) edge snapshot is released before
         return — the only persistent RDD a clean call may add is the
         returned state checkpoint;
-    (b) ``edges_checkpointed=True``: no second edge snapshot is landed AND
-        the caller's blocks survive the call (the peel-loop contract).
+    (b) edges that already are a checkpoint leaf: no second edge snapshot
+        is landed AND the caller's blocks survive the call (the peel-loop
+        contract).
     Failure paths are covered for every loop by
     test_loop_checkpoint_failure_releases_blocks_and_restores_conf."""
     from gmr_spark.algorithms.sssp import _SSSPProgram
@@ -757,22 +781,29 @@ def test_run_pregel_edge_checkpoint_ownership(spark):
     edges_ckpt = edges.localCheckpoint(eager=True)
     before = _persistent_ids(spark)
     res = run_pregel(PropertyGraph(vertices=vertices, edges=edges_ckpt),
-                     _SSSPProgram(0, weighted=False), max_iter=4,
-                     edges_checkpointed=True)
+                     _SSSPProgram(0, weighted=False), max_iter=4)
     assert len(_persistent_ids(spark) - before) == 1, \
-        "edges_checkpointed call must not land a second edge snapshot"
+        "a leaf-edge call must not land a second edge snapshot"
     assert edges_ckpt.count() == 64  # caller's blocks untouched
     _drop_checkpoint_blocks(res.vertices)
     _drop_checkpoint_blocks(edges_ckpt)
 
 
-def _record_checkpoints(monkeypatch) -> list:
+def _record_checkpoints(monkeypatch, plans: list | None = None) -> list:
     """Patch ``LoopScope.checkpoint`` to append every frame it lands, in
-    order, to the returned list."""
-    from gmr_spark.plans.loop import LoopScope
+    order, to the returned list, and the executed plan each frame was
+    materialized from to ``plans`` if given."""
+    from gmr_spark.plans import loop as runtime
 
     landed = []
-    real = LoopScope.checkpoint
+    real, real_eager = runtime.LoopScope.checkpoint, runtime._checkpoint_eager
+
+    def eager(frames):
+        out = real_eager(frames)
+        if plans is not None:
+            plans.extend(df._jdf.queryExecution().executedPlan().toString()
+                         for df in frames)
+        return out
 
     def recording(self, *frames, **kwargs):
         out = real(self, *frames, **kwargs)
@@ -780,7 +811,8 @@ def _record_checkpoints(monkeypatch) -> list:
             landed.append(res[0] if isinstance(res, tuple) else res)
         return out
 
-    monkeypatch.setattr(LoopScope, "checkpoint", recording)
+    monkeypatch.setattr(runtime, "_checkpoint_eager", eager)
+    monkeypatch.setattr(runtime.LoopScope, "checkpoint", recording)
     return landed
 
 
@@ -848,17 +880,18 @@ def test_loop_estimates_without_releaf_grow_additively(
     """The loops that keep their checkpoints' stats (no re-leaf) are safe
     only because their size estimates grow at most additively: the bit
     length of checkpoint i stays within 16·i of the first. k_core's peel
-    semi-joins keep the edge side's estimate; SCC's backward membership
-    joins the previous state once per superstep. A step that self-joins
-    the previous checkpoint (the label kernel's pointer jumps) multiplies
-    its estimate instead and breaks this bound by its fourth
-    checkpoint."""
+    semi-joins keep the edge side's estimate; SCC's backward membership,
+    run by run_pregel, joins the previous state once per superstep. A step
+    that self-joins the previous checkpoint (the label kernel's pointer
+    jumps) multiplies its estimate instead and breaks this bound by its
+    fourth checkpoint."""
     from pyspark.sql import functions as F
 
     from gmr_spark.algorithms.kcore import k_core
-    from gmr_spark.algorithms.scc import _backward_members
+    from gmr_spark.algorithms.scc import _MemberProgram
     from gmr_spark.graph import PropertyGraph
     from gmr_spark.plans.loop import _drop_checkpoint_blocks
+    from gmr_spark.plans.pregel import run_pregel
 
     # both graphs are built from spark.range, so their leaves carry real
     # size estimates
@@ -872,14 +905,18 @@ def test_loop_estimates_without_releaf_grow_additively(
         assert out.count() == 0
     else:
         # 30-ring, one color rooted at 0: the backward walk adds one
-        # member per superstep
+        # member per superstep. The edges are a checkpoint leaf, as SCC's
+        # remainders are, so every landed frame is a membership state.
         n = 30
-        edges = spark.range(n).select(F.col("id").alias("src"),
-                                      ((F.col("id") + 1) % n).alias("dst"))
+        edges = spark.range(n).select(
+            F.col("id").alias("src"),
+            ((F.col("id") + 1) % n).alias("dst")).localCheckpoint(eager=True)
         colors = spark.range(n).select("id", F.lit(0).cast("long").alias("color"))
-        members, out = _backward_members(colors, edges, max_iter=n + 2,
-                                         n_remaining=n)
-        assert members.count() == n
+        res = run_pregel(PropertyGraph(vertices=colors, edges=edges),
+                         _MemberProgram(), max_iter=n + 2)
+        out = res.vertices
+        assert res.converged and out.filter("member").count() == n
+        _drop_checkpoint_blocks(edges)
     bits = _estimate_bits(landed)
     _drop_checkpoint_blocks(out)
     assert len(bits) > 10, bits
@@ -919,7 +956,7 @@ def _run_loop(name: str, spark, g):
     from gmr_spark.algorithms.triangles import k_truss
     from gmr_spark.plans.pregel import run_pregel
 
-    if name == "run_pregel":
+    if name in ("run_pregel", "run_pregel_leaf"):
         return run_pregel(g, _SSSPProgram(0, weighted=False))
     if name == "run_dense":
         return A.pagerank(g, k=3)
@@ -945,8 +982,9 @@ def _run_loop(name: str, spark, g):
         k=3, iters=1)
 
 
-@pytest.mark.parametrize("name", ["run_pregel", "run_dense", "cc", "mst", "scc",
-                                  "k_core", "k_truss", "svdpp", "kmeans"])
+@pytest.mark.parametrize("name", ["run_pregel", "run_pregel_leaf", "run_dense",
+                                  "cc", "mst", "scc", "k_core", "k_truss",
+                                  "svdpp", "kmeans"])
 def test_loop_checkpoint_failure_releases_blocks_and_restores_conf(
         spark, monkeypatch, name):
     """Every iterative loop, failed at each of its localCheckpoint calls in
@@ -954,10 +992,17 @@ def test_loop_checkpoint_failure_releases_blocks_and_restores_conf(
     found it. A clean run first counts the calls. The injected failure is
     the worst shape: the checkpoint's job persisted its blocks and THEN
     the call raised, so nothing but the loop scope's own bookkeeping can
-    release them."""
+    release them. ``run_pregel_leaf`` hands run_pregel edges the test
+    checkpointed itself: they are read in place, and no exit may release
+    them."""
+    import dataclasses
     import threading
 
+    from gmr_spark.plans.loop import _drop_checkpoint_blocks
+
     g = _complete_graph(spark)
+    if name == "run_pregel_leaf":
+        g = dataclasses.replace(g, edges=g.edges.localCheckpoint(eager=True))
     # patch the CONCRETE class (pyspark.sql.classic.dataframe.DataFrame on
     # Spark 4) — the pyspark.sql.DataFrame parent's method is overridden
     DataFrame = type(g.edges)
@@ -996,7 +1041,11 @@ def test_loop_checkpoint_failure_releases_blocks_and_restores_conf(
             problems.append(f"call {fail_at} stranded RDDs {sorted(leaked)}")
         if [spark.conf.get(k) for k in keys] != base_conf:
             problems.append(f"call {fail_at} left the loop conf applied")
+        if name == "run_pregel_leaf" and g.edges.count() != g.n_edges:
+            problems.append(f"call {fail_at} released the caller's edges")
     assert not problems, f"{name}, {n_calls} calls: " + "; ".join(problems)
+    if name == "run_pregel_leaf":
+        _drop_checkpoint_blocks(g.edges)
 
 
 def test_checkpoint_eager_rejects_concurrent_entry(spark):
