@@ -1,120 +1,103 @@
-"""K-means (Lloyd's) over an embedding column.
+"""K-means (Lloyd's) over an embedding column, and the one nearest-centroid
+kernel every k-means-family operator shares.
 
 The reference declares a ``Kmeans`` algorithm whose body is a copy of
 PageRank's — non-functional (algorithms.h:227-265). This is the real thing,
 expressed Spark-first:
 
-- *assign*: broadcast the k centroids as literal arrays; squared L2 distance
-  is a JVM-side ``zip_with`` + ``aggregate`` fold over the vector (no Python
-  UDF); argmin via ``array_min`` over (dist, cluster) structs — ties break to
-  the lowest cluster id, deterministically.
-- *update*: per-dimension mean via ``posexplode`` + groupBy — a k×dim result
-  collected to the driver (tiny for any realistic k·dim, even at 100 TB).
+- *assign* (:func:`nearest_centroids`): the centroid matrix ships once per
+  task and each Arrow batch is one GEMM, d² = |v|² + |c|² − 2·v·cᵀ. The
+  same kernel serves k-means, SemDeDup's clustering, the IVF coarse
+  quantizer and its trainer.
+- *update* (:func:`_update`): per-dimension mean via ``posexplode`` +
+  groupBy — a k×dim result collected to the driver (tiny for any
+  realistic k·dim, even at 100 TB).
+- *loop* (:func:`lloyd`): seeds are the k lowest-id vectors, then ``iters``
+  rounds of (assign, update).
 
-Determinism contract with the DuckDB oracle: distances and centroid means are
-rounded to 9 dp on both engines, so fold-order float drift cannot flip an
-argmin (except for genuine <1e-9 ties, which the synthetic clustered data
-does not produce). Init centroids = the k lowest-id vectors.
+Determinism contract with the DuckDB oracle: distances are rounded half up
+to 9 dp (k-means) or 6 dp (IVF) on both engines, and centroid means to 9
+dp, so summation-order float drift cannot flip an argmin (except for
+genuine ties at that precision, which the synthetic clustered data does
+not produce). Ties break to the lowest centroid id.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
+
+# f64 bytes of one distance block: the kernel chunks each Arrow batch's
+# rows so a row chunk × k distances stay under this bound per task, so a
+# larger k degrades to more chunks, never to more memory (a 10k-row batch
+# against 50k centroids is a 4 GB block unchunked, ×32 concurrent tasks).
+# The same budget bounds the cosine top-k kernel's query chunks.
+GEMM_CHUNK_BYTES = 8 << 20
 
 
-def _validate_assign(assign: str, *, name: str = "assign") -> None:
-    """Reject assign/cell_assign strings outside {"expr", "arrow"}: a typo
-    (e.g. "Arrow", "gemm") must not silently fall through to the expression
-    path — at production cell counts that path is interpreter-bound (227 s
-    vs ~3 s at 2M × 256 cells), a ~75× degradation with no signal
-    (round-11 ADVICE item 1). Guards every surface with an expr/arrow
-    switch: :func:`kmeans` here, and the IVF family (called at
-    ann_ivf/ann_ivf_pq ENTRY so a typo'd production call fails before the
-    seed collect and the training fixpoints — train_pq_codebook /
-    train_ivf_cells are minutes at scale — and again in _ivf_index_probes
-    as the backstop for direct callers). ``name`` is the CALLER-facing
-    parameter name so the message names the argument the user actually
-    typed (``cell_assign`` for the IVF family — round-12 ADVICE item 4)."""
-    if assign not in ("expr", "arrow"):
-        raise ValueError(
-            f"{name}={assign!r} is not one of ('expr', 'arrow')")
+def nearest_centroids(df: DataFrame, centroids: list[tuple[int, list[float]]],
+                      *, n: int, dp: int) -> DataFrame:
+    """df (id, vec ARRAY<DOUBLE>, ...) -> df's columns + ``cells``
+    ARRAY<INT>: the ids of the ``n`` nearest centroids of each row, ranked
+    by (d² rounded half up to ``dp`` places, centroid id).
 
-
-def _assign(df: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataFrame:
-    """df: (id, vec ARRAY<DOUBLE>) -> (id, cluster INT)."""
-    candidates = F.array(*[
-        F.struct(
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("vec"),
-                        F.array(*[F.lit(float(x)) for x in vec]),
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-                9,
-            ).alias("d2"),
-            F.lit(int(cluster)).cast("int").alias("cluster"),
-        )
-        for cluster, vec in centroids
-    ])
-    return df.select("id", F.array_min(candidates)["cluster"].alias("cluster"))
-
-
-def _assign_arrow(df: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataFrame:
-    """Batched Arrow/BLAS twin of :func:`_assign` for large k — the 100 TB
-    assign path. ``_assign`` builds one Catalyst struct per centroid, which
-    is ideal up to k ≈ tens (codegen'd, oracle-parity exact) but
-    interpreter-bound at the k ≈ thousands SemDeDup needs (the paper runs
-    k=50k on LAION). Here the centroid matrix ships once per task and the
-    distance matrix is one GEMM per Arrow batch:
-    d² = |v|² + |c|² − 2·v·cᵀ, rounded to 9 dp like the expression path;
-    ``argmin`` takes the first minimum = the lowest cluster id, the same
-    tie rule. Not bit-identical to the fold-order expression path (BLAS
-    pairwise summation), hence never used by oracle-declared queries —
-    tests pin full agreement on the sf0.01 table."""
+    One ``mapInPandas`` GEMM per Arrow batch, chunked over rows so each
+    distance block stays under ``GEMM_CHUNK_BYTES``. The returned function
+    is a closure over numpy alone, so executors need not import this
+    package. The GEMM identity is
+    not bit-identical to a subtract-square fold before rounding (BLAS
+    summation order); the rounding absorbs that drift, which the oracle
+    parity of every caller pins. An empty centroid list raises here, on
+    the driver, rather than inside an executor task."""
     import numpy as np
-    import pandas as pd
 
+    if not centroids:
+        raise ValueError(
+            "nearest_centroids: empty centroid list — there must be at "
+            "least one centroid (an empty corpus yields no seeds; callers "
+            "should skip the assign entirely)")
+    # ascending ids, so position order is id order
+    centroids = sorted(centroids, key=lambda c: c[0])
     C = np.asarray([vec for _, vec in centroids], dtype=np.float64)
-    ids = np.asarray([c for c, _ in centroids], dtype=np.int64)
+    ids = np.asarray([c for c, _ in centroids], dtype=np.int32)
     c2 = (C * C).sum(axis=1)
-    # row-chunk the GEMM so the distance matrix stays ~64 MB per task no
-    # matter how large k grows: a full Arrow batch (~10k rows) against
-    # k=50k centroids is a 4 GB f64 matrix — ×32 concurrent tasks, an OOM,
-    # not a slowdown. Same bounded-block shape as semdedup's per-cluster
-    # CHUNK: a bigger k degrades to more chunks, never to more memory.
-    row_chunk = max(16, 8_000_000 // max(1, len(ids)))
+    scale = 10.0 ** dp
+    n = min(n, len(ids))
+    row_chunk = max(1, GEMM_CHUNK_BYTES // (8 * len(ids)))
 
     def fn(batches):
         for pdf in batches:
-            V = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-            v2 = (V * V).sum(axis=1)
-            best = np.empty(len(V), dtype=np.int64)
+            if not len(pdf):
+                continue
+            V = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
+            out = np.empty((len(V), n), dtype=np.int32)
             for lo in range(0, len(V), row_chunk):
-                hi = min(lo + row_chunk, len(V))
-                d2 = v2[lo:hi, None] + c2[None, :] - 2.0 * (V[lo:hi] @ C.T)
-                best[lo:hi] = np.round(d2, 9).argmin(axis=1)
-            yield pd.DataFrame({"id": pdf["id"].to_numpy(),
-                                "cluster": ids[best].astype(np.int32)})
+                B = V[lo:lo + row_chunk]
+                d2 = (B * B).sum(axis=1)[:, None] + c2[None, :] \
+                    - 2.0 * (B @ C.T)
+                # ROUND(d2, dp) half up, as Spark and DuckDB round (d2 >= 0
+                # up to drift); np.round rounds half to even
+                d2 = np.floor(d2 * scale + 0.5) / scale
+                # first minimum / stable order = the lower id on a tie
+                order = (d2.argmin(axis=1)[:, None] if n == 1 else
+                         np.argsort(d2, axis=1, kind="stable")[:, :n])
+                out[lo:lo + row_chunk] = ids[order]
+            yield pdf.assign(cells=list(out))
 
-    return df.mapInPandas(fn, "id bigint, cluster int")
+    schema = StructType(
+        [*df.schema.fields, StructField("cells", ArrayType(IntegerType()))])
+    return df.mapInPandas(fn, schema)
 
 
-def _update(df: DataFrame, assigned: DataFrame) -> list[tuple[int, list[float]]]:
-    # join BEFORE the ×dim explode: the equi-join runs on O(N) rows, not
-    # O(N·dim) — at the 2M×64 scale proof that is a 2M-row join feeding a
-    # 128M-row map-side-combinable aggregate instead of a 128M-row shuffle.
-    # The k×dim result comes back over Arrow (toPandas), not a pickled
-    # collect(): at SemDeDup-class k the retrieval is 640k+ rows and the
-    # row-at-a-time pickle path was a measurable slice of each Lloyd
-    # iteration (k=10k sweep, SCALE.md). Values are identical — the 9 dp
-    # rounding happens Spark-side either way; Arrow moves exact doubles.
+def _update(assigned: DataFrame) -> list[tuple[int, list[float]]]:
+    """(id, vec, cells) from :func:`nearest_centroids` -> the populated
+    clusters' mean vectors, sorted by id, each dimension rounded to 9 dp.
+    The k×dim result comes back over Arrow (``toPandas``): at
+    SemDeDup-class k it is 640k+ rows, and a pickled ``collect`` was a
+    measurable slice of each Lloyd iteration (SCALE.md)."""
     stats = (
-        df.join(assigned, "id")
-        .select("cluster", F.posexplode("vec").alias("pos", "val"))
+        assigned.select(F.col("cells")[0].alias("cluster"),
+                        F.posexplode("vec").alias("pos", "val"))
         .groupBy("cluster", "pos")
         .agg(F.round(F.avg("val"), 9).alias("val"))
         .toPandas()
@@ -127,36 +110,48 @@ def _update(df: DataFrame, assigned: DataFrame) -> list[tuple[int, list[float]]]
     )
 
 
-def kmeans(embeddings: DataFrame, *, k: int = 8, iters: int = 2,
-           id_col: str = "vec_id", vec_col: str = "embedding",
-           assign: str = "expr") -> DataFrame:
-    """-> (id BIGINT, cluster INT): assignment after ``iters`` full Lloyd
-    iterations (plus the final re-assignment under the last centroids).
-    ``assign="expr"`` (default) is the Catalyst-expression path every
-    oracle-declared query uses; ``assign="arrow"`` is the batched GEMM path
-    for large k (see :func:`_assign_arrow`). Unknown strings are REJECTED
-    up front by :func:`_validate_assign`: a typo like "Arrow" must not
-    silently take the interpreter-bound expression path, which is a ~75×
-    degradation at production k with no signal."""
-    _validate_assign(assign)  # before the eager checkpoint / seed collect
+def lloyd(df: DataFrame, *, k: int, iters: int,
+          sample_mod: int) -> list[tuple[int, list[float]]]:
+    """Lloyd's k-means over df (id, vec): seeds are the ``k`` lowest-id
+    rows of df, then ``iters`` rounds of (:func:`nearest_centroids` at 9
+    dp, :func:`_update`) over the 1-in-``sample_mod`` id-residue sample of
+    df, materialized once. Returns the centroids, sorted by id.
+
+    A cluster that empties drops out (``_update`` emits populated clusters
+    only), so there may be fewer than ``k``. An update that returns
+    nothing (an empty sample) keeps the last centroids."""
     from gmr_spark.plans.loop import LoopScope
 
-    assign_fn = _assign_arrow if assign == "arrow" else _assign
-    with LoopScope(embeddings.sparkSession) as loop:
-        # the |N| census rides the checkpoint job
-        df, census = loop.checkpoint((embeddings.select(
-            F.col(id_col).cast("bigint").alias("id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
-        ), {"n": F.count(F.lit(1))}))
-        # the returned assignment is a lazy map over the checkpoint
-        loop.keep(df)
-        seeds = df.orderBy("id").limit(k).collect()
-        centroids = [(i, list(r.vec)) for i, r in enumerate(seeds)]
-        # |N|-scoped physical conf for the Lloyd loop; the final
-        # re-assignment is a narrow map over the checkpoint — no shuffle —
-        # and runs after the scope restores the conf.
+    cents = [(i, list(r.vec)) for i, r in
+             enumerate(df.orderBy("id").limit(k).collect())]
+    if not cents:  # no rows: nothing to train
+        return cents
+    sample = df if sample_mod <= 1 else df.filter(
+        F.col("id") % sample_mod == 0)
+    with LoopScope(df.sparkSession) as loop:
+        # the |sample| census rides the checkpoint job
+        sample, census = loop.checkpoint(
+            (sample.select("id", "vec"), {"n": F.count(F.lit(1))}))
         loop.rows(census["n"])
         for _ in range(iters):
-            assigned = assign_fn(df, centroids)
-            centroids = _update(df, assigned)
-    return assign_fn(df, centroids)
+            nxt = _update(nearest_centroids(sample, cents, n=1, dp=9))
+            if not nxt:
+                break
+            cents = nxt
+    return cents
+
+
+def kmeans(embeddings: DataFrame, *, k: int = 8, iters: int = 2,
+           id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+    """-> (id BIGINT, cluster INT): assignment after ``iters`` full Lloyd
+    iterations (:func:`lloyd`), plus the final assignment under the last
+    centroids, a narrow map over the input."""
+    df = embeddings.select(
+        F.col(id_col).cast("bigint").alias("id"),
+        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
+    )
+    centroids = lloyd(df, k=k, iters=iters, sample_mod=1)
+    if not centroids:  # no rows: nothing to assign
+        return df.select("id", F.lit(None).cast("int").alias("cluster"))
+    return nearest_centroids(df, centroids, n=1, dp=9).select(
+        "id", F.col("cells")[0].alias("cluster"))

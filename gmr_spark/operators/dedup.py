@@ -36,7 +36,7 @@ _BROADCAST_IDS_CAP = 5_000_000
 # the same shingle table and verified-pair chain, and the driver's
 # correctness pass runs all three in one session — without sharing, each
 # call re-checkpoints blocks whose predecessors are never freed until
-# ContextCleaner catches up (round-3 ADVICE). Keyed by applicationId so a
+# ContextCleaner catches up. Keyed by applicationId so a
 # restarted SparkContext cannot be served another context's DataFrames, and
 # by the documents.parquet mtime/size fingerprint so a corpus REWRITTEN at
 # the same path within one session (scale_data.build_corpus does rmtree +
@@ -44,7 +44,7 @@ _BROADCAST_IDS_CAP = 5_000_000
 _CKPT_MEMO: dict[tuple, DataFrame] = {}
 # scalar side-car: counts of memoized frames (same keys as _CKPT_MEMO).
 # A memoized frame's count is constant per memo key, so re-running
-# df.count() per call is a wasted Spark job (round-6 ADVICE item 5);
+# df.count() per call is a wasted Spark job;
 # evicted in lock-step with the frame it describes.
 _COUNT_MEMO: dict[tuple, int] = {}
 
@@ -67,9 +67,8 @@ def clear_dedup_memo() -> None:
     is DONE with the dedup stage calls this so ContextCleaner can reclaim
     the blocks before later stages pay the memory pressure (the ``llm``
     scale family does). Blocks are unpersisted explicitly — waiting on
-    ContextCleaner to
-    notice the dropped Python references leaves the backlog resident for
-    the next several jobs (the r3→r4 bench drift, VERDICT r4 item 1)."""
+    ContextCleaner to notice the dropped Python references leaves the
+    backlog resident for the next several jobs (a measured bench drift)."""
     from gmr_spark.plans.loop import _drop_checkpoint_blocks
 
     while _CKPT_MEMO:
@@ -92,7 +91,7 @@ def _memo(spark: SparkSession, key: tuple, build) -> DataFrame:
         # token only — and release its (eagerly checkpointed, GBs at 2M-doc
         # scale) blocks; otherwise both generations stay pinned until
         # clear_dedup_memo(), exactly the rmtree+rewrite scenario the token
-        # guards against (round-4 ADVICE). Entries differing in trailing
+        # guards against. Entries differing in trailing
         # params are LIVE siblings (two shingle sizes in one session), never
         # evicted here: their checkpoints have no lineage to rebuild from.
         from gmr_spark.plans.loop import _drop_checkpoint_blocks
@@ -115,24 +114,24 @@ def _frame_memo(df_src: DataFrame, kind: str, params: tuple, build) -> DataFrame
     ``sameSemantics`` on every hit — a 32-bit hash collision (or a cached
     entry whose source frame object this frame merely resembles) evicts and
     rebuilds rather than serving another frame's result. This puts the
-    synthetic-frame checkpoints under the module release discipline
-    (round-6 verdict item 3: ``dedup_substring_frame`` / ``semdedup_frame``
-    checkpointed per call with no release, so a caller looping them over
-    frames accumulated blocks until ContextCleaner caught up): repeat calls
-    on a semantically-identical frame now share one checkpoint, and
+    synthetic-frame checkpoints under the module release discipline (a
+    per-call checkpoint with no release lets a caller looping
+    ``dedup_substring_frame`` / ``semdedup_frame`` over frames accumulate
+    blocks until ContextCleaner catches up): repeat calls on a
+    semantically-identical frame share one checkpoint, and
     ``clear_dedup_memo()`` releases everything.
 
     Plan semantics alone cannot see a rewrite of the files BEHIND the plan
     (``spark.read.parquet(p)`` is the same Catalyst plan before and after
-    ``p`` is rewritten — round-7 ADVICE), so frames with file sources fold
+    ``p`` is rewritten), so frames with file sources fold
     a data fingerprint (sorted file list + local size/mtime) into the key;
     an un-fingerprintable source (non-local scheme, huge listing) skips
     memoization entirely — per-call behavior, never a stale hit. Eviction
     on a semanticHash collision drops only the dict references: frames
     previously RETURNED to callers may still reference the checkpointed
     blocks (no lineage to rebuild from), so ContextCleaner reclaims them
-    asynchronously once the last reference dies (round-7 ADVICE — an
-    explicit block drop here broke outstanding callers)."""
+    asynchronously once the last reference dies (an explicit block drop
+    here would break outstanding callers)."""
     spark = df_src.sparkSession
     try:
         h = df_src.semanticHash()
@@ -146,7 +145,7 @@ def _frame_memo(df_src: DataFrame, kind: str, params: tuple, build) -> DataFrame
     # GENERATION's dict references (same key except fp) so it stops pinning
     # its checkpoint blocks — reference-drop only, ContextCleaner reclaims
     # once outstanding caller frames die (the _memo eviction analog under
-    # the round-7-ADVICE no-explicit-unpersist rule)
+    # the no-explicit-unpersist rule)
     stale = [k for k in _CKPT_MEMO
              if len(k) == len(full_key) and k[:3] == full_key[:3]
              and k[4:] == full_key[4:] and k != full_key]
@@ -609,6 +608,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str, *,
 SEMDEDUP_K = 8
 SEMDEDUP_ITERS = 2
 SEMDEDUP_THRESHOLD = 0.30
+_SEMDEDUP_CHUNK = 2048  # rows per similarity block in semdedup_frame
 
 
 def semdedup_embeddings(spark: SparkSession, sf_dir: str, *,
@@ -632,9 +632,9 @@ def semdedup_embeddings(spark: SparkSession, sf_dir: str, *,
 
     Scale: the quadratic step is per-cluster, which is exactly the SemDeDup
     design — k grows with the corpus (the paper uses k=50k on LAION) so
-    E[cluster size] stays bounded and the pair join is a cluster-key
-    equi-join, never an all-pairs scan. Centroids stay a driver-side
-    broadcast literal (k·dim doubles). Determinism: cosines ROUND(·,6) like
+    E[cluster size] stays bounded and the similarity step is one dense
+    block per cluster, never an all-pairs scan. Centroids ship to each
+    task as one k×dim matrix. Determinism: cosines ROUND(·,6) like
     every similarity operator here; cluster assignment ties break to the
     lowest cluster id (see algorithms.kmeans)."""
     emb = load_tables(spark, sf_dir)["embeddings"]
@@ -643,128 +643,63 @@ def semdedup_embeddings(spark: SparkSession, sf_dir: str, *,
 
 def semdedup_frame(emb: DataFrame, *, k: int = SEMDEDUP_K,
                    iters: int = SEMDEDUP_ITERS,
-                   threshold: float = SEMDEDUP_THRESHOLD,
-                   engine: str = "expr") -> DataFrame:
+                   threshold: float = SEMDEDUP_THRESHOLD) -> DataFrame:
     """Core of :func:`semdedup_embeddings` over any (vec_id, embedding)
     frame — split out so the planted-duplicate unit test can feed its own
     vectors (the ``_lang_id_frame`` pattern).
 
-    ``engine="expr"`` (default): Catalyst pair join + fold-expression
-    cosine — oracle-parity exact, right for the moderate k the declared
-    query runs. ``engine="arrow"``: the 100 TB path — k-means assign is one
-    GEMM per Arrow batch and the within-cluster similarity matrix is one
-    BLAS ``V·Vᵀ`` per cluster block inside ``applyInPandas`` (row-chunked to
-    bound memory), so the quadratic step never materializes a pair ROW per
-    candidate, only a dense block per cluster. Same retire rule, sims
-    rounded to 6 dp on both paths; the paths agree exactly on the sf0.01
-    table (test-pinned) but arrow is not oracle-declared (BLAS summation
-    order)."""
-    from gmr_spark.algorithms.kmeans import kmeans
+    The k-means assign is the shared GEMM kernel, and the within-cluster
+    similarity matrix is one BLAS ``V·Vᵀ`` per cluster block inside
+    ``applyInPandas``, so the quadratic step never materializes a pair ROW
+    per candidate, only a dense block per cluster. The block is chunked
+    over rows: peak memory per task is ``_SEMDEDUP_CHUNK × |cluster|``
+    doubles, so a skewed cluster degrades to more chunks, never to OOM.
+    Cosines are rounded to 6 dp half away from zero, as ``ROUND(·, 6)``
+    rounds them on both engines.
 
-    if engine == "arrow":
-        return _semdedup_arrow(emb, k=k, iters=iters, threshold=threshold)
-    vecs = emb.select(
-        F.col("vec_id").cast("bigint").alias("id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-        F.lit(0.0), lambda acc, v: acc + v,
-    )
-    # each vector's norm computed ONCE here (the dedup_embedding round-6
-    # rewrite applied to the cluster-join path): the pair join below does a
-    # single array fold per candidate pair instead of three. Arithmetic is
-    # unchanged — dot/(na*nb), exactly the oracle's norms-CTE shape — so
-    # sims stay bit-identical.
-    norm = F.sqrt(F.aggregate(
-        F.transform(F.col("vec"), lambda x: x * x), F.lit(0.0),
-        lambda acc, v: acc + v))
-    # kmeans assign runs once, not per side; the EAGER kmeans run plus the
-    # clustered checkpoint both live inside the _frame_memo build, so
-    # looped calls on the same frame share one Lloyd run and one block set,
-    # and clear_dedup_memo() releases it (round-6 verdict item 3 — a bare
-    # per-call checkpoint sat outside the release discipline).
-    clustered = _frame_memo(
-        emb, "semdedup_clustered", (k, iters),
-        lambda: kmeans(emb, k=k, iters=iters)  # (id, cluster)
-        .join(vecs, "id")
-        .select("id", "cluster", "vec", norm.alias("nrm"))
-        .localCheckpoint(eager=True),
-    )
-    a = clustered.select(F.col("id").alias("id_a"), "cluster",
-                         F.col("vec").alias("va"), F.col("nrm").alias("na"))
-    b = clustered.select(F.col("id").alias("id_b"), "cluster",
-                         F.col("vec").alias("vb"), F.col("nrm").alias("nb"))
-    sims = (
-        a.join(b, "cluster")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(F.col("id_b").alias("id"),
-                F.round(dot / (F.col("na") * F.col("nb")), 6).alias("sim"))
-    )
-    earlier = sims.groupBy("id").agg(
-        F.max("sim").alias("max_sim_earlier"),
-        F.sum((F.col("sim") >= threshold).cast("int")).alias("n_dup_earlier"),
-    )
-    return (
-        clustered.join(earlier, "id", "left")
-        .select(
-            F.col("id").alias("vec_id"),
-            "cluster",
-            "max_sim_earlier",
-            F.coalesce(F.col("n_dup_earlier"), F.lit(0)).cast("int")
-            .alias("n_dup_earlier"),
-            (F.coalesce(F.col("n_dup_earlier"), F.lit(0)) == 0).alias("keep"),
-        )
-    )
-
-def _semdedup_arrow(emb: DataFrame, *, k: int, iters: int,
-                    threshold: float) -> DataFrame:
-    """Arrow/BLAS SemDeDup (see :func:`semdedup_frame` ``engine="arrow"``).
-    Per-cluster dense similarity block, chunked over rows: peak memory per
-    task is ``chunk × |cluster|`` doubles, so a skewed cluster degrades to
-    more chunks, never to OOM."""
+    The clustered checkpoint is memoized under the frame's semantic hash
+    (``_frame_memo``): looped calls on the same frame share one Lloyd run
+    and one block set, and ``clear_dedup_memo()`` releases it."""
     import numpy as np
-    import pandas as pd
 
     from gmr_spark.algorithms.kmeans import kmeans
 
     thr = float(threshold)
-    assigned = kmeans(emb, k=k, iters=iters, assign="arrow")
     vecs = emb.select(
         F.col("vec_id").cast("bigint").alias("id"),
         F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
     )
-    clustered = assigned.join(vecs, "id").select("id", "cluster", "vec")
-
-    CHUNK = 2048
+    clustered = _frame_memo(
+        emb, "semdedup_clustered", (k, iters),
+        lambda: kmeans(emb, k=k, iters=iters)  # (id, cluster)
+        .join(vecs, "id")
+        .select("id", "cluster", "vec")
+        .localCheckpoint(eager=True),
+    )
 
     def per_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("id").reset_index(drop=True)
-        ids = pdf["id"].to_numpy()
         V = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
         V = V / np.linalg.norm(V, axis=1, keepdims=True)
         n = len(pdf)
         max_prev = np.full(n, np.nan)
         n_dup = np.zeros(n, dtype=np.int32)
-        for lo in range(0, n, CHUNK):
-            hi = min(lo + CHUNK, n)
-            if lo == 0 and hi == 1:
-                continue
-            S = np.round(V[lo:hi] @ V[:hi].T, 6)  # rows lo..hi vs all j < hi
-            mask = np.arange(hi)[None, :] < np.arange(lo, hi)[:, None]  # j < i
-            S = np.where(mask, S, -np.inf)
-            has_prev = mask.any(axis=1)
-            mp = S.max(axis=1)
-            max_prev[lo:hi] = np.where(has_prev, mp, np.nan)
+        for lo in range(1, n, _SEMDEDUP_CHUNK):  # row 0 has no earlier row
+            hi = min(lo + _SEMDEDUP_CHUNK, n)
+            # rows lo..hi against every earlier row j < i
+            S = V[lo:hi] @ V[:hi].T
+            S = np.sign(S) * np.floor(np.abs(S) * 1e6 + 0.5) / 1e6
+            S = np.where(np.arange(hi)[None, :] < np.arange(lo, hi)[:, None],
+                         S, -np.inf)
+            max_prev[lo:hi] = S.max(axis=1)
             n_dup[lo:hi] = (S >= thr).sum(axis=1)
-        out = pd.DataFrame({
-            "vec_id": ids,
+        return pd.DataFrame({
+            "vec_id": pdf["id"].to_numpy(),
             "cluster": pdf["cluster"].to_numpy(),
-            "max_sim_earlier": max_prev,
+            "max_sim_earlier": max_prev,  # NaN -> NULL: no earlier row
             "n_dup_earlier": n_dup,
             "keep": n_dup == 0,
         })
-        return out
 
     return clustered.groupBy("cluster").applyInPandas(
         per_cluster,

@@ -6,23 +6,24 @@ Exact paths (same declared contract, two physical plans):
   variant is judged against. Only queries are broadcast; the scan side
   stays partitioned at any scale.
 - ``cosine_topk_arrow`` — one numpy GEMM per Arrow batch for query
-  BATCHES (r10); each task emits its per-batch top-k by the global
-  ordering key, so the merge is exact. Measured: 1,000 queries × 10M
-  vectors in 80.9 s under the chunked kernel (SCALE.md r11; 155 s
-  unchunked, r10).
+  BATCHES; each task emits its per-batch top-k by the global ordering
+  key, so the merge is exact. Measured: 1,000 queries × 10M vectors in
+  80.9 s under the chunked kernel (155 s unchunked; SCALE.md).
 
 Approximate paths (every candidate generator is a bucket equi-join):
 - ``ann_sign_lsh`` — axis-aligned sign-bit buckets (pure column exprs).
 - ``ann_rh_lsh``   — multi-table random-hyperplane LSH (OR-amplified,
   Arrow-vectorized plane dots).
 - ``ann_ivf``      — IVF cells as the bucket key; exact re-rank in probed
-  cells; ``nprobe`` is the recall/cost dial.
+  cells; ``nprobe`` is the recall/cost dial. Cells come from the one
+  nearest-centroid kernel k-means uses
+  (:func:`gmr_spark.algorithms.kmeans.nearest_centroids`).
 - ``ann_ivf_pq``   — IVF + 4-bit product-quantized index (Jégou et al.
   TPAMI 2011): candidates carry (cell, codes) only, ADC scores via
   per-query LUTs (cogrouped transport), exact re-rank of the shortlist.
   ``train_iters`` refines the codebook by per-subspace Lloyd
   (``train_pq_codebook``) — the production path, proven at 2M vectors
-  (SCALE.md r10); the default stays seeded so the DuckDB twin derives it.
+  (SCALE.md); the default stays seeded so the DuckDB twin derives it.
 - ``ann_recall_at_k`` — measured recall of every ANN path vs the exact
   baseline, as a declared regression-guarded query.
 
@@ -35,10 +36,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-# the expr/arrow assign validator lives next to the kernels it guards
-# (algorithms/kmeans.py) — similarity already depends on those kernels,
-# keeping the layering one-directional (round-13 review)
-from gmr_spark.algorithms.kmeans import _validate_assign
+from gmr_spark.algorithms.kmeans import (
+    GEMM_CHUNK_BYTES, lloyd, nearest_centroids)
 from gmr_spark.sources.tables import load_tables
 
 
@@ -84,10 +83,9 @@ def cosine_topk(spark: SparkSession, sf_dir: str, *, n_queries: int = 5,
     )
 
 
-# per-task budget for the GEMM similarity block (float64 bytes). The kernel
-# chunks the QUERY axis to this bound (round-10 verdict item 5; same
-# bounded-block shape as kmeans._assign_arrow and semdedup's per-cluster
-# CHUNK), which serves two measured purposes:
+# The top-k kernel chunks the QUERY axis to GEMM_CHUNK_BYTES of f64 per
+# task (the nearest-centroid kernel's budget), which serves two measured
+# purposes:
 # - memory: a 100k-query batch against 10k-row Arrow batches is multi-GB
 #   per task × 32 concurrent tasks (an OOM, not a slowdown) unchunked;
 # - cache: the per-query top-k loop gathers one COLUMN of the C-ordered
@@ -99,11 +97,10 @@ def cosine_topk(spark: SparkSession, sf_dir: str, *, n_queries: int = 5,
 #   unchunked kernel AFTER the ROUND(·,6) contract: each query's column is
 #   ranked independently either way, but BLAS dgemm output for an element
 #   can depend on the multiply's shape (threaded blocking), so pre-round
-#   sims between V @ Q.T and V @ Q[lo:hi].T may differ in the last ulp —
-#   the same pre-round caveat as make_cell_rank_fn. Equality is pinned
-#   empirically (tie-bearing corpus in tests/test_llm_ops.py; 2M-vector
-#   exceptAll both ways = 0, SCALE.md r11), not structural.
-GEMM_CHUNK_BYTES = 8 << 20
+#   sims between V @ Q.T and V @ Q[lo:hi].T may differ in the last ulp.
+#   Equality is pinned empirically (tie-bearing corpus in
+#   tests/test_llm_ops.py; 2M-vector exceptAll both ways = 0, SCALE.md),
+#   not structural.
 
 
 def make_topk_gemm_fn(q_rows: list[tuple[int, list[float]]], k: int,
@@ -123,8 +120,8 @@ def make_topk_gemm_fn(q_rows: list[tuple[int, list[float]]], k: int,
     there (Spark 4 runs ANSI mode by default — 0/0 is DIVIDE_BY_ZERO, not
     NaN), so this kernel raises the SAME loud error instead of letting
     np.lexsort rank a silent NaN differently and diverge from the
-    'identical contract' twin on pathological inputs (round-10 ADVICE
-    item 1). Query norms are validated at factory time (driver-side)."""
+    'identical contract' twin on pathological inputs. Query norms are
+    validated at factory time (driver-side)."""
     import numpy as np
 
     Q = np.asarray([list(v) for _, v in q_rows], dtype=np.float64)
@@ -202,8 +199,7 @@ def cosine_topk_arrow(spark: SparkSession, sf_dir: str, *, n_queries: int = 5,
     ONE numpy GEMM and each task emits only its per-batch top-k — |Q|·k
     rows per task instead of |Q|·|batch| pair rows. Measured at the
     2M-vector class: 1,000 queries in 11.8 s under the chunked kernel
-    (SCALE.md r11; 21.7–40.3 s unchunked in the r10 probe, which
-    reuses this kernel).
+    (21.7–40.3 s unchunked; SCALE.md).
     Fold-order float drift vs the oracle's SQL SUM is absorbed by the
     ROUND(·,6) contract (the make_pair_dot_udf precedent)."""
     emb = load_tables(spark, sf_dir)["embeddings"]
@@ -227,188 +223,55 @@ def cosine_topk_arrow(spark: SparkSession, sf_dir: str, *, n_queries: int = 5,
 def train_ivf_cells(
         df: DataFrame, *, k_cells: int, iters: int,
         sample_mod: int = 1) -> list[tuple[int, list[float]]]:
-    """Lloyd-train the IVF coarse centroids — the production quantizer the
-    seeded default stands in for (round-10 verdict item 3: the trained-cells
-    config was proven end-to-end by the ``celltrain`` scale family but
-    unreachable through the library API). Exactly the scale probe's wiring:
-    seeds = the ``k_cells`` lowest-id vectors, then ``iters`` rounds of the
-    ``kmeans.py`` Arrow kernels (``_assign_arrow`` GEMM assign +
-    ``_update``'s join-before-explode partial aggregation) over a
-    1-in-``sample_mod`` id-residue sample — training never passes the
-    corpus, the same sampling contract as ``train_pq_codebook``. Measured
-    at 2M vectors (SCALE.md r10): same-cell rate 0.9243→0.9374 AND max/mean
-    cell population 8.79→1.09 — the hot-key bound for the candidate
-    equi-join at 100 TB. Standard Lloyd degenerate-cell rule applies: an
-    emptied cell is dropped from the returned list (``_update`` emits only
-    populated clusters), so callers get ≤ ``k_cells`` centroids.
+    """Lloyd-train the IVF coarse centroids of df (id, v): the production
+    quantizer the seeded default stands in for. Seeds are the ``k_cells``
+    lowest-id vectors, then ``iters`` rounds of the k-means loop
+    (:func:`gmr_spark.algorithms.kmeans.lloyd`) over a 1-in-``sample_mod``
+    id-residue sample, so training never passes the corpus (the same
+    sampling contract as ``train_pq_codebook``). A cell that empties is
+    dropped, so callers get at most ``k_cells`` centroids; an empty sample
+    keeps the seeds.
 
-    k_cells scaling (measured at the production cell count, SCALE.md r12,
-    2M vectors × k_cells=4,096 × sample_mod=10): the per-iteration assign
-    is ~linear in k_cells (one GEMM, row-chunked — 6.6 s at 4,096 vs 0.7 s
-    at 256 on the 200k sample); the ``_update`` stage is METADATA-CLASS in
-    k_cells (its cost is the sample explode, not k: 1.69 s at 4,096 vs
-    1.44 s at 256 — the aggregate result is only k_cells×64 rows); the
-    end-to-end API call was 92.1 s and the trained cells held max/mean
-    corpus population 1.42 (< 1.5, asserted in-run; balance converges with
-    iters: 1.455 @2 → 1.322 @4 at matched sample density). At the 10⁴
-    decade (16,384 cells, 1M sample) the shapes hold — assign linear
-    (158 s corpus pass), ``_update`` metadata-class (3-5 s) — and balance
-    hovers at ~1.5±0.1 vs **30.3 seeded**, a ~20× hot-key reduction
-    (SCALE.md r12); at the 10⁵ decade (65,536 cells, full-2M sample =
-    ~30/cell) trained 2.52 vs seeded 54.9 — **21.8×** — with the corpus
-    assign still exactly linear (ratio 4.09 for a 4.0× k jump) and
-    ``_update`` ~7× under the assign wall (SCALE.md r13). The
-    DECADE-AWARE CONTRACT this trainer is held to
-    (the ``cells4k`` family of scripts/scale.py, round-12 verdict item 3 —
-    not tunable): at
-    the measured 1,024–16,384 decade, trained max/mean ≤ seeded/10 AND
-    ≤ 2.0 absolute; the absolute number is training-sample-DENSITY-
-    limited (≈1.42–1.46 at ~49 samples/cell, 2.26 at ~20/cell; more
-    iters is the dial), while the ratio is what training buys over
-    seeding and is the stable cross-decade statement. Seeds collect
-    ``k_cells`` rows on the driver — fine at the 10⁴–10⁵ production
-    range, by construction never corpus-scale."""
-    from gmr_spark.algorithms.kmeans import _assign_arrow, _update
-    from gmr_spark.plans.loop import LoopScope
-
-    seed_rows = df.orderBy("id").limit(k_cells).collect()
-    cents = [(i, list(r.v)) for i, r in enumerate(seed_rows)]
-    sample = df if sample_mod <= 1 else df.filter(
-        F.col("id") % sample_mod == 0)
-    with LoopScope(df.sparkSession) as loop:
-        # materialize the sample once: every Lloyd iteration re-reads it
-        sample = loop.checkpoint(sample.select("id", F.col("v").alias("vec")))
-        for _ in range(iters):
-            nxt = _update(sample, _assign_arrow(sample, cents))
-            if not nxt:
-                # degenerate sample (e.g. sample_mod past the id range):
-                # _update saw zero rows — keep the last centroids instead
-                # of feeding an empty codebook back into the assign kernel
-                break
-            cents = nxt
-    return cents
-
-
-def make_cell_rank_fn(centroids: list[tuple[int, list[float]]],
-                      nprobe: int, chunk_bytes: int = GEMM_CHUNK_BYTES):
-    """``mapInPandas`` factory for the Arrow coarse-assign path of
-    :func:`_ivf_index_probes`: one GEMM per Arrow batch against the
-    centroid matrix (d² = |v|² + |c|² − 2·v·cᵀ, ROUND(·,6)
-    half-away-from-zero — nonneg, so floor(x·1e6 + 0.5)), rows ranked by
-    (d², cell id) — the expression path's ``array_sort`` struct order.
-    Row-chunked to ``chunk_bytes`` of f64 per task so a large ``k_cells``
-    degrades to more chunks, never more memory (the kmeans._assign_arrow
-    shape). Emits (id, v, cells ARRAY<INT> — the ``nprobe`` nearest cell
-    ids in rank order). GEMM identity vs the expression path's
-    subtract-square fold is not bit-identical pre-round (BLAS pairwise
-    summation) — same caveat and same test contract as
-    ``kmeans._assign_arrow``: never used by oracle-declared queries, full
-    agreement pinned on the oracle table."""
-    import numpy as np
-
-    if not centroids:
-        # fail at factory time (driver-side) with a clear message — an
-        # empty centroid list (e.g. an empty corpus produced zero seeds)
-        # would otherwise surface as a ZeroDivisionError in the row-chunk
-        # sizing inside an executor task (round-11 ADVICE item 3)
-        raise ValueError(
-            "make_cell_rank_fn: empty centroid list — the coarse quantizer "
-            "needs at least one cell (an empty corpus yields no seeds; "
-            "callers should skip the assign entirely)")
-    C = np.asarray([vec for _, vec in centroids], dtype=np.float64)
-    cids = np.asarray([c for c, _ in centroids], dtype=np.int64)
-    c2 = (C * C).sum(axis=1)
-    npb = min(nprobe, len(cids))
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.vstack(pdf["v"].to_numpy())
-            row_chunk = max(1, int(chunk_bytes // (8 * len(cids))))
-            out = np.empty((len(V), npb), dtype=np.int64)
-            for lo in range(0, len(V), row_chunk):
-                hi = min(lo + row_chunk, len(V))
-                B = V[lo:hi]
-                d2 = (B * B).sum(axis=1)[:, None] + c2[None, :] \
-                    - 2.0 * (B @ C.T)
-                d2 = np.floor(d2 * 1e6 + 0.5) / 1e6
-                # rank by (d2, cell id) — lexsort minor key first
-                order = np.lexsort(
-                    (np.broadcast_to(cids, d2.shape), d2), axis=1)
-                out[lo:hi] = cids[order[:, :npb]]
-            yield pd.DataFrame({
-                "id": pdf["id"].to_numpy(),
-                "v": pdf["v"],
-                "cells": list(out.astype("int32"))})
-
-    return fn
-
-
+    Measured (SCALE.md): at 2M vectors × 256 cells, max/mean cell
+    population 8.79 → 1.09 and same-cell partner rate 0.9243 → 0.9374; at
+    4,096 to 65,536 cells the assign is linear in k_cells and the update
+    is metadata-class in k_cells (its cost is the sample explode). Balance
+    is limited by the training-sample density (≈1.42–1.46 at ~49 samples
+    per cell, 2.26 at ~20): more iterations are the dial. The ``cells4k``
+    family of scripts/scale.py holds the trainer to max/mean ≤ seeded/10
+    and ≤ 2.0 across the 1,024–16,384 decade."""
+    return lloyd(df.select("id", F.col("v").alias("vec")), k=k_cells,
+                 iters=iters, sample_mod=sample_mod)
 
 
 def _ivf_index_probes(
         df: DataFrame, *, k_cells: int, nprobe: int,
         centroids: list[tuple[int, list[float]]] | None = None,
-        assign: str = "expr",
 ) -> tuple[DataFrame, DataFrame]:
     """Shared coarse quantizer of the IVF family (``ann_ivf``,
-    ``ann_ivf_pq``). Default centroids = the ``k_cells`` lowest-id vectors
-    (no Lloyd iterations — keeps the oracle twin compact); pass
-    ``centroids`` (e.g. from :func:`train_ivf_cells`) to quantize against
-    a trained codebook instead (round-10 verdict item 3). Returns
+    ``ann_ivf_pq``) over df (id, v). Default centroids = the ``k_cells``
+    lowest-id vectors (no Lloyd iterations, which keeps the oracle twin
+    compact); pass ``centroids`` (e.g. from :func:`train_ivf_cells`) to
+    quantize against a trained codebook instead. Returns
 
     - ``indexed``: (neighbor_id, nv, cell) — every vector in its nearest cell
     - ``probes``:  (query_id, q, cell) — every query × its ``nprobe`` cells
 
-    Determinism: cell distances ROUND(·,6), ties to the lower cell id.
-
-    ``assign``: "expr" (default — one codegen'd Catalyst struct per
-    centroid, oracle-parity exact, ideal at the declared k_cells=8) or
-    "arrow" (:func:`make_cell_rank_fn` — one GEMM per Arrow batch; the
-    expression path is interpreter-bound at production cell counts:
-    measured 227 s vs ~3 s at 2M vectors × 256 cells, SCALE.md r11).
-    Same split and same agreement-test contract as ``kmeans._assign``
-    vs ``_assign_arrow``: declared queries keep "expr"."""
-    _validate_assign(assign)
+    Both come from one pass of the nearest-centroid kernel
+    (:func:`gmr_spark.algorithms.kmeans.nearest_centroids`): cell
+    distances ROUND(·,6) half up, ties to the lower cell id."""
     seeds = centroids if centroids is not None else [
         (i, list(r.v))
         for i, r in enumerate(df.orderBy("id").limit(k_cells).collect())
     ]
-    if assign == "arrow":
-        ranked = df.mapInPandas(
-            make_cell_rank_fn(seeds, nprobe),
-            "id bigint, v array<double>, cells array<int>")
-        indexed = ranked.select(
-            F.col("id").alias("neighbor_id"), F.col("v").alias("nv"),
-            F.col("cells")[0].alias("cell"))
-        probes = ranked.select(
-            F.col("id").alias("query_id"), F.col("v").alias("q"),
-            F.explode(F.slice("cells", 1, nprobe)).alias("cell"))
-        return indexed, probes
-    cand_structs = F.array(*[
-        F.struct(
-            F.round(
-                F.aggregate(
-                    F.zip_with(F.col("v"),
-                               F.array(*[F.lit(float(x)) for x in vec]),
-                               lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0), lambda acc, x: acc + x),
-                6,
-            ).alias("d2"),
-            F.lit(int(c)).cast("int").alias("cell"),
-        )
-        for c, vec in seeds
-    ])
-    ranked_cells = df.select("id", "v", F.array_sort(cand_structs).alias("cells"))
-    indexed = ranked_cells.select(
-        F.col("id").alias("neighbor_id"), F.col("v").alias("nv"),
-        F.col("cells")[0]["cell"].alias("cell"),
-    )
-    probes = ranked_cells.select(
-        F.col("id").alias("query_id"), F.col("v").alias("q"),
-        F.explode(F.slice("cells", 1, nprobe)).alias("probe"),
-    ).select("query_id", "q", F.col("probe")["cell"].alias("cell"))
+    ranked = nearest_centroids(df.select("id", F.col("v").alias("vec")),
+                               seeds, n=nprobe, dp=6)
+    indexed = ranked.select(
+        F.col("id").alias("neighbor_id"), F.col("vec").alias("nv"),
+        F.col("cells")[0].alias("cell"))
+    probes = ranked.select(
+        F.col("id").alias("query_id"), F.col("vec").alias("q"),
+        F.explode("cells").alias("cell"))
     return indexed, probes
 
 
@@ -416,14 +279,13 @@ def _ivf_index_probes(
 # sign/rh-LSH k) AND the bound ann_recall_at_k guards against: the guard's
 # contract is "recall@k is only meaningful for k <= the paths' returned
 # top-k", so one constant keeps guard and defaults in lockstep by
-# construction (round-12 ADVICE item 2 — a literal 3 in the guard would
-# silently misstate the contract if a default ever moved).
+# construction (a literal 3 in the guard would silently misstate the
+# contract if a default ever moved).
 ANN_TOPK = 3
 
 
 def ann_ivf(spark: SparkSession, sf_dir: str, *, k_cells: int = 8,
-            nprobe: int = 2, topk: int = ANN_TOPK,
-            cell_assign: str = "expr") -> DataFrame:
+            nprobe: int = 2, topk: int = ANN_TOPK) -> DataFrame:
     """(query_id, neighbor_id, sim, rnk): IVF-style ANN — the second scale
     path next to sign-LSH. Coarse quantizer = seed centroids
     (``_ivf_index_probes``); every vector is *indexed* into its nearest
@@ -435,11 +297,9 @@ def ann_ivf(spark: SparkSession, sf_dir: str, *, k_cells: int = 8,
     Determinism: cell distances and cosines ROUND(·,6); ties to the lower
     cell/neighbor id.
     """
-    _validate_assign(cell_assign, name="cell_assign")  # before any Spark job
     emb = load_tables(spark, sf_dir)["embeddings"]
     df = emb.select(F.col("vec_id").alias("id"), _vec().alias("v"))
-    indexed, probes = _ivf_index_probes(df, k_cells=k_cells, nprobe=nprobe,
-                                        assign=cell_assign)
+    indexed, probes = _ivf_index_probes(df, k_cells=k_cells, nprobe=nprobe)
 
     sims = (
         probes.join(indexed, "cell")
@@ -522,7 +382,7 @@ def train_pq_codebook(df: DataFrame, codebook: list[list[list[float]]],
                       *, iters: int = 3) -> list[list[list[float]]]:
     """Per-subspace Lloyd refinement of a PQ codebook — the production
     codebook path the seeded default stands in for (Jégou et al. TPAMI 2011
-    train each subspace's codebook with k-means; round-9 verdict item 2).
+    train each subspace's codebook with k-means).
 
     Each iteration is ONE Arrow pass over ``df`` (id, v ARRAY<DOUBLE>):
     the shared ``_pq_subdists`` kernel scores every (vector, subspace,
@@ -629,7 +489,7 @@ def pq_adc_cogrouped(cand: DataFrame, luts: DataFrame) -> DataFrame:
     large-fanout transport shape. The JVM ``pq_adc_expr`` path joins the
     per-query LUT to the candidate set, which materializes the ~1 KB LUT
     array into EVERY joined pair row (measured: the dominant cost of the
-    2M-vector probe at ~7.8k candidates/query — SCALE.md r9);
+    2M-vector probe at ~7.8k candidates/query — SCALE.md);
     cogrouping ships each query's LUT once per group and scores the whole
     candidate block with one numpy gather. Inputs: ``cand``
     (query_id, neighbor_id, codes) and ``luts`` (query_id, lut). Rounding
@@ -647,8 +507,7 @@ def pq_adc_cogrouped(cand: DataFrame, luts: DataFrame) -> DataFrame:
                  "neighbor_id": pd.Series([], dtype="int64"),
                  "adc": pd.Series([], dtype="float64")})
         if len(lut_pdf) != 1:
-            # exported as a general transport (round-9 ADVICE item 3): a
-            # caller-side join mistake (missing or duplicated LUT rows per
+            # exported as a general transport: a caller-side join mistake (missing or duplicated LUT rows per
             # query) must fail loudly, not silently drop/mis-score
             # candidates for that query
             qid = cands_pdf["query_id"].iloc[0]
@@ -675,8 +534,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str, *, k_cells: int = 8,
                nprobe: int = 2, shortlist: int = PQ_SHORTLIST,
                topk: int = ANN_TOPK, train_iters: int = 0,
                cell_train_iters: int = 0,
-               cell_sample_mod: int = 1,
-               cell_assign: str = "expr") -> DataFrame:
+               cell_sample_mod: int = 1) -> DataFrame:
     """(query_id, neighbor_id, sim, rnk): IVF-PQ ANN — the compressed-index
     scale path. Same coarse quantizer as ``ann_ivf`` (cell equi-join bounds
     candidates), but the index side is PQ codes (4 B/vector instead of
@@ -689,30 +547,23 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str, *, k_cells: int = 8,
     (:func:`train_pq_codebook`). The DECLARED query keeps ``train_iters=0``
     — the seeded codebook is derivable from the same table by the DuckDB
     twin, and at the oracle corpus's noise the measurement showed the
-    codebook was not the recall limiter (SCALE.md r9: all misses were
-    coarse-cell misses). The production path is ``train_iters>0`` (round-9
-    verdict item 2), proven at the noise level where seeding degrades in
-    the ``pqtrain`` family of scripts/scale.py.
+    codebook was not the recall limiter (SCALE.md: all misses were
+    coarse-cell misses). The production path is ``train_iters>0``, proven
+    at the noise level where seeding degrades in the ``pqtrain`` family of
+    scripts/scale.py.
 
     Coarse cells: seeded by default (the ``k_cells`` lowest-id vectors —
     oracle-derivable), Lloyd-trained when ``cell_train_iters>0`` via
-    :func:`train_ivf_cells` on a 1-in-``cell_sample_mod`` sample (round-10
-    verdict item 3 — the measured production win is cell BALANCE: max/mean
-    population 8.79→1.09 at 2M vectors, the hot-key bound of the candidate
+    :func:`train_ivf_cells` on a 1-in-``cell_sample_mod`` sample (the
+    measured production win is cell BALANCE: max/mean population
+    8.79→1.09 at 2M vectors, the hot-key bound of the candidate
     equi-join; trained cells also lift same-cell partner rate
     0.9243→0.9374, the nprobe=1 coarse recall ceiling). The full
-    production config is ``train_iters>0, cell_train_iters>0,
-    cell_assign="arrow"`` — at production cell counts the expression
-    assign is interpreter-bound (227 s vs ~3 s at 2M × 256 cells,
-    SCALE.md r11); the declared default keeps the codegen'd,
-    oracle-parity "expr" assign.
+    production config is ``train_iters>0, cell_train_iters>0``.
     At 100 TB: encode is one Arrow pass, the candidate join carries
     (cell, codes) only — vectors are re-joined for the shortlist·topk rows
     alone. Determinism: sub-distances / ADC sums / cosines ROUND(·,6), ties
     to the lower code / neighbor id."""
-    _validate_assign(cell_assign, name="cell_assign")  # BEFORE the seed collect and the two
-    # training fixpoints — a typo'd production call must not pay minutes
-    # of Lloyd training and then die at the quantizer (round-12 review)
     emb = load_tables(spark, sf_dir)["embeddings"]
     df = emb.select(F.col("vec_id").alias("id"), _vec().alias("v"))
     # k-bounded driver collect (PQ_KS rows), same pattern as the IVF seeds
@@ -730,8 +581,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str, *, k_cells: int = 8,
                                     iters=cell_train_iters,
                                     sample_mod=cell_sample_mod)
     indexed, probes = _ivf_index_probes(df, k_cells=k_cells, nprobe=nprobe,
-                                        centroids=centroids,
-                                        assign=cell_assign)
+                                        centroids=centroids)
     enc = indexed.select(
         "neighbor_id", "cell",
         make_pq_codes_udf(codebook)(F.col("nv")).alias("codes"),
@@ -744,7 +594,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str, *, k_cells: int = 8,
         .filter(F.col("query_id") != F.col("neighbor_id"))
     )
     # cogrouped ADC: measured faster than the pq_adc_expr LUT-join at BOTH
-    # scales (sf0.1: 3.8 → 2.3 s; 2M vectors: 116 → 33 s — SCALE.md r9),
+    # scales (sf0.1: 3.8 → 2.3 s; 2M vectors: 116 → 33 s — SCALE.md),
     # and value-identical by the pinned agreement test. The expr path stays
     # exported for small fanouts / the A/B probe.
     scored = pq_adc_cogrouped(
@@ -805,15 +655,15 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str, *, n_queries: int = 5,
 
     This declared row guards the four SEEDED paths (the configurations the
     DuckDB twin derives). The full production configuration — trained
-    codebook × trained cells × Arrow assign — is guarded by the bench-only
+    codebook × trained cells — is guarded by the bench-only
     twin :func:`ann_recall_production` (its training fixpoints have no
     compact DuckDB derivation), asserted ≥ the seeded ``ann_ivf_pq``
     recall in tests/test_llm_ops.py."""
     if k > ANN_TOPK:
         # the measured paths run their declared topk=ANN_TOPK configs — a
         # larger k would silently cap recall at ANN_TOPK/k instead of
-        # measuring it (round-12 review); the shared constant keeps this
-        # bound tracking the paths' defaults (round-12 ADVICE item 2)
+        # measuring it; the shared constant keeps this bound tracking the
+        # paths' defaults
         raise ValueError(f"ann_recall_at_k: k={k} > the measured paths' "
                          f"topk={ANN_TOPK} — recall would be silently "
                          "deflated")
@@ -841,13 +691,12 @@ def ann_recall_production(spark: SparkSession, sf_dir: str, *,
                           n_queries: int = 5, k: int = ANN_TOPK) -> DataFrame:
     """(method, hits, recall): recall@k of the PRODUCTION ann_ivf_pq
     configuration — trained codebook (``train_iters=2``), Lloyd-trained
-    coarse cells on a 1-in-10 sample (``cell_train_iters=2``), Arrow GEMM
-    coarse assign — against the exact ``cosine_topk_arrow`` truth (the
-    GEMM scale path; value-identical to ``cosine_topk`` by the shared
-    ROUND(·,6) contract). Round-11 verdict "What's missing" item 2: the
-    config ``bench.py`` actually times (``ann_ivf_pq_celltrained``) had
-    its recall proven only in scale scripts — this row makes it a
-    per-round regression-guarded number next to the seeded guard
+    coarse cells on a 1-in-10 sample (``cell_train_iters=2``) — against
+    the exact ``cosine_topk_arrow`` truth (the GEMM scale path;
+    value-identical to ``cosine_topk`` by the shared ROUND(·,6)
+    contract). This is the config ``bench.py`` times as
+    ``ann_ivf_pq_celltrained``; the row makes its recall a
+    regression-guarded number next to the seeded guard
     :func:`ann_recall_at_k`. Bench-only for the same reason as the config
     itself: the two training fixpoints have no compact DuckDB derivation;
     tests/test_llm_ops.py pins recall ≥ the seeded ``ann_ivf_pq``'s ON THE
@@ -859,12 +708,12 @@ def ann_recall_production(spark: SparkSession, sf_dir: str, *,
         .filter(F.col("rnk") <= k)
         .select("query_id", "neighbor_id")
     )
-    # k is honored on BOTH sides (round-12 review): the production config
+    # k is honored on BOTH sides: the production config
     # returns top-k and the ADC shortlist keeps a 4× margin over k (the
     # defaults are unchanged at the bench row's k=3)
     production = ann_ivf_pq(
         spark, sf_dir, train_iters=2, cell_train_iters=2,
-        cell_sample_mod=10, cell_assign="arrow", topk=k,
+        cell_sample_mod=10, topk=k,
         shortlist=max(PQ_SHORTLIST, 4 * k))
     return _recall_row(truth, production, method="ivf_pq_production",
                        n_queries=n_queries, k=k)
@@ -882,7 +731,7 @@ def sign_bucket(vec: F.Column, n_bits: int = 16) -> F.Column:
     return acc.cast("bigint")
 
 
-# Multi-table random-hyperplane LSH (round-3 verdict item 6). Amplification
+# Multi-table random-hyperplane LSH. Amplification
 # is REQUIRED on this corpus: exact top-3 cosines are only ~0.3-0.4
 # (angle ~70°, per-plane agreement p ~0.6), so one 16-bit table collides
 # true neighbors with probability p^16 ~ 3e-4 — measured recall 0, same as

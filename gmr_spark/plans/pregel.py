@@ -51,9 +51,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 from gmr_spark.graph import PropertyGraph
 from gmr_spark.plans import loop as runtime
 
-# reference constants: gmr.h:29 (threshold), gmr.h:31-34 / igmr.cpp:116 (caps)
-DEFAULT_THRESHOLD = 1e-4
-
 # Above the loop runtime's BIG_GRAPH_ROWS the superstep joins are pinned
 # to shuffled-hash, EXCEPT when the frontier is KNOWN (exact census, ci=1)
 # to be small: then a hint-forced broadcast of the frontier is safe and the
@@ -335,25 +332,3 @@ def run_dense(graph: PropertyGraph, program: DenseProgram, *,
                 state = vertices
         loop.keep(state)
     return state
-
-
-def apply_reduced(vertices: DataFrame, agg: DataFrame, *, accumulate: bool,
-                  threshold: float = DEFAULT_THRESHOLD) -> DataFrame:
-    """The reference's generic vertex-update semantics (gmr.h:170-219):
-    merge reduce output into vertex values with *accumulate* (+=) or *cover*
-    (=) mode (gmr.h:14,207-210); vertices not present in ``agg`` keep their
-    value; ``active`` flips by |new-old| > threshold (gmr.h:182-206).
-
-    ``agg`` schema: (id, agg).
-    """
-    joined = vertices.join(agg, "id", "left")
-    if accumulate:
-        new_value = F.when(F.col("agg").isNotNull(),
-                           F.col("value") + F.col("agg")).otherwise(F.col("value"))
-    else:
-        new_value = F.coalesce(F.col("agg"), F.col("value"))
-    return joined.select(
-        "id",
-        new_value.alias("value"),
-        (F.abs(new_value - F.col("value")) > F.lit(threshold)).alias("active"),
-    )

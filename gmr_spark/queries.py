@@ -558,7 +558,7 @@ BENCH_ONLY_QUERIES: dict[str, QueryFn] = {
     # tests/test_llm_ops.py and the 2M-vector row lives in SCALE.md.
     "ann_ivf_pq_celltrained": lambda spark, sf_dir: S.ann_ivf_pq(
         spark, sf_dir, train_iters=2, cell_train_iters=2,
-        cell_sample_mod=10, cell_assign="arrow"),
+        cell_sample_mod=10),
     # recall@3 of the production config above vs the cosine_topk_arrow
     # exact truth, so the config bench.py times is recall-regression-
     # guarded on every bench run, not only by the scale families.
@@ -833,36 +833,17 @@ LLM_ORACLES: dict[str, str] = {
 # query measures MUST bump ``round`` to the current round and list the
 # query here (measuring gates are auto-added via _MEASURED_BY below).
 _CHANGED_THIS_ROUND = {
-    "round": 13,
+    "round": 16,
     "names": (
-        # the composed curation pipeline became a declared query: new
-        # oracle (LSQL.CURATION) and the LM cutoff hardened to a
-        # ROUND(·,6)-quantized comparison on both engines — new row, fronts
-        # automatically, listed for the record
-        "curation",
-        # ANN_TOPK shared constant, so the paths' topk/k defaults and
-        # ann_recall_at_k's guard bound cannot drift apart;
-        # _validate_assign messages name the caller-facing cell_assign
-        # parameter. Values unchanged (the
-        # constant equals the old literal 3); fronted per discipline.
-        "ann_ivf",
-        "ann_ivf_pq",
-        "ann_sign_lsh",
-        "ann_rh_lsh",
-        "ann_recall_at_k",
-        # kmeans() now fail-fast-rejects unknown assign strings at entry
-        # (similarity's _validate_assign applied to the kmeans surface,
-        # so a typo cannot silently pick a path) — declared
-        # values unchanged (both queries run the default "expr"); every
-        # declared query that executes kmeans() is fronted per discipline
+        # one nearest-centroid kernel: k-means, SemDeDup and the IVF coarse
+        # quantizer now assign with the Arrow/BLAS GEMM (distances rounded
+        # half up) in place of the per-centroid Catalyst expression, and
+        # SemDeDup's within-cluster cosines come from a BLAS block per
+        # cluster; ann_recall_at_k follows through _MEASURED_BY
         "kmeans_embeddings",
         "semdedup_embeddings",
-        # gopher_quality's `passes` thresholds hoisted into module
-        # constants interpolated by BOTH DuckDB twins, so a threshold
-        # change cannot silently strand a twin — values
-        # unchanged (10 / 0.2 / 0.6 render identically); fronted per
-        # discipline
-        "gopher_quality",
+        "ann_ivf",
+        "ann_ivf_pq",
     ),
 }
 

@@ -18,7 +18,7 @@ import time
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from gmr_spark.algorithms.kmeans import _assign_arrow, _update
+from gmr_spark.algorithms.kmeans import _update, nearest_centroids
 from gmr_spark.operators.similarity import (
     PQ_DSUB, PQ_KS, PQ_M, _dot, _ivf_index_probes, _norm, _vec,
     make_pq_codes_udf, make_pq_lut_udf, make_topk_gemm_fn, pq_adc_cogrouped,
@@ -117,7 +117,7 @@ def llm(spark, size, scratch, *, sf_dir):
     with timed(t, "semdedup"):
         sem = semdedup_frame(
             load_tables(spark, sf)["embeddings"],
-            k=semdedup_k, iters=2, threshold=0.9, engine="arrow",
+            k=semdedup_k, iters=2, threshold=0.9,
         ).localCheckpoint(eager=True)
         counts["semdedup"] = sem.count()
         retired_total = sem.filter(~F.col("keep")).count()
@@ -242,6 +242,14 @@ def _seeds(base, k: int) -> list[tuple[int, list[float]]]:
             for i, r in enumerate(base.orderBy("id").limit(k).collect())]
 
 
+def _assign(frame, centroids):
+    """(id, v) -> (id, cluster): each vector's nearest centroid, by the
+    k-means kernel (d² at 9 dp, ties to the lower id)."""
+    return nearest_centroids(
+        frame.select("id", F.col("v").alias("vec")), centroids, n=1, dp=9,
+    ).select("id", F.col("cells")[0].alias("cluster"))
+
+
 def _seeded_codebook(seeds) -> list:
     """PQ codebook from the sub-vectors of the PQ_KS lowest-id vectors."""
     return [[[float(seeds[c][1][j * PQ_DSUB + d]) for d in range(PQ_DSUB)]
@@ -286,8 +294,7 @@ def _pq_leg(base, enc, queries, codebook, centroids, t: dict, label: str,
     cells, so the reachable set is shared and the reachable recall isolates
     the codebook's ADC ordering from coarse misses."""
     with timed(t, f"{label}_query_topk"):
-        probes = _assign_arrow(queries.select("id", F.col("v").alias("vec")),
-                               centroids).select(
+        probes = _assign(queries, centroids).select(
             F.col("id").alias("query_id"), F.col("cluster").alias("cell"))
         luts = queries.select(F.col("id").alias("query_id"),
                               make_pq_lut_udf(codebook)(F.col("v")).alias("lut"))
@@ -346,8 +353,7 @@ def pq(spark, size, scratch, *, sf_dir):
     seeds = _seeds(base, max(cells, PQ_KS))
     codebook = _seeded_codebook(seeds)
     with timed(t, "pq_encode_index"):
-        enc = _pq_index(base, _assign_arrow(
-            base.select("id", F.col("v").alias("vec")), seeds[:cells]), codebook)
+        enc = _pq_index(base, _assign(base, seeds[:cells]), codebook)
         assert enc.count() == size
     queries = base.filter(_planted(250))
     n_q = queries.count()
@@ -387,8 +393,7 @@ def pqtrain(spark, size, scratch, *, sf_dir, cells: int = 256):
                                     iters=4)
     with timed(t, "mse_passes"):
         mse = {"seeded": pq_mse(base, seeded), "trained": pq_mse(base, trained)}
-    cell_of = _assign_arrow(base.select("id", F.col("v").alias("vec")),
-                            centroids).localCheckpoint(eager=True)
+    cell_of = _assign(base, centroids).localCheckpoint(eager=True)
     queries = base.filter(_planted(250))
     n_q = queries.count()
     gt_k = 10
@@ -431,25 +436,22 @@ def pqtrain(spark, size, scratch, *, sf_dir, cells: int = 256):
 
 
 def celltrain(spark, size, scratch, *, sf_dir, cells: int = 256):
-    """The coarse quantizer, seeded vs Lloyd-trained (3 iterations of the
-    kmeans Arrow kernels on a 1-in-10 sample) at ±0.05/dim noise. Per leg:
+    """The coarse quantizer, seeded vs Lloyd-trained (``train_ivf_cells``,
+    3 iterations on a 1-in-10 sample) at ±0.05/dim noise. Per leg:
     the planted pairs landing in one cell (the nprobe=1 recall ceiling of
     the PQ stack) and the max/mean cell population (the candidate
     equi-join's hot key). Every pair must be seen in both legs."""
     t: dict = {}
     with timed(t, "cell_build_corpus"):
         sf = build_corpus(spark, size, scratch, sf_dir, noise_milli=50)
-    base = _vectors(spark, sf).select("id", F.col("v").alias("vec"))
-    seeded = _seeds(base.select("id", F.col("vec").alias("v")), cells)
-    sample = base.filter(F.col("id") % 10 == 0).localCheckpoint(eager=True)
+    base = _vectors(spark, sf)
+    seeded = _seeds(base, cells)
     with timed(t, "cell_train"):
-        trained = seeded
-        for _ in range(3):
-            trained = _update(sample, _assign_arrow(sample, trained))
+        trained = train_ivf_cells(base, k_cells=cells, iters=3, sample_mod=10)
     legs = {}
     for label, centroids in (("seeded", seeded), ("trained", trained)):
         with timed(t, f"cell_{label}_assign"):
-            cell_of = _assign_arrow(base, centroids).localCheckpoint(eager=True)
+            cell_of = _assign(base, centroids).localCheckpoint(eager=True)
             assert cell_of.count() == size
         both = (cell_of.filter(_pair() % 25 == 0)
                 .groupBy(_pair().alias("pair"))
@@ -471,7 +473,6 @@ def celltrain(spark, size, scratch, *, sf_dir, cells: int = 256):
             "max_over_mean": round(bal.max_cell / bal.mean_cell, 2),
         }
         _drop_checkpoint_blocks(cell_of)
-    _drop_checkpoint_blocks(sample)
     shutil.rmtree(scratch, ignore_errors=True)
     return {"vectors": size, "noise_milli": 50, "cells": cells, "iters": 3,
             "train_sample": "1-in-10", "legs": legs, "timings_sec": t}
@@ -510,8 +511,9 @@ def _lloyd_sample(base, sample_mod: int, seeds):
     sample = (base if sample_mod <= 1
               else base.filter(F.col("id") % sample_mod == 0)).select(
         "id", F.col("v").alias("vec")).localCheckpoint(eager=True)
-    warm = _assign_arrow(sample, seeds[:8]).localCheckpoint(eager=True)
-    _update(sample, warm)
+    warm = nearest_centroids(sample, seeds[:8], n=1, dp=9) \
+        .localCheckpoint(eager=True)
+    _update(warm)
     _drop_checkpoint_blocks(warm)
     return sample
 
@@ -520,11 +522,12 @@ def _lloyd_step(sample, centroids, walls: dict):
     """One Lloyd iteration with its stages timed apart: the assign is
     checkpointed so the update's wall is its own."""
     t0 = time.perf_counter()
-    assigned = _assign_arrow(sample, centroids).localCheckpoint(eager=True)
+    assigned = nearest_centroids(sample, centroids, n=1, dp=9) \
+        .localCheckpoint(eager=True)
     assigned.count()
     walls["assign"].append(round(time.perf_counter() - t0, 2))
     t0 = time.perf_counter()
-    new = _update(sample, assigned)
+    new = _update(assigned)
     walls["update"].append(round(time.perf_counter() - t0, 2))
     _drop_checkpoint_blocks(assigned)
     return new
@@ -539,7 +542,7 @@ def _corpus_assign_walls(base, small, big, slack: float) -> dict:
     memory cliff."""
     def wall(centroids):
         indexed, _ = _ivf_index_probes(base, k_cells=len(centroids), nprobe=1,
-                                       centroids=centroids, assign="arrow")
+                                       centroids=centroids)
         t0 = time.perf_counter()
         indexed.write.format("noop").mode("overwrite").save()
         return round(time.perf_counter() - t0, 2)
@@ -559,7 +562,7 @@ def _corpus_assign_walls(base, small, big, slack: float) -> dict:
 def _balance(base, centroids) -> tuple[float, int]:
     """(max/mean populated-cell size, populated cells) of the corpus."""
     indexed, _ = _ivf_index_probes(base, k_cells=len(centroids), nprobe=1,
-                                   centroids=centroids, assign="arrow")
+                                   centroids=centroids)
     pops = (indexed.groupBy("cell").count()
             .agg(F.max("count").alias("mx"), F.avg("count").alias("avg"),
                  F.count(F.lit(1)).alias("n_cells")).first())

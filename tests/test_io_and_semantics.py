@@ -1,5 +1,4 @@
-"""O1 graph-file reader + reference update/convergence semantics
-(FIXTURES.md §5)."""
+"""O1 graph-file reader, sink/scan round-trips and session semantics."""
 
 from __future__ import annotations
 
@@ -7,9 +6,7 @@ import os
 import tempfile
 
 import pytest
-from pyspark.sql import functions as F
 
-from gmr_spark.plans.pregel import apply_reduced
 from gmr_spark.sources.graph_file import read_graph_file
 
 SMALL_GRAPH = """10
@@ -76,33 +73,6 @@ def test_read_reference_fixture_if_present(spark):
         pytest.skip("reference fixture absent")
     g = read_graph_file(spark, path)
     assert g.edges.count() == 22
-
-
-def test_apply_reduced_cover_and_accumulate(spark):
-    # FIXTURES §5: vertices {(1,10.0),(2,20.0)}, reduce output {(1,5.0)}
-    vertices = spark.createDataFrame(
-        [(1, 10.0, True), (2, 20.0, True)], "id long, value double, active boolean"
-    )
-    agg = spark.createDataFrame([(1, 5.0)], "id long, agg double")
-
-    cover = {r.id: (r.value, r.active) for r in
-             apply_reduced(vertices, agg, accumulate=False).collect()}
-    assert cover[1] == (5.0, True)      # |5-10| > 1e-4 -> active
-    assert cover[2] == (20.0, False)    # untouched -> |Δ|=0 -> inactive
-
-    accu = {r.id: (r.value, r.active) for r in
-            apply_reduced(vertices, agg, accumulate=True).collect()}
-    assert accu[1] == (15.0, True)
-    assert accu[2] == (20.0, False)
-
-
-def test_apply_reduced_threshold(spark):
-    vertices = spark.createDataFrame(
-        [(1, 1.0, True)], "id long, value double, active boolean"
-    )
-    tiny = spark.createDataFrame([(1, 1.00005)], "id long, agg double")
-    r = apply_reduced(vertices, tiny, accumulate=False).collect()[0]
-    assert r.active is False  # |Δ| = 5e-5 < 1e-4 threshold (gmr.h:29)
 
 
 def test_format_round_trips(spark, tmp_path):

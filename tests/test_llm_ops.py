@@ -848,40 +848,137 @@ def test_train_ivf_cells_improves_both_legs_through_api(spark, tmp_path):
     assert trained_bal < seeded_bal and trained_bal == 1.0
 
 
-def test_ivf_arrow_assign_matches_expression_path(spark):
-    """The Arrow coarse-assign twin (make_cell_rank_fn / assign="arrow")
-    must agree with the expression path on BOTH outputs — nearest cell per
-    vector and the nprobe probe set per query — on the oracle table (the
-    kmeans._assign vs _assign_arrow contract: the GEMM identity is not
-    bit-identical pre-round, so declared queries keep "expr" and the
-    agreement is pinned here). Also pins the Arrow plan and the
-    interpreter-bound rationale's fix being value-neutral end-to-end:
-    ann_ivf_pq(cell_assign="arrow") returns the declared rows."""
+def _expr_ranked_cells(vec_col: str, centroids, dp: int):
+    """The nearest-centroid semantics as one Catalyst expression: an array
+    of (d², cell) structs, d² a subtract-square fold in vector order rounded
+    to ``dp`` places, sorted by (d², cell) — the reference the GEMM kernel
+    is held to."""
+    return F.array_sort(F.array(*[
+        F.struct(
+            F.round(
+                F.aggregate(
+                    F.zip_with(F.col(vec_col),
+                               F.array(*[F.lit(float(x)) for x in vec]),
+                               lambda a, b: (a - b) * (a - b)),
+                    F.lit(0.0), lambda acc, x: acc + x),
+                dp,
+            ).alias("d2"),
+            F.lit(int(c)).cast("int").alias("cell"),
+        )
+        for c, vec in centroids
+    ]))
+
+
+def test_ivf_arrow_assign_matches_expression_path(spark, duck):
+    """The Arrow coarse assign of the IVF family (one GEMM per batch) must
+    agree with a Catalyst-expression evaluation of the same semantics on
+    BOTH outputs — nearest cell per vector and the nprobe probe set per
+    query — on the oracle table. The GEMM identity is not bit-identical
+    to the fold before rounding, so the agreement is pinned here. Also
+    pins the Arrow plan (MapInPandas, no row-at-a-time UDF) and the
+    end-to-end result: ann_ivf_pq returns the declared rows."""
+    from gmr_spark.oracle import llm_sql as LSQL
     from gmr_spark.operators.similarity import (
         _ivf_index_probes, _vec, ann_ivf_pq)
     from gmr_spark.sources.tables import load_tables
 
     from tests.conftest import SF_ORACLE
+    from tests.oracle_check import compare
 
     emb = load_tables(spark, SF_ORACLE)["embeddings"]
     df = emb.select(F.col("vec_id").alias("id"), _vec().alias("v"))
     for kc, npb in ((8, 2), (16, 3)):
-        ie, pe = _ivf_index_probes(df, k_cells=kc, nprobe=npb)
-        ia, pa = _ivf_index_probes(df, k_cells=kc, nprobe=npb,
-                                   assign="arrow")
-        assert sorted(map(tuple, ie.select("neighbor_id", "cell").collect())) \
+        seeds = [(i, list(r.v)) for i, r in
+                 enumerate(df.orderBy("id").limit(kc).collect())]
+        ranked = df.select("id", _expr_ranked_cells("v", seeds, 6)
+                           .alias("cells"))
+        ie = ranked.select(F.col("id").alias("neighbor_id"),
+                           F.col("cells")[0]["cell"].alias("cell"))
+        pe = ranked.select(
+            F.col("id").alias("query_id"),
+            F.explode(F.slice("cells", 1, npb)).alias("probe"),
+        ).select("query_id", F.col("probe")["cell"].alias("cell"))
+        ia, pa = _ivf_index_probes(df, k_cells=kc, nprobe=npb)
+        assert sorted(map(tuple, ie.collect())) \
             == sorted(map(tuple, ia.select("neighbor_id", "cell").collect()))
-        assert sorted(map(tuple, pe.select("query_id", "cell").collect())) \
+        assert sorted(map(tuple, pe.collect())) \
             == sorted(map(tuple, pa.select("query_id", "cell").collect()))
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted")
     plan = ia._jdf.queryExecution().explainString(mode)
     assert "MapInPandas" in plan and "BatchEvalPython" not in plan
-    got = sorted(map(tuple,
-                     ann_ivf_pq(spark, SF_ORACLE,
-                                cell_assign="arrow").collect()))
-    want = sorted(map(tuple, ann_ivf_pq(spark, SF_ORACLE).collect()))
-    assert got == want and len(got) == 1500
+    out = ann_ivf_pq(spark, SF_ORACLE)
+    assert out.count() == 1500
+    compare(out, duck, LSQL.ANN_IVF_PQ)
+
+
+def test_nearest_centroids_matches_python_fold(spark):
+    """The one nearest-centroid kernel against a driver-side fold of its
+    declared semantics: d² = sum of (a−b)² in vector order, rounded half up
+    (exact decimal rounding of the double, as Spark and DuckDB ROUND), rows
+    ranked by (d², centroid id). Cases: the sf0.01 and sf0.1 embeddings,
+    k ∈ {8, 256} lowest-id seeds, n ∈ {1, 3}, at 9 dp (k-means) and 6 dp
+    (IVF); plus a planted tie, which must go to the lower id whatever the
+    centroid list order. The plan is one MapInPandas, no row-at-a-time
+    Python UDF."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    from gmr_spark.algorithms.kmeans import nearest_centroids
+    from gmr_spark.operators.similarity import _vec
+    from gmr_spark.sources.tables import load_tables
+
+    def fold_ranks(V, ids, C, cids, dp):
+        """id -> every centroid id, ranked by the declared key."""
+        acc = np.zeros((len(V), len(C)))
+        for j in range(V.shape[1]):  # the fold, one dimension at a time
+            diff = V[:, j, None] - C[None, :, j]
+            acc = acc + diff * diff
+        q = Decimal(1).scaleb(-dp)
+        return {
+            int(i): [c for _, c in sorted(
+                (Decimal(float(d)).quantize(q, ROUND_HALF_UP), c)
+                for d, c in zip(row, cids))]
+            for i, row in zip(ids, acc)}
+
+    def kernel_ranks(df, cents, n, dp):
+        got = nearest_centroids(df, cents, n=n, dp=dp)
+        return {r.id: list(r.cells) for r in got.collect()}, got
+
+    for sf in ("/root/testdata/sf0.01", "/root/testdata/sf0.1"):
+        df = load_tables(spark, sf)["embeddings"].select(
+            F.col("vec_id").alias("id"), _vec().alias("vec"))
+        rows = df.orderBy("id").collect()
+        ids = [r.id for r in rows]
+        V = np.asarray([r.vec for r in rows])
+        for k in (8, 256):
+            cents = [(i, list(r.vec)) for i, r in enumerate(rows[:k])]
+            C = np.asarray([v for _, v in cents])
+            for dp in (9, 6):
+                ranks = fold_ranks(V, ids, C, list(range(k)), dp)
+                for n in (1, 3):
+                    got, plan_df = kernel_ranks(df, cents, n, dp)
+                    assert got == {i: r[:n] for i, r in ranks.items()}, \
+                        (sf, k, n, dp)
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted")
+    plan = plan_df._jdf.queryExecution().explainString(mode)
+    assert "MapInPandas" in plan and "BatchEvalPython" not in plan
+
+    # planted tie: centroids 7 and 3 share a vector; the list is unsorted
+    tie = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [1.0, 1.0]), (2, [4.0, 0.0])],
+        "id long, vec array<double>")
+    cents = [(7, [1.0, 0.0]), (5, [9.0, 9.0]), (3, [1.0, 0.0]), (1, [0.0, 3.0])]
+    V = np.asarray([[0.0, 0.0], [1.0, 1.0], [4.0, 0.0]])
+    by_id = sorted(cents)
+    C = np.asarray([v for _, v in by_id])
+    ranks = fold_ranks(V, [0, 1, 2], C, [c for c, _ in by_id], 9)
+    for n in (1, 3):
+        got, _ = kernel_ranks(tie, cents, n, 9)
+        assert got == {i: r[:n] for i, r in ranks.items()}, got
+    assert got[0][:2] == got[2][:2] == [3, 7], got
 
 
 def test_train_ivf_cells_degenerate_sample_keeps_seeds(spark):
@@ -1080,19 +1177,65 @@ def test_dsir_ranks_target_resembling_docs_first(spark):
 
 
 def test_semdedup_arrow_engine_matches_expr(spark):
-    """The Arrow/BLAS scale path and the Catalyst expression path agree
-    exactly on the sf0.001 embeddings (and the GEMM k-means assign agrees
-    with the per-centroid expression assign) — pinning that the 100 TB
-    engine computes the SAME dedup decisions, not merely similar ones."""
-    from gmr_spark.algorithms.kmeans import kmeans
+    """The Arrow/BLAS SemDeDup engine and a Catalyst-expression evaluation
+    of the same contract agree exactly on the sf0.001 embeddings: the GEMM
+    k-means assign against a per-centroid expression assign run through the
+    same Lloyd loop, and the per-cluster similarity blocks against a
+    cluster-key pair join with fold-expression cosines — pinning that the
+    100 TB engine computes the SAME dedup decisions, not merely similar
+    ones."""
+    from gmr_spark.algorithms.kmeans import _update, kmeans
     from gmr_spark.operators.dedup import semdedup_frame
     from gmr_spark.sources.tables import load_tables
 
     emb = load_tables(spark, "/root/testdata/sf0.001")["embeddings"]
-    a_expr = {(r.id, r.cluster) for r in kmeans(emb, k=8, iters=2).collect()}
-    a_arr = {(r.id, r.cluster)
-             for r in kmeans(emb, k=8, iters=2, assign="arrow").collect()}
+    k, iters, threshold = 8, 2, 0.3
+
+    # expression-path k-means: lowest-id seeds, (assign, update) x iters,
+    # then the final assign
+    vecs = emb.select(
+        F.col("vec_id").cast("bigint").alias("id"),
+        F.transform("embedding", lambda x: x.cast("double")).alias("vec"))
+    cents = [(i, list(r.vec)) for i, r in
+             enumerate(vecs.orderBy("id").limit(k).collect())]
+
+    def expr_assign(cs):
+        return vecs.withColumn(
+            "cluster", _expr_ranked_cells("vec", cs, 9)[0]["cell"])
+
+    for _ in range(iters):
+        cents = _update(expr_assign(cents).withColumn(
+            "cells", F.array("cluster")))
+    clustered = expr_assign(cents)
+    a_expr = {(r.id, r.cluster) for r in clustered.collect()}
+    a_arr = {(r.id, r.cluster) for r in kmeans(emb, k=k, iters=iters)
+             .collect()}
     assert a_expr == a_arr
+
+    # expression-path SemDeDup: pair join within each cluster, cosine as
+    # dot / (|a|·|b|) folds rounded to 6 dp, retire on any earlier dup
+    def fold(col):
+        return F.aggregate(col, F.lit(0.0), lambda acc, v: acc + v)
+
+    nrm = F.sqrt(fold(F.transform("vec", lambda x: x * x)))
+    c = clustered.select("id", "cluster", "vec", nrm.alias("nrm"))
+    a = c.select(F.col("id").alias("id_a"), "cluster",
+                 F.col("vec").alias("va"), F.col("nrm").alias("na"))
+    b = c.select(F.col("id").alias("id_b"), "cluster",
+                 F.col("vec").alias("vb"), F.col("nrm").alias("nb"))
+    dot = fold(F.zip_with("va", "vb", lambda x, y: x * y))
+    sims = (a.join(b, "cluster").filter(F.col("id_a") < F.col("id_b"))
+            .select(F.col("id_b").alias("id"),
+                    F.round(dot / (F.col("na") * F.col("nb")), 6)
+                    .alias("sim")))
+    earlier = sims.groupBy("id").agg(
+        F.max("sim").alias("max_sim_earlier"),
+        F.sum((F.col("sim") >= threshold).cast("int"))
+        .alias("n_dup_earlier"))
+    n_dup = F.coalesce(F.col("n_dup_earlier"), F.lit(0)).cast("int")
+    expr_out = c.join(earlier, "id", "left").select(
+        F.col("id").alias("vec_id"), "cluster", "max_sim_earlier",
+        n_dup.alias("n_dup_earlier"), (n_dup == 0).alias("keep"))
 
     def canon(df):
         return {
@@ -1102,10 +1245,8 @@ def test_semdedup_arrow_engine_matches_expr(spark):
             for r in df.collect()
         }
 
-    expr = canon(semdedup_frame(emb, k=8, iters=2, threshold=0.3))
-    arrow = canon(semdedup_frame(emb, k=8, iters=2, threshold=0.3,
-                                 engine="arrow"))
-    assert expr == arrow
+    arrow = canon(semdedup_frame(emb, k=k, iters=iters, threshold=threshold))
+    assert canon(expr_out) == arrow
 
 
 def test_dedup_substring_flags_planted_passage(spark):
@@ -1364,67 +1505,22 @@ def test_pq_adc_cogrouped_rejects_missing_or_duplicate_lut(spark):
         pq_adc_cogrouped(cand, dup_lut).collect()
 
 
-def test_ivf_assign_rejects_unknown_string(spark):
-    """Round-11 ADVICE item 1: any assign/cell_assign value outside
-    {"expr", "arrow"} must raise, not silently fall through to the
-    expression path — at production cell counts that silent fallback is
-    the interpreter-bound 227s-vs-3s path, i.e. a ~75x degradation a typo
-    like "Arrow" or "gemm" would trigger with no signal."""
-    import pytest
-
-    from gmr_spark.operators.similarity import _vec, ann_ivf, ann_ivf_pq
-    from gmr_spark.sources.tables import load_tables
-
-    from tests.conftest import SF_ORACLE
-
-    # the message names the parameter the CALLER typed (cell_assign, not
-    # the helper's internal name — round-12 ADVICE item 4)
-    with pytest.raises(ValueError, match="cell_assign='Arrow'"):
-        ann_ivf(spark, SF_ORACLE, cell_assign="Arrow")
-    with pytest.raises(ValueError, match="cell_assign='gemm'"):
-        ann_ivf_pq(spark, SF_ORACLE, cell_assign="gemm")
-    # the casing that IS declared still works end-to-end (guard is exact)
-    emb = load_tables(spark, SF_ORACLE)["embeddings"]
-    df = emb.select(F.col("vec_id").alias("id"), _vec().alias("v"))
-    from gmr_spark.operators.similarity import _ivf_index_probes
-
-    indexed, _ = _ivf_index_probes(df, k_cells=2, nprobe=1, assign="arrow")
-    assert indexed.count() == df.count()
-
-
-def test_kmeans_assign_rejects_unknown_string(spark):
-    """Round-12 self-review carry-over: kmeans() had the same silent
-    fallback _validate_assign closed for the IVF family — a typo like
-    "Arrow" fell through to the expression path. Now it fails fast at
-    entry (before the eager checkpoint / seed collect), with the kmeans
-    parameter's own name in the message."""
-    from gmr_spark.algorithms.kmeans import kmeans
-    from gmr_spark.sources.tables import load_tables
-
-    from tests.conftest import SF_ORACLE
-
-    emb = load_tables(spark, SF_ORACLE)["embeddings"]
-    with pytest.raises(ValueError, match="assign='Arrow'"):
-        kmeans(emb, assign="Arrow")
-    with pytest.raises(ValueError, match="assign='gemm'"):
-        kmeans(emb, k=2, iters=1, assign="gemm")
-
-
-def test_make_cell_rank_fn_rejects_empty_centroids():
-    """Round-11 ADVICE item 3: an empty centroid list must fail at factory
-    time (driver-side, clear message), not as a ZeroDivisionError in the
+def test_nearest_centroids_rejects_empty_centroids(spark):
+    """An empty centroid list must fail when the kernel is built
+    (driver-side, clear message), not as a ZeroDivisionError in the
     row-chunk sizing inside an executor task."""
     import pytest
 
-    from gmr_spark.operators.similarity import make_cell_rank_fn
+    from gmr_spark.algorithms.kmeans import nearest_centroids
 
+    df = spark.createDataFrame([(0, [1.0])], "id long, vec array<double>")
     with pytest.raises(ValueError, match="empty centroid list"):
-        make_cell_rank_fn([], nprobe=1)
+        nearest_centroids(df, [], n=1, dp=9)
 
 
 def test_ann_recall_production_at_least_seeded(spark):
     """Round-11 verdict "What's missing" item 2: the production ann_ivf_pq
-    configuration (trained codebook x trained cells x Arrow assign — the
+    configuration (trained codebook x trained cells — the
     exact config bench.py times as ann_ivf_pq_celltrained) is
     recall-guarded on the BENCH corpus: its recall@3 vs the
     cosine_topk_arrow exact truth must be at least the seeded

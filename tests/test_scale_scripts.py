@@ -99,7 +99,7 @@ def test_llm_scale_embedding_planted_recall(spark, tmp_path):
 
 
 def test_llm_scale_semdedup_planted_recall(spark, tmp_path):
-    """SemDeDup (arrow engine, the scale path the llm family runs at 2M) on
+    """SemDeDup (the path the llm family runs at 2M) on
     the planted corpus: every (2k, 2k+1) near-copy pair whose members share
     a cluster must retire the odd (higher-id) member; nothing else retires
     (random within-cluster cosines sit far below 0.9)."""
@@ -114,7 +114,7 @@ def test_llm_scale_semdedup_planted_recall(spark, tmp_path):
     planted = (n // 2 + 24) // 25
     out = semdedup_frame(
         load_tables(spark, sf)["embeddings"],
-        k=max(8, n // 2000), iters=2, threshold=0.9, engine="arrow",
+        k=max(8, n // 2000), iters=2, threshold=0.9,
     ).collect()
     retired = [r for r in out if not r.keep]
     for r in retired:
@@ -318,7 +318,7 @@ def test_r10_pqtrain_row_at_toy_size(spark, tmp_path):
 
 def test_r10_celltrain_row_at_toy_size(spark, tmp_path):
     """The coarse-quantizer family at toy size: Lloyd-training the
-    IVF cells with the kmeans Arrow kernels must (a) not lose planted
+    IVF cells with ``train_ivf_cells`` must (a) not lose planted
     pairs (every pair observed exactly twice -> grouped once), (b) raise
     the partner same-cell rate vs the seeded cells (the nprobe=1 coarse
     recall ceiling), and (c) improve cell balance (max/mean population —
